@@ -1406,6 +1406,7 @@ object IcebergTable {
       } else {
         val url = url0.stripSuffix("/")
         val v = version.getOrElse(versionHint(url, conf))
+        if (v == 0 && version.isEmpty) throw new TableNotFoundException(url)
         // foreign writers under `write.metadata.compression-codec=gzip`
         // name the file v{N}.gzip.metadata.json (readString inflates it)
         val plain = s"$url/metadata/v$v.metadata.json"
@@ -1418,15 +1419,28 @@ object IcebergTable {
     new IcebergTable(spark, url, originalUrl.getOrElse(md.location), md, ver, None, rawMetadataJson = metaJson, loadedFrom = fromPath)
   }
 
-  /** Latest version per `version-hint.text`; falls back to scanning the
-    * metadata dir for the highest `vN.metadata.json` when the hint is
-    * missing, unreadable, or mid-rewrite by a concurrent committer (the
-    * reference returns 0 there, ice.py:51-61 — the scan keeps concurrent
-    * readers consistent; Iceberg's own HadoopTableOperations does the same). */
+  /** No Iceberg table at `url`: no metadata directory, or one holding
+    * neither a version hint nor any `vN.metadata.json`. A
+    * FileNotFoundException subtype, so file-level existence probes still
+    * match it; an I/O failure while looking is never reported as this. */
+  final class TableNotFoundException(val url: String)
+      extends java.io.FileNotFoundException(
+        s"no Iceberg table at $url: no version hint and no " +
+          "vN.metadata.json under its metadata directory")
+
+  /** Latest version per `version-hint.text`, or 0 when there is no table
+    * (see [[TableNotFoundException]]). Falls back to scanning the metadata
+    * dir for the highest `vN.metadata.json` when the hint is missing or
+    * caught mid-rewrite by a concurrent committer (the reference returns 0
+    * there, ice.py:51-61 — the scan keeps concurrent readers consistent;
+    * Iceberg's own HadoopTableOperations does the same). Any other I/O
+    * error propagates: an unreadable table is not an absent one. */
   def versionHint(url: String, conf: Configuration): Int = {
     val hinted =
       try readString(s"$url/metadata/version-hint.text", conf).trim.toInt
-      catch { case _: Exception => -1 }
+      catch {
+        case _: java.io.FileNotFoundException | _: NumberFormatException => -1
+      }
     if (hinted > 0) hinted
     else {
       val dir = new Path(s"$url/metadata")
@@ -1436,7 +1450,7 @@ object IcebergTable {
         case V(n) => Some(n.toInt)
         case _ => None
       }).maxOption.getOrElse(0)
-      catch { case _: Exception => 0 }
+      catch { case _: java.io.FileNotFoundException => 0 }
     }
   }
 

@@ -26,11 +26,12 @@ object Dedup {
     * odds at 128 bits are ~n²/2¹²⁹ (negligible below ~10¹⁵ docs). */
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     // ONE explicit exchange on the fingerprint, shared by the group
-    // aggregation and the join probe (ReusedExchange), so the corpus text
-    // hashes once. Group stats via aggregation + join, NOT an aggregate
-    // window: a hash aggregate streams the Zipf-head content group as one
-    // counter where a window task would buffer (and sort) its whole
-    // occurrence list.
+    // aggregation and the join probe (ReusedExchange), so the corpus is
+    // scanned and its text hashed once, with or without a caller's filter
+    // on is_canonical (DedupPlanSpec pins both). Group stats via
+    // aggregation + join, NOT an aggregate window: a hash aggregate
+    // streams the Zipf-head content group as one counter where a window
+    // task would buffer (and sort) its whole occurrence list.
     val keyed = df.select(col(idCol),
       xxhash64(col(textCol)).as("_h1"),
       xxhash64(lit(0x9747b28c), col(textCol)).as("_h2"))
@@ -38,7 +39,14 @@ object Dedup {
     val groups = keyed.groupBy(col("_h1"), col("_h2"))
       .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("canonical_id"))
     keyed.join(groups, Seq("_h1", "_h2"))
-      .withColumn("is_canonical", col(idCol) === col("canonical_id"))
+      // null-safe form of `id = canonical_id` (a null id still gives null,
+      // and a non-null id's group always has a non-null min). A plain `=`
+      // lets Catalyst infer IsNotNull(id) from a caller's filter on
+      // is_canonical and push it into the probe side's scan only; the two
+      // exchange subtrees then differ, and the corpus is scanned, hashed
+      // and shuffled twice
+      .withColumn("is_canonical",
+        when(col(idCol).isNotNull, col(idCol) <=> col("canonical_id")))
       .select(col(idCol), col("n_copies"), col("canonical_id"), col("is_canonical"))
   }
 
@@ -96,7 +104,12 @@ object Dedup {
     val buckets = sh
       .withColumn("sig", graft.functions.MinHash.minhash(col("sh"), k))
       .withColumn("bands", TF.lshBands(col("sig"), k, bands))
-      .select(col("id"), explode(col("bands")).as("bb"))
+      // explode_outer, not explode: for an inner explode Catalyst infers
+      // `size(bands) > 0` and pushes it below the projection, where it
+      // evaluates the whole shingle + MinHash pipeline a second time in a
+      // separate Filter. lshBands never yields an empty or null array, so
+      // the rows are the same.
+      .select(col("id"), explode_outer(col("bands")).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     val cand = bucketPairs(buckets, maxBucketSize)
     cand.join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -266,7 +279,9 @@ object Dedup {
     def bucketed(sh: DataFrame) = sh
       .withColumn("sig", graft.functions.MinHash.minhash(col("sh"), k))
       .withColumn("bands", TF.lshBands(col("sig"), k, nBands))
-      .select(col("id"), explode(col("bands")).as("bb"))
+      // explode_outer for the same reason as in minhashDedup: no inferred
+      // `size(bands) > 0` filter re-running the signature
+      .select(col("id"), explode_outer(col("bands")).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     // materialization point KEPT (r22, re-measured after the candidate
     // fusion): dropping this exchange so both consumers (bucket generation
@@ -395,43 +410,54 @@ object Dedup {
     * components over the pair graph, labeling every member with the
     * minimum id of its component (the canonical copy a pipeline keeps).
     *
-    * Label propagation to a fixpoint: each round every node adopts the
-    * minimum label in its neighborhood. Near-dup clusters have tiny
-    * diameters (duplicates of one source document), so convergence takes
-    * a handful of rounds; `maxIter` bounds the worst case and the loop
-    * stops early the first round nothing changes. Each round is one
-    * self-join-free aggregation over the edge list — O(edges) shuffle,
-    * no quadratic stage, the standard MapReduce-CC shape. Checkpointing
-    * truncates the iterative lineage so plans stay bounded. */
+    * Label propagation to a fixpoint. A ROUND is one neighbour-min pass:
+    * every node adopts the minimum of its own label and its neighbours'
+    * labels. Round 1 is the seed — starting from own ids it reduces to
+    * min(own id, neighbour ids), one aggregation over the edge list with
+    * no join and no action. Every later round joins the edges against the
+    * current labels, aggregates the neighbour minimum per node and yields
+    * `(id, label, moved)`; one action per round, `filter(moved).count()`,
+    * both materializes the round's lazy local checkpoint (cutting the
+    * iterative lineage) and tells whether anything moved. The loop stops
+    * at the first round in which no label moves.
+    *
+    * `maxIter` bounds the number of rounds, the seed included: a component
+    * whose minimum id lies r hops from its farthest member settles after r
+    * rounds and is confirmed by round r + 1, so it converges iff
+    * r + 1 <= maxIter (at least 2, since the seed alone proves nothing);
+    * past the bound the call fails rather than return partial groups.
+    * Near-dup clusters have tiny diameters (duplicates of one source
+    * document), so a handful of rounds suffices. Each round is O(edges)
+    * shuffle, no quadratic stage — the standard MapReduce-CC shape. */
   def dupGroups(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxIter: Int = 10): DataFrame = {
-    val spark = pairs.sparkSession
-    // undirected edge list, both directions, plus self-loops so isolated
-    // endpoints keep their own label
+    require(maxIter >= 2, s"dupGroups needs maxIter >= 2 (the seed round " +
+      s"plus one round that can observe convergence), got $maxIter")
+    // undirected edge list, both directions: every endpoint appears as a
+    // src, so every node gets a label
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionAll(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct()
       .persist()
-    var labels = edges.select(col("src").as("id"), col("src").as("label"))
-      .unionAll(edges.select(col("dst").as("id"), col("dst").as("label")))
-      .groupBy("id").agg(min("label").as("label"))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      // every node's new label = min(own, neighbors' labels)
+    var labels = edges.groupBy(col("src").as("id"))
+      .agg(min(col("dst")).as("nmin"))
+      .select(col("id"), least(col("id"), col("nmin")).as("label"))
+    var moved = 1L
+    var round = 1
+    while (moved > 0 && round < maxIter) {
       val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-      val next = labels.unionAll(neighborMin)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(true) // truncate iterative lineage
-      changed = next.join(labels.withColumnRenamed("label", "old"), "id")
-        .filter(col("label") =!= col("old")).count()
-      labels = next
-      i += 1
+        .groupBy(edges("src").as("id")).agg(min(col("label")).as("nmin"))
+      val next = labels.join(neighborMin, "id")
+        .select(col("id"), least(col("label"), col("nmin")).as("label"),
+          (col("nmin") < col("label")).as("moved"))
+        .localCheckpoint(eager = false) // the count below materializes it
+      moved = next.filter(col("moved")).count()
+      labels = next.select(col("id"), col("label"))
+      round += 1
     }
     edges.unpersist()
-    require(changed == 0,
-      s"dupGroups did not converge within $maxIter rounds ($changed labels " +
+    require(moved == 0,
+      s"dupGroups did not converge within $maxIter rounds ($moved labels " +
         "still moving) — raise maxIter (component diameter exceeds the bound)")
     labels.select(col("id"), col("label").as("group_id"))
   }

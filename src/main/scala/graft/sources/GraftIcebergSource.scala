@@ -179,8 +179,10 @@ class GraftIcebergSource extends TableProvider with CreatableRelationProvider
     catch {
       // the WRITE path probes getTable before the table exists (first
       // append creates it): hand back a capability-less placeholder so
-      // Spark falls through to the V1 CreatableRelationProvider write
-      case _: java.io.FileNotFoundException =>
+      // Spark falls through to the V1 CreatableRelationProvider write (a
+      // table whose metadata cannot be read is not uncreated: that error
+      // propagates)
+      case _: IcebergTable.TableNotFoundException =>
         val providedSchema = schema
         new Table {
           override def name(): String = "graft-iceberg (uncreated)"
@@ -788,22 +790,42 @@ final class GraftIcebergScanBuilder(tbl: GraftIcebergV2Table,
   * parquet batch reader over the metadata-pruned file list, and reports
   * exact manifest statistics (rows + bytes) to the optimizer. */
 final class GraftIcebergScan(
-    table: IcebergTable,
-    initialFiles: Seq[graft.iceberg.Manifests.DataFileInfo],
-    requiredSchema: StructType,
-    pushedFilters: Array[Filter],
-    options: CaseInsensitiveStringMap,
-    metaCols: Seq[String] = Nil,
+    private val table: IcebergTable,
+    private val initialFiles: Seq[graft.iceberg.Manifests.DataFileInfo],
+    private val requiredSchema: StructType,
+    private val pushedFilters: Array[Filter],
+    private val options: CaseInsensitiveStringMap,
+    private val metaCols: Seq[String] = Nil,
     /** Runtime (DPP) filtering is enabled for plain reads only: a row-level
       * operation's scan pins the exact file set its rewrite replaces, and a
       * runtime-narrowed read with an unfiltered replacement set would delete
       * files the operation never read. */
-    runtimeFilterable: Boolean = true,
+    private val runtimeFilterable: Boolean = true,
     /** `stream-mode=cdc`: streaming changelog reads only — see
       * [[GraftIcebergV2Table.isCdc]]. */
-    cdcMode: Boolean = false)
+    private val cdcMode: Boolean = false)
   extends Scan with Batch with SupportsReportStatistics with SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+
+  /** Scans built over the same loaded table object with the same file list,
+    * read schema, pushed filters, options and modes read the same rows.
+    * Spark's exchange and subquery reuse compares `BatchScanExec.batch`
+    * (this scan), so without this a self-join of one graft-iceberg
+    * DataFrame scans and shuffles the table once per side. Only
+    * construction state counts: `BatchScanExec` compares runtime filters
+    * itself. */
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftIcebergScan => (o eq this) || (o.table eq table) &&
+      o.cdcMode == cdcMode && o.runtimeFilterable == runtimeFilterable &&
+      o.requiredSchema == requiredSchema && o.metaCols == metaCols &&
+      o.options == options && o.pushedFilters.sameElements(pushedFilters) &&
+      o.initialFiles.corresponds(initialFiles)(_.filePath == _.filePath)
+    case _ => false
+  }
+
+  override def hashCode(): Int = java.util.Objects.hash(
+    Int.box(System.identityHashCode(table)), requiredSchema,
+    Int.box(initialFiles.size))
 
   /** The file list this scan covers — narrowed in place by [[filter]] before
     * partition planning. */

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +32,66 @@ class DupGroupsSpec extends AnyFunSuite {
     val got = Dedup.dupGroups(pairs, maxIter = 20).as[(Long, Long)]
       .collect().toMap
     assert(got.size == 13 && got.values.forall(_ == 0L))
+  }
+
+  test("empty input yields no groups") {
+    assert(Dedup.dupGroups(Seq.empty[(Long, Long)].toDF("id_a", "id_b")).count() == 0)
+  }
+
+  test("reversed, duplicate and self pairs give the same min-id groups") {
+    val pairs = Seq(
+      (1L, 2L), (2L, 1L), (1L, 2L), // one edge three times, both directions
+      (3L, 2L), // joins 3 to {1, 2} from the larger id
+      (7L, 7L), // a self pair: its own singleton group
+      (9L, 8L), (8L, 8L), (9L, 9L)).toDF("id_a", "id_b")
+    val got = Dedup.dupGroups(pairs).as[(Long, Long)].collect().sorted.toSeq
+    assert(got == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 8L, 9L -> 8L))
+  }
+
+  test("a maxIter below the component's propagation depth fails loudly") {
+    // path 0-1-…-12: the seed moves labels one hop, every later round one
+    // more, so node 12 settles in round 12 and round 13 confirms it
+    val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = intercept[IllegalArgumentException](
+      Dedup.dupGroups(pairs, maxIter = 12).collect())
+    assert(err.getMessage.contains("did not converge within 12 rounds"), err.getMessage)
+    assert(Dedup.dupGroups(pairs, maxIter = 13).as[(Long, Long)]
+      .collect().forall(_._2 == 0L))
+    intercept[IllegalArgumentException](Dedup.dupGroups(pairs, maxIter = 1))
+  }
+
+  /** Spark jobs `body` submits, counted by a SparkListener under a job group
+    * of its own. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"dupgroups-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "dupGroups job count")
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("disjoint pairs settle in the seed: one counting round, bounded jobs") {
+    val pairs = (0L until 50L).map(i => (2 * i + 1, 2 * i)).toDF("id_a", "id_b")
+    val (got, jobs) = jobsOf(Dedup.dupGroups(pairs).as[(Long, Long)].collect())
+    assert(got.length == 100 && got.forall { case (id, g) => g == id - id % 2 })
+    // one counting round plus the final collect: 12 jobs under AQE, where
+    // every shuffle stage and broadcast is a job of its own. With an eager
+    // checkpoint and a change-count join per round, and no seed round, the
+    // same graph costs 22
+    assert(jobs <= 14, s"dupGroups ran $jobs jobs")
   }
 
   test("decontaminateFuzzy drops near-duplicates of the benchmark set " +
