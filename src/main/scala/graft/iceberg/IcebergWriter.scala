@@ -33,6 +33,7 @@ import org.apache.spark.sql.types._
 object IcebergWriter {
 
   private val mapper = new ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def sparkToIcebergType(dt: DataType): String = dt match {
     case BooleanType => "boolean"
@@ -291,14 +292,17 @@ object IcebergWriter {
 
   /** Append `df` as a new snapshot. The table must exist (see createTable). */
   def append(spark: SparkSession, url: String, df: DataFrame): Unit =
-    writeSnapshot(spark, url, df, deletePred = None, operation = "append")
+    append(spark, url, df, Map.empty[String, String])
 
   /** Append with extra snapshot-summary properties (streaming sinks record
     * their batch id here for exactly-once replay protection). */
   def append(spark: SparkSession, url: String, df: DataFrame,
-      extraSummary: Map[String, String]): Unit =
-    writeSnapshot(spark, url, df, deletePred = None, operation = "append",
-      extraSummary = extraSummary)
+      extraSummary: Map[String, String]): Unit = {
+    val table = resolveCurrent(spark, url)
+    val files = writeDataFiles(spark, url, table, df)
+    commitSnapshot(spark, url, Some(table))(_ =>
+      Some(SnapshotUpdate("append", added = files, summary = extraSummary)))
+  }
 
   /** Register EXISTING parquet or ORC files into an unpartitioned table
     * WITHOUT reading or rewriting their data — Iceberg's `add_files` import
@@ -360,19 +364,17 @@ object IcebergWriter {
         // per-column min/max/non-null counts just like parquet's.
         val stats = collectStats(spark, withLen, table.iceSchema, conf,
           foreign = true, format = fmt)
-        withLen.map { case (p, len) => (p, len, stats(p), Seq.empty[Any]) }
+        withLen.map { case (p, len) => NewDataFile(p, len, stats(p), Nil, fmt) }
       } else withLen.map { case (p, len) =>
         // Avro files carry NO footer statistics — counts stay ABSENT
         // (unknown, not zero), and every stats consumer must refuse
         // exact claims over such files (manifestMinMax, metadata aggs).
         val rows = avroRowCountOf(new Path(p), conf)
-        (p, len, FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty),
-          Seq.empty[Any])
+        NewDataFile(p, len, FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty),
+          Nil, fmt)
       }
-    commitDataFiles(spark, url, UUID.randomUUID().toString, files,
-      deletePred = None, operation = "append",
-      extraSummary = Map("graft-added-files" -> files.size.toString),
-      dataFileFormat = fmt)
+    commitSnapshot(spark, url)(_ => Some(SnapshotUpdate("append", added = files,
+      summary = Map("graft-added-files" -> files.size.toString))))
   }
 
   /** MIGRATE a plain parquet directory into a NEW Iceberg table: schema
@@ -566,20 +568,49 @@ object IcebergWriter {
     * whole table.
     */
   def overwrite(spark: SparkSession, url: String, df: DataFrame,
-      pred: Pruning.IcePredicate = Pruning.AlwaysTrue): Unit =
-    writeSnapshot(spark, url, df, deletePred = Some(pred), operation = "overwrite")
+      pred: Pruning.IcePredicate = Pruning.AlwaysTrue): Unit = {
+    val table = resolveCurrent(spark, url)
+    val files = writeDataFiles(spark, url, table, df)
+    commitSnapshot(spark, url, Some(table))(t => Some(SnapshotUpdate("overwrite",
+      added = files, removed = wholeFilesMatching(t, pred))))
+  }
 
-  private[iceberg] def writeSnapshot(spark: SparkSession, url: String, df: DataFrame,
-      deletePred: Option[Pruning.IcePredicate], operation: String,
-      pinnedDeletes: Option[Seq[Manifests.DataFileInfo]] = None,
-      dropDeleteManifests: Boolean = false,
-      pinnedDeleteFiles: Option[Set[String]] = None,
-      extraSummary: Map[String, String] = Map.empty,
-      extraManifests: Seq[NewManifestInfo] = Nil,
-      posDeleteRows: Long = 0L,
-      presetSnapshotId: Option[Long] = None,
+  /** Live files whose statistics prove every row matches `pred`: the files
+    * a whole-file delete or overwrite removes. A file the predicate would
+    * split refuses — v1 metadata deletes whole files only. */
+  private[graft] def wholeFilesMatching(table: IcebergTable,
+      pred: Pruning.IcePredicate): Seq[Manifests.DataFileInfo] = {
+    val (fully, partial) = splitByPredicate(table, pred)
+    if (partial.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"predicate matches only part of ${partial.size} file(s); use deleteRows " +
+          "(format v2 position deletes) for a row-level delete or overwrite")
+    fully
+  }
+
+  /** Live files split by `pred`: those whose statistics prove every row
+    * matches, and those that may hold both matching and non-matching rows.
+    * After partition evolution each file prunes under its own spec. */
+  private def splitByPredicate(table: IcebergTable, pred: Pruning.IcePredicate)
+      : (Seq[Manifests.DataFileInfo], Seq[Manifests.DataFileInfo]) =
+    if (table.metadata.currentSnapshotId < 0) (Nil, Nil)
+    else if (pred == Pruning.AlwaysTrue) (table.liveFiles(), Nil)
+    else {
+      val (mixed, fully) = table.liveFiles()
+        .partition(f => table.fileMightMatchOwnSpec(Pruning.negate(pred), f))
+      (fully, mixed.filter(f => table.fileMightMatchOwnSpec(pred, f)))
+    }
+
+  /** Write `df` as data files laid out for `table` — partitioned by its
+    * default spec, sorted by its sort order, Iceberg field ids stamped —
+    * under a fresh `data/<uuid>` directory (new files stay identifiable),
+    * and harvest each file's footer stats and partition tuple. Commits
+    * nothing: the files are the `added` of a [[SnapshotUpdate]]. */
+  private[iceberg] def writeDataFiles(spark: SparkSession, url: String,
+      table: IcebergTable, df: DataFrame,
+      /** Output file count of a range-partitioned (sorted, z-ordered) write;
+        * compaction sets it, appends let AQE size small writes. */
       targetPartitions: Option[Int] = None,
-      dynamicTouched: Option[Set[Seq[Any]]] = None,
       /** Z-ORDER clustering expression for PARTITIONED rewrites: rows
         * range-partition + sort on (partition cols, z) so each partition's
         * files cover contiguous z-ranges — the partitioned write path's
@@ -590,36 +621,21 @@ object IcebergWriter {
         * columns: broadcast-joined onto the rows so `zorderBy` can reference
         * per-partition bounds; all stats columns are dropped before write. */
       zorderStats: Option[org.apache.spark.sql.DataFrame] = None,
-      /** Stage on a branch instead of main (write-audit-publish). */
-      toBranch: Option[String] = None,
       /** Iceberg v3 ROW LINEAGE carry-through for REWRITES: the incoming
         * frame holds `_row_id`/`_last_updated_sequence_number` columns
         * (read as metadata from the old files) and they are written as
         * PHYSICAL columns under the reserved field ids — row identity
         * survives compaction; readers prefer the materialized values. */
-      carryLineage: Boolean = false): Unit = {
+      carryLineage: Boolean = false): Seq[NewDataFile] = {
     val conf = spark.sessionState.newHadoopConf()
-    val table0 = resolveCurrent(spark, url)
-    // current schema straight from metadata — an empty table has no snapshot
-    // (IcebergTable.iceSchema raises there, reference parity)
-    val schema = table0.metadata.schemas
-      .find(_.schemaId == table0.metadata.currentSchemaId)
-      .getOrElse(throw new IllegalStateException("no current schema"))
-    val commitId = UUID.randomUUID().toString
-    val spec = table0.partitionSpec
-    val specInfo: Seq[(PartitionField, String, String)] = spec.fields.map { pf =>
-      val src = schema.fields.find(_.id == pf.sourceId)
-        .getOrElse(throw new IllegalStateException(s"no source field ${pf.sourceId}"))
-      val valueType = partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform))
-      (pf, src.icebergTypeString, valueType)
-    }
+    val schema = table.iceSchema
+    val specInfo = specInfoOf(table)
 
-    // 1. data files (one dir per commit so new files are identifiable).
     // Hidden-partition columns are duplicated under _p_ names so partitionBy
     // splits files per partition value while the data files keep ALL source
     // columns (Iceberg layout — unlike Hive, values live in metadata).
     import org.apache.spark.sql.functions.col
-    val dataDir = s"$url/data/$commitId"
+    val dataDir = s"$url/data/${UUID.randomUUID()}"
     // carry iceberg field ids into the written parquet (parquet.field.id →
     // `= N` ids in the file schema): readers resolve by id like real Iceberg
     val dfCols = df.columns.toSet
@@ -661,7 +677,7 @@ object IcebergWriter {
     }
     // table sort order: rows sorted WITHIN each output file → tight,
     // mostly-disjoint per-file bounds on the sort key (file-level pruning)
-    val sortCols = table0.sortOrderColumns.map {
+    val sortCols = table.sortOrderColumns.map {
       case (n, "desc") => col(n).desc
       case (n, _) => col(n).asc
     }
@@ -721,346 +737,382 @@ object IcebergWriter {
 
     val fs = new Path(dataDir).getFileSystem(conf)
     val files = listParquetFiles(fs, new Path(dataDir))
-
-    // 2. per-file stats from parquet footers (harvested on EXECUTORS — a
+    // per-file stats from parquet footers (harvested on EXECUTORS — a
     // commit of thousands of files must not serialize footer reads on the
     // driver) + partition values parsed from the directory names
     val statsByPath = collectStats(spark,
       files.map(st => (st.getPath.toString, st.getLen)), schema, conf)
-    val dataFiles = files.map { st =>
-      val stats = statsByPath(st.getPath.toString)
-      val partValues: Seq[Any] = specInfo.map { case (pf, _, valueType) =>
-        parsePartitionValue(st.getPath.toString, s"_p_${pf.name}", valueType)
-      }
-      (st.getPath.toUri.getPath, st.getLen, stats, partValues)
+    files.map { st =>
+      NewDataFile(st.getPath.toUri.getPath, st.getLen, statsByPath(st.getPath.toString),
+        specInfo.map { case (pf, _, valueType) =>
+          parsePartitionValue(st.getPath.toString, s"_p_${pf.name}", valueType)
+        })
     }
-
-    commitDataFiles(spark, url, commitId, dataFiles, deletePred, operation,
-      pinnedDeletes, dropDeleteManifests, pinnedDeleteFiles, extraSummary,
-      extraManifests, posDeleteRows, presetSnapshotId, dynamicTouched,
-      toBranch = toBranch)
   }
 
-  /** Publish already-written data files as one snapshot — the shared commit
-    * core under both write paths: [[writeSnapshot]] (driver-dispatched
-    * DataFrame write) and the native DataSourceV2 BatchWrite (executor
-    * DataWriters stream rows straight into parquet, the driver commits the
-    * reported files). Steps 3-5 run inside the optimistic commit loop:
-    * delete resolution, the manifest, the manifest list, and the metadata
-    * json all depend on the table state CURRENT at publish time, so each
-    * attempt rebuilds them. */
-  private[graft] def commitDataFiles(spark: SparkSession, url: String,
-      commitId: String,
-      dataFiles: Seq[(String, Long, FileStats, Seq[Any])],
-      deletePred: Option[Pruning.IcePredicate], operation: String,
-      pinnedDeletes: Option[Seq[Manifests.DataFileInfo]] = None,
-      dropDeleteManifests: Boolean = false,
-      pinnedDeleteFiles: Option[Set[String]] = None,
-      extraSummary: Map[String, String] = Map.empty,
-      extraManifests: Seq[NewManifestInfo] = Nil,
-      posDeleteRows: Long = 0L,
-      presetSnapshotId: Option[Long] = None,
-      dynamicTouched: Option[Set[Seq[Any]]] = None,
-      requireLiveKeys: Option[Set[String]] = None,
-      requireNoConflictingAdds: Option[(Set[String], Pruning.IcePredicate)] = None,
-      dataFileFormat: String = "PARQUET",
-      /** Replace the POSITION-delete manifests (equality manifests survive):
-        * the delete-file consolidation commit — `extraManifests` carries the
-        * consolidated replacement. */
-      dropPosDeleteManifests: Boolean = false,
-      /** STAGE the commit on a named branch (write-audit-publish): the new
-        * snapshot's parent is the branch head (or the current head when the
-        * branch is new), `refs.<branch>` moves, and `current-snapshot-id` /
-        * `refs.main` / `snapshot-log` stay untouched — readers of main never
-        * see the staged rows until [[fastForward]] publishes them. */
-      toBranch: Option[String] = None,
-      /** STAGE the snapshot with NO ref at all (Iceberg's `spark.wap.id`
-        * form): it enters the snapshots list with main's head as parent,
-        * but `current-snapshot-id`/refs/snapshot-log never move — publish
-        * later by wap.id ([[publishChanges]]) or abandon to expiration. */
-      stageOnly: Boolean = false): Unit = {
-    toBranch.foreach { b =>
-      require(b != "main", "main is written by normal commits")
-      require(operation == "append" && deletePred.isEmpty &&
-          pinnedDeletes.isEmpty && dynamicTouched.isEmpty &&
-          pinnedDeleteFiles.isEmpty && extraManifests.isEmpty,
-        "branch-staged commits support append only (audit then publish)")
+  /** (field, source Iceberg type, stored value type) for each field of
+    * `spec`, its sources resolved in `table`'s schema — what manifest
+    * partition tuples and summaries are written under. */
+  private[iceberg] def specInfoOf(table: IcebergTable): Seq[(PartitionField, String, String)] =
+    specInfoOf(table, table.partitionSpec)
+
+  private def specInfoOf(table: IcebergTable,
+      spec: PartitionSpec): Seq[(PartitionField, String, String)] = {
+    val schema = table.iceSchema
+    spec.fields.map { pf =>
+      val src = schema.fields.find(_.id == pf.sourceId).getOrElse(
+        throw new IllegalStateException(s"no source field ${pf.sourceId}"))
+      (pf, src.icebergTypeString,
+        partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
     }
-    if (stageOnly) {
-      require(toBranch.isEmpty, "stageOnly and toBranch are exclusive")
-      require(operation == "append" && deletePred.isEmpty &&
-          pinnedDeletes.isEmpty && dynamicTouched.isEmpty,
-        "staged (wap.id) commits support append only (audit then publish)")
+  }
+
+  // ------------------------------------------------------ snapshot producer
+
+  /** Where a new snapshot is published. */
+  private[graft] sealed trait SnapshotTarget
+  private[graft] object SnapshotTarget {
+    /** The table head: `current-snapshot-id`, `refs.main` and the
+      * `snapshot-log` move to the new snapshot; its parent is main's head. */
+    case object Main extends SnapshotTarget
+    /** Write-audit-publish on a named branch: only `refs.<name>` moves. The
+      * parent is the branch head (main's head for a new branch); main's
+      * readers see nothing until [[fastForward]] publishes it. */
+    final case class Branch(name: String) extends SnapshotTarget {
+      require(name != "main", "main is written by normal commits")
     }
+    /** `spark.wap.id` staging: the snapshot enters the list with main's head
+      * as parent and no pointer moves — it is auditable by id, publishable
+      * with [[publishChanges]], or left to expiration. */
+    case object Staged extends SnapshotTarget
+  }
+
+  /** The parent's manifests a new snapshot leaves out of its list. */
+  private[graft] sealed trait ManifestDrop
+  private[graft] object ManifestDrop {
+    /** Carry every manifest forward. */
+    case object Keep extends ManifestDrop
+    /** Every delete manifest: the commit's rewrite applied all deletes
+      * (compaction), so none still targets a live row. */
+    case object AllDeletes extends ManifestDrop
+    /** The position-delete manifests: `newManifests` holds their
+      * consolidated replacement. Equality-delete manifests stay. */
+    case object PositionDeletes extends ManifestDrop
+    /** The data manifests: `newManifests` holds their rewritten
+      * replacement. Delete manifests stay. */
+    case object Data extends ManifestDrop
+  }
+
+  /** A data file entering the table. */
+  private[graft] final case class NewDataFile(path: String, size: Long, stats: FileStats,
+      partition: Seq[Any], format: String = "PARQUET")
+
+  /** Everything one snapshot-adding commit changes. [[commitSnapshot]]
+    * derives the rest — parent, sequence number, row ids, manifest list,
+    * summary totals, format version, ref moves — from the table it commits
+    * against.
+    *
+    * @param operation    the summary's `operation`: append, overwrite,
+    *                     delete or replace
+    * @param added        data files the snapshot adds (ADDED entries)
+    * @param removed      live data files it removes (DELETED entries); live
+    *                     position deletes that target them are rewritten
+    *                     away unless `drop` is [[ManifestDrop.AllDeletes]]
+    * @param newManifests manifests the caller already wrote under
+    *                     `snapshotId` — new delete files, a consolidated
+    *                     delete set, rewritten data manifests — listed
+    *                     ahead of the parent's; the summary's delete counts
+    *                     come from their entry counts
+    * @param picked       another snapshot's manifests spliced onto the
+    *                     parent's list (cherry-pick): they keep their
+    *                     added-snapshot and row ids and take this snapshot's
+    *                     sequence number
+    * @param drop         which of the parent's manifests the list leaves out
+    * @param summary      extra summary properties, written after the
+    *                     computed ones
+    * @param target       which ref moves; staged targets take appends only
+    * @param snapshotId   the new snapshot's id; a caller that writes files
+    *                     naming it allocates it first ([[newSnapshotId]]) */
+  private[graft] final case class SnapshotUpdate(operation: String,
+      added: Seq[NewDataFile] = Nil,
+      removed: Seq[Manifests.DataFileInfo] = Nil,
+      newManifests: Seq[NewManifestInfo] = Nil,
+      picked: Seq[Manifests.ManifestFile] = Nil,
+      drop: ManifestDrop = ManifestDrop.Keep,
+      summary: Map[String, String] = Map.empty,
+      target: SnapshotTarget = SnapshotTarget.Main,
+      snapshotId: Long = newSnapshotId())
+
+  /** A fresh positive snapshot id. */
+  private[graft] def newSnapshotId(): Long =
+    math.abs(UUID.randomUUID().getMostSignificantBits)
+
+  /** THE snapshot producer: every commit that adds a snapshot goes through
+    * here. `build` runs once per attempt of the optimistic commit loop
+    * against the table state CURRENT at that attempt (the first attempt
+    * uses `pinned`, a writer's own load, when given); it runs the
+    * operation's validations, resolves which files the operation removes,
+    * and returns the update, or None to commit nothing. The producer then,
+    * in the same attempt:
+    *  - rewrites the live position deletes that target removed files;
+    *  - writes the data manifest (DELETED + ADDED entries) when it has any;
+    *  - writes the manifest list: the new manifests with this snapshot's
+    *    sequence number and v3 row-id ranges, then the parent's kept ones;
+    *  - computes the summary: added/deleted counts, and the totals as the
+    *    parent's total plus added minus removed (Iceberg's SnapshotSummary
+    *    rule — omitted when the parent carries none);
+    *  - raises the format version to 2 when the new manifests need it
+    *    (delete content, or rewritten EXISTING entries);
+    *  - appends the snapshot and moves the target's ref (and, for main,
+    *    the `snapshot-log`). */
+  private[graft] def commitSnapshot(spark: SparkSession, url: String,
+      pinned: Option[IcebergTable] = None)(
+      build: IcebergTable => Option[SnapshotUpdate]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val table0 = resolveCurrent(spark, url)
-    val schema = table0.metadata.schemas
-      .find(_.schemaId == table0.metadata.currentSchemaId)
-      .getOrElse(throw new IllegalStateException("no current schema"))
-    val spec = table0.partitionSpec
-    val specInfo: Seq[(PartitionField, String, String)] = spec.fields.map { pf =>
-      val src = schema.fields.find(_.id == pf.sourceId)
-        .getOrElse(throw new IllegalStateException(s"no source field ${pf.sourceId}"))
-      val valueType = partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform))
-      (pf, src.icebergTypeString, valueType)
+    commitWithRetry(spark, url, conf, pinned)(table =>
+      build(table).map(produceSnapshot(spark, url, table, _, conf)))
+  }
+
+  /** One attempt of [[commitSnapshot]]: the new metadata JSON. */
+  private def produceSnapshot(spark: SparkSession, url: String,
+      table: IcebergTable, u: SnapshotUpdate, conf: Configuration): String = {
+    require(u.target == SnapshotTarget.Main || (u.operation == "append" &&
+        u.removed.isEmpty && u.newManifests.isEmpty && u.picked.isEmpty &&
+        u.drop == ManifestDrop.Keep),
+      "staged commits support append only (audit then publish)")
+    // a wap.id names ONE auditable commit: re-using one (a retried job
+    // resubmitting, two writers sharing an id) must refuse, or a later
+    // publish-by-id would be ambiguous (Iceberg's duplicate-WAP rule)
+    u.summary.get("wap.id").foreach { id =>
+      require(!table.metadata.snapshots.exists(_.summary.get("wap.id").contains(id)),
+        s"duplicate wap.id '$id': a snapshot already carries it")
     }
-    // 3-5 run inside the optimistic commit loop: delete resolution, the
-    // manifest, the manifest list, and the metadata json all depend on the
-    // table state CURRENT at publish time, so each attempt rebuilds them
-    val snapshotId = presetSnapshotId.getOrElse(
-      math.abs(UUID.randomUUID().getMostSignificantBits))
-    commitWithRetry(spark, url, conf) { table =>
-      // the snapshot this commit extends: main's head, or for a staged
-      // branch commit the branch's head (a new branch forks from main)
-      val baseSnapId: Long = toBranch.flatMap(table.refs.get)
-        .map(_.snapshotId).getOrElse(table.metadata.currentSnapshotId)
-      // a wap.id names ONE auditable commit: re-using one (a retried job
-      // resubmitting, two writers sharing an id) must refuse, or a later
-      // publish-by-id would be ambiguous (Iceberg's duplicate-WAP rule)
-      extraSummary.get("wap.id").foreach { id =>
-        require(!table.metadata.snapshots.exists(
-            _.summary.get("wap.id").contains(id)),
-          s"duplicate wap.id '$id': a snapshot already carries it")
-      }
-      val baseView = if (baseSnapId >= 0) table.atSnapshot(baseSnapId) else table
-      // 3a. (overwrite only) resolve which existing files the predicate
-      // deletes; refuse predicates that would split a file. Compaction pins
-      // the EXACT files it read, so a concurrent append's files survive.
-      val deletedFiles: Seq[Manifests.DataFileInfo] = if (dynamicTouched.isDefined)
-        // dynamic-overwrite victims resolve per ATTEMPT against the fresh
-        // table: a concurrent append into a touched partition must be
-        // replaced too, or "replace exactly the touched partitions" silently
-        // weakens to "replace the files that existed when we first looked"
-        dynamicVictims(table, dynamicTouched.get)
-      else if (pinnedDeletes.isDefined)
-        pinnedDeletes.get
-      else deletePred match {
-        case None => Nil
-        case Some(Pruning.AlwaysTrue) => // full-table replace
-          if (table.metadata.currentSnapshotId >= 0) table.liveFiles() else Nil
-        case Some(pred) =>
-          // per-file contexts: after partition evolution, each file prunes
-          // under the spec it was written with
-          val live = table.liveFiles()
-          val fully = live.filter(f =>
-            !table.fileMightMatchOwnSpec(Pruning.negate(pred), f))
-          val partial = live.filter(f =>
-            table.fileMightMatchOwnSpec(pred, f) &&
-              table.fileMightMatchOwnSpec(Pruning.negate(pred), f))
-          if (partial.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"predicate matches only part of ${partial.size} file(s); " +
-                "use deleteRows (format v2 position deletes) for row-level overwrite")
-          fully
-      }
+    val sid = u.snapshotId
+    val commitId = UUID.randomUUID().toString
+    val parentId = u.target match {
+      case SnapshotTarget.Branch(b) =>
+        table.refs.get(b).map(_.snapshotId).getOrElse(table.metadata.currentSnapshotId)
+      case _ => table.metadata.currentSnapshotId
+    }
+    val parent =
+      if (parentId < 0) None
+      else if (parentId == table.metadata.currentSnapshotId) Some(table)
+      else Some(table.atSnapshot(parentId))
+    val specInfo = specInfoOf(table)
 
-      // 3a'. any rewrite that derived its output from PIN-time table state
-      // (compaction, copy-on-write UPDATE/MERGE) must refuse when a
-      // row-level delete committed after the pin: the pinned read never saw
-      // it, so committing would silently resurrect the concurrently-deleted
-      // rows. Same shape as Iceberg's RewriteFiles validation; the caller
-      // reruns against the current snapshot.
-      if (pinnedDeleteFiles.isDefined) {
-        val nowDeleteFiles = table.liveDeleteFiles
-          .map(f => table.resolvePath(f.filePath)).toSet
-        if (nowDeleteFiles != pinnedDeleteFiles.get)
-          throw new java.util.ConcurrentModificationException(
-            "row-level deletes committed concurrently would be lost by this " +
-              "rewrite; rerun the operation against the current snapshot")
-      }
+    // whole-file removals may leave live position deletes targeting the
+    // removed files: rewrite the delete state so none dangles (unless every
+    // delete manifest is dropped anyway)
+    val deleteRewrite: Option[(Seq[NewManifestInfo], Long)] =
+      if (u.drop == ManifestDrop.AllDeletes) None
+      else rewriteDeletesForRemovedFiles(spark, url, table, commitId, sid,
+        u.removed, specInfo, conf)
 
-      // 3a'''. a DELTA commit references scanned data files by (path,
-      // position): if a concurrent commit removed one (compaction,
-      // overwrite), its deletes would dangle AND the op's re-inserted rows
-      // would duplicate rows still present in the replacement files —
-      // refuse, the caller reruns against the current snapshot
-      requireLiveKeys.foreach { keys =>
-        val live = table.liveFiles()
-          .map(f => morKeyOf(table.resolvePath(f.filePath))).toSet
-        val missing = keys.diff(live)
-        if (missing.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"${missing.size} scanned data file(s) were removed by a " +
-              "concurrent commit; rerun the row-level operation against " +
-              "the current snapshot")
-      }
-
-      // 3a''''. SERIALIZABLE isolation for delta DML (Iceberg's default for
-      // UPDATE/MERGE/DELETE — validateAddedDataFiles): a data file
-      // committed after the scan that might match the operation's condition
-      // invalidates its row selection (e.g. a MERGE can insert a key a
-      // concurrent append also inserted — write skew). Refuse; the caller
-      // reruns against the current snapshot.
-      requireNoConflictingAdds.foreach { case (keysAtScan, pred) =>
-        val live = if (table.metadata.currentSnapshotId < 0) Nil
-          else table.liveFiles()
-        val conflicting = live.filter { f =>
-          !keysAtScan.contains(morKeyOf(table.resolvePath(f.filePath))) &&
-            table.fileMightMatchOwnSpec(pred, f)
+    val removedTuples = u.removed.map(f =>
+      specInfo.map { case (pf, _, _) => f.partition.getOrElse(pf.name, null) })
+    val dataManifest =
+      if (u.added.isEmpty && u.removed.isEmpty) None
+      else {
+        val path = s"$url/metadata/$commitId-m0.avro"
+        val deleted = u.removed.zip(removedTuples).map { case (f, pv) =>
+          (f.filePath, f.fileSizeInBytes, FileStats(f.recordCount, f.lowerBounds,
+            f.upperBounds, f.valueCounts, f.nullValueCounts, f.nanValueCounts),
+            pv, Manifests.Status.Deleted)
         }
-        if (conflicting.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"${conflicting.size} data file(s) added by a concurrent commit " +
-              "may match the row-level operation's condition (serializable " +
-              "isolation); rerun the operation against the current snapshot")
+        val added = u.added.map(f =>
+          (f.path, f.size, f.stats, f.partition, Manifests.Status.Added))
+        // DELETED entries keep the format their files were registered with
+        writeManifestEntries(path, sid, deleted ++ added, specInfo, conf,
+          formatOf = (u.removed.map(f => f.filePath -> f.fileFormat.toUpperCase) ++
+            u.added.map(f => f.path -> f.format)).toMap)
+        // summaries cover DELETED entries too: a manifest skipped by its
+        // summary must not hide a DELETED entry
+        Some(NewManifestInfo(path, Manifests.FileContent.Data,
+          u.added.size, u.added.map(_.stats.recordCount).sum,
+          u.removed.size, u.removed.map(_.recordCount).sum,
+          partitionSummaries(specInfo, u.added.map(_.partition) ++ removedTuples)))
       }
+    val created = dataManifest.toSeq ++ u.newManifests ++
+      deleteRewrite.map(_._1).getOrElse(Nil)
 
-      // 3a''. whole-file deletes may remove data files that live position
-      // deletes still target: rewrite the delete state so no delete row
-      // dangles (and no row is double-subtracted from total-records)
-      val deleteRewrite: Option[(Seq[NewManifestInfo], Long)] =
-        if (dropDeleteManifests) None
-        else rewriteDeletesForRemovedFiles(spark, url, table, commitId,
-          snapshotId, deletedFiles, specInfo, conf)
+    // the parent's manifests, minus the ones this commit replaces; a
+    // delete-state rewrite replaces the position-delete manifests (equality
+    // deletes reference keys, not files — they survive file removal)
+    val dropsPositionDeletes =
+      u.drop == ManifestDrop.PositionDeletes || deleteRewrite.isDefined
+    val kept = parent.map(_.manifestList).getOrElse(Nil).filterNot { m =>
+      val isDelete = m.content == Manifests.ManifestContent.Deletes
+      u.drop match {
+        case ManifestDrop.AllDeletes => isDelete
+        case ManifestDrop.Data => !isDelete
+        case _ => dropsPositionDeletes && isDelete &&
+          !parent.get.equalityDeleteManifestPaths.contains(m.path)
+      }
+    }
+    val newSeq = table.metadata.lastSequenceNumber + 1
+    // Iceberg v3 ROW LINEAGE: the new data manifests get [next-row-id,
+    // next-row-id + added) — allocated per attempt, so a lost race re-reads
+    // next-row-id and concurrent committers never overlap
+    val rowIdBase =
+      if (table.metadata.formatVersion >= 3) Some(table.metadata.nextRowId.getOrElse(0L))
+      else None
+    val listPath = s"$url/metadata/snap-$sid-1-$commitId.avro"
+    // picked manifests are RE-SEQUENCED under this snapshot (their append
+    // entries inherit the list row's number), as Iceberg's cherrypick does:
+    // the stage-time number would let an equality delete committed on main
+    // between stage and publish delete the just-published rows
+    writeManifestLists(listPath, sid, created,
+      u.picked.map(_.copy(sequenceNumber = Some(newSeq))) ++ kept, conf,
+      sequenceNumber = newSeq, specId = table.metadata.defaultSpecId,
+      firstRowIdBase = rowIdBase)
 
-      // 3b. ONE manifest holding DELETED entries (if overwriting) + ADDED ones
-      val manifestPath = s"$url/metadata/$commitId-m0.avro"
-      val deletedEntries = deletedFiles.map { f =>
-        val stats = FileStats(f.recordCount, f.lowerBounds, f.upperBounds,
-          f.valueCounts, f.nullValueCounts, f.nanValueCounts)
-        val partValues = specInfo.map { case (pf, _, _) => f.partition.getOrElse(pf.name, null) }
-        (f.filePath, f.fileSizeInBytes, stats, partValues, Manifests.Status.Deleted)
-      }
-      val addedEntries = dataFiles.map { case (p, len, stats, pv) =>
-        (p, len, stats, pv, Manifests.Status.Added)
-      }
-      writeManifestEntries(manifestPath, snapshotId, deletedEntries ++ addedEntries,
-        specInfo, conf, fileFormat = dataFileFormat,
-        formatOf = deletedFiles.map(f =>
-          f.filePath -> f.fileFormat.toUpperCase).toMap)
-
-      // 4. manifest list = prior snapshot's manifests + the new one; the new
-      // manifest gets per-partition-field summaries for manifest-tier pruning.
-      // Compaction drops delete manifests: every position delete targeted a
-      // file that is being removed, so they are fully applied.
-      val priorManifests: Seq[Manifests.ManifestFile] =
-        (if (baseSnapId >= 0) baseView.manifestList else Nil)
-          .filterNot { m =>
-            val isDelete = m.content == Manifests.ManifestContent.Deletes
-            // compaction folds ALL deletes; a rewrite (file-removal cleanup
-            // or explicit delete-file consolidation) replaces only the
-            // position-delete manifests (equality deletes reference keys,
-            // not files — they survive whole-file removal untouched)
-            (dropDeleteManifests && isDelete) ||
-              ((deleteRewrite.isDefined || dropPosDeleteManifests) && isDelete &&
-                !table.equalityDeleteManifestPaths.contains(m.path))
-          }
-      val manifestListPath = s"$url/metadata/snap-$snapshotId-1-$commitId.avro"
-      val newSeq = table.metadata.lastSequenceNumber + 1
-      val addedRecords = dataFiles.map(_._3.recordCount).sum
-      val deletedRecords = deletedFiles.map(_.recordCount).sum
-      val summaries: Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])] =
-        specInfo.zipWithIndex.map { case ((_, _, valueType), i) =>
-          // summaries must cover deleted entries too (pruning soundness: a
-          // manifest skipped by summary must not hide a DELETED entry)
-          val values = dataFiles.map(_._4(i)) ++ deletedEntries.map(_._4(i))
-          val nonNull = values.filter(_ != null)
-          val containsNull = values.exists(_ == null)
-          if (nonNull.isEmpty) (containsNull, None, None)
-          else {
-            val mn = nonNull.reduce((a, b) =>
-              if (IcebergTypes.compare(a, b).exists(_ <= 0)) a else b)
-            val mx = nonNull.reduce((a, b) =>
-              if (IcebergTypes.compare(a, b).exists(_ >= 0)) a else b)
-            (containsNull, Some(IcebergTypes.encodeBound(mn, valueType)),
-              Some(IcebergTypes.encodeBound(mx, valueType)))
-          }
-        }
-      // Iceberg v3 ROW LINEAGE: allocate [next-row-id, next-row-id+added)
-      // to this commit's data manifests. Computed INSIDE the retry loop —
-      // a lost race re-reads next-row-id from fresh state, so ranges from
-      // concurrent committers never overlap.
-      val rowIdBase =
-        if (table.metadata.formatVersion >= 3)
-          Some(table.metadata.nextRowId.getOrElse(0L))
-        else None
-      writeManifestLists(manifestListPath, snapshotId,
-        NewManifestInfo(manifestPath, Manifests.ManifestContent.Data,
-          dataFiles.size, addedRecords, deletedFiles.size, deletedRecords,
-          summaries) +: (extraManifests ++ deleteRewrite.map(_._1).getOrElse(Nil)),
-        priorManifests, conf, sequenceNumber = newSeq,
-        specId = table0.metadata.defaultSpecId,
-        firstRowIdBase = rowIdBase)
-
-      // 5. new metadata version
-      val old = mapper.readTree(
-        metadataBaseJson(table, url, conf))
-        .asInstanceOf[ObjectNode]
-      val now = System.currentTimeMillis()
-      // a delete-content manifest in the commit (merge/upsert) makes the
-      // table format-version 2 (position deletes are a v2 feature)
-      if (extraManifests.exists(_.content == Manifests.ManifestContent.Deletes))
-        ensureFormatVersion(old, 2)
-      val snap = mapper.createObjectNode()
-      snap.put("snapshot-id", snapshotId)
-      if (baseSnapId >= 0)
-        snap.put("parent-snapshot-id", baseSnapId)
-      snap.put("timestamp-ms", now)
-      snap.put("sequence-number", newSeq)
-      rowIdBase.foreach { base =>
-        snap.put("first-row-id", base)
-        old.put("next-row-id", base + addedRecords)
-      }
-      val summary = mapper.createObjectNode()
-      summary.put("operation", operation)
-      summary.put("added-data-files", dataFiles.size.toString)
-      summary.put("added-records", addedRecords.toString)
-      if (deletedFiles.nonEmpty) {
-        summary.put("deleted-data-files", deletedFiles.size.toString)
-        summary.put("deleted-records", deletedRecords.toString)
-      }
-      if (posDeleteRows > 0) {
-        summary.put("added-delete-files", extraManifests.count(
-          _.content == Manifests.ManifestContent.Deletes).toString)
-        summary.put("added-position-deletes", posDeleteRows.toString)
-      }
-      extraSummary.foreach { case (k, v) => summary.put(k, v) }
-      // deleted file record counts are RAW; rows already removed by applied
-      // position deletes (dropped with their manifests, or dropped by the
-      // delete-state rewrite) must not be double-subtracted from the total
-      val morAdjust = if (dropDeleteManifests)
+    def rows(content: Int)(f: NewManifestInfo => Long): Long =
+      u.newManifests.filter(_.fileContent == content).map(f).sum
+    val addedFiles = u.added.size + rows(Manifests.FileContent.Data)(_.addedFiles) +
+      u.picked.map(_.addedFilesCount.getOrElse(0).toLong).sum
+    val addedRecords = u.added.map(_.stats.recordCount).sum +
+      rows(Manifests.FileContent.Data)(_.addedRows) +
+      u.picked.map(_.addedRowsCount.getOrElse(0L)).sum
+    // net new position deletes (a DV manifest's DELETED entries are the
+    // prior blobs its merged ones supersede)
+    val addedPositionDeletes =
+      rows(Manifests.FileContent.PositionDeletes)(m => m.addedRows - m.deletedRows)
+    // position-delete rows that stop counting: all of them when their
+    // manifests are dropped, else those the delete-state rewrite found on
+    // removed files — either way their rows are already gone from the total
+    val retiredPositionDeletes =
+      if (u.drop == ManifestDrop.AllDeletes || u.drop == ManifestDrop.PositionDeletes)
         table.positionDeleteFiles.map(_.recordCount).sum
       else deleteRewrite.map(_._2).getOrElse(0L)
-      val totalRecords = addedRecords - (deletedRecords - morAdjust) - posDeleteRows +
-        table.metadata.snapshots
-        .find(_.snapshotId == baseSnapId)
-        .flatMap(_.summary.get("total-records")).map(_.toLong).getOrElse(0L)
-      summary.put("total-records", totalRecords.toString)
-      summary.put("total-data-files",
-        (dataFiles.size - deletedFiles.size + priorManifests.map(m =>
-          m.addedFilesCount.getOrElse(0) + m.existingFilesCount.getOrElse(0)).sum).toString)
-      snap.set[ObjectNode]("summary", summary)
-      snap.put("manifest-list", manifestListPath)
-      snap.put("schema-id", schema.schemaId)
-      old.withArray[ArrayNode]("snapshots").add(snap)
-      old.put("last-sequence-number", newSeq)
-      old.put("last-updated-ms", now)
-      toBranch match {
-        case Some(b) =>
-          // staged: only the branch ref moves; main readers (and the
-          // snapshot-log main's history is made of) never see it
-          val refs = Option(old.get("refs")).collect { case o: ObjectNode => o }
-            .getOrElse { val o = mapper.createObjectNode(); old.set[ObjectNode]("refs", o); o }
-          val r = mapper.createObjectNode()
-          r.put("snapshot-id", snapshotId)
-          r.put("type", "branch")
-          refs.set[ObjectNode](b, r)
-        case None if stageOnly =>
-          // wap.id staging: the snapshot is in the list (auditable via
-          // time travel by id, publishable by wap.id) but NO pointer moves
-          ()
-        case None =>
-          old.put("current-snapshot-id", snapshotId)
-          setMainRef(old, snapshotId)
-          val log = if (old.has("snapshot-log")) old.withArray[ArrayNode]("snapshot-log")
-            else { val a = mapper.createArrayNode(); old.set[ArrayNode]("snapshot-log", a); a }
-          val logEntry = mapper.createObjectNode()
-          logEntry.put("timestamp-ms", now)
-          logEntry.put("snapshot-id", snapshotId)
-          log.add(logEntry)
-      }
-      Some(old.toPrettyString)
+    // rows readers stop seeing (equality deletes match an unknown number of
+    // rows, so they leave the totals as they are)
+    val deletedRecords = u.removed.map(_.recordCount).sum -
+      retiredPositionDeletes + addedPositionDeletes
+    val summary = mapper.createObjectNode()
+    summary.put("operation", u.operation)
+    def putCount(key: String, n: Long): Unit =
+      if (n != 0) summary.put(key, n.toString)
+    putCount("added-data-files", addedFiles)
+    putCount("added-records", addedRecords)
+    putCount("deleted-data-files", u.removed.size)
+    putCount("deleted-records", deletedRecords)
+    putCount("added-delete-files",
+      u.newManifests.filter(_.fileContent != Manifests.FileContent.Data)
+        .map(_.addedFiles.toLong).sum)
+    putCount("added-position-deletes", addedPositionDeletes)
+    putCount("removed-position-deletes", retiredPositionDeletes)
+    putCount("added-equality-deletes",
+      rows(Manifests.FileContent.EqualityDeletes)(_.addedRows))
+    val parentSummary = parent.map(_.currentSnapshot.summary)
+    def putTotal(key: String, delta: Long): Unit =
+      parentSummary.fold(Option(0L))(_.get(key).map(_.toLong))
+        .foreach(t => summary.put(key, (t + delta).toString))
+    putTotal("total-records", addedRecords - deletedRecords)
+    putTotal("total-data-files", addedFiles - u.removed.size)
+    u.summary.foreach { case (k, v) => summary.put(k, v) }
+
+    val old = mapper.readTree(metadataBaseJson(table, url, conf)).asInstanceOf[ObjectNode]
+    // delete manifests and rewritten EXISTING entries (explicit sequence
+    // numbers) are v2 features; the version is raised, never lowered
+    if (old.path("format-version").asInt(1) < 2 && created.exists(m =>
+        m.content == Manifests.ManifestContent.Deletes || m.existingFiles > 0))
+      old.put("format-version", 2)
+    val now = System.currentTimeMillis()
+    val snap = mapper.createObjectNode()
+    snap.put("snapshot-id", sid)
+    if (parentId >= 0) snap.put("parent-snapshot-id", parentId)
+    snap.put("timestamp-ms", now)
+    snap.put("sequence-number", newSeq)
+    rowIdBase.foreach { b =>
+      snap.put("first-row-id", b)
+      old.put("next-row-id", b + created
+        .filter(_.fileContent == Manifests.FileContent.Data).map(_.addedRows).sum)
     }
+    snap.set[ObjectNode]("summary", summary)
+    snap.put("manifest-list", listPath)
+    snap.put("schema-id", table.metadata.currentSchemaId)
+    old.withArray[ArrayNode]("snapshots").add(snap)
+    old.put("last-sequence-number", newSeq)
+    old.put("last-updated-ms", now)
+    u.target match {
+      case SnapshotTarget.Main => moveMain(old, sid, now)
+      case SnapshotTarget.Branch(b) => putRef(old, b, sid, "branch")
+      case SnapshotTarget.Staged => ()
+    }
+    old.toPrettyString
+  }
+
+  /** Manifest-list partition summaries over `tuples` (one per entry, in
+    * `specInfo` order): per field, whether a null occurs and the encoded
+    * min/max of the non-null values. */
+  private def partitionSummaries(specInfo: Seq[(PartitionField, String, String)],
+      tuples: Seq[Seq[Any]]): Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])] =
+    specInfo.zipWithIndex.map { case ((_, _, valueType), i) =>
+      val values = tuples.map(_(i))
+      val nonNull = values.filter(_ != null)
+      val containsNull = values.exists(_ == null)
+      if (nonNull.isEmpty) (containsNull, None, None)
+      else {
+        val mn = nonNull.reduce((a, b) =>
+          if (IcebergTypes.compare(a, b).exists(_ <= 0)) a else b)
+        val mx = nonNull.reduce((a, b) =>
+          if (IcebergTypes.compare(a, b).exists(_ >= 0)) a else b)
+        (containsNull, Some(IcebergTypes.encodeBound(mn, valueType)),
+          Some(IcebergTypes.encodeBound(mx, valueType)))
+      }
+    }
+
+  /** Resolved paths of `table`'s live delete files — the delete state a
+    * pinned read applied, compared by [[requireDeletesUnchanged]]. */
+  private[graft] def liveDeleteSet(table: IcebergTable): Set[String] =
+    table.liveDeleteFiles.map(f => table.resolvePath(f.filePath)).toSet
+
+  /** A commit derived from PIN-time table state (compaction, copy-on-write
+    * UPDATE/MERGE, row-level deletes, delete consolidation) refuses when a
+    * row-level delete committed after the pin: the pinned read never saw
+    * it, so committing would silently resurrect the concurrently-deleted
+    * rows. Same shape as Iceberg's RewriteFiles validation; the caller
+    * reruns against the current snapshot. */
+  private[graft] def requireDeletesUnchanged(table: IcebergTable,
+      atPin: Set[String]): Unit =
+    if (liveDeleteSet(table) != atPin)
+      throw new java.util.ConcurrentModificationException(
+        "row-level deletes committed concurrently would be lost by this " +
+          "operation; rerun the operation against the current snapshot")
+
+  /** A DELTA commit references scanned data files by (path, position): if a
+    * concurrent commit removed one (compaction, overwrite), its deletes
+    * would dangle AND the op's re-inserted rows would duplicate rows still
+    * present in the replacement files — refuse, the caller reruns against
+    * the current snapshot. */
+  private[graft] def requireScannedFilesLive(table: IcebergTable,
+      keys: Set[String]): Unit = {
+    val live = table.liveFiles().map(f => morKeyOf(table.resolvePath(f.filePath))).toSet
+    val missing = keys.diff(live)
+    if (missing.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"${missing.size} scanned data file(s) were removed by a concurrent " +
+          "commit; rerun the row-level operation against the current snapshot")
+  }
+
+  /** SERIALIZABLE isolation for delta DML (Iceberg's default for
+    * UPDATE/MERGE/DELETE — validateAddedDataFiles): a data file committed
+    * after the scan (not among `keysAtScan`) that might match the
+    * operation's condition invalidates its row selection (e.g. a MERGE can
+    * insert a key a concurrent append also inserted — write skew). Refuse;
+    * the caller reruns against the current snapshot. */
+  private[graft] def requireNoConflictingAdds(table: IcebergTable,
+      keysAtScan: Set[String], pred: Pruning.IcePredicate): Unit = {
+    val live = if (table.metadata.currentSnapshotId < 0) Nil else table.liveFiles()
+    val conflicting = live.filter { f =>
+      !keysAtScan.contains(morKeyOf(table.resolvePath(f.filePath))) &&
+        table.fileMightMatchOwnSpec(pred, f)
+    }
+    if (conflicting.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"${conflicting.size} data file(s) added by a concurrent commit " +
+          "may match the row-level operation's condition (serializable " +
+          "isolation); rerun the operation against the current snapshot")
   }
 
   // ------------------------------------------------------ schema evolution
@@ -1222,17 +1274,10 @@ object IcebergWriter {
         val old = mapper.readTree(
           metadataBaseJson(table, url, conf))
           .asInstanceOf[ObjectNode]
-        old.put("current-snapshot-id", snapshotId)
-        setMainRef(old, snapshotId)
         val now = System.currentTimeMillis()
         old.put("last-updated-ms", now)
         // the rollback is itself a history event
-        val log = if (old.has("snapshot-log")) old.withArray[ArrayNode]("snapshot-log")
-          else { val a = mapper.createArrayNode(); old.set[ArrayNode]("snapshot-log", a); a }
-        val entry = mapper.createObjectNode()
-        entry.put("timestamp-ms", now)
-        entry.put("snapshot-id", snapshotId)
-        log.add(entry)
+        moveMain(old, snapshotId, now)
         Some(old.toPrettyString)
       }
     }
@@ -1251,16 +1296,9 @@ object IcebergWriter {
       else {
         val old = mapper.readTree(metadataBaseJson(table, url, conf))
           .asInstanceOf[ObjectNode]
-        old.put("current-snapshot-id", snapshotId)
-        setMainRef(old, snapshotId)
         val now = System.currentTimeMillis()
         old.put("last-updated-ms", now)
-        val log = if (old.has("snapshot-log")) old.withArray[ArrayNode]("snapshot-log")
-          else { val a = mapper.createArrayNode(); old.set[ArrayNode]("snapshot-log", a); a }
-        val entry = mapper.createObjectNode()
-        entry.put("timestamp-ms", now)
-        entry.put("snapshot-id", snapshotId)
-        log.add(entry)
+        moveMain(old, snapshotId, now)
         Some(old.toPrettyString)
       }
     }
@@ -1287,9 +1325,8 @@ object IcebergWriter {
     *
     * @return the new snapshot id on main */
   def cherryPick(spark: SparkSession, url: String, sourceSnapshotId: Long): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    var resultId = -1L
-    commitWithRetry(spark, url, conf) { table =>
+    val snapshotId = newSnapshotId()
+    commitSnapshot(spark, url) { table =>
       val src = table.snapshots.getOrElse(sourceSnapshotId,
         throw new IllegalArgumentException(s"unknown snapshot $sourceSnapshotId"))
       require(src.summary.get("operation").contains("append"),
@@ -1312,73 +1349,18 @@ object IcebergWriter {
       require(picked.forall(_.content == Manifests.ManifestContent.Data),
         "cherry-pick source carries delete manifests — not an append")
 
-      val mainManifests =
-        if (table.metadata.currentSnapshotId >= 0) table.manifestList else Nil
       // picking the same files twice (double publish via different ids)
       // would duplicate rows — refuse on any path overlap
-      val mainPaths = mainManifests.map(_.path).toSet
+      val mainPaths =
+        if (table.metadata.currentSnapshotId < 0) Set.empty[String]
+        else table.manifestList.map(_.path).toSet
       require(!picked.exists(m => mainPaths(m.path)),
         "cherry-picked manifests already present on main")
-
-      val newSnapId = math.abs(UUID.randomUUID().getMostSignificantBits)
-      resultId = newSnapId
-      val commitId = UUID.randomUUID().toString
-      val manifestListPath = s"$url/metadata/snap-$newSnapId-1-$commitId.avro"
-      val newSeq = table.metadata.lastSequenceNumber + 1
-      // RE-SEQUENCE the picked manifests under the NEW snapshot's sequence
-      // (append entries carry no explicit per-entry sequence, so they
-      // inherit the manifest-list row's) — Iceberg's cherrypick commits the
-      // files at the publish-time sequence, not the stage-time one. Keeping
-      // the old number would let an equality delete committed on main
-      // BETWEEN stage and publish (higher sequence) silently MOR-delete the
-      // just-published rows.
-      val resequenced = picked.map(_.copy(sequenceNumber = Some(newSeq)))
-      writeManifestLists(manifestListPath, newSnapId, Nil,
-        resequenced ++ mainManifests, conf, sequenceNumber = newSeq)
-
-      val old = mapper.readTree(metadataBaseJson(table, url, conf))
-        .asInstanceOf[ObjectNode]
-      val now = System.currentTimeMillis()
-      val addedFiles = picked.map(_.addedFilesCount.getOrElse(0)).sum
-      val addedRecords = picked.map(_.addedRowsCount.getOrElse(0L)).sum
-      val baseSummary =
-        if (table.metadata.currentSnapshotId >= 0) table.currentSnapshot.summary
-        else Map.empty[String, String]
-      val snap = mapper.createObjectNode()
-      snap.put("snapshot-id", newSnapId)
-      if (table.metadata.currentSnapshotId >= 0)
-        snap.put("parent-snapshot-id", table.metadata.currentSnapshotId)
-      snap.put("timestamp-ms", now)
-      snap.put("sequence-number", newSeq)
-      val summary = mapper.createObjectNode()
-      summary.put("operation", "append")
-      summary.put("source-snapshot-id", sourceSnapshotId.toString)
-      src.summary.get("wap.id").foreach(summary.put("published-wap-id", _))
-      summary.put("added-data-files", addedFiles.toString)
-      summary.put("added-records", addedRecords.toString)
-      summary.put("total-records",
-        (baseSummary.get("total-records").map(_.toLong).getOrElse(0L) +
-          addedRecords).toString)
-      summary.put("total-data-files",
-        (baseSummary.get("total-data-files").map(_.toLong).getOrElse(0L) +
-          addedFiles).toString)
-      snap.set[ObjectNode]("summary", summary)
-      snap.put("manifest-list", manifestListPath)
-      snap.put("schema-id", table.metadata.currentSchemaId)
-      old.withArray[ArrayNode]("snapshots").add(snap)
-      old.put("last-sequence-number", newSeq)
-      old.put("current-snapshot-id", newSnapId)
-      setMainRef(old, newSnapId)
-      old.put("last-updated-ms", now)
-      val log = if (old.has("snapshot-log")) old.withArray[ArrayNode]("snapshot-log")
-        else { val a = mapper.createArrayNode(); old.set[ArrayNode]("snapshot-log", a); a }
-      val entry = mapper.createObjectNode()
-      entry.put("timestamp-ms", now)
-      entry.put("snapshot-id", newSnapId)
-      log.add(entry)
-      Some(old.toPrettyString)
+      Some(SnapshotUpdate("append", picked = picked, snapshotId = snapshotId,
+        summary = Map("source-snapshot-id" -> sourceSnapshotId.toString) ++
+          src.summary.get("wap.id").map("published-wap-id" -> _)))
     }
-    resultId
+    snapshotId
   }
 
   /** PUBLISH a write-audit-publish commit BY ITS `wap.id` (Iceberg's
@@ -1663,94 +1645,14 @@ object IcebergWriter {
     * of its rows match `pred` (Iceberg v1 whole-file delete — row-level
     * rewrites are a v2/merge-on-read concern). Files that may contain a mix
     * of matching and non-matching rows raise: a silent partial delete would
-    * corrupt the table.
+    * corrupt the table. The resolution re-runs per commit attempt, so a
+    * concurrent append/delete is re-validated after reload.
     */
-  def deleteWhere(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val commitId = UUID.randomUUID().toString
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    // metadata-only operation: the whole resolution re-runs per commit
-    // attempt, so a concurrent append/delete is re-validated after reload
-    commitWithRetry(spark, url, conf) { table =>
-      val schema = table.iceSchema
-      val live = table.liveFiles()
-      val fullyMatching = live.filter(f =>
-        !table.fileMightMatchOwnSpec(Pruning.negate(pred), f))
-      val partial = live.filter(f =>
-        table.fileMightMatchOwnSpec(pred, f) &&
-          table.fileMightMatchOwnSpec(Pruning.negate(pred), f))
-      if (partial.nonEmpty)
-        throw new UnsupportedOperationException(
-          s"predicate matches only part of ${partial.size} file(s); " +
-            "row-level delete (format v2) is not supported")
-      if (fullyMatching.isEmpty) None
-      else {
-        val spec = table.partitionSpec
-        val specInfo: Seq[(PartitionField, String, String)] = spec.fields.map { pf =>
-          val src = schema.fields.find(_.id == pf.sourceId).get
-          (pf, src.icebergTypeString,
-            partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-        }
-        // manifest of DELETED entries (readers fold them out, ice.py:196-203)
-        val manifestPath = s"$url/metadata/$commitId-m0.avro"
-        val deletedEntries = fullyMatching.map { f =>
-          val stats = FileStats(f.recordCount, f.lowerBounds, f.upperBounds,
-            f.valueCounts, f.nullValueCounts, f.nanValueCounts)
-          val partValues = specInfo.map { case (pf, _, _) =>
-            f.partition.getOrElse(pf.name, null)
-          }
-          (f.filePath, f.fileSizeInBytes, stats, partValues)
-        }
-        writeManifest(manifestPath, snapshotId, deletedEntries, specInfo, conf,
-          status = Manifests.Status.Deleted)
-
-        // live position deletes targeting a dropped file must not survive it
-        // (their rows were already subtracted from total-records)
-        val deleteRewrite = rewriteDeletesForRemovedFiles(spark, url, table,
-          commitId, snapshotId, fullyMatching, specInfo, conf)
-        val priorManifests = table.manifestList
-          .filterNot(m => deleteRewrite.isDefined &&
-            m.content == Manifests.ManifestContent.Deletes &&
-            !table.equalityDeleteManifestPaths.contains(m.path))
-        val manifestListPath = s"$url/metadata/snap-$snapshotId-1-$commitId.avro"
-        val newSeq = table.metadata.lastSequenceNumber + 1
-        val deadDeleteRows = deleteRewrite.map(_._2).getOrElse(0L)
-        val deletedRecords = fullyMatching.map(_.recordCount).sum - deadDeleteRows
-        writeManifestLists(manifestListPath, snapshotId,
-          NewManifestInfo(manifestPath, Manifests.ManifestContent.Data,
-            0, 0L, fullyMatching.size, fullyMatching.map(_.recordCount).sum,
-            Nil) +: deleteRewrite.map(_._1).getOrElse(Nil),
-          priorManifests, conf, sequenceNumber = newSeq,
-          specId = table.metadata.defaultSpecId)
-
-        val old = mapper.readTree(
-          metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        val now = System.currentTimeMillis()
-        val snap = mapper.createObjectNode()
-        snap.put("snapshot-id", snapshotId)
-        snap.put("parent-snapshot-id", table.metadata.currentSnapshotId)
-        snap.put("timestamp-ms", now)
-        snap.put("sequence-number", newSeq)
-        val summary = mapper.createObjectNode()
-        summary.put("operation", "delete")
-        summary.put("deleted-data-files", fullyMatching.size.toString)
-        summary.put("deleted-records", deletedRecords.toString)
-        val prevTotal = table.currentSnapshot.summary.get("total-records")
-          .map(_.toLong).getOrElse(0L)
-        summary.put("total-records", (prevTotal - deletedRecords).toString)
-        snap.set[ObjectNode]("summary", summary)
-        snap.put("manifest-list", manifestListPath)
-        snap.put("schema-id", schema.schemaId)
-        old.withArray[ArrayNode]("snapshots").add(snap)
-        old.put("current-snapshot-id", snapshotId)
-        old.put("last-sequence-number", newSeq)
-        setMainRef(old, snapshotId)
-        old.put("last-updated-ms", now)
-        Some(old.toPrettyString)
-      }
+  def deleteWhere(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit =
+    commitSnapshot(spark, url) { table =>
+      val removed = wholeFilesMatching(table, pred)
+      if (removed.isEmpty) None else Some(SnapshotUpdate("delete", removed = removed))
     }
-  }
 
   /** Publish a DELTA row-level operation (SQL UPDATE/MERGE/DELETE through
     * `SupportsDelta`): executor-written data files PLUS executor-written
@@ -1763,7 +1665,9 @@ object IcebergWriter {
     * reruns) when a concurrent commit removed a scanned data file — the
     * new deletes would dangle and re-inserted rows would duplicate — or
     * changed the live delete-file set the pinned scan applied (a
-    * concurrently-deleted row would be resurrected by this op's inserts). */
+    * concurrently-deleted row would be resurrected by this op's inserts),
+    * or added a file that may match the operation's condition
+    * (`addValidation`: the live files at scan and the condition). */
   private[graft] def commitDelta(spark: SparkSession, url: String,
       commitId: String,
       rawDataFiles: Seq[(String, Long, Seq[Any])],
@@ -1771,27 +1675,18 @@ object IcebergWriter {
       operation: String,
       scannedKeys: Set[String],
       deleteFilesAtScan: Set[String],
-      addValidation: Option[(Set[String], Pruning.IcePredicate)] = None): Unit = {
+      addValidation: (Set[String], Pruning.IcePredicate)): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val table0 = resolveCurrent(spark, url)
-    val schema = table0.metadata.schemas
-      .find(_.schemaId == table0.metadata.currentSchemaId)
-      .getOrElse(throw new IllegalStateException("no current schema"))
-    val specInfo: Seq[(PartitionField, String, String)] =
-      table0.partitionSpec.fields.map { pf =>
-        val src = schema.fields.find(_.id == pf.sourceId).get
-        (pf, src.icebergTypeString,
-          partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-      }
+    val specInfo = specInfoOf(table0)
     val statsByPath = collectStats(spark,
       rawDataFiles.map(f => (f._1, f._2)), table0.iceSchema, conf)
     val dataFiles = rawDataFiles.map { case (p, len, pv) =>
-      (new Path(p).toUri.getPath, len, statsByPath(p), pv)
+      NewDataFile(new Path(p).toUri.getPath, len, statsByPath(p), pv)
     }
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    var posDeleteCount = deleteFiles.map(_._3).sum
-    val deleteManifest: Seq[NewManifestInfo] =
-      if (deleteFiles.isEmpty) Nil
+    val snapshotId = newSnapshotId()
+    val deleteManifest: Option[NewManifestInfo] =
+      if (deleteFiles.isEmpty) None
       else if (table0.metadata.formatVersion >= 3) {
         // v3: position deletes MUST travel as DELETION VECTORS — convert
         // the delta protocol's task-written parquet carriers at commit
@@ -1799,14 +1694,13 @@ object IcebergWriter {
         // a staging artifact and are removed once converted)
         val positions = spark.read.parquet(deleteFiles.map(_._1): _*)
           .select("file_path", "pos")
-        val (m, netNew) = writeDeletionVectors(spark, url, table0, commitId,
+        val m = writeDeletionVectors(spark, url, table0, commitId,
           snapshotId, positions, specInfo, conf)
-        posDeleteCount = netNew
         deleteFiles.foreach { case (p, _, _) =>
           val hp = new Path(p)
           hp.getFileSystem(conf).delete(hp, false)
         }
-        m.toSeq
+        m
       }
       else {
         val entries = deleteFiles.map { case (p, len, rows) =>
@@ -1817,17 +1711,16 @@ object IcebergWriter {
         val manifestPath = s"$url/metadata/$commitId-m1.avro"
         writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
           fileContent = Manifests.FileContent.PositionDeletes)
-        Seq(NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
-          entries.size, posDeleteCount, 0, 0L, Nil))
+        Some(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
+          entries.size, deleteFiles.map(_._3).sum, 0, 0L, Nil))
       }
-    commitDataFiles(spark, url, commitId, dataFiles, deletePred = None,
-      operation = operation,
-      pinnedDeleteFiles = Some(deleteFilesAtScan),
-      extraManifests = deleteManifest,
-      posDeleteRows = posDeleteCount,
-      presetSnapshotId = Some(snapshotId),
-      requireLiveKeys = if (deleteFiles.isEmpty) None else Some(scannedKeys),
-      requireNoConflictingAdds = addValidation)
+    commitSnapshot(spark, url, Some(table0)) { table =>
+      requireDeletesUnchanged(table, deleteFilesAtScan)
+      if (deleteFiles.nonEmpty) requireScannedFilesLive(table, scannedKeys)
+      requireNoConflictingAdds(table, addValidation._1, addValidation._2)
+      Some(SnapshotUpdate(operation, added = dataFiles,
+        newManifests = deleteManifest.toSeq, snapshotId = snapshotId))
+    }
   }
 
   /** Run `body` against a CLONED session (same SparkContext, own
@@ -1868,41 +1761,27 @@ object IcebergWriter {
     * .row_index`), written to a position-delete parquet (`file_path`,
     * `pos`), and registered in a delete-content manifest (v2 fields 517/134).
     * Readers apply them as an anti-join on (file name, position) — see
-    * `IcebergTable.applyPositionDeletes`. The commit bumps the table to
+    * `IcebergTable.applyPositionDeletes`. Position deletes bump the table to
     * format-version 2.
     */
   def deleteRows(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit = {
     import org.apache.spark.sql.functions.col
     val conf = spark.sessionState.newHadoopConf()
     val table = resolveCurrent(spark, url)
-    val schema = table.iceSchema
-    val live = table.liveFiles()
-    val (fully, candidates) =
-      if (pred == Pruning.AlwaysTrue) (live, Nil) // delete everything, whole files
-      else (
-        live.filter(f => !table.fileMightMatchOwnSpec(Pruning.negate(pred), f)),
-        live.filter(f =>
-          table.fileMightMatchOwnSpec(pred, f) &&
-            table.fileMightMatchOwnSpec(Pruning.negate(pred), f)))
+    val (fully, candidates) = splitByPredicate(table, pred)
     if (fully.isEmpty && candidates.isEmpty) return
     // whole-file drops work for any format; only files a predicate SPLITS
     // need position deletes, and those require the parquet row index
     requireParquetForRowLevel(table, candidates, "row-level DELETE")
+    val snapshotId = newSnapshotId()
 
-    val commitId = UUID.randomUUID().toString
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val spec = table.partitionSpec
-    val specInfo: Seq[(PartitionField, String, String)] = spec.fields.map { pf =>
-      val src = schema.fields.find(_.id == pf.sourceId).get
-      (pf, src.icebergTypeString,
-        partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-    }
-
-    // 1. position-delete file for split files: distributed position scan
+    // position-delete file for split files: distributed position scan
     // (field-id resolution scoped to this eager region — the _metadata
-    // columns force Spark's built-in parquet source here)
-    val (deleteManifest, posDeleteCount) =
-      if (candidates.isEmpty) (None, 0L)
+    // columns force Spark's built-in parquet source here). It runs outside
+    // the commit loop: positions target immutable files, so they remain
+    // valid across a lost race.
+    val deleteManifest =
+      if (candidates.isEmpty) None
       else withFieldIdRead(spark) { fidSpark =>
         val predCol = Pruning.toColumn(pred).getOrElse(
           throw new IllegalStateException("row-level delete needs a concrete predicate"))
@@ -1911,106 +1790,21 @@ object IcebergWriter {
           .filter(predCol)
           .select(col("_metadata.file_path").as("file_path"),
             col("_metadata.row_index").as("pos"))
-        writePositionDeletes(fidSpark, url, table, commitId, snapshotId,
-          positions, specInfo, conf)
+        writePositionDeletes(fidSpark, url, table, UUID.randomUUID().toString,
+          snapshotId, positions, specInfoOf(table), conf)
       }
+    if (deleteManifest.isEmpty && fully.isEmpty) return // nothing matched
 
-    // 2. whole-file DELETED entries for fully matching files
-    val dataManifest: Option[NewManifestInfo] =
-      if (fully.isEmpty) None
-      else {
-        val manifestPath = s"$url/metadata/$commitId-m0.avro"
-        val deletedEntries = fully.map { f =>
-          val stats = FileStats(f.recordCount, f.lowerBounds, f.upperBounds,
-            f.valueCounts, f.nullValueCounts)
-          val partValues = specInfo.map { case (pf, _, _) =>
-            f.partition.getOrElse(pf.name, null)
-          }
-          (f.filePath, f.fileSizeInBytes, stats, partValues, Manifests.Status.Deleted)
-        }
-        writeManifestEntries(manifestPath, snapshotId, deletedEntries, specInfo, conf)
-        Some(NewManifestInfo(manifestPath, Manifests.ManifestContent.Data,
-          0, 0L, fully.size, fully.map(_.recordCount).sum, Nil))
-      }
-
-    if (deleteManifest.isEmpty && dataManifest.isEmpty) return // nothing matched
-
-    // 2b. files dropped whole may still be targeted by PRIOR live position
-    // deletes — rewrite the delete state so those (already-subtracted) rows
-    // don't dangle or double-count
-    val deleteRewrite = rewriteDeletesForRemovedFiles(spark, url, table,
-      commitId, snapshotId, fully, specInfo, conf)
-    val deadDeleteRows = deleteRewrite.map(_._2).getOrElse(0L)
-
-    // 3. manifest list + metadata commit (format v2: row-level deletes),
-    // re-published against current state via the optimistic commit loop
-    // (the position scan above stays outside — positions target immutable
-    // files, so they remain valid across a lost race)
-    commitWithRetry(spark, url, conf) { current =>
-      // the position scan, the fresh-vs-existing dedup, and the delete-state
-      // rewrite were all computed against PIN-time delete state; a delete
-      // committed since would be clobbered by the manifest replacement below
-      // — refuse and let the caller rerun (same guard as compaction/COW)
-      val pinDeletes = table.liveDeleteFiles.map(f => table.resolvePath(f.filePath)).toSet
-      val nowDeletes = current.liveDeleteFiles.map(f => current.resolvePath(f.filePath)).toSet
-      if (nowDeletes != pinDeletes)
-        throw new java.util.ConcurrentModificationException(
-          "row-level deletes committed concurrently; rerun the delete")
-      val priorManifests = current.manifestList
-        .filterNot(m => deleteRewrite.isDefined &&
-          m.content == Manifests.ManifestContent.Deletes &&
-          !current.equalityDeleteManifestPaths.contains(m.path))
-      val manifestListPath = s"$url/metadata/snap-$snapshotId-1-$commitId.avro"
-      val newSeq = current.metadata.lastSequenceNumber + 1
-      writeManifestLists(manifestListPath, snapshotId,
-        dataManifest.toSeq ++ deleteManifest.toSeq ++
-          deleteRewrite.map(_._1).getOrElse(Nil),
-        priorManifests, conf, sequenceNumber = newSeq,
-        specId = current.metadata.defaultSpecId)
-
-      val deletedRecords = fully.map(_.recordCount).sum - deadDeleteRows + posDeleteCount
-      val old = mapper.readTree(
-        metadataBaseJson(current, url, conf))
-        .asInstanceOf[ObjectNode]
-      ensureFormatVersion(old, 2)
-      val now = System.currentTimeMillis()
-      val snap = mapper.createObjectNode()
-      snap.put("snapshot-id", snapshotId)
-      snap.put("parent-snapshot-id", current.metadata.currentSnapshotId)
-      snap.put("timestamp-ms", now)
-      snap.put("sequence-number", newSeq)
-      val summary = mapper.createObjectNode()
-      summary.put("operation", "delete")
-      summary.put("deleted-data-files", fully.size.toString)
-      summary.put("deleted-records", deletedRecords.toString)
-      if (posDeleteCount > 0) {
-        summary.put("added-delete-files",
-          deleteManifest.map(_.addedFiles).getOrElse(0).toString)
-        summary.put("added-position-deletes", posDeleteCount.toString)
-      }
-      val prevTotal = current.currentSnapshot.summary.get("total-records")
-        .map(_.toLong).getOrElse(0L)
-      summary.put("total-records", (prevTotal - deletedRecords).toString)
-      snap.set[ObjectNode]("summary", summary)
-      snap.put("manifest-list", manifestListPath)
-      snap.put("schema-id", schema.schemaId)
-      old.withArray[ArrayNode]("snapshots").add(snap)
-      old.put("current-snapshot-id", snapshotId)
-      old.put("last-sequence-number", newSeq)
-      setMainRef(old, snapshotId)
-      old.put("last-updated-ms", now)
-      Some(old.toPrettyString)
+    // the position scan deduplicated against PIN-time delete state; a delete
+    // committed since would be clobbered by the delete-state rewrite
+    val deletesAtPin = liveDeleteSet(table)
+    commitSnapshot(spark, url, Some(table)) { current =>
+      requireDeletesUnchanged(current, deletesAtPin)
+      Some(SnapshotUpdate("delete", removed = fully,
+        newManifests = deleteManifest.toSeq, snapshotId = snapshotId))
     }
   }
 
-  /** Write a `(file_path, pos)` DataFrame as Iceberg v2 position-delete
-    * parquet under `data/<commitId>-deletes/` and register it in a
-    * delete-content manifest. Positions already covered by the table's
-    * EXISTING delete files are excluded (distributed anti-join on the
-    * normalized data-file key): every emitted position then removes exactly
-    * one live row, which keeps `total-records` and `countFromStats` exact
-    * even when row-level operations overlap. Returns the manifest (None when
-    * nothing new matched) and the number of fresh delete rows. */
   /** CONSOLIDATE position-delete files: CDC-upsert and row-delete
     * workloads accumulate one small delete file (and manifest) per commit,
     * and every scan's merge-on-read loader reads all of them. This rewrite
@@ -2032,77 +1826,65 @@ object IcebergWriter {
     // entries count blobs for DV tables — consolidation is about PHYSICAL
     // files (one puffin holds many blobs), so gate on distinct paths
     if (delFiles.map(_.filePath).distinct.size <= targetFiles) return // already consolidated
-    val pinnedDeleteSet = frozen.liveDeleteFiles
-      .map(f => frozen.resolvePath(f.filePath)).toSet
-    val schema = frozen.iceSchema
-    val spec = frozen.partitionSpec
-    val specInfo: Seq[(PartitionField, String, String)] = spec.fields.map { pf =>
-      val src = schema.fields.find(_.id == pf.sourceId).get
-      (pf, src.icebergTypeString,
-        partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-    }
+    val specInfo = specInfoOf(frozen)
     val commitId = UUID.randomUUID().toString
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
+    val snapshotId = newSnapshotId()
 
-    // live data files by morKey: rows targeting dead files are dropped
-    val liveKeys = frozen.liveFiles()
-      .map(f => morKeyOf(frozen.resolvePath(f.filePath))).filter(_.nonEmpty).toSet
-
-    // v3 / DELETION-VECTOR tables: consolidate BOTH carriers into ONE
-    // puffin file — one merged blob per surviving data file (the v3 rule:
-    // rewritten position deletes become DVs). Decode is distributed: DV
-    // blobs ranged-read in executors, parquet carriers scanned by Spark;
-    // only compressed bitmap bytes return to the driver.
-    if (frozen.metadata.formatVersion >= 3 || delFiles.exists(_.isDv)) {
-      import spark.implicits._
-      val (dvs, parquets) = delFiles.partition(_.isDv)
-      val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-      val dvRefs = dvs.map(d => (frozen.resolvePath(d.filePath),
-        d.contentOffset.getOrElse(sys.error(s"DV without offset: ${d.filePath}")),
-        d.contentSizeInBytes.getOrElse(sys.error(s"DV without size: ${d.filePath}")),
-        d.referencedDataFile.getOrElse(sys.error(s"DV without ref: ${d.filePath}"))))
-      val dvPositions =
-        if (dvRefs.isEmpty) spark.emptyDataset[(String, Long)]
-        else spark.createDataset(dvRefs).flatMap { case (p, off, len, ref) =>
-          DeletionVectors.readBlobAt(p, sconf.value, off, len).map(pos => (ref, pos))
-        }
-      val pqPositions =
-        if (parquets.isEmpty) spark.emptyDataset[(String, Long)]
-        else spark.read.parquet(parquets.map(f => frozen.resolvePath(f.filePath)): _*)
-          .select(col("file_path").cast(org.apache.spark.sql.types.StringType),
-            col("pos")).as[(String, Long)]
-      // canonical paths SHIP: groups form on morKey, but the recorded
-      // referenced file must be the data manifests' exact path form (a DV's
-      // referenced_data_file vs a parquet carrier's file_path can differ in
-      // prefix after a table move) — and the map doubles as the live filter
-      val bCanon = spark.sparkContext.broadcast(frozen.liveFiles().map { f =>
-        val rp = frozen.resolvePath(f.filePath)
-        org.apache.spark.sql.graftbridge.ScanBridge.morKey(rp) ->
-          new Path(rp).toUri.getPath
-      }.toMap)
-      val mergedBitmaps = dvPositions.union(pqPositions)
-        .groupByKey { case (raw, _) =>
-          org.apache.spark.sql.graftbridge.ScanBridge.morKey(raw) }
-        .flatMapGroups { (k, it) =>
-          bCanon.value.get(k) match {
-            case None => Iterator.empty // dead file
-            case Some(canon) =>
-              val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-              it.foreach { case (_, p) => buf += p }
-              val arr = buf.result().distinct
-              java.util.Arrays.sort(arr)
-              Iterator.single(
-                (canon, DeletionVectors.serializePositions(arr), arr.length.toLong))
+    val consolidated: Seq[NewManifestInfo] =
+      if (frozen.metadata.formatVersion >= 3 || delFiles.exists(_.isDv)) {
+        // v3 / DELETION-VECTOR tables: consolidate BOTH carriers into ONE
+        // puffin file — one merged blob per surviving data file (the v3
+        // rule: rewritten position deletes become DVs). Decode is
+        // distributed: DV blobs ranged-read in executors, parquet carriers
+        // scanned by Spark; only compressed bitmap bytes return to the driver.
+        import spark.implicits._
+        val (dvs, parquets) = delFiles.partition(_.isDv)
+        val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+        val dvRefs = dvs.map(d => (frozen.resolvePath(d.filePath),
+          d.contentOffset.getOrElse(sys.error(s"DV without offset: ${d.filePath}")),
+          d.contentSizeInBytes.getOrElse(sys.error(s"DV without size: ${d.filePath}")),
+          d.referencedDataFile.getOrElse(sys.error(s"DV without ref: ${d.filePath}"))))
+        val dvPositions =
+          if (dvRefs.isEmpty) spark.emptyDataset[(String, Long)]
+          else spark.createDataset(dvRefs).flatMap { case (p, off, len, ref) =>
+            DeletionVectors.readBlobAt(p, sconf.value, off, len).map(pos => (ref, pos))
           }
-        }
-      // two-mode write: past the byte cap each partition writes its own
-      // puffin executor-side — the consolidation of a 100 TB table's delete
-      // state never funnels bitmap bytes through the driver either
-      val written = writeDvBlobsTwoMode(spark, conf, mergedBitmaps,
-        s"$url/data/${DeletionVectors.puffinName(commitId)}",
-        pid => s"$url/data/$commitId-p$pid-pdc.puffin",
-        snapshotId, frozen.metadata.lastSequenceNumber + 1, Map.empty)
-      val extra =
+        val pqPositions =
+          if (parquets.isEmpty) spark.emptyDataset[(String, Long)]
+          else spark.read.parquet(parquets.map(f => frozen.resolvePath(f.filePath)): _*)
+            .select(col("file_path").cast(org.apache.spark.sql.types.StringType),
+              col("pos")).as[(String, Long)]
+        // canonical paths SHIP: groups form on morKey, but the recorded
+        // referenced file must be the data manifests' exact path form (a DV's
+        // referenced_data_file vs a parquet carrier's file_path can differ in
+        // prefix after a table move) — and the map doubles as the live filter
+        val bCanon = spark.sparkContext.broadcast(frozen.liveFiles().map { f =>
+          val rp = frozen.resolvePath(f.filePath)
+          org.apache.spark.sql.graftbridge.ScanBridge.morKey(rp) ->
+            new Path(rp).toUri.getPath
+        }.toMap)
+        val mergedBitmaps = dvPositions.union(pqPositions)
+          .groupByKey { case (raw, _) =>
+            org.apache.spark.sql.graftbridge.ScanBridge.morKey(raw) }
+          .flatMapGroups { (k, it) =>
+            bCanon.value.get(k) match {
+              case None => Iterator.empty // dead file
+              case Some(canon) =>
+                val buf = scala.collection.mutable.ArrayBuilder.make[Long]
+                it.foreach { case (_, p) => buf += p }
+                val arr = buf.result().distinct
+                java.util.Arrays.sort(arr)
+                Iterator.single(
+                  (canon, DeletionVectors.serializePositions(arr), arr.length.toLong))
+            }
+          }
+        // two-mode write: past the byte cap each partition writes its own
+        // puffin executor-side — the consolidation of a 100 TB table's delete
+        // state never funnels bitmap bytes through the driver either
+        val written = writeDvBlobsTwoMode(spark, conf, mergedBitmaps,
+          s"$url/data/${DeletionVectors.puffinName(commitId)}",
+          pid => s"$url/data/$commitId-p$pid-pdc.puffin",
+          snapshotId, frozen.metadata.lastSequenceNumber + 1, Map.empty)
         if (written.isEmpty) Nil // every delete row targeted a dead file
         else {
           val pathUtf8 = (v: String) => v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -2124,61 +1906,60 @@ object IcebergWriter {
           writeDvManifestEntries(manifestPath, snapshotId, specInfo, conf,
             stampDvPartitions(frozen, specInfo, entries)
               .map(e => (e, Manifests.Status.Added, None: Option[Long])))
-          Seq(NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
+          Seq(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
             entries.size, entries.map(_.recordCount).sum, 0, 0L, Nil))
         }
-      commitDataFiles(spark, url, commitId, Nil, deletePred = None,
-        operation = "replace",
-        pinnedDeleteFiles = Some(pinnedDeleteSet),
-        extraSummary = Map("graft-rewrite" -> "position-deletes"),
-        extraManifests = extra,
-        presetSnapshotId = Some(snapshotId),
-        dropPosDeleteManifests = true)
-      return
-    }
-
-    def key(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
-    val kept = spark.read
-      .parquet(delFiles.map(f => frozen.resolvePath(f.filePath)): _*)
-      .filter(key(col("file_path")).isInCollection(liveKeys))
-    val delDir = s"$url/data/$commitId-pdc"
-    // spec: position deletes sorted by (path, pos); range-partitioned so
-    // each output file covers a contiguous slice of target files
-    kept.repartitionByRange(targetFiles, col("file_path"), col("pos"))
-      .sortWithinPartitions("file_path", "pos")
-      .write.parquet(delDir)
-    val fs = new Path(delDir).getFileSystem(conf)
-    var keptRows = 0L
-    val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
-      val stats = posDeleteFileStats(st.getPath, conf)
-      keptRows += stats.recordCount
-      (st.getPath.toUri.getPath, st.getLen, stats,
-        specInfo.map(_ => null: Any), Manifests.Status.Added)
-    }.filter(_._3.recordCount > 0)
-    val extra =
-      if (entries.isEmpty) Nil // every delete row targeted a dead file
-      else {
-        val manifestPath = s"$url/metadata/$commitId-mpdc.avro"
-        writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
-          fileContent = Manifests.FileContent.PositionDeletes)
-        Seq(NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
-          entries.size, keptRows, 0, 0L, Nil))
+      } else {
+        // live data files by morKey: rows targeting dead files are dropped
+        val liveKeys = frozen.liveFiles()
+          .map(f => morKeyOf(frozen.resolvePath(f.filePath))).filter(_.nonEmpty).toSet
+        def key(c: org.apache.spark.sql.Column) =
+          org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
+        val kept = spark.read
+          .parquet(delFiles.map(f => frozen.resolvePath(f.filePath)): _*)
+          .filter(key(col("file_path")).isInCollection(liveKeys))
+        val delDir = s"$url/data/$commitId-pdc"
+        // spec: position deletes sorted by (path, pos); range-partitioned so
+        // each output file covers a contiguous slice of target files
+        kept.repartitionByRange(targetFiles, col("file_path"), col("pos"))
+          .sortWithinPartitions("file_path", "pos")
+          .write.parquet(delDir)
+        val fs = new Path(delDir).getFileSystem(conf)
+        val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
+          (st.getPath.toUri.getPath, st.getLen, posDeleteFileStats(st.getPath, conf),
+            specInfo.map(_ => null: Any), Manifests.Status.Added)
+        }.filter(_._3.recordCount > 0)
+        if (entries.isEmpty) Nil // every delete row targeted a dead file
+        else {
+          val manifestPath = s"$url/metadata/$commitId-mpdc.avro"
+          writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
+            fileContent = Manifests.FileContent.PositionDeletes)
+          Seq(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
+            entries.size, entries.map(_._3.recordCount).sum, 0, 0L, Nil))
+        }
       }
-    commitDataFiles(spark, url, commitId, Nil, deletePred = None,
-      operation = "replace",
-      pinnedDeleteFiles = Some(pinnedDeleteSet),
-      extraSummary = Map("graft-rewrite" -> "position-deletes"),
-      extraManifests = extra,
-      presetSnapshotId = Some(snapshotId),
-      dropPosDeleteManifests = true)
+    val deletesAtPin = liveDeleteSet(frozen)
+    commitSnapshot(spark, url, Some(t0)) { table =>
+      requireDeletesUnchanged(table, deletesAtPin)
+      Some(SnapshotUpdate("replace", newManifests = consolidated,
+        drop = ManifestDrop.PositionDeletes,
+        summary = Map("graft-rewrite" -> "position-deletes"), snapshotId = snapshotId))
+    }
   }
 
+  /** Write a `(file_path, pos)` DataFrame as Iceberg v2 position-delete
+    * parquet under `data/<commitId>-deletes/` and register it in a
+    * delete-content manifest. Positions already covered by the table's
+    * EXISTING delete files are excluded (distributed anti-join on the
+    * normalized data-file key): every emitted position then removes exactly
+    * one live row, which keeps `total-records` and `countFromStats` exact
+    * even when row-level operations overlap. Returns the manifest, None when
+    * nothing new matched; v3 tables get deletion vectors instead. */
   private def writePositionDeletes(spark: SparkSession, url: String,
       table: IcebergTable, commitId: String, snapshotId: Long,
       positions: DataFrame,
       specInfo: Seq[(PartitionField, String, String)],
-      conf: Configuration): (Option[NewManifestInfo], Long) = {
+      conf: Configuration): Option[NewManifestInfo] = {
     import org.apache.spark.sql.functions.col
     // Iceberg v3: position deletes MUST travel as deletion vectors
     if (table.metadata.formatVersion >= 3)
@@ -2199,20 +1980,17 @@ object IcebergWriter {
     // spec: position deletes sorted by (path, pos)
     fresh.sort("file_path", "pos").write.parquet(delDir)
     val fs = new Path(delDir).getFileSystem(conf)
-    var posDeleteCount = 0L
     val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
-      val stats = posDeleteFileStats(st.getPath, conf)
-      posDeleteCount += stats.recordCount
-      (st.getPath.toUri.getPath, st.getLen, stats,
+      (st.getPath.toUri.getPath, st.getLen, posDeleteFileStats(st.getPath, conf),
         specInfo.map(_ => null: Any), Manifests.Status.Added)
     }.filter(_._3.recordCount > 0)
-    if (entries.isEmpty) (None, 0L) // stats said "might match" but no rows did
+    if (entries.isEmpty) None // stats said "might match" but no rows did
     else {
       val manifestPath = s"$url/metadata/$commitId-m1.avro"
       writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
         fileContent = Manifests.FileContent.PositionDeletes)
-      (Some(NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
-        entries.size, posDeleteCount, 0, 0L, Nil)), posDeleteCount)
+      Some(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
+        entries.size, entries.map(_._3.recordCount).sum, 0, 0L, Nil))
     }
   }
 
@@ -2227,12 +2005,13 @@ object IcebergWriter {
     * prior blob's entry is marked DELETED in the same manifest. Legacy v2
     * parquet position deletes surviving an upgrade stay live as-is; fresh
     * positions anti-join against them so accounting stays exact. Returns
-    * the delete manifest and the NET-new deleted-row count. */
+    * the delete manifest: its added minus deleted rows are the net-new
+    * deleted rows. */
   private def writeDeletionVectors(spark: SparkSession, url: String,
       table: IcebergTable, commitId: String, snapshotId: Long,
       positions: DataFrame,
       specInfo: Seq[(PartitionField, String, String)],
-      conf: Configuration): (Option[NewManifestInfo], Long) = {
+      conf: Configuration): Option[NewManifestInfo] = {
     import org.apache.spark.sql.functions.col
     def key(c: org.apache.spark.sql.Column) =
       org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
@@ -2266,9 +2045,8 @@ object IcebergWriter {
         s"$url/data/${DeletionVectors.puffinName(commitId)}",
         pid => s"$url/data/$commitId-p$pid-deletes.puffin",
         snapshotId, commitSeq, dvLocators(table, priorByKey))
-      if (written.isEmpty) return (None, 0L)
+      if (written.isEmpty) return None
 
-      val netNew = written.map(_._7).sum
       val superseded = written.flatMap(r => Option(r._8)).distinct
         .flatMap(priorByKey.get)
       val supersededRows = superseded.map(_.recordCount).sum
@@ -2296,9 +2074,9 @@ object IcebergWriter {
         stampDvPartitions(table, specInfo, addedEntries)
           .map(e => (e, Manifests.Status.Added, None: Option[Long])) ++
           superseded.map(e => (e, Manifests.Status.Deleted, e.dataSequence)))
-      (Some(NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
+      Some(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
         addedEntries.size, addedEntries.map(_.recordCount).sum,
-        superseded.size, supersededRows, Nil)), netNew)
+        superseded.size, supersededRows, Nil))
   }
 
   /** Stamp each ADDED DV entry with its referenced data file's partition
@@ -2497,13 +2275,6 @@ object IcebergWriter {
     }
   }
 
-  /** Raise `format-version` to at least `atLeast`, never lowering it (a
-    * v3 table keeps v3 across v2-feature commits). */
-  private def ensureFormatVersion(old: ObjectNode, atLeast: Int): Unit = {
-    val cur = Option(old.get("format-version")).map(_.asInt).getOrElse(1)
-    if (cur < atLeast) old.put("format-version", atLeast)
-  }
-
   /** DYNAMIC partition overwrite: replace exactly the partitions the
     * incoming data touches, keep every other partition — Hive/Spark
     * `partitionOverwriteMode=dynamic` semantics on Iceberg metadata. The
@@ -2528,11 +2299,12 @@ object IcebergWriter {
     }
     val touched: Set[Seq[Any]] = df.select(partCols: _*).distinct().collect()
       .map(r => spec.fields.indices.map(i => normPartValue(r.get(i))): Seq[Any]).toSet
-    // victim resolution happens INSIDE the commit retry (dynamicTouched):
-    // a concurrent append into a touched partition is replaced too
-    writeSnapshot(spark, url, df, deletePred = None, operation = "overwrite",
-      dynamicTouched = Some(touched),
-      extraSummary = Map("graft-overwrite-mode" -> "dynamic"))
+    val files = writeDataFiles(spark, url, table, df)
+    // victims resolve per commit attempt against the fresh table: a
+    // concurrent append into a touched partition is replaced too
+    commitSnapshot(spark, url, Some(table))(t => Some(SnapshotUpdate("overwrite",
+      added = files, removed = dynamicVictims(t, touched),
+      summary = Map("graft-overwrite-mode" -> "dynamic"))))
   }
 
   /** Data-file identity key for delete bookkeeping: the path suffix after
@@ -2599,15 +2371,27 @@ object IcebergWriter {
     }
   }
 
-  /** Keep `refs.main` tracking the current snapshot on every commit, like
-    * Iceberg's own writers (the golden fixture's v5 metadata has it). */
-  private def setMainRef(old: ObjectNode, snapshotId: Long): Unit = {
-    val refs = Option(old.get("refs")).collect { case o: ObjectNode => o }
-      .getOrElse { val o = mapper.createObjectNode(); old.set[ObjectNode]("refs", o); o }
-    val main = mapper.createObjectNode()
-    main.put("snapshot-id", snapshotId)
-    main.put("type", "branch")
-    refs.set[ObjectNode]("main", main)
+  /** Make `snapshotId` the table head: `current-snapshot-id`, `refs.main`
+    * (tracking the head like Iceberg's own writers — the golden fixture's
+    * v5 metadata has it) and a `snapshot-log` entry at `now`, the history
+    * [[IcebergTable.asOfTimestamp]] resolves against. */
+  private def moveMain(old: ObjectNode, snapshotId: Long, now: Long): Unit = {
+    old.put("current-snapshot-id", snapshotId)
+    putRef(old, "main", snapshotId, "branch")
+    val entry = mapper.createObjectNode()
+    entry.put("timestamp-ms", now)
+    entry.put("snapshot-id", snapshotId)
+    old.withArray[ArrayNode]("snapshot-log").add(entry)
+  }
+
+  /** Point ref `name` at `snapshotId` in metadata `old`; returns the ref. */
+  private def putRef(old: ObjectNode, name: String, snapshotId: Long,
+      refType: String): ObjectNode = {
+    val r = mapper.createObjectNode()
+    r.put("snapshot-id", snapshotId)
+    r.put("type", refType)
+    old.withObject("/refs").set[ObjectNode](name, r)
+    r
   }
 
   /** TAG a snapshot (default: the current one): a named, immutable pointer
@@ -2633,9 +2417,13 @@ object IcebergWriter {
     * publish with [[fastForward]] (or abandon with [[dropRef]] +
     * snapshot expiration). */
   def appendToBranch(spark: SparkSession, url: String, df: DataFrame,
-      branchName: String, extraSummary: Map[String, String] = Map.empty): Unit =
-    writeSnapshot(spark, url, df, deletePred = None, operation = "append",
-      extraSummary = extraSummary, toBranch = Some(branchName))
+      branchName: String, extraSummary: Map[String, String] = Map.empty): Unit = {
+    val target = SnapshotTarget.Branch(branchName)
+    val table = resolveCurrent(spark, url)
+    val files = writeDataFiles(spark, url, table, df)
+    commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("append",
+      added = files, summary = extraSummary, target = target)))
+  }
 
   /** WRITE-AUDIT-PUBLISH, step 2: publish a staged branch by fast-forwarding
     * main to its head. Metadata-only and atomic (optimistic commit loop);
@@ -2665,15 +2453,8 @@ object IcebergWriter {
           metadataBaseJson(table, url, conf))
           .asInstanceOf[ObjectNode]
         val now = System.currentTimeMillis()
-        old.put("current-snapshot-id", target)
-        setMainRef(old, target)
         // published snapshots enter main's history log
-        val log = if (old.has("snapshot-log")) old.withArray[ArrayNode]("snapshot-log")
-          else { val a = mapper.createArrayNode(); old.set[ArrayNode]("snapshot-log", a); a }
-        val logEntry = mapper.createObjectNode()
-        logEntry.put("timestamp-ms", now)
-        logEntry.put("snapshot-id", target)
-        log.add(logEntry)
+        moveMain(old, target, now)
         old.put("last-updated-ms", now)
         Some(old.toPrettyString)
       }
@@ -2709,15 +2490,10 @@ object IcebergWriter {
       val old = mapper.readTree(
         metadataBaseJson(table, url, conf))
         .asInstanceOf[ObjectNode]
-      val refs = Option(old.get("refs")).collect { case o: ObjectNode => o }
-        .getOrElse { val o = mapper.createObjectNode(); old.set[ObjectNode]("refs", o); o }
-      val r = mapper.createObjectNode()
-      r.put("snapshot-id", target)
-      r.put("type", refType)
+      val r = putRef(old, name, target, refType)
       // spec ref retention: refs whose snapshot outlives this age are
       // dropped (and stop pinning history) at the next expireSnapshots
       maxRefAgeMs.foreach(r.put("max-ref-age-ms", _))
-      refs.set[ObjectNode](name, r)
       old.put("last-updated-ms", System.currentTimeMillis())
       Some(old.toPrettyString)
     }
@@ -2789,53 +2565,12 @@ object IcebergWriter {
     // readers apply equality deletes through the merge-on-read machinery,
     // which ORC data files cannot enter — refuse at write, not read
     requireParquetForRowLevel(table, table.liveFiles(), "equality DELETE")
-    val schema = table.iceSchema
-    val commitId = UUID.randomUUID().toString
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val specInfo: Seq[(PartitionField, String, String)] =
-      table.partitionSpec.fields.map { pf =>
-        val src = schema.fields.find(_.id == pf.sourceId).get
-        (pf, src.icebergTypeString,
-          partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-      }
-    val (manifest, nKeys) = writeEqualityDeletes(spark, url, table, commitId,
-      snapshotId, keys, keyCols, specInfo, conf)
-    if (manifest.isEmpty) return
-
-    commitWithRetry(spark, url, conf) { current =>
-      val manifestListPath = s"$url/metadata/snap-$snapshotId-1-$commitId.avro"
-      val newSeq = current.metadata.lastSequenceNumber + 1
-      writeManifestLists(manifestListPath, snapshotId, manifest.toSeq,
-        current.manifestList, conf, sequenceNumber = newSeq,
-        specId = current.metadata.defaultSpecId)
-      val old = mapper.readTree(
-        metadataBaseJson(current, url, conf))
-        .asInstanceOf[ObjectNode]
-      ensureFormatVersion(old, 2)
-      val now = System.currentTimeMillis()
-      val snap = mapper.createObjectNode()
-      snap.put("snapshot-id", snapshotId)
-      snap.put("parent-snapshot-id", current.metadata.currentSnapshotId)
-      snap.put("timestamp-ms", now)
-      snap.put("sequence-number", newSeq)
-      val summary = mapper.createObjectNode()
-      summary.put("operation", "delete")
-      summary.put("added-delete-files", "1")
-      summary.put("added-equality-deletes", nKeys.toString)
-      // total-records carries forward unadjusted: matched count is unknown
-      // without a scan, which is exactly what equality deletes avoid
-      current.currentSnapshot.summary.get("total-records")
-        .foreach(v => summary.put("total-records", v))
-      snap.set[ObjectNode]("summary", summary)
-      snap.put("manifest-list", manifestListPath)
-      snap.put("schema-id", schema.schemaId)
-      old.withArray[ArrayNode]("snapshots").add(snap)
-      old.put("current-snapshot-id", snapshotId)
-      old.put("last-sequence-number", newSeq)
-      setMainRef(old, snapshotId)
-      old.put("last-updated-ms", now)
-      Some(old.toPrettyString)
-    }
+    val snapshotId = newSnapshotId()
+    val manifest = writeEqualityDeletes(spark, url, table, UUID.randomUUID().toString,
+      snapshotId, keys, keyCols, specInfoOf(table), conf)
+    if (manifest.isDefined)
+      commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("delete",
+        newManifests = manifest.toSeq, snapshotId = snapshotId)))
   }
 
   /** UPSERT via equality deletes, in ONE snapshot: every existing row whose
@@ -2856,34 +2591,24 @@ object IcebergWriter {
     requireParquetForRowLevel(table, table.liveFiles(), "UPSERT")
     val schema = table.iceSchema
     keyCols.foreach(k => require(schema.fields.exists(_.name == k), s"no key column $k"))
-    val commitId = UUID.randomUUID().toString
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val specInfo: Seq[(PartitionField, String, String)] =
-      table.partitionSpec.fields.map { pf =>
-        val src = schema.fields.find(_.id == pf.sourceId).get
-        (pf, src.icebergTypeString,
-          partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-      }
-    val (manifest, nKeys) = writeEqualityDeletes(spark, url, table, commitId,
-      snapshotId, source, keyCols, specInfo, conf)
-    writeSnapshot(spark, url, source, deletePred = None, operation = "overwrite",
-      extraSummary = extraSummary ++ Map(
-        "graft-upsert-keys" -> keyCols.mkString(","),
-        "added-equality-deletes" -> nKeys.toString),
-      extraManifests = manifest.toSeq,
-      presetSnapshotId = Some(snapshotId))
+    val snapshotId = newSnapshotId()
+    val manifest = writeEqualityDeletes(spark, url, table, UUID.randomUUID().toString,
+      snapshotId, source, keyCols, specInfoOf(table), conf)
+    val files = writeDataFiles(spark, url, table, source)
+    commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("overwrite",
+      added = files, newManifests = manifest.toSeq, snapshotId = snapshotId,
+      summary = extraSummary + ("graft-upsert-keys" -> keyCols.mkString(",")))))
   }
 
   /** Write the distinct `keyCols` tuples of `keys` as an Iceberg v2
     * equality-delete parquet (field ids stamped, spec-sorted) under
     * `data/<commitId>-eqdel/` and register it in a delete-content manifest
-    * with `equality_ids`. Returns the manifest (None when `keys` is empty)
-    * and the key count. */
+    * with `equality_ids`. Returns the manifest, None when `keys` is empty. */
   private def writeEqualityDeletes(spark: SparkSession, url: String,
       table: IcebergTable, commitId: String, snapshotId: Long,
       keys: DataFrame, keyCols: Seq[String],
       specInfo: Seq[(PartitionField, String, String)],
-      conf: Configuration): (Option[NewManifestInfo], Long) = {
+      conf: Configuration): Option[NewManifestInfo] = {
     import org.apache.spark.sql.functions.col
     val schema = table.iceSchema
     val keyIds = keyCols.map { k =>
@@ -2904,21 +2629,18 @@ object IcebergWriter {
     }: _*).distinct()
     keyDf.sort(keyCols.map(col): _*).coalesce(1).write.mode("overwrite").parquet(delDir)
     val fs = new Path(delDir).getFileSystem(conf)
-    var nKeys = 0L
     val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
-      val rows = rowCountOf(st.getPath, conf)
-      nKeys += rows
       (st.getPath.toUri.getPath, st.getLen,
-        FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty),
+        FileStats(rowCountOf(st.getPath, conf), Map.empty, Map.empty, Map.empty, Map.empty),
         specInfo.map(_ => null: Any), Manifests.Status.Added)
     }.filter(_._3.recordCount > 0)
-    if (entries.isEmpty) (None, 0L)
+    if (entries.isEmpty) None
     else {
       val manifestPath = s"$url/metadata/$commitId-meq.avro"
       writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
         fileContent = Manifests.FileContent.EqualityDeletes, equalityIds = keyIds)
-      (Some(NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
-        entries.size, nKeys, 0, 0L, Nil)), nKeys)
+      Some(NewManifestInfo(manifestPath, Manifests.FileContent.EqualityDeletes,
+        entries.size, entries.map(_._3.recordCount).sum, 0, 0L, Nil))
     }
   }
 
@@ -3049,7 +2771,7 @@ object IcebergWriter {
       if (allEntries.nonEmpty) {
         val manifestPath = s"$url/metadata/$commitId-mrwdv.avro"
         writeDvManifestEntries(manifestPath, snapshotId, specInfo, conf, allEntries)
-        manifests ::= NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
+        manifests ::= NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
           dvEntries.size, dvEntries.map(_.recordCount).sum,
           superseded.size, superseded.map(_.recordCount).sum, Nil,
           existingFiles = untouchedDvs.size,
@@ -3081,7 +2803,7 @@ object IcebergWriter {
       val manifestPath = s"$url/metadata/$commitId-mrw.avro"
       writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
         fileContent = Manifests.FileContent.PositionDeletes)
-      manifests ::= NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
+      manifests ::= NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
         entries.size, survivorRows, 0, 0L, Nil)
     }
     val carried = liveDvs ++ untouchedParquet
@@ -3091,7 +2813,7 @@ object IcebergWriter {
         carried.map(e => (e.copy(filePath = table.resolvePath(e.filePath)),
           Manifests.Status.Existing,
           Some(e.dataSequence.getOrElse(0L)): Option[Long])))
-      manifests ::= NewManifestInfo(manifestPath, Manifests.ManifestContent.Deletes,
+      manifests ::= NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
         0, 0L, 0, 0L, Nil,
         existingFiles = carried.size, existingRows = carried.map(_.recordCount).sum)
     }
@@ -3126,18 +2848,11 @@ object IcebergWriter {
 
     val schema = table.iceSchema
     keyCols.foreach(k => require(schema.fields.exists(_.name == k), s"no key column $k"))
-    val commitId = UUID.randomUUID().toString
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val specInfo: Seq[(PartitionField, String, String)] =
-      table.partitionSpec.fields.map { pf =>
-        val src = schema.fields.find(_.id == pf.sourceId).get
-        (pf, src.icebergTypeString,
-          partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-      }
+    val snapshotId = newSnapshotId()
 
     // field-id resolution scoped to this eager region (the _metadata
     // columns force Spark's built-in parquet source here)
-    val (deleteManifest, posDeleteCount) = withFieldIdRead(spark) { fidSpark =>
+    val deleteManifest = withFieldIdRead(spark) { fidSpark =>
       val positions = fidSpark.read.schema(table.schema)
         .parquet(live.map(f => table.resolvePath(f.filePath)): _*)
         .select(keyCols.map(col) ++ Seq(
@@ -3145,8 +2860,8 @@ object IcebergWriter {
           col("_metadata.row_index").as("pos")): _*)
         .join(source.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
         .select("file_path", "pos")
-      writePositionDeletes(
-        fidSpark, url, table, commitId, snapshotId, positions, specInfo, conf)
+      writePositionDeletes(fidSpark, url, table, UUID.randomUUID().toString,
+        snapshotId, positions, specInfoOf(table), conf)
     }
 
     // Iceberg v3 ROW LINEAGE through MERGE: an UPDATE preserves `_row_id`
@@ -3171,12 +2886,10 @@ object IcebergWriter {
           .drop("_g_prior_row_id")
       }
 
-    writeSnapshot(spark, url, sourceWithLineage, deletePred = None,
-      operation = "overwrite",
-      extraSummary = Map("graft-merge-keys" -> keyCols.mkString(",")),
-      extraManifests = deleteManifest.toSeq, posDeleteRows = posDeleteCount,
-      presetSnapshotId = Some(snapshotId),
-      carryLineage = carry)
+    val files = writeDataFiles(spark, url, table, sourceWithLineage, carryLineage = carry)
+    commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("overwrite",
+      added = files, newManifests = deleteManifest.toSeq, snapshotId = snapshotId,
+      summary = Map("graft-merge-keys" -> keyCols.mkString(",")))))
   }
 
   /** Row count straight from the parquet footer (no data read). */
@@ -3552,13 +3265,6 @@ object IcebergWriter {
     }.asJava
   }
 
-  private def writeManifest(path: String, snapshotId: Long,
-      files: Seq[(String, Long, FileStats, Seq[Any])],
-      specInfo: Seq[(PartitionField, String, String)], conf: Configuration,
-      status: Int = Manifests.Status.Added): Unit =
-    writeManifestEntries(path, snapshotId,
-      files.map { case (p, len, st, pv) => (p, len, st, pv, status) }, specInfo, conf)
-
   /** Write one manifest with a per-entry status — a single-snapshot
     * overwrite interleaves DELETED and ADDED entries in the same file.
     * `fileContent` marks every data_file as data (0) or position deletes (1,
@@ -3568,9 +3274,9 @@ object IcebergWriter {
       specInfo: Seq[(PartitionField, String, String)], conf: Configuration,
       fileContent: Int = Manifests.FileContent.Data,
       equalityIds: Seq[Int] = Nil,
-      fileFormat: String = "PARQUET",
-      // per-path overrides: DELETED entries of foreign files must keep the
-      // format they were registered with, not this writer's default
+      // per-path file formats (parquet otherwise): imported files and the
+      // DELETED entries of foreign files keep the format they were
+      // registered with
       formatOf: Map[String, String] = Map.empty): Unit = {
     val entrySchema = manifestEntrySchema(specInfo)
     val dataFileSchema = entrySchema.getField("data_file").schema()
@@ -3580,7 +3286,7 @@ object IcebergWriter {
         val df = new GenericData.Record(dataFileSchema)
         df.put("content", fileContent)
         df.put("file_path", filePath)
-        df.put("file_format", formatOf.getOrElse(filePath, fileFormat))
+        df.put("file_format", formatOf.getOrElse(filePath, "PARQUET"))
         val part = new GenericData.Record(partSchema)
         specInfo.zipWithIndex.foreach { case ((pf, _, valueType), i) =>
           val v = partValues(i) match {
@@ -3681,99 +3387,55 @@ object IcebergWriter {
       targetManifests: Int = 1): Unit = {
     require(targetManifests >= 1, "need at least one target manifest")
     val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { current =>
+    commitSnapshot(spark, url) { current =>
       val dataManifests =
         if (current.metadata.currentSnapshotId < 0) Nil
         else current.manifestList.filter(_.content == Manifests.ManifestContent.Data)
       if (dataManifests.size <= targetManifests) None
       else {
         val commitId = UUID.randomUUID().toString
-        val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
+        val snapshotId = newSnapshotId()
         val files = current.liveFiles()
-        val schema = current.iceSchema
-        val newSeq = current.metadata.lastSequenceNumber + 1
         val perManifest = math.max(1,
           math.ceil(files.size.toDouble / targetManifests).toInt)
         val bySpec = files.groupBy(_.specId.getOrElse(current.metadata.defaultSpecId))
         val newManifests = bySpec.toSeq.sortBy(_._1).flatMap { case (specId, specFiles) =>
-          val spec = current.metadata.specById(specId)
-          val specInfo: Seq[(PartitionField, String, String)] = spec.fields.map { pf =>
-            val src = schema.fields.find(_.id == pf.sourceId).getOrElse(
-              throw new IllegalStateException(s"spec source ${pf.sourceId} not in schema"))
-            (pf, src.icebergTypeString,
-              partitionValueType(src.icebergTypeString, Transforms.parse(pf.transform)))
-          }
+          val specInfo = specInfoOf(current, current.metadata.specById(specId))
+          def tuple(f: Manifests.DataFileInfo): Seq[Any] =
+            specInfo.map { case (pf, _, _) => f.partition.getOrElse(pf.name, null) }
           // cluster by partition tuple so each manifest covers a tight range
           val clustered = specFiles.sortBy(f =>
-            specInfo.map { case (pf, _, _) =>
-              String.valueOf(f.partition.getOrElse(pf.name, null))
-            }.mkString("\u0000"))
+            tuple(f).map(String.valueOf).mkString("\u0000"))
           clustered.grouped(perManifest).zipWithIndex.map { case (chunk, i) =>
             val path = s"$url/metadata/$commitId-rw$specId-$i.avro"
             writeExistingManifest(path, chunk, current.resolvePath,
               current.dataSequenceOf, specInfo, conf)
-            val summaries = specInfo.zipWithIndex.map { case ((pf, _, valueType), _) =>
-              val values = chunk.map(f => f.partition.getOrElse(pf.name, null))
-              val nonNull = values.filter(_ != null)
-              val containsNull = values.exists(_ == null)
-              if (nonNull.isEmpty) (containsNull, None, None)
-              else {
-                val mn = nonNull.reduce((a, b) =>
-                  if (IcebergTypes.compare(a, b).exists(_ <= 0)) a else b)
-                val mx = nonNull.reduce((a, b) =>
-                  if (IcebergTypes.compare(a, b).exists(_ >= 0)) a else b)
-                (containsNull, Some(IcebergTypes.encodeBound(mn, valueType)),
-                  Some(IcebergTypes.encodeBound(mx, valueType)))
-              }
-            }
-            NewManifestInfo(path, Manifests.ManifestContent.Data,
+            NewManifestInfo(path, Manifests.FileContent.Data,
               addedFiles = 0, addedRows = 0L, deletedFiles = 0, deletedRows = 0L,
-              summaries, existingFiles = chunk.size,
+              partitionSummaries(specInfo, chunk.map(tuple)),
+              existingFiles = chunk.size,
               existingRows = chunk.map(_.recordCount).sum,
               specIdOverride = Some(specId))
           }
         }
-        val deleteManifests = current.manifestList
-          .filter(_.content == Manifests.ManifestContent.Deletes)
-        val manifestListPath = s"$url/metadata/snap-$snapshotId-1-$commitId.avro"
-        writeManifestLists(manifestListPath, snapshotId, newManifests,
-          deleteManifests, conf, sequenceNumber = newSeq,
-          specId = current.metadata.defaultSpecId)
-        val old = mapper.readTree(
-          metadataBaseJson(current, url, conf))
-          .asInstanceOf[ObjectNode]
-        // explicit per-entry sequence numbers are a v2 manifest feature
-        ensureFormatVersion(old, 2)
-        val now = System.currentTimeMillis()
-        val snap = mapper.createObjectNode()
-        snap.put("snapshot-id", snapshotId)
-        snap.put("parent-snapshot-id", current.metadata.currentSnapshotId)
-        snap.put("timestamp-ms", now)
-        snap.put("sequence-number", newSeq)
-        val summary = mapper.createObjectNode()
-        summary.put("operation", "replace")
-        summary.put("manifests-replaced", dataManifests.size.toString)
-        summary.put("manifests-created", newManifests.size.toString)
-        summary.put("manifests-kept", deleteManifests.size.toString)
-        current.currentSnapshot.summary.get("total-records")
-          .foreach(v => summary.put("total-records", v))
-        current.currentSnapshot.summary.get("total-data-files")
-          .foreach(v => summary.put("total-data-files", v))
-        snap.set[ObjectNode]("summary", summary)
-        snap.put("manifest-list", manifestListPath)
-        snap.put("schema-id", schema.schemaId)
-        old.withArray[ArrayNode]("snapshots").add(snap)
-        old.put("current-snapshot-id", snapshotId)
-        old.put("last-sequence-number", newSeq)
-        setMainRef(old, snapshotId)
-        old.put("last-updated-ms", now)
-        Some(old.toPrettyString)
+        val deleteManifests =
+          current.manifestList.count(_.content == Manifests.ManifestContent.Deletes)
+        Some(SnapshotUpdate("replace", newManifests = newManifests,
+          drop = ManifestDrop.Data, snapshotId = snapshotId,
+          summary = Map(
+            "manifests-replaced" -> dataManifests.size.toString,
+            "manifests-created" -> newManifests.size.toString,
+            "manifests-kept" -> deleteManifests.toString)))
       }
     }
   }
 
   /** A freshly written manifest to be registered in the manifest list. */
-  private[iceberg] final case class NewManifestInfo(path: String, content: Int,
+  private[graft] final case class NewManifestInfo(path: String,
+      /** What its entries hold ([[Manifests.FileContent]]): one kind per
+        * manifest, so the summary can count position and equality deletes
+        * apart. */
+      fileContent: Int,
       addedFiles: Int, addedRows: Long, deletedFiles: Int, deletedRows: Long,
       summaries: Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])],
       /** EXISTING entry counts — non-zero only for rewritten manifests. */
@@ -3781,23 +3443,28 @@ object IcebergWriter {
       /** Spec the manifest's partition tuples/summaries use when it differs
         * from the commit default (manifest rewrite preserves each file's
         * original spec). */
-      specIdOverride: Option[Int] = None)
+      specIdOverride: Option[Int] = None) {
+    /** The manifest-list `content`: data, or deletes of either kind. */
+    def content: Int =
+      if (fileContent == Manifests.FileContent.Data) Manifests.ManifestContent.Data
+      else Manifests.ManifestContent.Deletes
+  }
 
   private def writeManifestLists(path: String, snapshotId: Long,
       newManifests: Seq[NewManifestInfo],
       prior: Seq[Manifests.ManifestFile], conf: Configuration,
-      sequenceNumber: Long = 0L,
+      sequenceNumber: Long,
       /** spec the new manifests' partition values/summaries were computed
         * under (the committing operation's default spec) — readers resolve
         * each manifest's summaries and file partition tuples by this id. */
-      specId: Int = 0,
+      specId: Int,
       /** Iceberg v3 ROW LINEAGE: the commit's first allocatable row id
         * (the table's `next-row-id` at commit time). New DATA manifests
         * with added rows receive cumulative `first_row_id` bases; their
         * files inherit at read time. Computed INSIDE the optimistic commit
         * loop, so a lost race reallocates from fresh state — concurrent
         * commits never overlap id ranges. */
-      firstRowIdBase: Option[Long] = None): Unit = {
+      firstRowIdBase: Option[Long]): Unit = {
     val summarySchema = ManifestFileSchema.getField("partitions").schema()
       .getTypes.get(1).getElementType
 
@@ -3831,7 +3498,7 @@ object IcebergWriter {
         rec.put("content", nm.content)
         // the commit's data sequence number — entries inherit it (durable
         // ordering for sequence-scoped deletes, survives expiration)
-        if (sequenceNumber > 0) rec.put("sequence_number", sequenceNumber)
+        rec.put("sequence_number", sequenceNumber)
         // row-lineage base for this manifest's ADDED files
         if (nm.content == Manifests.ManifestContent.Data && nm.addedRows > 0)
           rowIdCursor.foreach { base =>
@@ -3911,48 +3578,55 @@ object IcebergWriter {
     }
 
   /** Optimistic-concurrency commit loop (the shape of Iceberg's own
-    * protocol): each attempt re-resolves the CURRENT table state, rebuilds
-    * the snapshot's manifests/metadata against it, and publishes the new
-    * `v{N+1}.metadata.json` with an EXCLUSIVE create. A concurrent committer
-    * winning the version makes the create fail → reload and retry, so no
+    * protocol): each attempt builds the new metadata against the CURRENT
+    * table state and publishes it as `v{N+1}.metadata.json` with an
+    * EXCLUSIVE create. Only losing that create to a concurrent committer
+    * (FileAlreadyExistsException) reloads the state and retries, so no
     * committed snapshot is ever lost (last-writer-wins overwrite was the
-    * round-1 behavior). Atomicity relies on the store's exclusive-create
-    * (atomic on HDFS/local; object stores need a catalog lock — use
-    * [[withCatalogCommit]] there, which delegates the swap to a catalog's
-    * own atomicity and retries on [[CommitConflictException]]).
+    * round-1 behavior). Once the create succeeds the commit is published:
+    * the version-hint update after it can neither fail the commit nor make
+    * it retry (see [[writeHint]]). Atomicity relies on the store's
+    * exclusive-create (atomic on HDFS/local; object stores need a catalog
+    * lock — use [[withCatalogCommit]] there, which delegates the swap to a
+    * catalog's own atomicity and retries on [[CommitConflictException]]).
     *
-    * `attempt` returns None to abort without committing (no-op deletes). */
-  private[iceberg] def commitWithRetry(spark: SparkSession, url: String, conf: Configuration,
-      maxAttempts: Int = 10)(attempt: IcebergTable => Option[String]): Unit = {
-    var n = 0
+    * The first attempt builds against `pinned` when given (a writer's own
+    * load), later ones against a fresh load. `attempt` returns None to
+    * abort without committing (no-op deletes). */
+  private[iceberg] def commitWithRetry(spark: SparkSession, url: String,
+      conf: Configuration, pinned: Option[IcebergTable] = None)(
+      attempt: IcebergTable => Option[String]): Unit = {
+    var table = pinned.getOrElse(resolveCurrent(spark, url))
+    var retries = 0
     while (true) {
-      val table = resolveCurrent(spark, url)
       val json = attempt(table) match {
         case None => return
         case Some(j) => withMetadataLog(table, j)
       }
-      catalogCommit.get match {
+      val published = catalogCommit.get match {
         case null =>
           val newVersion = table.version + 1
-          try {
-            writeStringExclusive(s"$url/metadata/v$newVersion.metadata.json", json, conf)
-            writeHint(url, newVersion, conf)
-            return
-          } catch {
-            case e: java.io.IOException
-                if n < maxAttempts && (e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException]
-                  || e.getMessage != null && e.getMessage.toLowerCase.contains("exist")) =>
-              n += 1 // lost the race — reload the new state and retry
-          }
+          val created =
+            try {
+              writeStringExclusive(s"$url/metadata/v$newVersion.metadata.json", json, conf)
+              true
+            } catch {
+              case _: org.apache.hadoop.fs.FileAlreadyExistsException
+                  if retries < MaxCommitRetries => false
+            }
+          if (created) writeHint(url, newVersion, conf)
+          created
         case (_, publish) =>
-          try { publish(table, json); return }
-          catch {
-            case _: CommitConflictException if n < maxAttempts =>
-              n += 1 // catalog requirements failed — rebuild on fresh state
-          }
+          try { publish(table, json); true }
+          catch { case _: CommitConflictException if retries < MaxCommitRetries => false }
       }
+      if (published) return
+      retries += 1 // lost the race: rebuild against the fresh state
+      table = resolveCurrent(spark, url)
     }
   }
+
+  private val MaxCommitRetries = 10
 
   /** Spec `metadata-log` maintenance, applied to EVERY commit in one place:
     * the new metadata file records the file it replaced as
@@ -3989,17 +3663,33 @@ object IcebergWriter {
   private val commitLock = new Object
 
   /** Near-atomic hint update: write aside, then delete+rename. Readers that
-    * hit the tiny window fall back to IcebergTable.versionHint's dir scan. */
+    * hit the tiny window fall back to IcebergTable.versionHint's dir scan.
+    * The new version is already published when this runs, so an I/O
+    * failure is logged, not raised — as Iceberg's HadoopTableOperations
+    * does. The hint is then removed, so readers and the next committer
+    * scan the metadata directory instead of trusting a stale version. */
   private def writeHint(url: String, version: Int, conf: Configuration): Unit = {
     val target = new Path(s"$url/metadata/version-hint.text")
     val tmp = new Path(s"$url/metadata/.version-hint.${UUID.randomUUID()}.tmp")
     val fs = target.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    commitLock.synchronized {
-      fs.delete(target, false)
-      fs.rename(tmp, target)
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      commitLock.synchronized {
+        fs.delete(target, false)
+        if (!fs.rename(tmp, target))
+          throw new java.io.IOException(s"rename of $tmp to $target failed")
+      }
+    } catch {
+      case e: java.io.IOException =>
+        log.warn(s"$url v$version is committed but its version hint was not " +
+          "updated; readers fall back to the metadata directory scan", e)
+        try { fs.delete(target, false); fs.delete(tmp, false) }
+        catch {
+          case d: java.io.IOException =>
+            log.warn(s"stale version hint of $url could not be removed", d)
+        }
     }
   }
 

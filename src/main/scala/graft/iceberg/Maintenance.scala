@@ -7,6 +7,8 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.iceberg.IcebergWriter.ManifestDrop
+
 /** Table maintenance — the operational half every long-lived Iceberg table
   * needs at scale: small-file compaction (the #1 performance killer of
   * streaming-ingested tables) and snapshot expiration with physical cleanup
@@ -62,16 +64,13 @@ object Maintenance {
           col("_row_id"), col("_last_updated_sequence_number"))
       }
     val compacted = if (sortedTable) base else base.repartition(n)
-    IcebergWriter.writeSnapshot(spark, url, compacted,
-      deletePred = None, operation = "replace",
+    val files = IcebergWriter.writeDataFiles(spark, url, t0, compacted,
       targetPartitions = if (sortedTable) Some(n) else None,
-      pinnedDeletes = Some(pinned), dropDeleteManifests = true,
-      // deletes applied by this rewrite are exactly those live at PIN time;
-      // a delete committed after the pin would be silently lost when the
-      // delete manifests drop — the commit detects the mismatch and refuses
-      pinnedDeleteFiles = Some(frozen.liveDeleteFiles
-        .map(f => frozen.resolvePath(f.filePath)).toSet),
       carryLineage = carryLineage)
+    // deletes applied by this rewrite are exactly those live at PIN time;
+    // a delete committed after the pin would be silently lost when the
+    // delete manifests drop — the commit detects the mismatch and refuses
+    commitRewrite(spark, url, t0, frozen, files, pinned, ManifestDrop.AllDeletes)
     pinned.size
   }
 
@@ -114,17 +113,31 @@ object Maintenance {
     }
     // sorted tables: the write path range-partitions on the sort order with
     // targetPartitions output slices (a blind round-robin would fight it)
-    IcebergWriter.writeSnapshot(spark, url,
+    val files = IcebergWriter.writeDataFiles(spark, url, t0,
       if (sortedTable) base else base.repartition(n),
-      deletePred = None, operation = "replace",
       targetPartitions = if (sortedTable) Some(n) else None,
-      pinnedDeletes = Some(matched),
-      dropDeleteManifests = false,
-      pinnedDeleteFiles = Some(frozen.liveDeleteFiles
-        .map(f => frozen.resolvePath(f.filePath)).toSet),
-      extraSummary = Map("graft-compact-scope" -> matchedPaths.size.toString),
       carryLineage = carryLineage)
+    commitRewrite(spark, url, t0, frozen, files, matched, ManifestDrop.Keep,
+      Map("graft-compact-scope" -> matchedPaths.size.toString))
     matched.size
+  }
+
+  /** Commit a rewrite read from `frozen` (the snapshot of `t0`, a head
+    * load): `files` replace `removed` in ONE `replace` snapshot. Row-level
+    * deletes the rewrite applied are exactly those live at the pin, so a
+    * delete committed after it makes the commit refuse instead of silently
+    * resurrecting the concurrently-deleted rows; a concurrent append's
+    * files survive, since only `removed` is deleted. */
+  private def commitRewrite(spark: SparkSession, url: String, t0: IcebergTable,
+      frozen: IcebergTable, files: Seq[IcebergWriter.NewDataFile],
+      removed: Seq[Manifests.DataFileInfo], drop: ManifestDrop,
+      summary: Map[String, String] = Map.empty): Unit = {
+    val deletesAtPin = IcebergWriter.liveDeleteSet(frozen)
+    IcebergWriter.commitSnapshot(spark, url, Some(t0)) { table =>
+      IcebergWriter.requireDeletesUnchanged(table, deletesAtPin)
+      Some(IcebergWriter.SnapshotUpdate("replace", added = files,
+        removed = removed, drop = drop, summary = summary))
+    }
   }
 
   /** Z-ORDER clustering rewrite: relayout the table's live rows along a
@@ -213,12 +226,9 @@ object Maintenance {
         .repartitionByRange(n, col("__z"))
         .sortWithinPartitions(col("__z"))
         .drop("__z")
-      IcebergWriter.writeSnapshot(spark, url, clustered,
-        deletePred = None, operation = "replace",
-        pinnedDeletes = Some(pinned), dropDeleteManifests = true,
-        pinnedDeleteFiles = Some(frozen.liveDeleteFiles
-          .map(f => frozen.resolvePath(f.filePath)).toSet),
-        extraSummary = Map("graft-zorder-by" -> cols.mkString(",")))
+      commitRewrite(spark, url, t0, frozen,
+        IcebergWriter.writeDataFiles(spark, url, t0, clustered),
+        pinned, ManifestDrop.AllDeletes, Map("graft-zorder-by" -> cols.mkString(",")))
     } else {
       // partitioned: the write path range-partitions + sorts on
       // (partition values, z) so the z-layout survives value clustering.
@@ -243,14 +253,10 @@ object Maintenance {
         .agg(aggExprs.head, aggExprs.tail: _*)
       val z = morton(cols.zipWithIndex.map { case (c, i) =>
         code(c, col(s"__zlo_$i"), col(s"__zspan_$i")) })
-      IcebergWriter.writeSnapshot(spark, url, df,
-        deletePred = None, operation = "replace",
-        pinnedDeletes = Some(pinned), dropDeleteManifests = true,
-        pinnedDeleteFiles = Some(frozen.liveDeleteFiles
-          .map(f => frozen.resolvePath(f.filePath)).toSet),
-        extraSummary = Map("graft-zorder-by" -> cols.mkString(",")),
-        targetPartitions = Some(n), zorderBy = Some(z),
-        zorderStats = Some(stats))
+      commitRewrite(spark, url, t0, frozen,
+        IcebergWriter.writeDataFiles(spark, url, t0, df, targetPartitions = Some(n),
+          zorderBy = Some(z), zorderStats = Some(stats)),
+        pinned, ManifestDrop.AllDeletes, Map("graft-zorder-by" -> cols.mkString(",")))
     }
   }
 

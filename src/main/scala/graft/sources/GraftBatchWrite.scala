@@ -77,7 +77,7 @@ final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
     val statsByPath = IcebergWriter.collectStats(spark,
       files.map(f => (f._1, f._2)), table.iceSchema, conf)
     val dataFiles = files.map { case (p, len, partValues) =>
-      (new Path(p).toUri.getPath, len, statsByPath(p), partValues)
+      IcebergWriter.NewDataFile(new Path(p).toUri.getPath, len, statsByPath(p), partValues)
     }
     // catalog-opened tables publish through the catalog's atomic commit
     // (REST updates/requirements); filesystem tables run the body as-is
@@ -95,7 +95,7 @@ final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
     // WAP stages APPENDS only. Any other mode committing straight to main
     // while a branch/id is active would silently defeat the audit gate the
     // user thinks is on — refuse loudly instead (the append-only staging
-    // contract commitDataFiles enforces).
+    // contract the snapshot producer enforces).
     if ((wapBranch.isDefined || wapId.isDefined) && mode != WriteMode.Append)
       throw new IllegalStateException(
         s"write-audit-publish session is active (${wapBranch.map("spark.wap.branch=" + _)
@@ -103,33 +103,35 @@ final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
           s"not an append — staging overwrite/replace commits is not supported, " +
           "and publishing them straight to main would bypass the audit gate. " +
           "Unset the WAP conf to write to main directly.")
-    table.runCommit(mode match {
+    def publish(build: IcebergTable => IcebergWriter.SnapshotUpdate): Unit =
+      table.runCommit(IcebergWriter.commitSnapshot(spark, table.url)(t => Some(build(t))))
+    mode match {
       case WriteMode.Append =>
-        IcebergWriter.commitDataFiles(spark, table.url, commitId, dataFiles,
-          deletePred = None, operation = "append",
-          extraSummary = wapId.map("wap.id" -> _).toMap,
-          toBranch = wapBranch,
-          stageOnly = wapBranch.isEmpty && wapId.isDefined)
+        val target = wapBranch.map(IcebergWriter.SnapshotTarget.Branch)
+          .getOrElse(if (wapId.isDefined) IcebergWriter.SnapshotTarget.Staged
+            else IcebergWriter.SnapshotTarget.Main)
+        publish(_ => IcebergWriter.SnapshotUpdate("append", added = dataFiles,
+          summary = wapId.map("wap.id" -> _).toMap, target = target))
       case WriteMode.OverwriteByFilter(pred) =>
-        IcebergWriter.commitDataFiles(spark, table.url, commitId, dataFiles,
-          deletePred = Some(pred), operation = "overwrite")
+        publish(t => IcebergWriter.SnapshotUpdate("overwrite", added = dataFiles,
+          removed = IcebergWriter.wholeFilesMatching(t, pred)))
       case WriteMode.ReplaceFiles(files, deleteFilesAtPin, operation) =>
-        IcebergWriter.commitDataFiles(spark, table.url, commitId, dataFiles,
-          deletePred = None, operation = operation,
-          pinnedDeletes = Some(files()),
-          pinnedDeleteFiles = Some(deleteFilesAtPin()))
+        val (removed, deletesAtPin) = (files(), deleteFilesAtPin())
+        publish { t =>
+          IcebergWriter.requireDeletesUnchanged(t, deletesAtPin)
+          IcebergWriter.SnapshotUpdate(operation, added = dataFiles, removed = removed)
+        }
       case WriteMode.OverwriteDynamic =>
         // victims: live files whose partition tuple appears among the
         // WRITTEN files' tuples — metadata-only, whole-file by construction.
-        // Resolution happens INSIDE the commit retry (dynamicTouched), so a
-        // concurrent append into a touched partition is replaced too.
+        // Resolution happens per commit attempt, so a concurrent append
+        // into a touched partition is replaced too.
         val touched = dataFiles
-          .map(f => f._4.map(IcebergWriter.normPartValue): Seq[Any]).toSet
-        IcebergWriter.commitDataFiles(spark, table.url, commitId, dataFiles,
-          deletePred = None, operation = "overwrite",
-          dynamicTouched = Some(touched),
-          extraSummary = Map("graft-overwrite-mode" -> "dynamic"))
-    })
+          .map(f => f.partition.map(IcebergWriter.normPartValue): Seq[Any]).toSet
+        publish(t => IcebergWriter.SnapshotUpdate("overwrite", added = dataFiles,
+          removed = IcebergWriter.dynamicVictims(t, touched),
+          summary = Map("graft-overwrite-mode" -> "dynamic")))
+    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

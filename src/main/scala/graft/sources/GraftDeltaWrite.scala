@@ -82,8 +82,7 @@ final class GraftDeltaRowLevelOperation(tbl: GraftIcebergV2Table,
             // delete commits and refuses rather than corrupting
             () => scanned.map(f =>
               IcebergWriter.morKeyOf(tbl.table.resolvePath(f.filePath))).toSet,
-            () => tbl.table.liveDeleteFiles
-              .map(f => tbl.table.resolvePath(f.filePath)).toSet,
+            () => IcebergWriter.liveDeleteSet(tbl.table),
             () => (liveKeysAtScan, scanPred))
         }
       }
@@ -130,7 +129,7 @@ final class GraftDeltaBatchWrite(table: IcebergTable, operation: String,
     // catalog-opened tables publish through the catalog's atomic commit
     table.runCommit(IcebergWriter.commitDelta(spark, table.url, commitId,
       dataFiles.toSeq, deleteFiles.toSeq, operation,
-      scannedKeys(), deleteFilesAtScan(), Some(addValidation())))
+      scannedKeys(), deleteFilesAtScan(), addValidation()))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -487,9 +487,7 @@ final class GraftRowLevelOperation(tbl: GraftIcebergV2Table,
             // instance served the reads, so this is its consistent view
             new GraftBatchWrite(tbl.table,
               WriteMode.ReplaceFiles(() => scanned,
-                () => tbl.table.liveDeleteFiles
-                  .map(f => tbl.table.resolvePath(f.filePath)).toSet,
-                op), info.schema())
+                () => IcebergWriter.liveDeleteSet(tbl.table), op), info.schema())
           }
         }
     }

@@ -96,10 +96,10 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     // validateAddedDataFiles refuses under serializable isolation)
     IcebergWriter.append(spark, url, Seq((2L, "late")).toDF("k", "src"))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      IcebergWriter.commitDataFiles(spark, url,
-        java.util.UUID.randomUUID().toString, Nil,
-        deletePred = None, operation = "overwrite",
-        requireNoConflictingAdds = Some((keysAtScan, Pruning.Lt("k", 5))))
+      IcebergWriter.commitSnapshot(spark, url) { t =>
+        IcebergWriter.requireNoConflictingAdds(t, keysAtScan, Pruning.Lt("k", 5))
+        Some(IcebergWriter.SnapshotUpdate("overwrite"))
+      }
     }
     assert(ex.getMessage.contains("serializable"))
 
@@ -109,10 +109,10 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val keys2 = frozen2.liveFiles()
       .map(f => IcebergWriter.morKeyOf(frozen2.resolvePath(f.filePath))).toSet
     IcebergWriter.append(spark, url, Seq((100L, "far")).toDF("k", "src"))
-    IcebergWriter.commitDataFiles(spark, url,
-      java.util.UUID.randomUUID().toString, Nil,
-      deletePred = None, operation = "overwrite",
-      requireNoConflictingAdds = Some((keys2, Pruning.Lt("k", 5))))
+    IcebergWriter.commitSnapshot(spark, url) { t =>
+      IcebergWriter.requireNoConflictingAdds(t, keys2, Pruning.Lt("k", 5))
+      Some(IcebergWriter.SnapshotUpdate("overwrite"))
+    }
     assert(IcebergTable.load(spark, url).read().count() == 12)
   }
 }

@@ -44,7 +44,7 @@ class PlanningScaleSpec extends AnyFunSuite {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)
     val conf = spark.sessionState.newHadoopConf()
-    val sid = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+    val sid = IcebergWriter.newSnapshotId()
     val infos = (1 to n).map { m =>
       val path = s"$url/metadata/synth-$m.avro"
       val entries = (1 to per).map { i =>
@@ -53,13 +53,11 @@ class PlanningScaleSpec extends AnyFunSuite {
           Seq.empty[Any], Manifests.Status.Added)
       }
       IcebergWriter.writeManifestEntries(path, sid, entries, Nil, conf)
-      IcebergWriter.NewManifestInfo(path, Manifests.ManifestContent.Data,
+      IcebergWriter.NewManifestInfo(path, Manifests.FileContent.Data,
         per, per.toLong, 0, 0L, Nil)
     }
-    IcebergWriter.commitDataFiles(spark, url,
-      java.util.UUID.randomUUID().toString, Nil, deletePred = None,
-      operation = "append", extraManifests = infos,
-      presetSnapshotId = Some(sid))
+    IcebergWriter.commitSnapshot(spark, url)(_ => Some(IcebergWriter.SnapshotUpdate(
+      "append", newManifests = infos, snapshotId = sid)))
     url
   }
 

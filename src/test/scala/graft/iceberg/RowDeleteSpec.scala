@@ -184,11 +184,13 @@ class RowDeleteSpec extends AnyFunSuite {
     // a delete lands AFTER the pin (simulates a concurrent committer)
     IcebergWriter.deleteRows(spark, url, Pruning.GtEq("k", 91))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      IcebergWriter.writeSnapshot(spark, url, merged.repartition(1),
-        deletePred = None, operation = "replace",
-        pinnedDeletes = Some(frozen.liveFiles()), dropDeleteManifests = true,
-        pinnedDeleteFiles = Some(frozen.positionDeleteFiles
-          .map(f => frozen.resolvePath(f.filePath)).toSet))
+      val files = IcebergWriter.writeDataFiles(spark, url, frozen, merged.repartition(1))
+      IcebergWriter.commitSnapshot(spark, url) { t =>
+        IcebergWriter.requireDeletesUnchanged(t, frozen.positionDeleteFiles
+          .map(f => frozen.resolvePath(f.filePath)).toSet)
+        Some(IcebergWriter.SnapshotUpdate("replace", added = files,
+          removed = frozen.liveFiles(), drop = IcebergWriter.ManifestDrop.AllDeletes))
+      }
     }
     assert(ex.getMessage.contains("rerun the operation"))
     // the table is uncorrupted: the post-pin delete is still applied
