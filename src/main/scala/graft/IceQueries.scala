@@ -8,13 +8,21 @@ import graft.iceberg.IcebergTable
 /** Iceberg metadata-plane operators exposed as driver-contract queries.
   *
   * These exercise the from-scratch Iceberg v1 reader against the golden
-  * fixture table (written by a real Iceberg writer). They are metadata-plane
-  * semantics — version resolution, time travel, pruning, schema evolution —
-  * so they have no DuckDB-SQL oracle; the driver records rows-only checks.
+  * fixture table: the reference's format-v1 `my_table`, reconstructed to its
+  * documented facts by a standalone Avro/parquet generator
+  * (`graft.golden.GoldenTable` in the test sources, FIXTURES.md §1). Their
+  * oracles pin those facts: DuckDB reads the known-live data files, and
+  * introspection queries compare against literals.
   */
 object IceQueries {
 
-  val FixtureDir = "/root/reference/test-data/my_table"
+  /** The vendored golden table, as an absolute path: the oracle SQL embeds
+    * it in DuckDB file paths and planning gauges are keyed by it. Resolved
+    * against the working directory, which is the repository root under
+    * `sbt run` and `sbt test`. */
+  val FixtureDir: String =
+    new java.io.File("src/test/resources/golden/my_table").getAbsolutePath
+  /** The location the table's metadata records, rewritten to [[FixtureDir]]. */
   val FixtureOrig = "/Users/mdurant/temp/warehouse/db/my_table"
 
   private def table(s: SparkSession): IcebergTable =
@@ -2371,12 +2379,12 @@ object IceQueries {
     "ice_schema_evolution" -> (iceSchemaEvolution _),
   )
 
-  // Fixture data files by the row each holds — verified against the
-  // reference's own tests (test_basic.py: live names are {Alex, Bob, Roger,
-  // Fiona, John}; only John has an email): the overwrite snapshot replaced
-  // Steve's file with Alex's, the final append added John's. The fixture is
-  // read-only, so these lists are stable golden facts, resolved here
-  // INDEPENDENTLY of the metadata reader under test.
+  // Fixture data files by the row each holds, per the reference's own tests
+  // (test_basic.py: live names are {Alex, Bob, Roger, Fiona, John}; only
+  // John has an email): the overwrite snapshot replaced Steve's file with
+  // Alex's, the final append added John's. The fixture is reconstructed to
+  // these documented facts and committed, so the lists are stable golden
+  // facts, resolved here INDEPENDENTLY of the metadata reader under test.
   private val FBob = s"$FixtureDir/data/00000-0-b5ea8b58-1686-4d25-af1d-9349b2d29fd0-00001.parquet"
   private val FJohn = s"$FixtureDir/data/00000-206-1427d50c-e5c0-401a-9f54-b37b943b98c3-00001.parquet"
   private val FSteve = s"$FixtureDir/data/00001-1-b7c7ea31-7ce3-4bd6-9d86-7e96dbffb589-00001.parquet"

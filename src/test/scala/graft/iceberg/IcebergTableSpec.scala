@@ -3,12 +3,13 @@ package graft.iceberg
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** E2E parity tests against the golden Iceberg fixture written by a real
-  * Iceberg writer — mirrors the reference's tests/test_basic.py. */
+/** E2E parity tests against the golden Iceberg fixture, reconstructed to
+  * the documented facts of the reference's test-data table (FIXTURES.md §1)
+  * — mirrors the reference's tests/test_basic.py. */
 class IcebergTableSpec extends AnyFunSuite {
 
-  val TestDir = "/root/reference/test-data/my_table"
-  val OrigDir = "/Users/mdurant/temp/warehouse/db/my_table" // test_basic.py:7
+  val TestDir = graft.IceQueries.FixtureDir
+  val OrigDir = graft.IceQueries.FixtureOrig // test_basic.py:7
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -22,8 +22,8 @@ class RefsSpec extends AnyFunSuite {
     StructField("k", LongType), StructField("cat", StringType)))
 
   test("the golden fixture's refs.main parses") {
-    val t = IcebergTable.load(spark, "/root/reference/test-data/my_table",
-      Some("/Users/mdurant/temp/warehouse/db/my_table"))
+    val t = IcebergTable.load(spark, graft.IceQueries.FixtureDir,
+      Some(graft.IceQueries.FixtureOrig))
     assert(t.refs.contains("main"))
     assert(t.refs("main").refType == "branch")
     assert(t.atBranch("main").currentSnapshot.snapshotId == t.refs("main").snapshotId)

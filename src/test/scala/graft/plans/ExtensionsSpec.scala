@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * manifest-statistics count. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  val FixtureDir = "/root/reference/test-data/my_table"
-  val FixtureOrig = "/Users/mdurant/temp/warehouse/db/my_table"
+  import graft.IceQueries.{FixtureDir, FixtureOrig}
 
   // a dedicated session: extensions are builder-time configuration, and
   // getOrCreate would silently reuse another suite's session — clear first

@@ -32,8 +32,7 @@ class IcebergSourceV2Spec extends AnyFunSuite {
     assert(rows.find(_._1 == 3L).get._4 == 0L)
   }
 
-  val FixtureDir = "/root/reference/test-data/my_table"
-  val FixtureOrig = "/Users/mdurant/temp/warehouse/db/my_table"
+  import graft.IceQueries.{FixtureDir, FixtureOrig}
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
