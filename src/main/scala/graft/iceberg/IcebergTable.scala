@@ -435,15 +435,8 @@ final class IcebergTable private (
     // parquet scanned by Spark, v3 DV blobs decoded by manifest offset
     def pairsOf(dels: Seq[DataFileInfo]): DataFrame = {
       val (dvs, pqs) = dels.partition(_.isDv)
-      // explicit schema: a position-delete carrier is (file_path, pos) by
-      // construction — schema inference would footer-probe every delete
-      // file on the driver (~80 ms per read.parquet call, per commit)
-      val pq = if (pqs.isEmpty) None else Some(spark.read
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("file_path", StringType),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.LongType))))
-        .parquet(pqs.map(f => rewrite(f.filePath)).distinct: _*)
+      val pq = if (pqs.isEmpty) None else Some(IcebergTable.readPositionDeletes(
+          spark, pqs.map(f => rewrite(f.filePath)).distinct)
         .select(substring_index(col("file_path"), "/data/", -1).as("_g_key"),
           col("pos").as("_g_pos")))
       val dv = if (dvs.isEmpty) None else {
@@ -1374,6 +1367,14 @@ object IcebergTable {
     * reads in the same session keep name-based resolution. */
   private[graft] val FieldIdReadOptions: Map[String, String] =
     Map("spark.sql.parquet.fieldId.read.enabled" -> "true")
+
+  /** Position-delete parquet files as `(file_path STRING, pos BIGINT)`, the
+    * spec's fixed schema: no read of a delete file infers it (inference is
+    * a schema-merge job per read). Columns resolve by name, so carriers
+    * with or without the reserved field ids read alike. */
+  def readPositionDeletes(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("file_path", StringType),
+      StructField("pos", LongType)))).parquet(paths: _*)
 
   /** Planning-telemetry gauges: live-file count and estimated decoded-stats
     * bytes. At 100 TB the metadata plane is its own capacity problem —

@@ -12,6 +12,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -19,11 +20,11 @@ import org.apache.spark.sql.types._
 /** Iceberg format-v1 WRITE path — table create + append snapshots.
   *
   * An extension beyond the reference (which is read-only, README.md:94):
-  * data files are written by Spark's parquet writer, per-file record counts
-  * and column lower/upper bounds are harvested from the parquet footers and
-  * encoded as Iceberg single-value bytes, a new manifest (Avro, spec v1
-  * layout) plus manifest list are written, and a new `vN.metadata.json` +
-  * `version-hint.text` commit the snapshot. Tables written here are readable
+  * write tasks put each data file at its final path ([[TaskFileWriter]])
+  * and report its record count and column lower/upper bounds from the
+  * footer they just wrote, encoded as Iceberg single-value bytes; a new
+  * manifest (Avro, spec v1 layout) plus manifest list are written, and a
+  * new `vN.metadata.json` + `version-hint.text` commit the snapshot. Tables written here are readable
   * by [[IcebergTable]] with working stats pruning, and the metadata layout
   * follows the public Iceberg v1 spec.
   *
@@ -233,9 +234,9 @@ object IcebergWriter {
     case t => s"${src}_$t" // day/month/year/hour/void
   }
 
-  /** Hidden-partition column in Iceberg PHYSICAL representation (date →
-    * epoch-day int, timestamp → µs long, bucket/day → int) so partitionBy
-    * dir names parse back unambiguously. */
+  /** Hidden-partition key in Iceberg PHYSICAL representation (date →
+    * epoch-day int, timestamp → µs long, bucket/day → int): the native
+    * Catalyst expression writes cluster and sort by. */
   private[iceberg] def partitionColumn(srcType: String, tr0: Transforms.Transform)
       : org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
@@ -550,13 +551,6 @@ object IcebergWriter {
     } finally r.close()
   }
 
-  /** Row count straight from the ORC file tail (no data read). */
-  private def orcRowCountOf(path: Path, conf: Configuration): Long = {
-    val r = org.apache.orc.OrcFile.createReader(path,
-      org.apache.orc.OrcFile.readerOptions(conf))
-    try r.getNumberOfRows finally r.close()
-  }
-
   /** Replace the rows matching `pred` with `df` in ONE snapshot
     * (`operation=overwrite`, DELETED + ADDED entries in the same manifest) —
     * the same single-snapshot shape the golden fixture's own history has
@@ -603,23 +597,26 @@ object IcebergWriter {
 
   /** Write `df` as data files laid out for `table` — partitioned by its
     * default spec, sorted by its sort order, Iceberg field ids stamped —
-    * under a fresh `data/<uuid>` directory (new files stay identifiable),
-    * and harvest each file's footer stats and partition tuple. Commits
-    * nothing: the files are the `added` of a [[SnapshotUpdate]]. */
+    * under a fresh `data/<uuid>` directory (new files stay identifiable).
+    * Each task writes its files straight to their final paths through
+    * [[TaskFileWriter]] and reports each file's partition tuple and footer
+    * stats; nothing is listed or re-read. Commits nothing: the files are
+    * the `added` of a [[SnapshotUpdate]]. */
   private[iceberg] def writeDataFiles(spark: SparkSession, url: String,
       table: IcebergTable, df: DataFrame,
       /** Output file count of a range-partitioned (sorted, z-ordered) write;
         * compaction sets it, appends let AQE size small writes. */
       targetPartitions: Option[Int] = None,
       /** Z-ORDER clustering expression for PARTITIONED rewrites: rows
-        * range-partition + sort on (partition cols, z) so each partition's
-        * files cover contiguous z-ranges — the partitioned write path's
-        * usual value-clustering would otherwise undo the z-layout.
+        * range-partition + sort on (partition keys, z) so each partition's
+        * files cover contiguous z-ranges — clustering by partition alone
+        * would otherwise undo the z-layout.
         * (Unpartitioned z-order pre-arranges the DataFrame instead.) */
       zorderBy: Option[org.apache.spark.sql.Column] = None,
       /** Per-partition z-scaling stats, keyed by the `_p_<name>` partition
-        * columns: broadcast-joined onto the rows so `zorderBy` can reference
-        * per-partition bounds; all stats columns are dropped before write. */
+        * key columns: broadcast-joined onto the rows so `zorderBy` can
+        * reference per-partition bounds; all stats columns are dropped
+        * before write. */
       zorderStats: Option[org.apache.spark.sql.DataFrame] = None,
       /** Iceberg v3 ROW LINEAGE carry-through for REWRITES: the incoming
         * frame holds `_row_id`/`_last_updated_sequence_number` columns
@@ -627,15 +624,10 @@ object IcebergWriter {
         * PHYSICAL columns under the reserved field ids — row identity
         * survives compaction; readers prefer the materialized values. */
       carryLineage: Boolean = false): Seq[NewDataFile] = {
-    val conf = spark.sessionState.newHadoopConf()
     val schema = table.iceSchema
     val specInfo = specInfoOf(table)
 
-    // Hidden-partition columns are duplicated under _p_ names so partitionBy
-    // splits files per partition value while the data files keep ALL source
-    // columns (Iceberg layout — unlike Hive, values live in metadata).
     import org.apache.spark.sql.functions.col
-    val dataDir = s"$url/data/${UUID.randomUUID()}"
     // carry iceberg field ids into the written parquet (parquet.field.id →
     // `= N` ids in the file schema): readers resolve by id like real Iceberg
     val dfCols = df.columns.toSet
@@ -670,84 +662,68 @@ object IcebergWriter {
         col(n).as(n, new org.apache.spark.sql.types.MetadataBuilder()
           .putLong("parquet.field.id", id.toLong).build())
     }): _*)
-    val withParts = specInfo.foldLeft(base) { case (d, (pf, srcType, _)) =>
-      val srcName = schema.fields.find(_.id == pf.sourceId).get.name
-      d.withColumn(s"_p_${pf.name}",
-        partitionColumn(srcType, Transforms.parse(pf.transform))(col(srcName)))
-    }
     // table sort order: rows sorted WITHIN each output file → tight,
     // mostly-disjoint per-file bounds on the sort key (file-level pruning)
     val sortCols = table.sortOrderColumns.map {
       case (n, "desc") => col(n).desc
       case (n, _) => col(n).asc
     }
-    if (specInfo.isEmpty) {
-      val base0 =
-        if (sortCols.isEmpty) withParts
-        // unpartitioned sorted writes range-partition first, so files cover
-        // DISJOINT sort-key ranges instead of each file spanning everything
-        // (without an explicit count AQE coalesces small appends; compaction
-        // passes targetPartitions to control the output file count)
-        else targetPartitions match {
-          case Some(n) => withParts.repartitionByRange(n, sortCols: _*)
-          case None => withParts.repartitionByRange(sortCols: _*)
+    val arranged =
+      if (specInfo.isEmpty) {
+        val ranged =
+          if (sortCols.isEmpty) base
+          // unpartitioned sorted writes range-partition first, so files cover
+          // DISJOINT sort-key ranges instead of each file spanning everything
+          // (without an explicit count AQE coalesces small appends; compaction
+          // passes targetPartitions to control the output file count)
+          else targetPartitions match {
+            case Some(n) => base.repartitionByRange(n, sortCols: _*)
+            case None => base.repartitionByRange(sortCols: _*)
+          }
+        if (sortCols.isEmpty) ranged else ranged.sortWithinPartitions(sortCols: _*)
+      } else {
+        // partition keys in their physical form, the sort and clustering
+        // keys only: each task's rows arrive grouped by partition, so its
+        // writer holds one open file (without the shuffle every task would
+        // emit a file per value it happens to hold — small-files explosion)
+        val keyNames = specInfo.map(s => s"_p_${s._1.name}")
+        val withKeys = specInfo.zip(keyNames).foldLeft(base) { case (d, ((pf, srcType, _), k)) =>
+          val srcName = schema.fields.find(_.id == pf.sourceId).get.name
+          d.withColumn(k, partitionColumn(srcType, Transforms.parse(pf.transform))(col(srcName)))
         }
-      val base1 = if (sortCols.isEmpty) base0
-        else base0.sortWithinPartitions(sortCols: _*)
-      base1.write.parquet(dataDir)
-    } else {
-      // cluster rows by partition value first: without this every task emits
-      // a file per value it happens to hold (small-files explosion at scale).
-      // Sorted tables prepend the partition columns to the sort, satisfying
-      // the dynamic-partition writer's required ordering — it then inserts
-      // NO second sort, so the sort-key order inside each file is guaranteed
-      // (not merely an artifact of sort stability that a spill would break).
-      val partCols = specInfo.map(s => col(s"_p_${s._1.name}"))
-      val base1 = zorderBy match {
-        case Some(z) =>
-          // z-order within partitions: contiguous (partition, z) slices,
-          // each sorted — files then carry tight per-partition z-ranges.
-          // Optional per-partition scaling stats broadcast-join in (null-safe
-          // on the partition key) and are projected away after the sort.
-          import org.apache.spark.sql.functions.broadcast
-          val (zin, helperCols) = zorderStats match {
-            case Some(stats) =>
-              val keyNames = specInfo.map(s => s"_p_${s._1.name}")
-              val renamed = keyNames.foldLeft(stats)(
-                (d, k) => d.withColumnRenamed(k, s"__zk_$k"))
-              val cond = keyNames.map(k => withParts(k) <=> renamed(s"__zk_$k"))
-                .reduce(_ && _)
-              (withParts.join(broadcast(renamed), cond, "left"),
-                renamed.columns.toSeq)
-            case None => (withParts, Nil)
-          }
-          val keys = partCols.map(_.asc) :+ z.asc
-          val ranged = targetPartitions match {
-            case Some(n) => zin.repartitionByRange(n, keys: _*)
-            case None => zin.repartitionByRange(keys: _*)
-          }
-          ranged.sortWithinPartitions(keys: _*).drop(helperCols: _*)
-        case None =>
-          val clustered = withParts.repartition(partCols: _*)
-          if (sortCols.isEmpty) clustered
-          else clustered.sortWithinPartitions(partCols.map(_.asc) ++ sortCols: _*)
+        val keys = keyNames.map(col(_).asc)
+        val sorted = zorderBy match {
+          case Some(z) =>
+            // z-order within partitions: contiguous (partition, z) slices,
+            // each sorted — files then carry tight per-partition z-ranges.
+            // Optional per-partition scaling stats broadcast-join in (null-safe
+            // on the partition key) and are projected away after the sort.
+            import org.apache.spark.sql.functions.broadcast
+            val (zin, helperCols) = zorderStats match {
+              case Some(stats) =>
+                val renamed = keyNames.foldLeft(stats)(
+                  (d, k) => d.withColumnRenamed(k, s"__zk_$k"))
+                val cond = keyNames.map(k => withKeys(k) <=> renamed(s"__zk_$k"))
+                  .reduce(_ && _)
+                (withKeys.join(broadcast(renamed), cond, "left"),
+                  renamed.columns.toSeq)
+              case None => (withKeys, Nil)
+            }
+            val zkeys = keys :+ z.asc
+            val ranged = targetPartitions match {
+              case Some(n) => zin.repartitionByRange(n, zkeys: _*)
+              case None => zin.repartitionByRange(zkeys: _*)
+            }
+            ranged.sortWithinPartitions(zkeys: _*).drop(helperCols: _*)
+          case None =>
+            withKeys.repartition(keyNames.map(col): _*)
+              .sortWithinPartitions(keys ++ sortCols: _*)
+        }
+        sorted.drop(keyNames: _*)
       }
-      base1.write.partitionBy(specInfo.map(s => s"_p_${s._1.name}"): _*).parquet(dataDir)
-    }
-
-    val fs = new Path(dataDir).getFileSystem(conf)
-    val files = listParquetFiles(fs, new Path(dataDir))
-    // per-file stats from parquet footers (harvested on EXECUTORS — a
-    // commit of thousands of files must not serialize footer reads on the
-    // driver) + partition values parsed from the directory names
-    val statsByPath = collectStats(spark,
-      files.map(st => (st.getPath.toString, st.getLen)), schema, conf)
-    files.map { st =>
-      NewDataFile(st.getPath.toUri.getPath, st.getLen, statsByPath(st.getPath.toString),
-        specInfo.map { case (pf, _, valueType) =>
-          parsePartitionValue(st.getPath.toString, s"_p_${pf.name}", valueType)
-        })
-    }
+    TaskFileWriter.writeAll(arranged, s"$url/data/${UUID.randomUUID()}",
+      TaskFileWriter.Kind.Data(schema), TaskFileWriter.partFields(table, arranged.schema))
+      .map(_.dataFile)
   }
 
   /** (field, source Iceberg type, stored value type) for each field of
@@ -1670,8 +1646,8 @@ object IcebergWriter {
     * (`addValidation`: the live files at scan and the condition). */
   private[graft] def commitDelta(spark: SparkSession, url: String,
       commitId: String,
-      rawDataFiles: Seq[(String, Long, Seq[Any])],
-      deleteFiles: Seq[(String, Long, Long)], // (path, bytes, delete rows)
+      writtenData: Seq[WrittenFile],
+      deleteFiles: Seq[WrittenFile],
       operation: String,
       scannedKeys: Set[String],
       deleteFilesAtScan: Set[String],
@@ -1679,47 +1655,29 @@ object IcebergWriter {
     val conf = spark.sessionState.newHadoopConf()
     val table0 = resolveCurrent(spark, url)
     val specInfo = specInfoOf(table0)
-    val statsByPath = collectStats(spark,
-      rawDataFiles.map(f => (f._1, f._2)), table0.iceSchema, conf)
-    val dataFiles = rawDataFiles.map { case (p, len, pv) =>
-      NewDataFile(new Path(p).toUri.getPath, len, statsByPath(p), pv)
-    }
+    val dataFiles = writtenData.map(_.dataFile)
     val snapshotId = newSnapshotId()
-    val deleteManifest: Option[NewManifestInfo] =
+    val deletes: Option[NewManifestInfo] =
       if (deleteFiles.isEmpty) None
       else if (table0.metadata.formatVersion >= 3) {
         // v3: position deletes MUST travel as DELETION VECTORS — convert
         // the delta protocol's task-written parquet carriers at commit
         // (same bitmap build + supersede as deleteRows; the parquets are
         // a staging artifact and are removed once converted)
-        val positions = spark.read.parquet(deleteFiles.map(_._1): _*)
-          .select("file_path", "pos")
+        val positions = IcebergTable.readPositionDeletes(spark, deleteFiles.map(_.path))
         val m = writeDeletionVectors(spark, url, table0, commitId,
           snapshotId, positions, specInfo, conf)
-        deleteFiles.foreach { case (p, _, _) =>
-          val hp = new Path(p)
-          hp.getFileSystem(conf).delete(hp, false)
-        }
+        TaskFileWriter.deleteQuietly(deleteFiles, conf)
         m
       }
-      else {
-        val entries = deleteFiles.map { case (p, len, rows) =>
-          (new Path(p).toUri.getPath, len,
-            FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty),
-            specInfo.map(_ => null: Any), Manifests.Status.Added)
-        }
-        val manifestPath = s"$url/metadata/$commitId-m1.avro"
-        writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
-          fileContent = Manifests.FileContent.PositionDeletes)
-        Some(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
-          entries.size, deleteFiles.map(_._3).sum, 0, 0L, Nil))
-      }
+      else deleteManifest(s"$url/metadata/$commitId-m1.avro", snapshotId,
+        deleteFiles, specInfo, conf)
     commitSnapshot(spark, url, Some(table0)) { table =>
       requireDeletesUnchanged(table, deleteFilesAtScan)
       if (deleteFiles.nonEmpty) requireScannedFilesLive(table, scannedKeys)
       requireNoConflictingAdds(table, addValidation._1, addValidation._2)
       Some(SnapshotUpdate(operation, added = dataFiles,
-        newManifests = deleteManifest.toSeq, snapshotId = snapshotId))
+        newManifests = deletes.toSeq, snapshotId = snapshotId))
     }
   }
 
@@ -1743,9 +1701,12 @@ object IcebergWriter {
     // graft's own spark.graft.* knobs are not registered SQL confs, so
     // isModifiable says false for them — yet they steer the write path
     // (e.g. dvDriverBytesLimit picks the executor-side puffin mode) and
-    // MUST survive into the scoped session
+    // MUST survive into the scoped session; so must non-Spark keys (the
+    // session's Hadoop filesystem settings, e.g. `fs.<scheme>.impl` or
+    // object-store credentials), or the scoped reads cannot open the table
     spark.conf.getAll.foreach { case (k, v) =>
-      if ((k.startsWith("spark.graft.") || scoped.conf.isModifiable(k)) &&
+      if ((k.startsWith("spark.graft.") || !k.startsWith("spark.") ||
+          scoped.conf.isModifiable(k)) &&
           scoped.conf.getOption(k) != Some(v))
         scoped.conf.set(k, v)
     }
@@ -1851,33 +1812,9 @@ object IcebergWriter {
           }
         val pqPositions =
           if (parquets.isEmpty) spark.emptyDataset[(String, Long)]
-          else spark.read.parquet(parquets.map(f => frozen.resolvePath(f.filePath)): _*)
-            .select(col("file_path").cast(org.apache.spark.sql.types.StringType),
-              col("pos")).as[(String, Long)]
-        // canonical paths SHIP: groups form on morKey, but the recorded
-        // referenced file must be the data manifests' exact path form (a DV's
-        // referenced_data_file vs a parquet carrier's file_path can differ in
-        // prefix after a table move) — and the map doubles as the live filter
-        val bCanon = spark.sparkContext.broadcast(frozen.liveFiles().map { f =>
-          val rp = frozen.resolvePath(f.filePath)
-          org.apache.spark.sql.graftbridge.ScanBridge.morKey(rp) ->
-            new Path(rp).toUri.getPath
-        }.toMap)
-        val mergedBitmaps = dvPositions.union(pqPositions)
-          .groupByKey { case (raw, _) =>
-            org.apache.spark.sql.graftbridge.ScanBridge.morKey(raw) }
-          .flatMapGroups { (k, it) =>
-            bCanon.value.get(k) match {
-              case None => Iterator.empty // dead file
-              case Some(canon) =>
-                val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-                it.foreach { case (_, p) => buf += p }
-                val arr = buf.result().distinct
-                java.util.Arrays.sort(arr)
-                Iterator.single(
-                  (canon, DeletionVectors.serializePositions(arr), arr.length.toLong))
-            }
-          }
+          else IcebergTable.readPositionDeletes(spark,
+            parquets.map(f => frozen.resolvePath(f.filePath))).as[(String, Long)]
+        val mergedBitmaps = liveFileBitmaps(spark, frozen, dvPositions.union(pqPositions))
         // two-mode write: past the byte cap each partition writes its own
         // puffin executor-side — the consolidation of a 100 TB table's delete
         // state never funnels bitmap bytes through the driver either
@@ -1887,21 +1824,7 @@ object IcebergWriter {
           snapshotId, frozen.metadata.lastSequenceNumber + 1, Map.empty)
         if (written.isEmpty) Nil // every delete row targeted a dead file
         else {
-          val pathUtf8 = (v: String) => v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val entries = written.map { case (ppath, plen, ref, off, blen, card, _, _) =>
-            Manifests.DataFileInfo(
-              filePath = new Path(ppath).toUri.getPath,
-              fileFormat = "PUFFIN", partition = Map.empty,
-              recordCount = card, fileSizeInBytes = plen,
-              columnSizes = Map.empty, valueCounts = Map.empty,
-              nullValueCounts = Map.empty, nanValueCounts = Map.empty,
-              lowerBounds = Map(Manifests.PosDeletePathFieldId -> pathUtf8(ref)),
-              upperBounds = Map(Manifests.PosDeletePathFieldId -> pathUtf8(ref)),
-              content = Manifests.FileContent.PositionDeletes,
-              referencedDataFile = Some(ref),
-              contentOffset = Some(off),
-              contentSizeInBytes = Some(blen))
-          }
+          val entries = dvEntries(written)
           val manifestPath = s"$url/metadata/$commitId-mpdc.avro"
           writeDvManifestEntries(manifestPath, snapshotId, specInfo, conf,
             stampDvPartitions(frozen, specInfo, entries)
@@ -1915,28 +1838,16 @@ object IcebergWriter {
           .map(f => morKeyOf(frozen.resolvePath(f.filePath))).filter(_.nonEmpty).toSet
         def key(c: org.apache.spark.sql.Column) =
           org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
-        val kept = spark.read
-          .parquet(delFiles.map(f => frozen.resolvePath(f.filePath)): _*)
+        val kept = IcebergTable.readPositionDeletes(spark,
+            delFiles.map(f => frozen.resolvePath(f.filePath)))
           .filter(key(col("file_path")).isInCollection(liveKeys))
-        val delDir = s"$url/data/$commitId-pdc"
         // spec: position deletes sorted by (path, pos); range-partitioned so
         // each output file covers a contiguous slice of target files
-        kept.repartitionByRange(targetFiles, col("file_path"), col("pos"))
-          .sortWithinPartitions("file_path", "pos")
-          .write.parquet(delDir)
-        val fs = new Path(delDir).getFileSystem(conf)
-        val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
-          (st.getPath.toUri.getPath, st.getLen, posDeleteFileStats(st.getPath, conf),
-            specInfo.map(_ => null: Any), Manifests.Status.Added)
-        }.filter(_._3.recordCount > 0)
-        if (entries.isEmpty) Nil // every delete row targeted a dead file
-        else {
-          val manifestPath = s"$url/metadata/$commitId-mpdc.avro"
-          writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
-            fileContent = Manifests.FileContent.PositionDeletes)
-          Seq(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
-            entries.size, entries.map(_._3.recordCount).sum, 0, 0L, Nil))
-        }
+        val written = writePositionDeleteFiles(s"$url/data/$commitId-pdc",
+          kept.repartitionByRange(targetFiles, col("file_path"), col("pos")))
+        // empty when every delete row targeted a dead file
+        deleteManifest(s"$url/metadata/$commitId-mpdc.avro", snapshotId,
+          written, specInfo, conf).toSeq
       }
     val deletesAtPin = liveDeleteSet(frozen)
     commitSnapshot(spark, url, Some(t0)) { table =>
@@ -1948,7 +1859,8 @@ object IcebergWriter {
   }
 
   /** Write a `(file_path, pos)` DataFrame as Iceberg v2 position-delete
-    * parquet under `data/<commitId>-deletes/` and register it in a
+    * parquet under `data/<commitId>-deletes/` (rows clustered by data file,
+    * so each task's file stays spec-sorted) and register it in a
     * delete-content manifest. Positions already covered by the table's
     * EXISTING delete files are excluded (distributed anti-join on the
     * normalized data-file key): every emitted position then removes exactly
@@ -1965,34 +1877,58 @@ object IcebergWriter {
     if (table.metadata.formatVersion >= 3)
       return writeDeletionVectors(spark, url, table, commitId, snapshotId,
         positions, specInfo, conf)
-    // ONE key definition with the read side (ScanBridge.morKey)
+    val fresh = notYetDeleted(spark, table, positions, table.positionDeleteFiles)
+    val written = writePositionDeleteFiles(s"$url/data/$commitId-deletes",
+      fresh.repartition(col("file_path")))
+    // None when stats said "might match" but no rows did
+    deleteManifest(s"$url/metadata/$commitId-m1.avro", snapshotId,
+      written, specInfo, conf)
+  }
+
+  /** `positions` minus those the parquet position-delete `carriers` already
+    * delete: an anti-join on the normalized data-file key, ONE key
+    * definition with the read side (ScanBridge.morKey). */
+  private def notYetDeleted(spark: SparkSession, table: IcebergTable,
+      positions: DataFrame, carriers: Seq[Manifests.DataFileInfo]): DataFrame = {
+    import org.apache.spark.sql.functions.col
     def key(c: org.apache.spark.sql.Column) =
       org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
-    val existing = table.positionDeleteFiles
-    val fresh =
-      if (existing.isEmpty) positions
-      else positions.join(
-        spark.read.parquet(existing.map(f => table.resolvePath(f.filePath)): _*)
-          .select(key(col("file_path")).as("_g_prior_key"), col("pos").as("_g_prior_pos")),
-        key(col("file_path")) === col("_g_prior_key") && col("pos") === col("_g_prior_pos"),
-        "left_anti")
-    val delDir = s"$url/data/$commitId-deletes"
-    // spec: position deletes sorted by (path, pos)
-    fresh.sort("file_path", "pos").write.parquet(delDir)
-    val fs = new Path(delDir).getFileSystem(conf)
-    val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
-      (st.getPath.toUri.getPath, st.getLen, posDeleteFileStats(st.getPath, conf),
-        specInfo.map(_ => null: Any), Manifests.Status.Added)
-    }.filter(_._3.recordCount > 0)
-    if (entries.isEmpty) None // stats said "might match" but no rows did
-    else {
-      val manifestPath = s"$url/metadata/$commitId-m1.avro"
-      writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
-        fileContent = Manifests.FileContent.PositionDeletes)
-      Some(NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
-        entries.size, entries.map(_._3.recordCount).sum, 0, 0L, Nil))
-    }
+    if (carriers.isEmpty) positions
+    else positions.join(IcebergTable.readPositionDeletes(spark,
+        carriers.map(f => table.resolvePath(f.filePath)))
+        .select(key(col("file_path")).as("_g_prior_key"), col("pos").as("_g_prior_pos")),
+      key(col("file_path")) === col("_g_prior_key") && col("pos") === col("_g_prior_pos"),
+      "left_anti")
   }
+
+  /** Write `(file_path, pos)` rows, already partitioned so each data
+    * file's positions sit in one task, as position-delete files under
+    * `dir`: each task sorts its rows by (path, pos) as the spec requires
+    * and stamps the reserved field ids. Tasks without rows write nothing. */
+  private def writePositionDeleteFiles(dir: String,
+      partitioned: DataFrame): Seq[WrittenFile] = {
+    import org.apache.spark.sql.functions.col
+    val rows = partitioned.sortWithinPartitions("file_path", "pos").select(
+      TaskFileWriter.PositionDeleteSchema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name, f.metadata)): _*)
+    TaskFileWriter.writeAll(rows, dir, TaskFileWriter.Kind.PositionDeletes)
+  }
+
+  /** The delete-content manifest at `path` registering written delete
+    * files as ADDED entries with no partition tuple (these carriers may span
+    * partitions); None when there are none. */
+  private def deleteManifest(path: String, snapshotId: Long,
+      files: Seq[WrittenFile], specInfo: Seq[(PartitionField, String, String)],
+      conf: Configuration, content: Int = Manifests.FileContent.PositionDeletes,
+      equalityIds: Seq[Int] = Nil): Option[NewManifestInfo] =
+    if (files.isEmpty) None
+    else {
+      writeManifestEntries(path, snapshotId, files.map(f => (new Path(f.path).toUri.getPath,
+          f.size, f.stats, specInfo.map(_ => null: Any), Manifests.Status.Added)),
+        specInfo, conf, fileContent = content, equalityIds = equalityIds)
+      Some(NewManifestInfo(path, content, files.size, files.map(_.stats.recordCount).sum,
+        0, 0L, Nil))
+    }
 
   /** Iceberg v3 DELETION VECTORS: the `(file_path, pos)` DataFrame becomes
     * one roaring-bitmap blob per targeted data file, all in ONE puffin file
@@ -2013,18 +1949,10 @@ object IcebergWriter {
       specInfo: Seq[(PartitionField, String, String)],
       conf: Configuration): Option[NewManifestInfo] = {
     import org.apache.spark.sql.functions.col
-    def key(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
     val (priorDvs, parquetDels) = table.positionDeleteFiles.partition(_.isDv)
     // fresh = positions not already deleted by a LEGACY parquet carrier
     // (prior DV positions dedupe in the union below — no join needed)
-    val fresh =
-      if (parquetDels.isEmpty) positions
-      else positions.join(
-        spark.read.parquet(parquetDels.map(f => table.resolvePath(f.filePath)): _*)
-          .select(key(col("file_path")).as("_g_prior_key"), col("pos").as("_g_prior_pos")),
-        key(col("file_path")) === col("_g_prior_key") && col("pos") === col("_g_prior_pos"),
-        "left_anti")
+    val fresh = notYetDeleted(spark, table, positions, parquetDels)
 
     // one serialized bitmap per data file, built where the positions are
     import spark.implicits._
@@ -2050,25 +1978,7 @@ object IcebergWriter {
       val superseded = written.flatMap(r => Option(r._8)).distinct
         .flatMap(priorByKey.get)
       val supersededRows = superseded.map(_.recordCount).sum
-      val pathUtf8 = (s: String) => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val addedEntries = written.map { case (ppath, plen, ref, off, blen, card, _, _) =>
-        Manifests.DataFileInfo(
-          filePath = new Path(ppath).toUri.getPath,
-          fileFormat = "PUFFIN",
-          partition = Map.empty,
-          recordCount = card,
-          fileSizeInBytes = plen,
-          columnSizes = Map.empty, valueCounts = Map.empty,
-          nullValueCounts = Map.empty, nanValueCounts = Map.empty,
-          // referenced-file bounds under the reserved id: the EXISTING
-          // pruning machinery (deleteMayApply, CDC mightHave) reads these
-          lowerBounds = Map(Manifests.PosDeletePathFieldId -> pathUtf8(ref)),
-          upperBounds = Map(Manifests.PosDeletePathFieldId -> pathUtf8(ref)),
-          content = Manifests.FileContent.PositionDeletes,
-          referencedDataFile = Some(ref),
-          contentOffset = Some(off),
-          contentSizeInBytes = Some(blen))
-      }
+      val addedEntries = dvEntries(written)
       val manifestPath = s"$url/metadata/$commitId-mdv.avro"
       writeDvManifestEntries(manifestPath, snapshotId, specInfo, conf,
         stampDvPartitions(table, specInfo, addedEntries)
@@ -2078,6 +1988,46 @@ object IcebergWriter {
         addedEntries.size, addedEntries.map(_.recordCount).sum,
         superseded.size, supersededRows, Nil))
   }
+
+  /** One merged, serialized bitmap per LIVE data file of `table` from
+    * (data file path, pos) rows; rows of other files drop. Groups form on
+    * morKey, but each bitmap names its file in the data manifests' exact
+    * path form: a DV's referenced_data_file and a parquet carrier's
+    * file_path can differ in prefix after a table move. */
+  private def liveFileBitmaps(spark: SparkSession, table: IcebergTable,
+      positions: org.apache.spark.sql.Dataset[(String, Long)])
+      : org.apache.spark.sql.Dataset[(String, Array[Byte], Long)] = {
+    import org.apache.spark.sql.graftbridge.ScanBridge.morKey
+    import spark.implicits._
+    val canon = spark.sparkContext.broadcast(table.liveFiles().map { f =>
+      val rp = table.resolvePath(f.filePath)
+      morKey(rp) -> new Path(rp).toUri.getPath
+    }.toMap)
+    positions.groupByKey { case (p, _) => morKey(p) }.flatMapGroups { (k, it) =>
+      canon.value.get(k).iterator.map { file =>
+        val arr = it.map(_._2).toArray.distinct
+        java.util.Arrays.sort(arr)
+        (file, DeletionVectors.serializePositions(arr), arr.length.toLong)
+      }
+    }
+  }
+
+  /** Manifest entries of written DV blobs. Each records its referenced file
+    * also as the reserved `file_path` bound, which the existing pruning
+    * (deleteMayApply, CDC mightHave) reads. */
+  private def dvEntries(written: Seq[(String, Long, String, Long, Long, Long, Long, String)])
+      : Seq[Manifests.DataFileInfo] =
+    written.map { case (puffin, puffinLen, ref, offset, blobLen, card, _, _) =>
+      val refBytes = ref.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      Manifests.DataFileInfo(filePath = new Path(puffin).toUri.getPath,
+        fileFormat = "PUFFIN", partition = Map.empty, recordCount = card,
+        fileSizeInBytes = puffinLen, columnSizes = Map.empty, valueCounts = Map.empty,
+        nullValueCounts = Map.empty, nanValueCounts = Map.empty,
+        lowerBounds = Map(Manifests.PosDeletePathFieldId -> refBytes),
+        upperBounds = Map(Manifests.PosDeletePathFieldId -> refBytes),
+        content = Manifests.FileContent.PositionDeletes, referencedDataFile = Some(ref),
+        contentOffset = Some(offset), contentSizeInBytes = Some(blobLen))
+    }
 
   /** Stamp each ADDED DV entry with its referenced data file's partition
     * tuple: a deletion vector references exactly ONE data file, so its
@@ -2620,28 +2570,17 @@ object IcebergWriter {
         s"variant column $k cannot be an equality-delete/upsert key")
       f.id
     }
-    val delDir = s"$url/data/$commitId-eqdel"
+    // one file, spec-sorted by the key columns
     val keyDf = keys.select(keyCols.map { k =>
       val id = schema.fields.find(_.name == k).get.id.toLong
       val md = new org.apache.spark.sql.types.MetadataBuilder()
         .putLong("parquet.field.id", id).build()
       col(k).as(k, md)
-    }: _*).distinct()
-    keyDf.sort(keyCols.map(col): _*).coalesce(1).write.mode("overwrite").parquet(delDir)
-    val fs = new Path(delDir).getFileSystem(conf)
-    val entries = listParquetFiles(fs, new Path(delDir)).map { st =>
-      (st.getPath.toUri.getPath, st.getLen,
-        FileStats(rowCountOf(st.getPath, conf), Map.empty, Map.empty, Map.empty, Map.empty),
-        specInfo.map(_ => null: Any), Manifests.Status.Added)
-    }.filter(_._3.recordCount > 0)
-    if (entries.isEmpty) None
-    else {
-      val manifestPath = s"$url/metadata/$commitId-meq.avro"
-      writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
-        fileContent = Manifests.FileContent.EqualityDeletes, equalityIds = keyIds)
-      Some(NewManifestInfo(manifestPath, Manifests.FileContent.EqualityDeletes,
-        entries.size, entries.map(_._3.recordCount).sum, 0, 0L, Nil))
-    }
+    }: _*).distinct().coalesce(1).sortWithinPartitions(keyCols.map(col): _*)
+    deleteManifest(s"$url/metadata/$commitId-meq.avro", snapshotId,
+      TaskFileWriter.writeAll(keyDf, s"$url/data/$commitId-eqdel",
+        TaskFileWriter.Kind.EqualityDeletes),
+      specInfo, conf, Manifests.FileContent.EqualityDeletes, keyIds)
   }
 
   /** Whole-file deletes can remove data files that still have LIVE position
@@ -2686,7 +2625,8 @@ object IcebergWriter {
       org.apache.spark.sql.graftbridge.ScanBridge.morKeyColumn(c)
     val all =
       if (parquets.isEmpty) null
-      else spark.read.parquet(parquets.map(f => table.resolvePath(f.filePath)): _*)
+      else IcebergTable.readPositionDeletes(spark,
+        parquets.map(f => table.resolvePath(f.filePath)))
     val parquetDeadRows =
       if (all == null) 0L
       else all.filter(key(col("file_path")).isInCollection(removedKeys)).count()
@@ -2703,32 +2643,9 @@ object IcebergWriter {
       // the rewrite). Bitmaps build executor-side; only compressed bytes
       // reach the driver.
       import spark.implicits._
-      // canonical paths ship into the groups (see consolidation); survivors
-      // reference LIVE files only, so the live-file canon map covers them
-      val bCanon = spark.sparkContext.broadcast(table.liveFiles().map { f =>
-        val rp = table.resolvePath(f.filePath)
-        org.apache.spark.sql.graftbridge.ScanBridge.morKey(rp) ->
-          new Path(rp).toUri.getPath
-      }.toMap)
-      val survivorBitmaps = all
-        .filter(!key(col("file_path")).isInCollection(removedKeys))
-        .select(col("file_path").cast(org.apache.spark.sql.types.StringType),
-          col("pos"))
-        .as[(String, Long)]
-        .groupByKey { case (p, _) =>
-          org.apache.spark.sql.graftbridge.ScanBridge.morKey(p) }
-        .flatMapGroups { (k, it) =>
-          bCanon.value.get(k) match {
-            case None => Iterator.empty // defensive: not a live file
-            case Some(canon) =>
-              val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-              it.foreach { case (_, p) => buf += p }
-              val arr = buf.result().distinct
-              java.util.Arrays.sort(arr)
-              Iterator.single(
-                (canon, DeletionVectors.serializePositions(arr), arr.length.toLong))
-          }
-        }
+      // survivors reference LIVE files only
+      val survivorBitmaps = liveFileBitmaps(spark, table,
+        all.filter(!key(col("file_path")).isInCollection(removedKeys)).as[(String, Long)])
       val liveByKey: Map[String, Manifests.DataFileInfo] = liveDvs.flatMap(d =>
         d.referencedDataFile.map(r => morKeyOf(r) -> d)).toMap
       // two-mode write with executor-side prior merge — the survivor rewrite
@@ -2745,23 +2662,9 @@ object IcebergWriter {
         d.referencedDataFile.exists(r => supersededKeys(morKeyOf(r))))
       val untouchedDvs = liveDvs.filterNot(d =>
         d.referencedDataFile.exists(r => supersededKeys(morKeyOf(r))))
-      val pathUtf8 = (v: String) => v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val dvEntries = written.map { case (ppath, plen, ref, off, blen, card, _, _) =>
-        Manifests.DataFileInfo(
-          filePath = new Path(ppath).toUri.getPath,
-          fileFormat = "PUFFIN", partition = Map.empty,
-          recordCount = card, fileSizeInBytes = plen,
-          columnSizes = Map.empty, valueCounts = Map.empty,
-          nullValueCounts = Map.empty, nanValueCounts = Map.empty,
-          lowerBounds = Map(Manifests.PosDeletePathFieldId -> pathUtf8(ref)),
-          upperBounds = Map(Manifests.PosDeletePathFieldId -> pathUtf8(ref)),
-          content = Manifests.FileContent.PositionDeletes,
-          referencedDataFile = Some(ref),
-          contentOffset = Some(off),
-          contentSizeInBytes = Some(blen))
-      }
+      val added = dvEntries(written)
       val allEntries =
-        stampDvPartitions(table, specInfo, dvEntries)
+        stampDvPartitions(table, specInfo, added)
           .map(e => (e, Manifests.Status.Added, None: Option[Long])) ++
           superseded.map(e => (e.copy(filePath = table.resolvePath(e.filePath)),
             Manifests.Status.Deleted, e.dataSequence)) ++
@@ -2772,40 +2675,24 @@ object IcebergWriter {
         val manifestPath = s"$url/metadata/$commitId-mrwdv.avro"
         writeDvManifestEntries(manifestPath, snapshotId, specInfo, conf, allEntries)
         manifests ::= NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
-          dvEntries.size, dvEntries.map(_.recordCount).sum,
+          added.size, added.map(_.recordCount).sum,
           superseded.size, superseded.map(_.recordCount).sum, Nil,
           existingFiles = untouchedDvs.size,
           existingRows = untouchedDvs.map(_.recordCount).sum)
       }
       return Some((manifests, deadRows))
     }
-    var survivorRows = 0L
-    val entries =
+    val survivors =
       if (all == null || parquetDeadRows == 0L) Nil
-      else {
-        val delDir = s"$url/data/$commitId-rwdel"
+      else writePositionDeleteFiles(s"$url/data/$commitId-rwdel",
         all.filter(!key(col("file_path")).isInCollection(removedKeys))
-          .sort("file_path", "pos") // spec: position deletes sorted by (path, pos)
-          .write.mode("overwrite").parquet(delDir)
-        val fs = new Path(delDir).getFileSystem(conf)
-        listParquetFiles(fs, new Path(delDir)).map { st =>
-          val stats = posDeleteFileStats(st.getPath, conf)
-          survivorRows += stats.recordCount
-          (st.getPath.toUri.getPath, st.getLen, stats,
-            specInfo.map(_ => null: Any), Manifests.Status.Added)
-        }.filter(_._3.recordCount > 0)
-      }
+          .repartition(col("file_path")))
     // parquet carriers untouched by the removal survive file-level too
     val untouchedParquet =
       if (all == null || parquetDeadRows > 0L) Nil
       else parquets
-    if (entries.nonEmpty) {
-      val manifestPath = s"$url/metadata/$commitId-mrw.avro"
-      writeManifestEntries(manifestPath, snapshotId, entries, specInfo, conf,
-        fileContent = Manifests.FileContent.PositionDeletes)
-      manifests ::= NewManifestInfo(manifestPath, Manifests.FileContent.PositionDeletes,
-        entries.size, survivorRows, 0, 0L, Nil)
-    }
+    manifests ++= deleteManifest(s"$url/metadata/$commitId-mrw.avro",
+      snapshotId, survivors, specInfo, conf)
     val carried = liveDvs ++ untouchedParquet
     if (carried.nonEmpty) {
       val manifestPath = s"$url/metadata/$commitId-mrwdv.avro"
@@ -2892,48 +2779,38 @@ object IcebergWriter {
       summary = Map("graft-merge-keys" -> keyCols.mkString(",")))))
   }
 
-  /** Row count straight from the parquet footer (no data read). */
-  private def rowCountOf(path: Path, conf: Configuration): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
-
-  /** Stats of one written POSITION-DELETE parquet from ONE footer read:
-    * row count plus the `file_path` column's min/max, recorded under the
-    * spec's reserved field id ([[Manifests.PosDeletePathFieldId]]). When
-    * min == max the delete file provably references a single data file —
-    * Iceberg's "referenced data file" property — and planners can skip
-    * every other file without opening the delete parquet. Bounds are
-    * omitted (never guessed) when any block lacks binary stats. */
-  private def posDeleteFileStats(path: Path, conf: Configuration): FileStats = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      var lo: Array[Byte] = null
-      var hi: Array[Byte] = null
-      var sound = rows > 0
-      blocks.filter(_.getRowCount > 0).foreach { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "file_path") match {
-          case Some(cc) =>
-            val st = cc.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) sound = false
-            else {
-              val mn = st.getMinBytes
-              val mx = st.getMaxBytes
-              if (lo == null || unsignedCompare(mn, lo) < 0) lo = mn
-              if (hi == null || unsignedCompare(mx, hi) > 0) hi = mx
-            }
-          case None => sound = false
-        }
+  /** Stats of one POSITION-DELETE parquet from its footer: row count plus
+    * the `file_path` column's min/max, recorded under the spec's reserved
+    * field id ([[Manifests.PosDeletePathFieldId]]). When min == max the
+    * delete file provably references a single data file — Iceberg's
+    * "referenced data file" property — and planners can skip every other
+    * file without opening the delete parquet. Bounds are omitted (never
+    * guessed) when any block lacks binary stats. */
+  private[iceberg] def posDeleteFileStats(footer: ParquetMetadata): FileStats = {
+    val blocks = footer.getBlocks.asScala
+    val rows = blocks.map(_.getRowCount).sum
+    var lo: Array[Byte] = null
+    var hi: Array[Byte] = null
+    var sound = rows > 0
+    blocks.filter(_.getRowCount > 0).foreach { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == "file_path") match {
+        case Some(cc) =>
+          val st = cc.getStatistics
+          if (st == null || st.isEmpty || !st.hasNonNullValue) sound = false
+          else {
+            val mn = st.getMinBytes
+            val mx = st.getMaxBytes
+            if (lo == null || unsignedCompare(mn, lo) < 0) lo = mn
+            if (hi == null || unsignedCompare(mx, hi) > 0) hi = mx
+          }
+        case None => sound = false
       }
-      if (sound && lo != null)
-        FileStats(rows,
-          Map(Manifests.PosDeletePathFieldId -> lo),
-          Map(Manifests.PosDeletePathFieldId -> hi), Map.empty, Map.empty)
-      else FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty)
-    } finally reader.close()
+    }
+    if (sound && lo != null)
+      FileStats(rows,
+        Map(Manifests.PosDeletePathFieldId -> lo),
+        Map(Manifests.PosDeletePathFieldId -> hi), Map.empty, Map.empty)
+    else FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty)
   }
 
   /** Lexicographic compare of UTF-8 bytes — same order as the string values
@@ -2956,14 +2833,10 @@ object IcebergWriter {
       valueCounts: Map[Int, Long], nullCounts: Map[Int, Long],
       nanCounts: Map[Int, Long] = Map.empty)
 
-  /** Files-per-commit threshold below which a distributed stats job costs
-    * more than it saves (job-launch overhead vs a couple of footer reads). */
-  private val DistributedStatsThreshold = 8
-
-  /** Harvest footer stats for every written file. Small commits read footers
-    * on the driver; larger ones fan the reads out over the cluster so commit
-    * latency stays flat as file count grows (the round-1 driver loop
-    * serialized on thousands of footers at scale). */
+  /** Harvest footer stats of EXISTING files being imported ([[addFiles]]):
+    * the reads fan out over the cluster, so an import's latency stays flat
+    * as its file count grows. Files this engine writes never come here —
+    * [[TaskFileWriter]] takes their stats from the footer it just wrote. */
   private[graft] def collectStats(spark: SparkSession,
       files: Seq[(String, Long)], schema: IceSchema,
       conf: Configuration,
@@ -2972,19 +2845,18 @@ object IcebergWriter {
       foreign: Boolean = false,
       format: String = "PARQUET"): Map[String, FileStats] = {
     val isOrc = format == "ORC"
-    if (files.size <= DistributedStatsThreshold) {
-      files.map { case (p, _) => p ->
-        (if (isOrc) orcFooterStats(new Path(p), conf, schema)
-         else footerStats(new Path(p), conf, schema, foreign)) }.toMap
-    } else {
-      val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-      val parallelism = math.min(files.size, spark.sparkContext.defaultParallelism)
-      spark.sparkContext.parallelize(files.map(_._1), parallelism)
-        .map(p => p ->
-          (if (isOrc) orcFooterStats(new Path(p), serConf.value, schema)
-           else footerStats(new Path(p), serConf.value, schema, foreign)))
-        .collect().toMap
-    }
+    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val parallelism = math.min(files.size, spark.sparkContext.defaultParallelism)
+    spark.sparkContext.parallelize(files.map(_._1), parallelism)
+      .map { p =>
+        val path = new Path(p)
+        p -> (if (isOrc) orcFooterStats(path, serConf.value, schema)
+          else {
+            val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, serConf.value))
+            try footerStats(reader.getFooter, schema, foreign) finally reader.close()
+          })
+      }
+      .collect().toMap
   }
 
   /** Harvest record count + per-column statistics from an ORC file TAIL
@@ -3052,76 +2924,83 @@ object IcebergWriter {
     } finally r.close()
   }
 
-  /** Harvest record count + per-column min/max from the parquet footer and
-    * encode as Iceberg bound bytes. */
-  private def footerStats(path: Path, conf: Configuration, schema: IceSchema,
+  /** Record count + per-column counts and min/max of a parquet footer,
+    * bounds encoded as Iceberg bound bytes. */
+  private[iceberg] def footerStats(footer: ParquetMetadata, schema: IceSchema,
       foreign: Boolean): FileStats = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val recordCount = blocks.map(_.getRowCount).sum
-      val byName = schema.fields.map(f => f.name -> f).toMap
-      var lower = Map.empty[Int, Any]
-      var upper = Map.empty[Int, Any]
-      var valueCounts = Map.empty[Int, Long]
-      var nullCounts = Map.empty[Int, Long]
-      // a column is "incomplete" when any row group with values lacks usable
-      // min/max — parquet-mr drops float/double stats when the group holds
-      // NaN, so partial bounds would not describe every row. Such columns
-      // get NO bounds (sound: pruning keeps the file).
-      var incomplete = Set.empty[Int]
-      for (block <- blocks; col <- block.getColumns.asScala) {
-        val name = col.getPath.toDotString
-        byName.get(name).foreach { field =>
-          val id = field.id
-          valueCounts = valueCounts.updated(id, valueCounts.getOrElse(id, 0L) + col.getValueCount)
-          val s = col.getStatistics
-          if (s == null || s.isEmpty) incomplete += id
-          else {
-            nullCounts = nullCounts.updated(id, nullCounts.getOrElse(id, 0L) + s.getNumNulls)
-            if (s.hasNonNullValue) {
-              val (mn, mx) = normalizedMinMax(s, field.icebergTypeString)
-              if (mn != null) {
-                lower = lower.updatedWith(id) {
-                  case Some(prev) => Some(if (IcebergTypes.compare(mn, prev).exists(_ < 0)) mn else prev)
-                  case None => Some(mn)
-                }
-                upper = upper.updatedWith(id) {
-                  case Some(prev) => Some(if (IcebergTypes.compare(mx, prev).exists(_ > 0)) mx else prev)
-                  case None => Some(mx)
-                }
-              } else incomplete += id // type without encodable bounds
-            } else if (s.getNumNulls < col.getValueCount) {
-              incomplete += id // values present but min/max dropped (NaN)
-            }
+    val blocks = footer.getBlocks.asScala
+    val recordCount = blocks.map(_.getRowCount).sum
+    val byName = schema.fields.map(f => f.name -> f).toMap
+    var lower = Map.empty[Int, Any]
+    var upper = Map.empty[Int, Any]
+    var valueCounts = Map.empty[Int, Long]
+    var nullCounts = Map.empty[Int, Long]
+    // a column is "incomplete" when any row group with values lacks usable
+    // min/max — parquet-mr drops float/double stats when the group holds
+    // NaN, so partial bounds would not describe every row. Such columns
+    // get NO bounds (sound: pruning keeps the file).
+    var incomplete = Set.empty[Int]
+    for (block <- blocks; col <- block.getColumns.asScala) {
+      val name = col.getPath.toDotString
+      byName.get(name).foreach { field =>
+        val id = field.id
+        valueCounts = valueCounts.updated(id, valueCounts.getOrElse(id, 0L) + col.getValueCount)
+        val s = asRead(col.getStatistics)
+        if (s == null || s.isEmpty) incomplete += id
+        else {
+          nullCounts = nullCounts.updated(id, nullCounts.getOrElse(id, 0L) + s.getNumNulls)
+          if (s.hasNonNullValue) {
+            val (mn, mx) = normalizedMinMax(s, field.icebergTypeString)
+            if (mn != null) {
+              lower = lower.updatedWith(id) {
+                case Some(prev) => Some(if (IcebergTypes.compare(mn, prev).exists(_ < 0)) mn else prev)
+                case None => Some(mn)
+              }
+              upper = upper.updatedWith(id) {
+                case Some(prev) => Some(if (IcebergTypes.compare(mx, prev).exists(_ > 0)) mx else prev)
+                case None => Some(mx)
+              }
+            } else incomplete += id // type without encodable bounds
+          } else if (s.getNumNulls < col.getValueCount) {
+            incomplete += id // values present but min/max dropped (NaN)
           }
         }
       }
-      lower = lower.removedAll(incomplete)
-      upper = upper.removedAll(incomplete)
-      // NATIVE files: float/double columns with complete bounds are PROVEN
-      // NaN-free (parquet-mr drops min/max on NaN) — recorded so the
-      // NaN-aware pruning tier can use these bounds (Pruning.nanSensitive).
-      // FOREIGN (imported) files: NO claim — "complete bounds ⇒ NaN-free"
-      // is a parquet-mr behavior; a foreign writer may stamp bounds with
-      // NaNs present, and a nanCount=0 claim would license wrong
-      // metadata-only min/max answers and unsound NaN-aware pruning. The
-      // float/double bounds then stay inert (every consumer requires a
-      // proven-zero nan count before trusting them).
-      val nanCounts =
-        if (foreign) Map.empty[Int, Long]
-        else byName.values.collect {
-          case f if (f.icebergTypeString == "float" || f.icebergTypeString == "double") &&
-              lower.contains(f.id) => f.id -> 0L
-        }.toMap
-      FileStats(recordCount,
-        lower.map { case (id, v) =>
-          id -> IcebergTypes.encodeBound(v, byName.values.find(_.id == id).get.icebergTypeString) },
-        upper.map { case (id, v) =>
-          id -> IcebergTypes.encodeBound(v, byName.values.find(_.id == id).get.icebergTypeString) },
-        valueCounts, nullCounts, nanCounts)
-    } finally reader.close()
+    }
+    lower = lower.removedAll(incomplete)
+    upper = upper.removedAll(incomplete)
+    // NATIVE files: float/double columns with complete bounds are PROVEN
+    // NaN-free (parquet-mr drops min/max on NaN) — recorded so the
+    // NaN-aware pruning tier can use these bounds (Pruning.nanSensitive).
+    // FOREIGN (imported) files: NO claim — "complete bounds ⇒ NaN-free"
+    // is a parquet-mr behavior; a foreign writer may stamp bounds with
+    // NaNs present, and a nanCount=0 claim would license wrong
+    // metadata-only min/max answers and unsound NaN-aware pruning. The
+    // float/double bounds then stay inert (every consumer requires a
+    // proven-zero nan count before trusting them).
+    val nanCounts =
+      if (foreign) Map.empty[Int, Long]
+      else byName.values.collect {
+        case f if (f.icebergTypeString == "float" || f.icebergTypeString == "double") &&
+            lower.contains(f.id) => f.id -> 0L
+      }.toMap
+    FileStats(recordCount,
+      lower.map { case (id, v) =>
+        id -> IcebergTypes.encodeBound(v, byName.values.find(_.id == id).get.icebergTypeString) },
+      upper.map { case (id, v) =>
+        id -> IcebergTypes.encodeBound(v, byName.values.find(_.id == id).get.icebergTypeString) },
+      valueCounts, nullCounts, nanCounts)
   }
+
+  /** Column statistics as a reader of the file sees them. A footer a writer
+    * just closed holds the raw ones; reading applies parquet's rules (drop
+    * float/double min/max when either is NaN, widen a ±0.0 bound), so both
+    * kinds of footer give the same stats. */
+  private def asRead(s: org.apache.parquet.column.statistics.Statistics[_])
+      : org.apache.parquet.column.statistics.Statistics[_] =
+    if (s == null || !s.hasNonNullValue) s
+    else org.apache.parquet.column.statistics.Statistics.getBuilderForReading(s.`type`)
+      .withMin(s.getMinBytes).withMax(s.getMaxBytes).withNumNulls(s.getNumNulls).build()
 
   /** Parquet footer statistics → the normalized comparable domain. */
   private def normalizedMinMax(s: org.apache.parquet.column.statistics.Statistics[_],
@@ -3136,32 +3015,6 @@ object IcebergWriter {
       case b: BinaryStatistics if icebergType == "string" =>
         (b.genericGetMin.toStringUsingUTF8, b.genericGetMax.toStringUsingUTF8)
       case _ => (null, null)
-    }
-  }
-
-  // ------------------------------------------------------------- fs utils
-
-  private def listParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) out += st
-    }
-    out.toSeq
-  }
-
-  /** Parse a hive-style `_p_name=value` segment back to a typed value. */
-  private def parsePartitionValue(path: String, dirName: String, valueType: String): Any = {
-    val seg = path.split('/').find(_.startsWith(dirName + "="))
-      .getOrElse(throw new IllegalStateException(s"no $dirName= in $path"))
-    val raw = java.net.URLDecoder.decode(seg.substring(dirName.length + 1), "UTF-8")
-    if (raw == "__HIVE_DEFAULT_PARTITION__") null
-    else valueType match {
-      case "int" | "date" => raw.toLong
-      case "long" => raw.toLong
-      case _ => raw
     }
   }
 

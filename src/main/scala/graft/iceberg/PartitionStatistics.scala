@@ -126,24 +126,13 @@ object PartitionStatistics {
           now,
           snapshotId)
       }
-    // the registered path must be a FILE (spec), not Spark's output dir:
-    // write coalesce(1) to a tmp dir, move the single part up, drop the dir
+    // the registered path is one FILE (spec), written straight to its place
     val statsPath = s"$url/metadata/${java.util.UUID.randomUUID()}-partition-stats.parquet"
-    val tmpDir = new org.apache.hadoop.fs.Path(statsPath + ".tmp")
-    val scoped2 = spark.newSession()
-    scoped2.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    scoped2.createDataFrame(rows.asJava, schema).coalesce(1)
-      .write.parquet(tmpDir.toString)
-    val fs = tmpDir.getFileSystem(conf)
-    val part = fs.listStatus(tmpDir)
-      .filter(_.getPath.getName.endsWith(".parquet")) match {
-      case Array(one) => one.getPath
-      case other => sys.error(s"expected one part file, got ${other.toSeq}")
-    }
-    require(fs.rename(part, new org.apache.hadoop.fs.Path(statsPath)),
-      s"could not move partition-stats part to $statsPath")
-    fs.delete(tmpDir, true)
-    val fileLen = fs.getFileStatus(new org.apache.hadoop.fs.Path(statsPath)).getLen
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val (fileLen, _) = TaskFileWriter.writeOne(new org.apache.hadoop.fs.Path(statsPath),
+      schema, conf, rows.iterator.map(r =>
+        toRow(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
 
     IcebergWriter.commitWithRetry(spark, url, conf) { current =>
       val old = mapper.readTree(

@@ -512,14 +512,13 @@ object RewriteTablePath {
         regexp_replace(c, java.util.regex.Pattern.quote(originalUrl),
           java.util.regex.Matcher.quoteReplacement(currentUrl))
       else c
-    val tmp = s"$dst.tmp"
     def fieldId(n: String): Option[Int] = n match {
       case "file_path" => Some(Manifests.PosDeletePathFieldId)
       case "pos" => Some(Manifests.PosDeletePosFieldId)
       case _ => None
     }
     val src0 = spark.read.parquet(src)
-    src0.select(src0.schema.fields.map { f =>
+    val rows = src0.select(src0.schema.fields.map { f =>
         val c =
           if (f.name == "file_path")
             regexp_replace(resolveCol(col("file_path")), pattern, replacement)
@@ -532,20 +531,21 @@ object RewriteTablePath {
         }
       }.toSeq: _*)
       .coalesce(1).sortWithinPartitions("file_path", "pos")
-      .write.mode("overwrite").parquet(tmp)
-    val fs = new Path(tmp).getFileSystem(conf)
-    val part = fs.listStatus(new Path(tmp))
-      .find(_.getPath.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        s"carrier rewrite produced no parquet under $tmp"))
-      .getPath
-    fs.rename(part, new Path(dst))
-    fs.delete(new Path(tmp), true)
-    // exact bounds of the REWRITTEN paths (one tiny scan of the staged
-    // carrier — carriers are per-commit delete files, not data-scale)
-    val mm = spark.read.parquet(dst)
-      .agg(min(col("file_path")), max(col("file_path"))).head()
-    (fs.getFileStatus(new Path(dst)).getLen, mm.getString(0), mm.getString(1))
+    // one task writes the carrier straight to `dst`; its footer gives the
+    // rewritten paths' bounds
+    val schema = rows.schema
+    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    var written: Option[(Long, IcebergWriter.FileStats)] = None
+    org.apache.spark.sql.graftbridge.WriteBridge.runTasks(rows, s"rewrite $src") {
+      (_, it) =>
+        val (len, footer) = TaskFileWriter.writeOne(new Path(dst), schema, serConf.value, it)
+        (len, IcebergWriter.posDeleteFileStats(footer))
+    } { (_, r) => written = Some(r) }
+    val (len, stats) = written.getOrElse(
+      throw new IllegalStateException(s"carrier rewrite of $src wrote no file"))
+    def bound(b: Map[Int, Array[Byte]]): String =
+      b.get(Manifests.PosDeletePathFieldId).map(new String(_, UTF_8)).orNull
+    (len, bound(stats.lowerBounds), bound(stats.upperBounds))
   }
 
   /** Execute a copy plan produced by [[rewrite]]: stream `file-list.tsv`

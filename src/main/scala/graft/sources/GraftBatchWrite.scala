@@ -2,18 +2,13 @@ package graft.sources
 
 import java.util.UUID
 
-import scala.collection.mutable
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
-import org.apache.spark.sql.graftbridge.WriteBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.iceberg.{IcebergTable, IcebergWriter, Pruning, Transforms}
+import graft.iceberg.{IcebergTable, IcebergWriter, Pruning, TaskFileWriter, WrittenFile}
 
 /** How a [[GraftBatchWrite]] commits its files. */
 private[sources] sealed trait WriteMode extends Serializable
@@ -35,49 +30,34 @@ private[sources] object WriteMode {
 }
 
 /** The NATIVE DataSourceV2 write: executor DataWriters stream InternalRows
-  * straight into parquet (one open writer per partition value per task,
-  * Iceberg field ids stamped at every level, transform evaluation via the
-  * shared [[Transforms]] kernels), and the driver commits the reported
-  * files through the same optimistic snapshot machinery as every other
-  * write. Nothing is re-dispatched through a DataFrame on the driver — the
-  * shape a 1000-executor cluster needs.
+  * through the shared [[TaskFileWriter]] (rows arrive sorted by partition,
+  * one open file per task, Iceberg field ids stamped at every level,
+  * partition tuples from the [[graft.iceberg.Transforms]] kernels, stats
+  * from each file's own footer), and the driver commits the reported files
+  * through the same optimistic snapshot machinery as every other write.
+  * Nothing is re-dispatched through a DataFrame on the driver — the shape
+  * a 1000-executor cluster needs.
   *
-  * Commit cost: one footer-stats harvest (distributed for large commits) +
-  * one metadata publish, independent of row count. */
+  * Commit cost: one metadata publish, independent of row and file count —
+  * no file is listed or re-opened. */
 final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
     querySchema: StructType) extends BatchWrite {
 
   private val commitId = UUID.randomUUID().toString
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = table.spark
-    val ice = table.iceSchema
     // write in TABLE schema order/types (ids at every nesting level); the
     // query schema is already resolved positionally against it
     require(querySchema.length == table.schema.length,
       s"query writes ${querySchema.length} columns, table has ${table.schema.length}")
-    val spec = table.partitionSpec
-    val partInfo: Seq[GraftBatchWrite.PartField] = spec.fields.map { pf =>
-      val src = ice.fields.find(_.id == pf.sourceId)
-        .getOrElse(throw new IllegalStateException(s"no source field ${pf.sourceId}"))
-      val ordinal = ice.fields.indexWhere(_.id == pf.sourceId)
-      GraftBatchWrite.PartField(pf.name, pf.transform, ordinal,
-        src.icebergTypeString, table.schema.fields(ordinal).dataType)
-    }
-    new GraftWriterFactory(table.url, commitId, table.schema, partInfo,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val spec = GraftBatchWrite.dataSpec(table, commitId)
+    (partitionId: Int, taskId: Long) => new GraftDataWriter(spec, partitionId, taskId)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val files: Seq[(String, Long, Seq[Any])] = messages.toSeq.flatMap {
-      case m: GraftCommitMessage => m.files
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    val statsByPath = IcebergWriter.collectStats(spark,
-      files.map(f => (f._1, f._2)), table.iceSchema, conf)
-    val dataFiles = files.map { case (p, len, partValues) =>
-      IcebergWriter.NewDataFile(new Path(p).toUri.getPath, len, statsByPath(p), partValues)
+    val dataFiles = messages.toSeq.flatMap {
+      case m: GraftCommitMessage => m.files.map(_.dataFile)
     }
     // catalog-opened tables publish through the catalog's atomic commit
     // (REST updates/requirements); filesystem tables run the body as-is
@@ -135,107 +115,42 @@ final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    messages.foreach {
-      case m: GraftCommitMessage => m.files.foreach { case (p, _, _) =>
-        val path = new Path(p)
-        try path.getFileSystem(conf).delete(path, false)
-        catch { case _: Exception => () } // best-effort cleanup
-      }
-      case _ => ()
-    }
+    TaskFileWriter.deleteQuietly(messages.toSeq.flatMap {
+      case m: GraftCommitMessage => m.files
+      case _ => Nil
+    }, SparkSession.active.sessionState.newHadoopConf())
   }
 }
 
 object GraftBatchWrite {
-  /** One partition-spec field, pre-resolved for task-side evaluation. */
-  final case class PartField(name: String, transform: String, ordinal: Int,
-      srcIcebergType: String, srcDataType: DataType) extends Serializable
+  /** Data files of `table`'s rows under `data/<commitId>/`. */
+  private[sources] def dataSpec(table: IcebergTable, commitId: String): TaskFileWriter.Spec =
+    TaskFileWriter.Spec(s"${table.url}/data/$commitId", table.schema,
+      TaskFileWriter.Kind.Data(table.iceSchema),
+      new SerializableConfiguration(table.spark.sessionState.newHadoopConf()),
+      TaskFileWriter.partFields(table, table.schema))
 }
 
-/** Files written by one task: (path, bytes, partition values). */
-final case class GraftCommitMessage(files: Seq[(String, Long, Seq[Any])])
+/** Files written by one task. */
+final case class GraftCommitMessage(files: Seq[WrittenFile])
   extends WriterCommitMessage
 
-private final class GraftWriterFactory(url: String, commitId: String,
-    schema: StructType, partInfo: Seq[GraftBatchWrite.PartField],
-    conf: SerializableConfiguration) extends DataWriterFactory {
+/** A DSv2 data writer over the shared [[TaskFileWriter]]. */
+private[sources] final class GraftDataWriter(spec: TaskFileWriter.Spec,
+    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
 
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(url, commitId, schema, partInfo, conf, partitionId, taskId)
-}
-
-/** Streams rows into parquet, fanning out one open file per partition
-  * value (clustering upstream keeps the fan-in small — Spark's dynamic
-  * overwrite plan repartitions by partition expressions). Partition values
-  * are computed per row with the SAME [[Transforms]] kernels the metadata
-  * plane prunes with, so write and prune semantics can never diverge. */
-private[sources] final class GraftDataWriter(url: String, commitId: String,
-    schema: StructType, partInfo: Seq[GraftBatchWrite.PartField],
-    conf: SerializableConfiguration, partitionId: Int, taskId: Long)
-  extends DataWriter[InternalRow] {
-
-  private val transforms = partInfo.map(p => Transforms.parse(p.transform))
-  private val writers =
-    mutable.LinkedHashMap.empty[Seq[Any], org.apache.parquet.hadoop.ParquetWriter[InternalRow]]
-  private val paths = mutable.LinkedHashMap.empty[Seq[Any], Path]
-  private var fileCounter = 0
-
-  /** Catalyst internal value → the Iceberg value domain the [[Transforms]]
-    * kernels evaluate over (Long-widened integrals, JVM strings; date stays
-    * epoch-day, timestamp stays epoch-micros — already the physical repr). */
-  private def iceValue(row: InternalRow, p: GraftBatchWrite.PartField): Any =
-    if (row.isNullAt(p.ordinal)) null
-    else row.get(p.ordinal, p.srcDataType) match {
-      case u: UTF8String => u.toString
-      case i: Int => i.toLong
-      case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-      case other => other
-    }
-
-  private def partTuple(row: InternalRow): Seq[Any] =
-    partInfo.zip(transforms).map { case (p, t) =>
-      val v = iceValue(row, p)
-      if (v == null) null
-      else t.apply(v, p.srcIcebergType).getOrElse(
-        throw new UnsupportedOperationException(
-          s"transform ${p.transform} cannot evaluate ${p.srcIcebergType}"))
-    }
+  private val files = new TaskFileWriter(spec, partitionId, taskId)
 
   /** Copy-on-write row-level operations hand (metadata, row) pairs; the
     * metadata (`_partition` provenance) is not needed to place the row —
     * partition values are recomputed from the row itself. */
   override def write(metadata: InternalRow, row: InternalRow): Unit = write(row)
 
-  override def write(row: InternalRow): Unit = {
-    val key = if (partInfo.isEmpty) Nil else partTuple(row)
-    val w = writers.getOrElseUpdate(key, {
-      val path = new Path(
-        s"$url/data/$commitId/part-$partitionId-$taskId-$fileCounter.parquet")
-      fileCounter += 1
-      paths(key) = path
-      WriteBridge.parquetRowWriter(path, schema, conf.value)
-    })
-    w.write(row)
-  }
+  override def write(row: InternalRow): Unit = files.write(row)
 
-  override def commit(): WriterCommitMessage = {
-    val files = writers.toSeq.map { case (key, w) =>
-      w.close()
-      val p = paths(key)
-      val len = p.getFileSystem(conf.value).getFileStatus(p).getLen
-      (p.toString, len, key)
-    }
-    GraftCommitMessage(files)
-  }
+  override def commit(): WriterCommitMessage = GraftCommitMessage(files.commit())
 
-  override def abort(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Exception => () })
-    paths.values.foreach { p =>
-      try p.getFileSystem(conf.value).delete(p, false)
-      catch { case _: Exception => () }
-    }
-  }
+  override def abort(): Unit = files.abort()
 
   override def close(): Unit = ()
 }

@@ -4,19 +4,16 @@ import java.util.UUID
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
-import org.apache.spark.sql.graftbridge.WriteBridge
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.iceberg.{IcebergTable, IcebergWriter, Transforms}
+import graft.iceberg.{IcebergTable, IcebergWriter, TaskFileWriter, WrittenFile}
 
 /** MERGE-ON-READ row-level operations (Spark's `SupportsDelta` protocol):
   * instead of copy-on-write's whole-file rewrite, each task streams the
@@ -73,7 +70,17 @@ final class GraftDeltaRowLevelOperation(tbl: GraftIcebergV2Table,
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new DeltaWrite {
+      override def build(): DeltaWrite = new DeltaWrite
+          with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+        override def requiredDistribution():
+            org.apache.spark.sql.connector.distributions.Distribution =
+          org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+        // inserts reach the task's data writer grouped by partition, so it
+        // holds one open file; a DELETE writes no data file and needs no sort
+        override def requiredOrdering():
+            Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+          if (cmd == Command.DELETE) Array.empty
+          else GraftIcebergWriteBuilder.partitionOrdering(tbl.partitioning())
         override def toBatch: DeltaBatchWrite = {
           val op = if (cmd == Command.DELETE) "delete" else "overwrite"
           new GraftDeltaBatchWrite(tbl.table, op, info.schema(),
@@ -102,24 +109,17 @@ final class GraftDeltaBatchWrite(table: IcebergTable, operation: String,
   private val commitId = UUID.randomUUID().toString
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = table.spark
-    val ice = table.iceSchema
-    val spec = table.partitionSpec
-    val partInfo: Seq[GraftBatchWrite.PartField] = spec.fields.map { pf =>
-      val src = ice.fields.find(_.id == pf.sourceId)
-        .getOrElse(throw new IllegalStateException(s"no source field ${pf.sourceId}"))
-      val ordinal = ice.fields.indexWhere(_.id == pf.sourceId)
-      GraftBatchWrite.PartField(pf.name, pf.transform, ordinal,
-        src.icebergTypeString, table.schema.fields(ordinal).dataType)
-    }
-    new GraftDeltaWriterFactory(table.url, commitId, table.schema, partInfo,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val data = GraftBatchWrite.dataSpec(table, commitId)
+    val deletes = data.copy(dir = s"${table.url}/data/$commitId-deletes",
+      schema = TaskFileWriter.PositionDeleteSchema, kind = TaskFileWriter.Kind.PositionDeletes,
+      partFields = Nil)
+    (partitionId: Int, taskId: Long) => new GraftDeltaRowWriter(data, deletes, partitionId, taskId)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val dataFiles = mutable.ArrayBuffer.empty[(String, Long, Seq[Any])]
-    val deleteFiles = mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val dataFiles = mutable.ArrayBuffer.empty[WrittenFile]
+    val deleteFiles = mutable.ArrayBuffer.empty[WrittenFile]
     messages.foreach {
       case m: GraftDeltaCommitMessage =>
         dataFiles ++= m.dataFiles
@@ -133,54 +133,39 @@ final class GraftDeltaBatchWrite(table: IcebergTable, operation: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    messages.foreach {
-      case m: GraftDeltaCommitMessage =>
-        (m.dataFiles.map(_._1) ++ m.deleteFiles.map(_._1)).foreach { p =>
-          val path = new Path(p)
-          try path.getFileSystem(conf).delete(path, false)
-          catch { case _: Exception => () } // best-effort cleanup
-        }
-      case _ => ()
-    }
+    TaskFileWriter.deleteQuietly(messages.toSeq.flatMap {
+      case m: GraftDeltaCommitMessage => m.dataFiles ++ m.deleteFiles
+      case _ => Nil
+    }, SparkSession.active.sessionState.newHadoopConf())
   }
 }
 
 /** Files written by one delta task: ordinary data files (for inserts) and
-  * position-delete files as (path, bytes, delete-row count). */
+  * position-delete files. */
 final case class GraftDeltaCommitMessage(
-    dataFiles: Seq[(String, Long, Seq[Any])],
-    deleteFiles: Seq[(String, Long, Long)]) extends WriterCommitMessage
+    dataFiles: Seq[WrittenFile],
+    deleteFiles: Seq[WrittenFile]) extends WriterCommitMessage
 
-private final class GraftDeltaWriterFactory(url: String, commitId: String,
-    schema: StructType, partInfo: Seq[GraftBatchWrite.PartField],
-    conf: SerializableConfiguration) extends DeltaWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaRowWriter(url, commitId, schema, partInfo, conf, partitionId, taskId)
-}
-
-/** Task-side delta writer: inserts stream through the shared partition-
-  * fanout data writer; deletes buffer (file, position) pairs and flush at
-  * commit as ONE position-delete parquet per task, sorted by (path, pos) as
-  * the Iceberg spec requires. Buffered state is two scalars per deleted
-  * row — bounded by the rows this task's deltas touch, not the table. */
-private final class GraftDeltaRowWriter(url: String, commitId: String,
-    schema: StructType, partInfo: Seq[GraftBatchWrite.PartField],
-    conf: SerializableConfiguration, partitionId: Int, taskId: Long)
+/** Task-side delta writer: inserts stream through the shared data writer;
+  * deletes buffer (file, position) pairs and flush at commit as ONE
+  * position-delete parquet per task, sorted by (path, pos) as the Iceberg
+  * spec requires, through the same [[TaskFileWriter]]. Buffered state is
+  * two scalars per deleted row — bounded by the rows this task's deltas
+  * touch, not the table. */
+private final class GraftDeltaRowWriter(data: TaskFileWriter.Spec,
+    deletes: TaskFileWriter.Spec, partitionId: Int, taskId: Long)
   extends DeltaWriter[InternalRow] {
 
-  // lazy: a pure DELETE never instantiates the insert-side writer
-  private lazy val dataWriter =
-    new GraftDataWriter(url, commitId, schema, partInfo, conf, partitionId, taskId)
-  private var dataWriterUsed = false
-  private val deletes = mutable.ArrayBuffer.empty[(String, Long)]
+  // both open files lazily: a pure DELETE writes no data file
+  private val dataWriter = new TaskFileWriter(data, partitionId, taskId)
+  private val deleteWriter = new TaskFileWriter(deletes, partitionId, taskId)
+  private val positions = mutable.ArrayBuffer.empty[(String, Long)]
 
   // rowId projection order matches GraftDeltaRowLevelOperation.rowId()
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     require(!id.isNullAt(0) && !id.isNullAt(1),
       "delta delete requires non-null (_file, _pos) row id")
-    deletes += ((id.getUTF8String(0).toString, id.getLong(1)))
+    positions += ((id.getUTF8String(0).toString, id.getLong(1)))
   }
 
   override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit = {
@@ -190,45 +175,21 @@ private final class GraftDeltaRowWriter(url: String, commitId: String,
     insert(row)
   }
 
-  override def insert(row: InternalRow): Unit = {
-    dataWriterUsed = true
-    dataWriter.write(row)
-  }
+  override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
   override def commit(): WriterCommitMessage = {
-    val dataFiles: Seq[(String, Long, Seq[Any])] =
-      if (dataWriterUsed)
-        dataWriter.commit() match { case m: GraftCommitMessage => m.files }
-      else Nil
-    val deleteFiles: Seq[(String, Long, Long)] =
-      if (deletes.isEmpty) Nil
-      else {
-        val path = new Path(
-          s"$url/data/$commitId-deletes/part-$partitionId-$taskId.parquet")
-        val delSchema = StructType(Seq(
-          StructField("file_path", StringType, nullable = false),
-          StructField("pos", LongType, nullable = false)))
-        val w = WriteBridge.parquetRowWriter(path, delSchema, conf.value)
-        // spec: position deletes sorted by (file path, position)
-        deletes.sortInPlaceBy(identity)
-        val buf = new Array[Any](2)
-        deletes.foreach { case (f, p) =>
-          buf(0) = UTF8String.fromString(f); buf(1) = p
-          w.write(new GenericInternalRow(buf.clone()))
-        }
-        w.close()
-        val len = path.getFileSystem(conf.value).getFileStatus(path).getLen
-        Seq((path.toString, len, deletes.size.toLong))
-      }
-    GraftDeltaCommitMessage(dataFiles, deleteFiles)
+    val dataFiles = dataWriter.commit()
+    // spec: position deletes sorted by (file path, position)
+    positions.sortInPlace()
+    positions.foreach { case (f, p) =>
+      deleteWriter.write(new GenericInternalRow(Array[Any](UTF8String.fromString(f), p)))
+    }
+    GraftDeltaCommitMessage(dataFiles, deleteWriter.commit())
   }
 
   override def abort(): Unit = {
-    if (dataWriterUsed) dataWriter.abort()
-    val p = new Path(
-      s"$url/data/$commitId-deletes/part-$partitionId-$taskId.parquet")
-    try p.getFileSystem(conf.value).delete(p, false)
-    catch { case _: Exception => () }
+    dataWriter.abort()
+    deleteWriter.abort()
   }
 
   override def close(): Unit = ()

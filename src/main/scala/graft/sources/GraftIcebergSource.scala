@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.graftbridge.{DeleteLoader, ScanBridge}
@@ -354,9 +354,10 @@ final class GraftIcebergV2Table(val table: IcebergTable,
   * executor DataWriters stream rows straight into parquet; the driver only
   * commits the reported files. The write declares a CLUSTERED distribution
   * on the table's partition transforms, so Spark shuffles rows to
-  * co-locate partition values before writing — bounded open-writer fan-out
-  * per task and no small-files explosion, the same clustering the
-  * DataFrame write path applies via repartition.
+  * co-locate partition values, and an ORDERING on them, so each task's
+  * writer holds one open file and rolls when the partition changes — no
+  * small-files explosion, the same clustering and sort the DataFrame write
+  * path applies.
   *
   * Overwrite filters translate EXACTLY or refuse (a widened predicate
   * would replace rows the user never named); predicates that would split a
@@ -401,7 +402,7 @@ final class GraftIcebergWriteBuilder(table: IcebergTable,
 
       override def requiredOrdering():
           Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-        GraftIcebergWriteBuilder.sortOrderExpressions(table)
+        GraftIcebergWriteBuilder.writeOrdering(table, partitionTransforms)
 
       override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
         new GraftBatchWrite(table, mode, querySchema)
@@ -426,12 +427,23 @@ object GraftIcebergWriteBuilder {
       org.apache.spark.sql.connector.distributions.Distributions.unspecified()
   }
 
+  /** The order every graft write wants within a task: partition
+    * transforms first, so each task's rows arrive grouped by partition and
+    * its writer holds one open file, then the table's sort order. */
+  private[sources] def writeOrdering(table: IcebergTable,
+      partitionTransforms: Array[Transform]):
+      Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    partitionOrdering(partitionTransforms) ++ sortOrderExpressions(table)
+
+  private[sources] def partitionOrdering(partitionTransforms: Array[Transform]) =
+    partitionTransforms.map(t => Expressions.sort(t, SortDirection.ASCENDING,
+      NullOrdering.NULLS_FIRST))
+
   /** The table's sort order as V2 SortOrder expressions: Spark then SORTS
     * rows before handing them to the DataWriters, so native writes produce
     * the same tight per-file bounds as the DataFrame path. */
   private[sources] def sortOrderExpressions(table: IcebergTable):
       Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection}
     table.sortOrderColumns.map { case (name, dir) =>
       if (dir == "desc")
         Expressions.sort(Expressions.column(name),
@@ -479,7 +491,7 @@ final class GraftRowLevelOperation(tbl: GraftIcebergV2Table,
 
           override def requiredOrdering():
               Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-            GraftIcebergWriteBuilder.sortOrderExpressions(tbl.table)
+            GraftIcebergWriteBuilder.writeOrdering(tbl.table, tbl.partitioning())
 
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
             val op = if (cmd == Command.DELETE) "delete" else "overwrite"
@@ -977,8 +989,8 @@ final class GraftIcebergScan(
       val (dvs, parquets) = table.positionDeleteFiles.partition(_.isDv)
       val fromParquet: Map[String, Array[Long]] =
         if (parquets.isEmpty) Map.empty
-        else spark.read.parquet(
-            parquets.map(f => table.resolvePath(f.filePath)): _*)
+        else IcebergTable.readPositionDeletes(spark,
+            parquets.map(f => table.resolvePath(f.filePath)))
           .select(ScanBridge.morKeyColumn(col("file_path")).as("k"), col("pos"))
           .filter(col("k").isInCollection(scannedKeys))
           .collect()
@@ -1840,7 +1852,7 @@ final class GraftIcebergMicroBatchStream(
     }
     val spark = SparkSession.active
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(delFiles.map(f => t.resolvePath(f.filePath)): _*)
+    IcebergTable.readPositionDeletes(spark, delFiles.map(f => t.resolvePath(f.filePath)))
       .select(ScanBridge.morKeyColumn(col("file_path")).as("k"), col("pos"))
       .collect()
       .groupBy(_.getString(0))
