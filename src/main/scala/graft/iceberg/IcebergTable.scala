@@ -1291,9 +1291,8 @@ final class IcebergTable private (
         org.apache.spark.sql.graftbridge.ScanBridge.morKey(p), p))
     val parquetPart = pds.filterNot(_.isDv).map { f =>
       val p = rewrite(f.filePath)
-      spark.read.parquet(p)
-        .select(canon(col("file_path").cast("string")).as("file_path"),
-          col("pos").cast("long"))
+      IcebergTable.readPositionDeletes(spark, Seq(p))
+        .select(canon(col("file_path")).as("file_path"), col("pos"))
         .withColumn("delete_file_path", lit(p))
     }.reduceOption(_ unionByName _)
     val dvPart = {

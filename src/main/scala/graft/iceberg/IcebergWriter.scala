@@ -662,65 +662,65 @@ object IcebergWriter {
         col(n).as(n, new org.apache.spark.sql.types.MetadataBuilder()
           .putLong("parquet.field.id", id.toLong).build())
     }): _*)
+    val withParts = specInfo.foldLeft(base) { case (d, (pf, srcType, _)) =>
+      val srcName = schema.fields.find(_.id == pf.sourceId).get.name
+      d.withColumn(s"_p_${pf.name}",
+        partitionColumn(srcType, Transforms.parse(pf.transform))(col(srcName)))
+    }
     // table sort order: rows sorted WITHIN each output file → tight,
     // mostly-disjoint per-file bounds on the sort key (file-level pruning)
     val sortCols = table.sortOrderColumns.map {
       case (n, "desc") => col(n).desc
       case (n, _) => col(n).asc
     }
-    val arranged =
-      if (specInfo.isEmpty) {
-        val ranged =
-          if (sortCols.isEmpty) base
-          // unpartitioned sorted writes range-partition first, so files cover
-          // DISJOINT sort-key ranges instead of each file spanning everything
-          // (without an explicit count AQE coalesces small appends; compaction
-          // passes targetPartitions to control the output file count)
-          else targetPartitions match {
-            case Some(n) => base.repartitionByRange(n, sortCols: _*)
-            case None => base.repartitionByRange(sortCols: _*)
+    val arranged = if (specInfo.isEmpty) {
+      val base0 =
+        if (sortCols.isEmpty) withParts
+        // unpartitioned sorted writes range-partition first, so files cover
+        // DISJOINT sort-key ranges instead of each file spanning everything
+        // (without an explicit count AQE coalesces small appends; compaction
+        // passes targetPartitions to control the output file count)
+        else targetPartitions match {
+          case Some(n) => withParts.repartitionByRange(n, sortCols: _*)
+          case None => withParts.repartitionByRange(sortCols: _*)
+        }
+      if (sortCols.isEmpty) base0 else base0.sortWithinPartitions(sortCols: _*)
+    } else {
+      // cluster rows by partition value first: without this every task emits
+      // a file per value it happens to hold (small-files explosion at scale).
+      // Each task's rows then sort by partition (then the sort order), so its
+      // writer holds one open file and rolls when the partition changes.
+      val partCols = specInfo.map(s => col(s"_p_${s._1.name}"))
+      val base1 = zorderBy match {
+        case Some(z) =>
+          // z-order within partitions: contiguous (partition, z) slices,
+          // each sorted — files then carry tight per-partition z-ranges.
+          // Optional per-partition scaling stats broadcast-join in (null-safe
+          // on the partition key) and are projected away after the sort.
+          import org.apache.spark.sql.functions.broadcast
+          val (zin, helperCols) = zorderStats match {
+            case Some(stats) =>
+              val keyNames = specInfo.map(s => s"_p_${s._1.name}")
+              val renamed = keyNames.foldLeft(stats)(
+                (d, k) => d.withColumnRenamed(k, s"__zk_$k"))
+              val cond = keyNames.map(k => withParts(k) <=> renamed(s"__zk_$k"))
+                .reduce(_ && _)
+              (withParts.join(broadcast(renamed), cond, "left"),
+                renamed.columns.toSeq)
+            case None => (withParts, Nil)
           }
-        if (sortCols.isEmpty) ranged else ranged.sortWithinPartitions(sortCols: _*)
-      } else {
-        // partition keys in their physical form, the sort and clustering
-        // keys only: each task's rows arrive grouped by partition, so its
-        // writer holds one open file (without the shuffle every task would
-        // emit a file per value it happens to hold — small-files explosion)
-        val keyNames = specInfo.map(s => s"_p_${s._1.name}")
-        val withKeys = specInfo.zip(keyNames).foldLeft(base) { case (d, ((pf, srcType, _), k)) =>
-          val srcName = schema.fields.find(_.id == pf.sourceId).get.name
-          d.withColumn(k, partitionColumn(srcType, Transforms.parse(pf.transform))(col(srcName)))
-        }
-        val keys = keyNames.map(col(_).asc)
-        val sorted = zorderBy match {
-          case Some(z) =>
-            // z-order within partitions: contiguous (partition, z) slices,
-            // each sorted — files then carry tight per-partition z-ranges.
-            // Optional per-partition scaling stats broadcast-join in (null-safe
-            // on the partition key) and are projected away after the sort.
-            import org.apache.spark.sql.functions.broadcast
-            val (zin, helperCols) = zorderStats match {
-              case Some(stats) =>
-                val renamed = keyNames.foldLeft(stats)(
-                  (d, k) => d.withColumnRenamed(k, s"__zk_$k"))
-                val cond = keyNames.map(k => withKeys(k) <=> renamed(s"__zk_$k"))
-                  .reduce(_ && _)
-                (withKeys.join(broadcast(renamed), cond, "left"),
-                  renamed.columns.toSeq)
-              case None => (withKeys, Nil)
-            }
-            val zkeys = keys :+ z.asc
-            val ranged = targetPartitions match {
-              case Some(n) => zin.repartitionByRange(n, zkeys: _*)
-              case None => zin.repartitionByRange(zkeys: _*)
-            }
-            ranged.sortWithinPartitions(zkeys: _*).drop(helperCols: _*)
-          case None =>
-            withKeys.repartition(keyNames.map(col): _*)
-              .sortWithinPartitions(keys ++ sortCols: _*)
-        }
-        sorted.drop(keyNames: _*)
+          val keys = partCols.map(_.asc) :+ z.asc
+          val ranged = targetPartitions match {
+            case Some(n) => zin.repartitionByRange(n, keys: _*)
+            case None => zin.repartitionByRange(keys: _*)
+          }
+          ranged.sortWithinPartitions(keys: _*).drop(helperCols: _*)
+        case None =>
+          withParts.repartition(partCols: _*)
+            .sortWithinPartitions(partCols.map(_.asc) ++ sortCols: _*)
       }
+      base1.drop(specInfo.map(s => s"_p_${s._1.name}"): _*)
+    }
     TaskFileWriter.writeAll(arranged, s"$url/data/${UUID.randomUUID()}",
       TaskFileWriter.Kind.Data(schema), TaskFileWriter.partFields(table, arranged.schema))
       .map(_.dataFile)
