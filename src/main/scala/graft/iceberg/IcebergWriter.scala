@@ -2787,43 +2787,20 @@ object IcebergWriter {
     * file without opening the delete parquet. Bounds are omitted (never
     * guessed) when any block lacks binary stats. */
   private[iceberg] def posDeleteFileStats(footer: ParquetMetadata): FileStats = {
-    val blocks = footer.getBlocks.asScala
-    val rows = blocks.map(_.getRowCount).sum
-    var lo: Array[Byte] = null
-    var hi: Array[Byte] = null
-    var sound = rows > 0
-    blocks.filter(_.getRowCount > 0).foreach { b =>
-      b.getColumns.asScala.find(_.getPath.toDotString == "file_path") match {
-        case Some(cc) =>
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty || !st.hasNonNullValue) sound = false
-          else {
-            val mn = st.getMinBytes
-            val mx = st.getMaxBytes
-            if (lo == null || unsignedCompare(mn, lo) < 0) lo = mn
-            if (hi == null || unsignedCompare(mx, hi) > 0) hi = mx
-          }
-        case None => sound = false
-      }
+    val blocks = footer.getBlocks.asScala.filter(_.getRowCount > 0)
+    val paths = blocks.map(_.getColumns.asScala
+      .find(_.getPath.toDotString == "file_path").map(_.getStatistics).orNull)
+    val counted = FileStats(blocks.map(_.getRowCount).sum, Map.empty, Map.empty,
+      Map.empty, Map.empty)
+    if (paths.isEmpty || paths.exists(s => s == null || s.isEmpty || !s.hasNonNullValue))
+      counted
+    else {
+      // merged under the column's own (unsigned, UTF-8) order
+      val merged = paths.head.copy()
+      paths.tail.foreach(merged.mergeStatistics(_))
+      counted.copy(lowerBounds = Map(Manifests.PosDeletePathFieldId -> merged.getMinBytes),
+        upperBounds = Map(Manifests.PosDeletePathFieldId -> merged.getMaxBytes))
     }
-    if (sound && lo != null)
-      FileStats(rows,
-        Map(Manifests.PosDeletePathFieldId -> lo),
-        Map(Manifests.PosDeletePathFieldId -> hi), Map.empty, Map.empty)
-    else FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty)
-  }
-
-  /** Lexicographic compare of UTF-8 bytes — same order as the string values
-    * (parquet BINARY/UTF8 min-max are unsigned-byte ordered). */
-  private def unsignedCompare(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val c = (a(i) & 0xff) - (b(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    a.length - b.length
   }
 
   // ------------------------------------------------------------- stats
@@ -3475,7 +3452,17 @@ object IcebergWriter {
       }
       if (published) return
       retries += 1 // lost the race: rebuild against the fresh state
+      val lost = table.version
       table = resolveCurrent(spark, url)
+      // the winner moves the version hint just after its create; until then
+      // a reload still reads the version this attempt lost at, and retrying
+      // against it only loses again, so back off until the hint moves
+      var waitMs = 1L
+      while (catalogCommit.get == null && table.version <= lost && waitMs <= 1024) {
+        Thread.sleep(waitMs)
+        waitMs *= 2
+        table = resolveCurrent(spark, url)
+      }
     }
   }
 

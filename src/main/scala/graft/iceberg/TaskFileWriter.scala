@@ -104,7 +104,7 @@ private[graft] object TaskFileWriter {
   }
 
   /** One partition-spec field, resolved against the written rows. */
-  final case class PartField(name: String, transform: String, ordinal: Int,
+  final case class PartField(transform: String, ordinal: Int,
       srcIcebergType: String, srcDataType: DataType)
 
   /** What a write task writes: files of `kind` with rows of `schema` under
@@ -118,7 +118,7 @@ private[graft] object TaskFileWriter {
     IcebergWriter.specInfoOf(table).map { case (pf, srcType, _) =>
       val ordinal = schema.fieldIndex(
         table.iceSchema.fields.find(_.id == pf.sourceId).get.name)
-      PartField(pf.name, pf.transform, ordinal, srcType, schema(ordinal).dataType)
+      PartField(pf.transform, ordinal, srcType, schema(ordinal).dataType)
     }
 
   /** Position-delete rows as the spec writes them: (file_path, pos) under
