@@ -34,7 +34,7 @@ final class IcebergTable private (
     /** The exact metadata JSON this table was loaded from — the mutation
       * base for commits (re-reading `v{version}` instead would break for
       * catalog-loaded tables, whose metadata path is not version-derived). */
-    private[graft] val rawMetadataJson: String = "",
+    private[iceberg] val rawMetadataJson: String = "",
     /** The path this table's metadata was loaded from. Version-0 views
       * (explicit metadata path — how catalog-loaded tables arrive) read
       * through the V2 source by THIS path: the filesystem version hint
@@ -42,9 +42,10 @@ final class IcebergTable private (
     private[graft] val loadedFrom: String = "",
     /** When set (tables opened through a CATALOG), every write commit
       * against this table instance must run inside this wrapper — it
-      * routes the metadata publish through the catalog's atomic commit
-      * (e.g. the REST updates/requirements protocol) instead of the
-      * filesystem version-hint swap. See [[IcebergWriter.withCatalogCommit]]. */
+      * hands each commit's [[MetadataUpdate]] list to the catalog's atomic
+      * commit (e.g. a REST `CommitTableRequest`) instead of applying it to
+      * a filesystem `v{N+1}.metadata.json`. See
+      * [[IcebergWriter.withCatalogCommit]]. */
     private[graft] val commitScope: Option[(() => Unit) => Unit] = None) {
 
   /** Run a write-commit body under this table's catalog-commit scope (a

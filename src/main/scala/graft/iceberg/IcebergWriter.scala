@@ -17,6 +17,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.iceberg.MetadataUpdate._
+
 /** Iceberg format-v1 WRITE path — table create + append snapshots.
   *
   * An extension beyond the reference (which is read-only, README.md:94):
@@ -130,38 +132,19 @@ object IcebergWriter {
     // (within partitions), so per-file bounds on the sort key are tight and
     // usually disjoint — a point/range query then prunes to a handful of
     // files. The scale lever that turns a partition scan into a file read.
+    val orderFields = sortOrder.map { case (src, direction) =>
+      sortField(src, direction, topIds.getOrElse(src,
+        throw new IllegalArgumentException(s"no sort column $src")), variantCols(src))
+    }
     val orderId = if (sortOrder.isEmpty) 0 else 1
     meta.put("default-sort-order-id", orderId)
     // the unsorted order {order-id: 0, fields: []} is ALWAYS present (as
     // Iceberg's own metadata builder guarantees): readers resolve the
     // default order id against this list, and schema evolution may later
     // reset a sorted table to unsorted — order 0 must exist to resolve
-    val orders = mapper.createArrayNode()
-    val unsorted = mapper.createObjectNode()
-    unsorted.put("order-id", 0)
-    unsorted.set[ArrayNode]("fields", mapper.createArrayNode())
-    orders.add(unsorted)
-    if (sortOrder.nonEmpty) {
-      val order = mapper.createObjectNode()
-      order.put("order-id", orderId)
-      val orderFields = mapper.createArrayNode()
-      sortOrder.foreach { case (src, direction) =>
-        require(Set("asc", "desc").contains(direction),
-          s"sort direction must be asc|desc, got $direction")
-        require(!variantCols(src),
-          s"variant column $src cannot be a sort key (no defined ordering)")
-        val fn = mapper.createObjectNode()
-        fn.put("transform", "identity")
-        fn.put("source-id", topIds.getOrElse(src,
-          throw new IllegalArgumentException(s"no sort column $src")))
-        fn.put("direction", direction)
-        fn.put("null-order", if (direction == "asc") "nulls-first" else "nulls-last")
-        orderFields.add(fn)
-      }
-      order.set[ArrayNode]("fields", orderFields)
-      orders.add(order)
-    }
-    meta.set[ArrayNode]("sort-orders", orders)
+    val orders = meta.putArray("sort-orders")
+    orders.add(sortOrderNode(IceSortOrder(0, Nil)))
+    if (sortOrder.nonEmpty) orders.add(sortOrderNode(IceSortOrder(orderId, orderFields)))
     meta.set[ObjectNode]("properties", mapper.createObjectNode())
     meta.put("current-snapshot-id", -1L)
     meta.set[ArrayNode]("snapshots", mapper.createArrayNode())
@@ -343,15 +326,9 @@ object IcebergWriter {
         case None => m + (f.id -> Seq(f.name))
       }
     }
-    if (mergedMapping != existingMapping)
-      commitWithRetry(spark, url, conf) { current =>
-        val old = mapper.readTree(
-          metadataBaseJson(current, url, conf)).asInstanceOf[ObjectNode]
-        old.withObject("/properties")
-          .put(NameMapping.Prop, NameMapping.render(mergedMapping))
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
+    val mappingProps =
+      if (mergedMapping == existingMapping) Map.empty[String, String]
+      else Map(NameMapping.Prop -> NameMapping.render(mergedMapping))
     val withLen = paths.map { p =>
       val hp = new Path(p)
       (p, hp.getFileSystem(conf).getFileStatus(hp).getLen)
@@ -375,7 +352,8 @@ object IcebergWriter {
           Nil, fmt)
       }
     commitSnapshot(spark, url)(_ => Some(SnapshotUpdate("append", added = files,
-      summary = Map("graft-added-files" -> files.size.toString))))
+      summary = Map("graft-added-files" -> files.size.toString),
+      properties = mappingProps)))
   }
 
   /** MIGRATE a plain parquet directory into a NEW Iceberg table: schema
@@ -808,7 +786,8 @@ object IcebergWriter {
     *                     computed ones
     * @param target       which ref moves; staged targets take appends only
     * @param snapshotId   the new snapshot's id; a caller that writes files
-    *                     naming it allocates it first ([[newSnapshotId]]) */
+    *                     naming it allocates it first ([[newSnapshotId]])
+    * @param properties   table properties the same commit sets */
   private[graft] final case class SnapshotUpdate(operation: String,
       added: Seq[NewDataFile] = Nil,
       removed: Seq[Manifests.DataFileInfo] = Nil,
@@ -817,7 +796,8 @@ object IcebergWriter {
       drop: ManifestDrop = ManifestDrop.Keep,
       summary: Map[String, String] = Map.empty,
       target: SnapshotTarget = SnapshotTarget.Main,
-      snapshotId: Long = newSnapshotId())
+      snapshotId: Long = newSnapshotId(),
+      properties: Map[String, String] = Map.empty)
 
   /** A fresh positive snapshot id. */
   private[graft] def newSnapshotId(): Long =
@@ -839,19 +819,48 @@ object IcebergWriter {
     *    rule — omitted when the parent carries none);
     *  - raises the format version to 2 when the new manifests need it
     *    (delete content, or rewritten EXISTING entries);
-    *  - appends the snapshot and moves the target's ref (and, for main,
-    *    the `snapshot-log`). */
+    *  - adds the snapshot, moves the target's ref and sets the table
+    *    properties the update carries — all in one metadata version.
+    * An attempt that loses its publish leaves nothing behind: the next
+    * attempt (or the final failure) first deletes the manifest list,
+    * manifests and delete-state rewrite it wrote, as iceberg-java's
+    * `cleanUncommitted` does. Files the caller wrote before the loop stay. */
   private[graft] def commitSnapshot(spark: SparkSession, url: String,
       pinned: Option[IcebergTable] = None)(
       build: IcebergTable => Option[SnapshotUpdate]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf, pinned)(table =>
-      build(table).map(produceSnapshot(spark, url, table, _, conf)))
+    // names every file the attempt in flight writes; "" when none
+    var attemptId = ""
+    def cleanUncommitted(): Unit = if (attemptId.nonEmpty) {
+      val fs = new Path(url).getFileSystem(conf)
+      try for (dir <- Seq("metadata", "data"); p = new Path(s"$url/$dir")
+          if fs.exists(p); st <- fs.listStatus(p)
+          if st.getPath.getName.contains(attemptId)) fs.delete(st.getPath, true)
+      catch {
+        case e: java.io.IOException =>
+          log.warn(s"files of a lost commit attempt on $url were not removed", e)
+      }
+      attemptId = ""
+    }
+    try commitWithRetry(spark, url, conf, pinned) { table =>
+      cleanUncommitted() // the previous attempt lost its publish
+      build(table).map { u =>
+        attemptId = UUID.randomUUID().toString
+        produceSnapshot(spark, url, table, u, attemptId, conf)
+      }
+    } catch {
+      case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
+          _: CommitConflictException) =>
+        cleanUncommitted()
+        throw e
+    }
   }
 
-  /** One attempt of [[commitSnapshot]]: the new metadata JSON. */
+  /** One attempt of [[commitSnapshot]]: the metadata updates that publish
+    * the snapshot. Every file it writes carries `commitId` in its name. */
   private def produceSnapshot(spark: SparkSession, url: String,
-      table: IcebergTable, u: SnapshotUpdate, conf: Configuration): String = {
+      table: IcebergTable, u: SnapshotUpdate, commitId: String,
+      conf: Configuration): Seq[MetadataUpdate] = {
     require(u.target == SnapshotTarget.Main || (u.operation == "append" &&
         u.removed.isEmpty && u.newManifests.isEmpty && u.picked.isEmpty &&
         u.drop == ManifestDrop.Keep),
@@ -864,7 +873,6 @@ object IcebergWriter {
         s"duplicate wap.id '$id': a snapshot already carries it")
     }
     val sid = u.snapshotId
-    val commitId = UUID.randomUUID().toString
     val parentId = u.target match {
       case SnapshotTarget.Branch(b) =>
         table.refs.get(b).map(_.snapshotId).getOrElse(table.metadata.currentSnapshotId)
@@ -987,35 +995,31 @@ object IcebergWriter {
     putTotal("total-data-files", addedFiles - u.removed.size)
     u.summary.foreach { case (k, v) => summary.put(k, v) }
 
-    val old = mapper.readTree(metadataBaseJson(table, url, conf)).asInstanceOf[ObjectNode]
     // delete manifests and rewritten EXISTING entries (explicit sequence
     // numbers) are v2 features; the version is raised, never lowered
-    if (old.path("format-version").asInt(1) < 2 && created.exists(m =>
-        m.content == Manifests.ManifestContent.Deletes || m.existingFiles > 0))
-      old.put("format-version", 2)
-    val now = System.currentTimeMillis()
+    val upgrade = table.metadata.formatVersion < 2 && created.exists(m =>
+      m.content == Manifests.ManifestContent.Deletes || m.existingFiles > 0)
     val snap = mapper.createObjectNode()
     snap.put("snapshot-id", sid)
     if (parentId >= 0) snap.put("parent-snapshot-id", parentId)
-    snap.put("timestamp-ms", now)
+    snap.put("timestamp-ms", System.currentTimeMillis())
     snap.put("sequence-number", newSeq)
     rowIdBase.foreach { b =>
       snap.put("first-row-id", b)
-      old.put("next-row-id", b + created
+      snap.put("added-rows", created
         .filter(_.fileContent == Manifests.FileContent.Data).map(_.addedRows).sum)
     }
     snap.set[ObjectNode]("summary", summary)
     snap.put("manifest-list", listPath)
     snap.put("schema-id", table.metadata.currentSchemaId)
-    old.withArray[ArrayNode]("snapshots").add(snap)
-    old.put("last-sequence-number", newSeq)
-    old.put("last-updated-ms", now)
-    u.target match {
-      case SnapshotTarget.Main => moveMain(old, sid, now)
-      case SnapshotTarget.Branch(b) => putRef(old, b, sid, "branch")
-      case SnapshotTarget.Staged => ()
+    val ref = u.target match {
+      case SnapshotTarget.Main => Seq(SetSnapshotRef("main", sid))
+      case SnapshotTarget.Branch(b) => Seq(SetSnapshotRef(b, sid))
+      case SnapshotTarget.Staged => Nil
     }
-    old.toPrettyString
+    (if (u.properties.isEmpty) Nil else Seq(SetProperties(u.properties))) ++
+      (if (upgrade) Seq(UpgradeFormatVersion(2)) else Nil) ++
+      (AddSnapshot(snap) +: ref)
   }
 
   /** Manifest-list partition summaries over `tuples` (one per entry, in
@@ -1103,12 +1107,33 @@ object IcebergWriter {
         * null — wired into Spark's existence-default machinery) and as its
         * starting `write-default`. v3 only; REQUIRED adds demand one (the
         * pre-add files otherwise hold an impossible null). */
-      default: Option[Any] = None): Unit = {
+      default: Option[Any] = None): Unit =
+    evolveSchema(spark, url)(addColumnChange(_, name, icebergType, required, default))
+
+  /** Rename a column (metadata-only). The field id is unchanged, so data
+    * written under the old name resolves by id — no rewrite, no nulls.
+    * `from` may be a dotted path into nested structs; `to` is the new LEAF
+    * name. */
+  def renameColumn(spark: SparkSession, url: String, from: String, to: String): Unit =
+    evolveSchema(spark, url)(renameColumnChange(_, from, to))
+
+  /** Drop a column (metadata-only; files keep the bytes, readers stop
+    * projecting them; time travel to older snapshots still sees it). Dotted
+    * paths drop inside nested structs. */
+  def dropColumn(spark: SparkSession, url: String, name: String): Unit =
+    evolveSchema(spark, url)(dropColumnChange(_, name))
+
+  /** One column change of a schema evolution, validated against the table
+    * it commits to: maps the (fields, last-column-id) it starts from to the
+    * evolved pair. */
+  private type ColumnChange = (Seq[ObjectNode], Int) => (Seq[ObjectNode], Int)
+
+  private def addColumnChange(t: IcebergTable, name: String, icebergType: String,
+      required: Boolean, default: Option[Any]): ColumnChange = {
     // v3-ONLY types may not land in v1/v2 metadata (external readers would
     // reject or misread the whole table)
     val v3OnlyType = Set("variant", "unknown", "timestamp_ns", "timestamptz_ns")
     if (default.isDefined || required || v3OnlyType(icebergType)) {
-      val t = resolveCurrent(spark, url)
       require(default.isDefined || !required,
         s"adding REQUIRED column $name needs a default value: rows in " +
           "pre-add files have no value for it (Iceberg v3 rule)")
@@ -1118,7 +1143,7 @@ object IcebergWriter {
           " an Iceberg v3 feature; run upgradeFormatVersion" +
           s"(url, 3) first (table is v${t.metadata.formatVersion})")
     }
-    evolveSchema(spark, url) { (fields, lastColumnId) =>
+    (fields, lastColumnId) => {
       // route into a struct only when the first segment names an existing
       // top-level STRUCT column; otherwise the whole name is a flat column
       // (which may legitimately contain a literal '.')
@@ -1149,13 +1174,9 @@ object IcebergWriter {
     }
   }
 
-  /** Rename a column (metadata-only). The field id is unchanged, so data
-    * written under the old name resolves by id — no rewrite, no nulls.
-    * `from` may be a dotted path into nested structs; `to` is the new LEAF
-    * name. */
-  def renameColumn(spark: SparkSession, url: String, from: String, to: String): Unit = {
-    requireImportSafeEvolution(spark, url, from, "renameColumn")
-    evolveSchema(spark, url) { (fields, lastColumnId) =>
+  private def renameColumnChange(t: IcebergTable, from: String, to: String): ColumnChange = {
+    requireImportSafeEvolution(t, from, "renameColumn")
+    (fields, lastColumnId) => {
       val parts = evolutionPath(fields, from)
       (mutateStructPath(fields, parts.init, from) { leaf =>
         require(leaf.exists(_.get("name").asText == parts.last), s"no column $from")
@@ -1168,12 +1189,9 @@ object IcebergWriter {
     }
   }
 
-  /** Drop a column (metadata-only; files keep the bytes, readers stop
-    * projecting them; time travel to older snapshots still sees it). Dotted
-    * paths drop inside nested structs. */
-  def dropColumn(spark: SparkSession, url: String, name: String): Unit = {
-    requireImportSafeEvolution(spark, url, name, "dropColumn")
-    evolveSchema(spark, url) { (fields, lastColumnId) =>
+  private def dropColumnChange(t: IcebergTable, name: String): ColumnChange = {
+    requireImportSafeEvolution(t, name, "dropColumn")
+    (fields, lastColumnId) => {
       val parts = evolutionPath(fields, name)
       (mutateStructPath(fields, parts.init, name) { leaf =>
         require(leaf.exists(_.get("name").asText == parts.last), s"no column $name")
@@ -1206,9 +1224,8 @@ object IcebergWriter {
     * fields — imported files resolve nested leaves by name, which a nested
     * rename would break). Costs one planning pass; schema evolution is a
     * rare metadata op. */
-  private def requireImportSafeEvolution(spark: SparkSession, url: String,
-      column: String, op: String): Unit = {
-    val t = resolveCurrent(spark, url)
+  private def requireImportSafeEvolution(t: IcebergTable, column: String,
+      op: String): Unit = {
     if (t.metadata.currentSnapshotId < 0) return
     val hasForeign = hasForeignFiles(t, t.liveFiles())
     if (!hasForeign) return
@@ -1245,17 +1262,9 @@ object IcebergWriter {
           throw new IllegalArgumentException(
             s"snapshot $snapshotId is not an ancestor of the current snapshot; " +
               "rollback only rewinds the current history"))
+      // the rollback is itself a history event
       if (table.currentSnapshot.snapshotId == snapshotId) None // no-op
-      else {
-        val old = mapper.readTree(
-          metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        val now = System.currentTimeMillis()
-        old.put("last-updated-ms", now)
-        // the rollback is itself a history event
-        moveMain(old, snapshotId, now)
-        Some(old.toPrettyString)
-      }
+      else Some(Seq(SetSnapshotRef("main", snapshotId)))
     }
   }
 
@@ -1269,14 +1278,7 @@ object IcebergWriter {
     commitWithRetry(spark, url, conf) { table =>
       require(table.snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
       if (table.metadata.currentSnapshotId == snapshotId) None // no-op
-      else {
-        val old = mapper.readTree(metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        val now = System.currentTimeMillis()
-        old.put("last-updated-ms", now)
-        moveMain(old, snapshotId, now)
-        Some(old.toPrettyString)
-      }
+      else Some(Seq(SetSnapshotRef("main", snapshotId)))
     }
   }
 
@@ -1359,14 +1361,6 @@ object IcebergWriter {
 
   // ---------------------------------------------------- partition evolution
 
-  /** PARTITION SPEC EVOLUTION (metadata-only): register `partitions` (the
-    * FULL new spec, (source column, transform) pairs like [[createTable]])
-    * as a new spec with a fresh spec-id and make it the default for FUTURE
-    * writes — the Iceberg answer to "repartition a 100 TB table": zero data
-    * rewritten. Old files keep their spec; both pruning tiers evaluate each
-    * manifest/file under its OWN spec (see `IcebergTable.pruningContextFor`).
-    * A field identical to one in an existing spec (same source-id,
-    * transform, and name) reuses its field-id, per the Iceberg spec. */
   /** SET (or CLEAR) the table's default SORT ORDER — metadata-only, like
     * partition-spec evolution: FUTURE writes range-partition + sort on the
     * new order (tight, usually disjoint per-file bounds on the sort key);
@@ -1380,119 +1374,92 @@ object IcebergWriter {
       order: Seq[(String, String)]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     commitWithRetry(spark, url, conf) { table =>
-      val old = mapper.readTree(metadataBaseJson(table, url, conf))
-        .asInstanceOf[ObjectNode]
-      val orders =
-        if (old.has("sort-orders")) old.withArray[ArrayNode]("sort-orders")
-        else { val a = mapper.createArrayNode(); old.set[ArrayNode]("sort-orders", a); a }
+      val schema = table.iceSchema
+      val fields = order.map { case (src, direction) =>
+        val f = schema.fields.find(_.name == src).getOrElse(
+          throw new IllegalArgumentException(s"no sort column $src"))
+        sortField(src, direction, f.id, f.icebergTypeString == "variant")
+      }
+      val orders = table.metadata.sortOrders
       // order 0 (unsorted) must exist to resolve (legacy metadata may lack it)
-      if (!(0 until orders.size).exists(orders.get(_).get("order-id").asInt == 0)) {
-        val unsorted = mapper.createObjectNode()
-        unsorted.put("order-id", 0)
-        unsorted.set[ArrayNode]("fields", mapper.createArrayNode())
-        orders.insert(0, unsorted)
-      }
-      val targetId: Int =
-        if (order.isEmpty) 0
-        else {
-          val schema = table.iceSchema
-          val topIds = schema.fields.map(f => f.name -> f.id).toMap
-          val fieldsJson = mapper.createArrayNode()
-          order.foreach { case (src, direction) =>
-            require(Set("asc", "desc").contains(direction),
-              s"sort direction must be asc|desc, got $direction")
-            val f = schema.fields.find(_.name == src).getOrElse(
-              throw new IllegalArgumentException(s"no sort column $src"))
-            require(f.icebergTypeString != "variant",
-              s"variant column $src cannot be a sort key (no defined ordering)")
-            val fn = mapper.createObjectNode()
-            fn.put("transform", "identity")
-            fn.put("source-id", topIds(src))
-            fn.put("direction", direction)
-            fn.put("null-order", if (direction == "asc") "nulls-first" else "nulls-last")
-            fieldsJson.add(fn)
-          }
-          val same = (0 until orders.size).map(orders.get).find(o =>
-            o.get("fields") == fieldsJson)
-          same.map(_.get("order-id").asInt).getOrElse {
-            val next = (0 until orders.size)
-              .map(orders.get(_).get("order-id").asInt).max + 1
-            val o = mapper.createObjectNode()
-            o.put("order-id", next)
-            o.set[ArrayNode]("fields", fieldsJson)
-            orders.add(o)
-            next
-          }
-        }
-      if (Option(old.get("default-sort-order-id")).map(_.asInt).contains(targetId))
-        None // no-op
-      else {
-        old.put("default-sort-order-id", targetId)
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
+      val unsorted = if (orders.exists(_.orderId == 0)) Nil else Seq(IceSortOrder(0, Nil))
+      // an identical existing order is reused by id
+      val existing =
+        if (fields.isEmpty) Some(0) else orders.find(_.fields == fields).map(_.orderId)
+      val added = if (existing.isDefined) Nil
+        else Seq(IceSortOrder((0 +: orders.map(_.orderId)).max + 1, fields))
+      val targetId = existing.getOrElse(added.head.orderId)
+      if (table.metadata.defaultSortOrderId == targetId) None // no-op
+      else Some((unsorted ++ added).map(o => AddSortOrder(sortOrderNode(o))) :+
+        SetDefaultSortOrder(targetId))
     }
   }
 
+  /** An identity sort field on column `src` (field id `sourceId`). */
+  private def sortField(src: String, direction: String, sourceId: Int,
+      variant: Boolean): SortField = {
+    require(Set("asc", "desc").contains(direction),
+      s"sort direction must be asc|desc, got $direction")
+    require(!variant, s"variant column $src cannot be a sort key (no defined ordering)")
+    SortField(sourceId, "identity", direction,
+      if (direction == "asc") "nulls-first" else "nulls-last")
+  }
+
+  /** `order` as its spec JSON object. */
+  private def sortOrderNode(order: IceSortOrder): ObjectNode = {
+    val o = mapper.createObjectNode()
+    o.put("order-id", order.orderId)
+    val fields = o.putArray("fields")
+    order.fields.foreach { f =>
+      fields.addObject().put("transform", f.transform).put("source-id", f.sourceId)
+        .put("direction", f.direction).put("null-order", f.nullOrder)
+    }
+    o
+  }
+
+  /** PARTITION SPEC EVOLUTION (metadata-only): register `partitions` (the
+    * FULL new spec, (source column, transform) pairs like [[createTable]])
+    * as a new spec with a fresh spec-id and make it the default for FUTURE
+    * writes — the Iceberg answer to "repartition a 100 TB table": zero data
+    * rewritten. Old files keep their spec; both pruning tiers evaluate each
+    * manifest/file under its OWN spec (see `IcebergTable.pruningContextFor`).
+    * A field identical to one in an existing spec (same source-id,
+    * transform, and name) reuses its field-id, per the Iceberg spec. */
   def updatePartitionSpec(spark: SparkSession, url: String,
       partitions: Seq[(String, String)]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     commitWithRetry(spark, url, conf) { table =>
-      val old = mapper.readTree(
-        metadataBaseJson(table, url, conf))
-        .asInstanceOf[ObjectNode]
       val schema = table.iceSchema
-      val specs = old.withArray[ArrayNode]("partition-specs")
-      val existing: Seq[ObjectNode] =
-        (0 until specs.size).map(specs.get(_).asInstanceOf[ObjectNode])
-      val newSpecId = existing.map(_.get("spec-id").asInt).max + 1
+      val existing = table.metadata.partitionSpecs
+      val newSpecId = existing.map(_.specId).max + 1
       // defensive floor at the max assigned field-id: legacy metadata (incl.
       // tables this writer created before it tracked the counter) may carry
       // a stale last-partition-id, and a fresh id colliding with an existing
       // field's would alias two different transforms
-      var lastPartId = (Option(old.get("last-partition-id")).map(_.asInt)
-        .getOrElse(999) +: existing.flatMap { sp =>
-          val fs = sp.withArray[ArrayNode]("fields")
-          (0 until fs.size).map(fs.get(_).get("field-id").asInt)
-        }).max
+      var lastPartId = (mapper.readTree(table.rawMetadataJson)
+        .path("last-partition-id").asInt(999) +:
+        existing.flatMap(_.fields.map(_.fieldId))).max
       // reuse by (source, transform) ONLY — the spec's rule: a partition
       // field keeps its id across specs even when its NAME changes (e.g.
       // the source column was renamed and the derived name moved with it).
       // Keying on the name would mint a fresh id for the same conceptual
       // field, splitting its history in the unified partition tuple.
       def reusableFieldId(sourceId: Int, tr: String): Option[Int] =
-        existing.iterator.map { sp =>
-          val fs = sp.withArray[ArrayNode]("fields")
-          (0 until fs.size).map(fs.get).find(f =>
-            f.get("source-id").asInt == sourceId &&
-              f.get("transform").asText == tr).map(_.get("field-id").asInt)
-        }.collectFirst { case Some(id) => id }
-      val spec = mapper.createObjectNode()
-      spec.put("spec-id", newSpecId)
-      val specFields = mapper.createArrayNode()
+        existing.flatMap(_.fields)
+          .find(f => f.sourceId == sourceId && f.transform == tr).map(_.fieldId)
+      val spec = mapper.createObjectNode().put("spec-id", newSpecId)
+      val specFields = spec.putArray("fields")
       partitions.foreach { case (src, tr) =>
         Transforms.parse(tr) // refuse unknown transform strings up front
         val sourceId = schema.fields.find(_.name == src).getOrElse(
           throw new IllegalArgumentException(s"no partition source column $src")).id
-        val name = partitionFieldName(src, tr)
         val fid = reusableFieldId(sourceId, tr).getOrElse {
           lastPartId += 1; lastPartId
         }
-        val fn = mapper.createObjectNode()
-        fn.put("name", name)
-        fn.put("transform", tr)
-        fn.put("source-id", sourceId)
-        fn.put("field-id", fid)
-        specFields.add(fn)
+        specFields.addObject().put("name", partitionFieldName(src, tr))
+          .put("transform", tr).put("source-id", sourceId).put("field-id", fid)
       }
-      spec.set[ArrayNode]("fields", specFields)
-      specs.add(spec)
-      old.put("default-spec-id", newSpecId)
-      old.put("last-partition-id", lastPartId)
-      // keep the flat v1 mirror on the DEFAULT spec (the reference reads it)
-      old.set[ArrayNode]("partition-spec", specFields.deepCopy())
-      old.put("last-updated-ms", System.currentTimeMillis())
-      Some(old.toPrettyString)
+      Some(Seq(AddSpec(spec), SetDefaultSpec(newSpecId)))
     }
   }
 
@@ -1534,86 +1501,77 @@ object IcebergWriter {
     }
   }
 
-  /** Commit a new schema version: append to `schemas` with a fresh
-    * schema-id, flip current-schema-id — snapshots are untouched, so time
-    * travel keeps each snapshot's own schema. */
   private def evolveSchema(spark: SparkSession, url: String)(
-      change: (Seq[ObjectNode], Int) => (Seq[ObjectNode], Int)): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
-      val old = mapper.readTree(
-        metadataBaseJson(table, url, conf))
-        .asInstanceOf[ObjectNode]
-      val schemas = old.withArray[ArrayNode]("schemas")
-      val currentId = old.get("current-schema-id").asInt
-      val current = (0 until schemas.size).map(schemas.get)
-        .find(_.get("schema-id").asInt == currentId)
-        .getOrElse(throw new IllegalStateException("no current schema"))
-      val fields = current.withArray[ArrayNode]("fields")
-      val lastColumnId = Option(old.get("last-column-id")).map(_.asInt)
-        .getOrElse(fields.size)
-      val (newFields, newLastId) = change(
-        (0 until fields.size).map(i => fields.get(i).asInstanceOf[ObjectNode]),
-        lastColumnId)
-      val newSchemaId = (0 until schemas.size).map(schemas.get(_).get("schema-id").asInt).max + 1
-      val newSchema = mapper.createObjectNode()
-      newSchema.put("type", "struct")
-      newSchema.put("schema-id", newSchemaId)
-      val fieldArr = mapper.createArrayNode()
-      newFields.foreach(fieldArr.add)
-      newSchema.set[ArrayNode]("fields", fieldArr)
-      schemas.add(newSchema)
-      old.put("current-schema-id", newSchemaId)
-      old.put("last-column-id", newLastId)
-      // a sort order whose source column left the schema would dangle (real
-      // Iceberg implementations reject such metadata at load): reset the
-      // table to unsorted rather than publish an unsatisfiable order
-      def fieldIds(arr: ArrayNode): Set[Int] = {
-        val b = Set.newBuilder[Int]
-        def walk(fs: ArrayNode): Unit = (0 until fs.size).map(fs.get).foreach { f =>
-          b += f.get("id").asInt
-          val t = f.get("type")
-          if (t != null && t.isObject && t.get("type").asText == "struct")
-            walk(t.asInstanceOf[ObjectNode].withArray[ArrayNode]("fields"))
-        }
-        walk(arr); b.result()
+      change: IcebergTable => ColumnChange): Unit =
+    commitWithRetry(spark, url, spark.sessionState.newHadoopConf())(t =>
+      Some(schemaUpdates(t, Seq(change(t)))))
+
+  /** A new schema version: `changes` applied in order to the current
+    * schema, added with a fresh schema-id and made current — snapshots are
+    * untouched, so time travel keeps each snapshot's own schema. */
+  private def schemaUpdates(table: IcebergTable,
+      changes: Seq[ColumnChange]): Seq[MetadataUpdate] = {
+    val base = mapper.readTree(table.rawMetadataJson)
+    val current = Option(base.get("schemas")).toSeq.flatMap(_.elements().asScala)
+      .find(_.get("schema-id").asInt == table.metadata.currentSchemaId)
+      .getOrElse(throw new IllegalStateException("no current schema"))
+    val fields = current.get("fields").elements().asScala
+      .map(_.asInstanceOf[ObjectNode]).toSeq
+    val (newFields, lastColumnId) =
+      changes.foldLeft((fields, base.path("last-column-id").asInt(fields.size))) {
+        case ((fs, last), change) => change(fs, last)
       }
-      val liveIds = fieldIds(newSchema.withArray[ArrayNode]("fields"))
-      val orderOk = Option(old.get("sort-orders")).forall { so =>
-        val currentOrderId = Option(old.get("default-sort-order-id")).map(_.asInt).getOrElse(0)
-        (0 until so.size).map(so.get).filter(_.get("order-id").asInt == currentOrderId)
-          .forall { o =>
-            val fs = o.get("fields")
-            fs == null || (0 until fs.size).map(fs.get).forall(f =>
-              liveIds.contains(Option(f.get("source-id")).map(_.asInt).getOrElse(-1)))
-          }
+    val schemaId = table.metadata.schemas.map(_.schemaId).max + 1
+    val schema = mapper.createObjectNode().put("type", "struct").put("schema-id", schemaId)
+    val fieldArr = schema.putArray("fields")
+    newFields.foreach(fieldArr.add)
+    val updates = Seq(AddSchema(schema, lastColumnId), SetCurrentSchema(schemaId))
+    // the applier resets a default sort order the new schema leaves
+    // dangling; a catalog learns of the reset only as updates of its own
+    if (!MetadataUpdate.defaultSortOrderDangles(base, schema)) updates
+    else {
+      val unsorted = if (table.metadata.sortOrders.exists(_.orderId == 0)) Nil
+        else Seq(AddSortOrder(sortOrderNode(IceSortOrder(0, Nil))))
+      unsorted ++ updates :+ SetDefaultSortOrder(0)
+    }
+  }
+
+  /** One `ALTER TABLE` statement as ONE metadata version: its property
+    * changes and its column changes (composed into a single new schema)
+    * publish together, or nothing when any change is refused. Covers
+    * SET/UNSET TBLPROPERTIES and ADD/RENAME/DROP COLUMN — nested paths
+    * join with '.'; anything else refuses loudly. Engine-reserved keys
+    * that name table STATE rather than configuration are refused —
+    * iceberg-java's reserved-property rule. */
+  private[graft] def alterTable(spark: SparkSession, url: String,
+      changes: Seq[org.apache.spark.sql.connector.catalog.TableChange]): Unit = {
+    import org.apache.spark.sql.connector.catalog.TableChange._
+    // Spark splits SET TBLPROPERTIES ('a'='1','b'='2') into one change per key
+    val sets = changes.collect { case p: SetProperty => p.property -> p.value }.toMap
+    val reserved = Set("format-version", "uuid", "current-snapshot-id")
+    sets.keys.find(reserved).foreach(k => throw new IllegalArgumentException(
+      s"property '$k' is reserved table STATE — use the dedicated API " +
+        "(upgradeFormatVersion / rollback), not a property write"))
+    val removes = changes.collect { case p: RemoveProperty => p.property }
+    commitWithRetry(spark, url, spark.sessionState.newHadoopConf()) { t =>
+      val columns = changes.flatMap {
+        case _: SetProperty | _: RemoveProperty => None
+        case a: AddColumn => Some(addColumnChange(t, a.fieldNames.mkString("."),
+          sparkToIcebergType(a.dataType), required = !a.isNullable, default = None))
+        case r: RenameColumn =>
+          Some(renameColumnChange(t, r.fieldNames.mkString("."), r.newName))
+        case d: DeleteColumn => Some(dropColumnChange(t, d.fieldNames.mkString(".")))
+        case other => throw new UnsupportedOperationException(
+          s"ALTER TABLE change not supported: $other")
       }
-      if (!orderOk) {
-        old.put("default-sort-order-id", 0)
-        // resolving order id 0 requires the unsorted entry to exist (legacy
-        // tables may predate its unconditional creation), and the dangling
-        // order — fields referencing the dropped column — must not stay
-        // listed: standard Iceberg readers validate every listed order
-        // against the current schema
-        val so = old.withArray[ArrayNode]("sort-orders")
-        val kept = (0 until so.size).map(so.get).filter { o =>
-          val fs = o.get("fields")
-          fs == null || (0 until fs.size).map(fs.get).forall(f =>
-            liveIds.contains(Option(f.get("source-id")).map(_.asInt).getOrElse(-1)))
-        }
-        so.removeAll()
-        if (!kept.exists(_.get("order-id").asInt == 0)) {
-          val unsorted = mapper.createObjectNode()
-          unsorted.put("order-id", 0)
-          unsorted.set[ArrayNode]("fields", mapper.createArrayNode())
-          so.add(unsorted)
-        }
-        kept.foreach(so.add)
-      }
-      // v1 flat form follows the current schema (ice.py reads it)
-      old.set[ObjectNode]("schema", newSchema.deepCopy())
-      old.put("last-updated-ms", System.currentTimeMillis())
-      Some(old.toPrettyString)
+      val props = t.metadata.properties
+      val removed = removes.filter(props.contains)
+      val updates =
+        (if (sets.forall { case (k, v) => props.get(k).contains(v) }) Nil
+         else Seq(SetProperties(sets))) ++
+        (if (removed.isEmpty) Nil else Seq(RemoveProperties(removed))) ++
+        (if (columns.isEmpty) Nil else schemaUpdates(t, columns))
+      if (updates.isEmpty) None else Some(updates)
     }
   }
 
@@ -2207,21 +2165,9 @@ object IcebergWriter {
       val cur = current.metadata.formatVersion
       require(version >= cur,
         s"cannot downgrade format version $cur -> $version")
-      if (version == cur) None
-      else {
-        val old = mapper.readTree(metadataBaseJson(current, url, conf))
-          .asInstanceOf[ObjectNode]
-        old.put("format-version", version)
-        // v3 REQUIRES next-row-id from the moment the version is raised —
-        // strict external readers reject v3 metadata without it. Initialize
-        // in the SAME commit (0 = the value the first row-adding commit
-        // previously assumed) rather than leaving a window where the table
-        // claims v3 but lacks a v3-required field.
-        if (version >= 3 && !old.has("next-row-id"))
-          old.put("next-row-id", current.metadata.nextRowId.getOrElse(0L))
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
+      // v3 needs next-row-id from the moment it is raised: the applier
+      // starts it in the same commit
+      if (version == cur) None else Some(Seq(UpgradeFormatVersion(version)))
     }
   }
 
@@ -2321,29 +2267,6 @@ object IcebergWriter {
     }
   }
 
-  /** Make `snapshotId` the table head: `current-snapshot-id`, `refs.main`
-    * (tracking the head like Iceberg's own writers — the golden fixture's
-    * v5 metadata has it) and a `snapshot-log` entry at `now`, the history
-    * [[IcebergTable.asOfTimestamp]] resolves against. */
-  private def moveMain(old: ObjectNode, snapshotId: Long, now: Long): Unit = {
-    old.put("current-snapshot-id", snapshotId)
-    putRef(old, "main", snapshotId, "branch")
-    val entry = mapper.createObjectNode()
-    entry.put("timestamp-ms", now)
-    entry.put("snapshot-id", snapshotId)
-    old.withArray[ArrayNode]("snapshot-log").add(entry)
-  }
-
-  /** Point ref `name` at `snapshotId` in metadata `old`; returns the ref. */
-  private def putRef(old: ObjectNode, name: String, snapshotId: Long,
-      refType: String): ObjectNode = {
-    val r = mapper.createObjectNode()
-    r.put("snapshot-id", snapshotId)
-    r.put("type", refType)
-    old.withObject("/refs").set[ObjectNode](name, r)
-    r
-  }
-
   /** TAG a snapshot (default: the current one): a named, immutable pointer
     * — the reproducible-training-set primitive. Metadata-only commit;
     * `expireSnapshots` keeps tagged snapshots alive. */
@@ -2399,14 +2322,8 @@ object IcebergWriter {
         require(ancestor,
           s"main is not an ancestor of '$branchName' — it advanced past the " +
             "fork point; re-stage the branch from the current head")
-        val old = mapper.readTree(
-          metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        val now = System.currentTimeMillis()
         // published snapshots enter main's history log
-        moveMain(old, target, now)
-        old.put("last-updated-ms", now)
-        Some(old.toPrettyString)
+        Some(Seq(SetSnapshotRef("main", target)))
       }
     }
   }
@@ -2417,15 +2334,7 @@ object IcebergWriter {
     val conf = spark.sessionState.newHadoopConf()
     commitWithRetry(spark, url, conf) { table =>
       if (!table.refs.contains(name)) None // nothing to do, no new version
-      else {
-        val old = mapper.readTree(
-          metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        Option(old.get("refs")).collect { case o: ObjectNode => o }
-          .foreach(_.remove(name))
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
+      else Some(Seq(RemoveSnapshotRef(name)))
     }
   }
 
@@ -2437,15 +2346,9 @@ object IcebergWriter {
     commitWithRetry(spark, url, conf) { table =>
       val target = snapshotId.getOrElse(table.metadata.currentSnapshotId)
       require(table.snapshots.contains(target), s"unknown snapshot $target")
-      val old = mapper.readTree(
-        metadataBaseJson(table, url, conf))
-        .asInstanceOf[ObjectNode]
-      val r = putRef(old, name, target, refType)
-      // spec ref retention: refs whose snapshot outlives this age are
+      // spec ref retention: refs whose snapshot outlives maxRefAgeMs are
       // dropped (and stop pinning history) at the next expireSnapshots
-      maxRefAgeMs.foreach(r.put("max-ref-age-ms", _))
-      old.put("last-updated-ms", System.currentTimeMillis())
-      Some(old.toPrettyString)
+      Some(Seq(SetSnapshotRef(name, target, refType, maxRefAgeMs)))
     }
   }
 
@@ -2456,44 +2359,17 @@ object IcebergWriter {
     * name STATE rather than configuration are refused — Iceberg-java's
     * reserved-property rule. */
   def setProperties(spark: SparkSession, url: String,
-      props: Map[String, String]): Unit = {
-    val reserved = Set("format-version", "uuid", "current-snapshot-id")
-    props.keys.find(reserved).foreach(k => throw new IllegalArgumentException(
-      s"property '$k' is reserved table STATE — use the dedicated API " +
-        "(upgradeFormatVersion / rollback), not a property write"))
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
-      if (props.forall { case (k, v) => table.metadata.properties.get(k).contains(v) }) None
-      else {
-        val old = mapper.readTree(metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        val p = Option(old.get("properties")).collect { case o: ObjectNode => o }
-          .getOrElse { val o = mapper.createObjectNode(); old.set[ObjectNode]("properties", o); o }
-        props.foreach { case (k, v) => p.put(k, v) }
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
-    }
-  }
+      props: Map[String, String]): Unit =
+    alterTable(spark, url, props.toSeq.map { case (k, v) =>
+      org.apache.spark.sql.connector.catalog.TableChange.setProperty(k, v) })
 
   /** Remove table properties (`ALTER TABLE … UNSET TBLPROPERTIES`).
     * Absent keys are ignored (SQL UNSET semantics); removing every
     * requested key that exists is one metadata-only commit. */
   def removeProperties(spark: SparkSession, url: String,
-      keys: Seq[String]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
-      if (!keys.exists(table.metadata.properties.contains)) None
-      else {
-        val old = mapper.readTree(metadataBaseJson(table, url, conf))
-          .asInstanceOf[ObjectNode]
-        Option(old.get("properties")).collect { case o: ObjectNode => o }
-          .foreach(p => keys.foreach(p.remove))
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
-    }
-  }
+      keys: Seq[String]): Unit =
+    alterTable(spark, url,
+      keys.map(org.apache.spark.sql.connector.catalog.TableChange.removeProperty))
 
   /** Iceberg v2 EQUALITY DELETE: delete every row whose `keyCols` tuple
     * appears in `keys`, WITHOUT scanning any data file — the delete file
@@ -3383,17 +3259,18 @@ object IcebergWriter {
 
   /** CATALOG-owned commit, scoped by [[withCatalogCommit]]: `resolve`
     * supplies the CURRENT table state (a REST catalog's metadata-location,
-    * re-fetched per attempt) and `publish` receives (state-before,
-    * new-metadata-json) and must commit atomically — data files and
-    * manifests still write to the table's storage location; only the
-    * metadata swap routes through the catalog. */
-  private val catalogCommit = new ThreadLocal[
-    (SparkSession => IcebergTable, (IcebergTable, String) => Unit)]
+    * re-fetched per attempt) and `publish` receives the commit's
+    * requirements and updates ([[MetadataUpdate.requirements]]) and must
+    * apply them atomically — data files and manifests still write to the
+    * table's storage location; only the metadata swap routes through the
+    * catalog. */
+  private val catalogCommit = new ThreadLocal[(SparkSession => IcebergTable,
+    (Seq[ObjectNode], Seq[MetadataUpdate]) => Unit)]
 
   /** Route every commit inside `body` through a catalog instead of the
     * filesystem version-hint swap (see [[catalogCommit]]). */
   def withCatalogCommit[T](resolve: SparkSession => IcebergTable)(
-      publish: (IcebergTable, String) => Unit)(body: => T): T = {
+      publish: (Seq[ObjectNode], Seq[MetadataUpdate]) => Unit)(body: => T): T = {
     require(catalogCommit.get == null, "catalog commit scopes do not nest")
     catalogCommit.set((resolve, publish))
     try body finally catalogCommit.remove()
@@ -3408,37 +3285,39 @@ object IcebergWriter {
     }
 
   /** Optimistic-concurrency commit loop (the shape of Iceberg's own
-    * protocol): each attempt builds the new metadata against the CURRENT
-    * table state and publishes it as `v{N+1}.metadata.json` with an
-    * EXCLUSIVE create. Only losing that create to a concurrent committer
-    * (FileAlreadyExistsException) reloads the state and retries, so no
-    * committed snapshot is ever lost (last-writer-wins overwrite was the
-    * round-1 behavior). Once the create succeeds the commit is published:
-    * the version-hint update after it can neither fail the commit nor make
-    * it retry (see [[writeHint]]). Atomicity relies on the store's
-    * exclusive-create (atomic on HDFS/local; object stores need a catalog
-    * lock — use [[withCatalogCommit]] there, which delegates the swap to a
-    * catalog's own atomicity and retries on [[CommitConflictException]]).
+    * protocol): each attempt returns the [[MetadataUpdate]]s the commit
+    * makes to the CURRENT table state, or None to abort without committing
+    * (no-op deletes). On the filesystem the list is folded into that state
+    * ([[MetadataUpdate.applyTo]]) and published as `v{N+1}.metadata.json`
+    * with an EXCLUSIVE create; inside a [[withCatalogCommit]] scope the
+    * same list goes to the catalog with its requirements. Only losing the
+    * create to a concurrent committer (FileAlreadyExistsException) or the
+    * catalog refusing the requirements ([[CommitConflictException]])
+    * reloads the state and retries, so no committed snapshot is ever lost.
+    * Once the create succeeds the commit is published: the version-hint
+    * update after it can neither fail the commit nor make it retry (see
+    * [[writeHint]]). Atomicity relies on the store's exclusive-create
+    * (atomic on HDFS/local; object stores need a catalog).
     *
     * The first attempt builds against `pinned` when given (a writer's own
-    * load), later ones against a fresh load. `attempt` returns None to
-    * abort without committing (no-op deletes). */
+    * load), later ones against a fresh load. */
   private[iceberg] def commitWithRetry(spark: SparkSession, url: String,
       conf: Configuration, pinned: Option[IcebergTable] = None)(
-      attempt: IcebergTable => Option[String]): Unit = {
+      attempt: IcebergTable => Option[Seq[MetadataUpdate]]): Unit = {
     var table = pinned.getOrElse(resolveCurrent(spark, url))
     var retries = 0
     while (true) {
-      val json = attempt(table) match {
+      val updates = attempt(table) match {
         case None => return
-        case Some(j) => withMetadataLog(table, j)
+        case Some(u) => u
       }
       val published = catalogCommit.get match {
         case null =>
           val newVersion = table.version + 1
           val created =
             try {
-              writeStringExclusive(s"$url/metadata/v$newVersion.metadata.json", json, conf)
+              writeStringExclusive(s"$url/metadata/v$newVersion.metadata.json",
+                MetadataUpdate.applyTo(table, updates), conf)
               true
             } catch {
               case _: org.apache.hadoop.fs.FileAlreadyExistsException
@@ -3447,7 +3326,7 @@ object IcebergWriter {
           if (created) writeHint(url, newVersion, conf)
           created
         case (_, publish) =>
-          try { publish(table, json); true }
+          try { publish(MetadataUpdate.requirements(table.metadata, updates), updates); true }
           catch { case _: CommitConflictException if retries < MaxCommitRetries => false }
       }
       if (published) return
@@ -3467,35 +3346,6 @@ object IcebergWriter {
   }
 
   private val MaxCommitRetries = 10
-
-  /** Spec `metadata-log` maintenance, applied to EVERY commit in one place:
-    * the new metadata file records the file it replaced as
-    * `{timestamp-ms: previous last-updated-ms, metadata-file: previous
-    * path}`, appended after whatever log the previous file carried and
-    * trimmed to the newest `write.metadata.previous-versions-max` entries
-    * (spec default 100). The log is what `metadata_log_entries` serves and
-    * what bounds metadata-file cleanup; trimming keeps the METADATA FILE
-    * ITSELF O(1) in commit count — without it every commit would grow every
-    * successor by one entry forever. Skipped when the base state has no
-    * on-disk file to point at (first commit, or a catalog-staged create). */
-  private def withMetadataLog(table: IcebergTable, json: String): String = {
-    if (table.loadedFrom.isEmpty) return json
-    val root = mapper.readTree(json) match {
-      case o: ObjectNode => o
-      case _ => return json
-    }
-    val log = if (root.has("metadata-log")) root.withArray[ArrayNode]("metadata-log")
-      else { val a = mapper.createArrayNode(); root.set[ArrayNode]("metadata-log", a); a }
-    val entry = mapper.createObjectNode()
-    entry.put("timestamp-ms", table.metadata.lastUpdatedMs)
-    entry.put("metadata-file", table.loadedFrom)
-    log.add(entry)
-    val keep = Option(root.get("properties"))
-      .flatMap(p => Option(p.get("write.metadata.previous-versions-max")))
-      .map(_.asText.trim.toInt).getOrElse(100)
-    while (log.size > math.max(1, keep)) log.remove(0)
-    root.toPrettyString
-  }
 
   /** Serializes same-JVM committers (local FS create(overwrite=false) has a
     * check-then-create window); cross-process atomicity is the filesystem's
@@ -3561,26 +3411,5 @@ object IcebergWriter {
     val out = fs.create(p, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** The metadata JSON a commit mutates: the exact bytes `table` was
-    * loaded from when available (catalog-loaded tables have no
-    * version-derived path), else the filesystem's v{version} file. */
-  private[iceberg] def metadataBaseJson(table: IcebergTable, url: String,
-      conf: Configuration): String =
-    if (table.rawMetadataJson.nonEmpty) table.rawMetadataJson
-    else readString(s"$url/metadata/v${table.version}.metadata.json", conf)
-
-  private def readString(path: String, conf: Configuration): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
   }
 }

@@ -2,8 +2,6 @@ package graft.iceberg
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -363,7 +361,6 @@ object Maintenance {
       olderThan: Option[Long] = None): Unit = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val conf = spark.sessionState.newHadoopConf()
-    val mapper = new ObjectMapper()
     val before = IcebergWriter.resolveCurrent(spark, url)
     if (before.metadata.currentSnapshotId < 0) return
 
@@ -412,36 +409,11 @@ object Maintenance {
             next = cur.flatMap(_.parentSnapshotId)
           }
         }
-      if (keepIds.size == table.snapshots.size && retiredRefs.isEmpty)
-        None // nothing to expire, no ref to retire
-      else {
-        val old = mapper.readTree(
-          IcebergWriter.metadataBaseJson(table, url, conf)).asInstanceOf[ObjectNode]
-        // drop retired refs from metadata in the same commit
-        if (retiredRefs.nonEmpty && old.has("refs")) {
-          val refsNode = old.withObject("/refs")
-          retiredRefs.foreach(refsNode.remove)
-        }
-        def filterArray(name: String): Unit = if (old.has(name)) {
-          val arr = old.withArray[ArrayNode](name)
-          val kept = (0 until arr.size).map(arr.get)
-            .filter(n => keepIds.contains(n.get("snapshot-id").asLong))
-          arr.removeAll()
-          kept.foreach(arr.add)
-        }
-        filterArray("snapshots")
-        filterArray("snapshot-log")
-        filterArray("statistics") // stats entries die with their snapshot
-        filterArray("partition-statistics")
-        // oldest kept snapshot becomes the chain root
-        val snaps = old.withArray[ArrayNode]("snapshots")
-        (0 until snaps.size).map(snaps.get(_).asInstanceOf[ObjectNode])
-          .filter(n => n.has("parent-snapshot-id") &&
-            !keepIds.contains(n.get("parent-snapshot-id").asLong))
-          .foreach(_.remove("parent-snapshot-id"))
-        old.put("last-updated-ms", System.currentTimeMillis())
-        Some(old.toPrettyString)
-      }
+      val expired = table.snapshots.keySet -- keepIds
+      // retired refs leave metadata in the same commit
+      if (expired.isEmpty && retiredRefs.isEmpty) None // nothing to do
+      else Some(retiredRefs.toSeq.map(MetadataUpdate.RemoveSnapshotRef) ++
+        (if (expired.isEmpty) Nil else Seq(MetadataUpdate.RemoveSnapshots(expired.toSet))))
     }
 
     // 2. physical cleanup (best-effort, after the metadata commit is

@@ -3,7 +3,6 @@ package graft.iceberg
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -134,22 +133,12 @@ object PartitionStatistics {
       schema, conf, rows.iterator.map(r =>
         toRow(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
 
-    IcebergWriter.commitWithRetry(spark, url, conf) { current =>
-      val old = mapper.readTree(
-        IcebergWriter.metadataBaseJson(current, url, conf)).asInstanceOf[ObjectNode]
-      val stats = old.withArray[ArrayNode]("partition-statistics")
-      val kept = (0 until stats.size).map(stats.get)
-        .filterNot(_.get("snapshot-id").asLong == snapshotId)
-      stats.removeAll()
-      kept.foreach(stats.add)
-      val entry = mapper.createObjectNode()
-      entry.put("snapshot-id", snapshotId)
-      entry.put("statistics-path", statsPath)
-      entry.put("file-size-in-bytes", fileLen)
-      stats.add(entry)
-      old.put("last-updated-ms", System.currentTimeMillis())
-      Some(old.toPrettyString)
-    }
+    val entry = mapper.createObjectNode()
+    entry.put("snapshot-id", snapshotId)
+    entry.put("statistics-path", statsPath)
+    entry.put("file-size-in-bytes", fileLen)
+    IcebergWriter.commitWithRetry(spark, url, conf)(_ =>
+      Some(Seq(MetadataUpdate.SetPartitionStatistics(snapshotId, entry))))
     statsPath
   }
 

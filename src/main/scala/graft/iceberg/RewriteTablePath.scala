@@ -410,8 +410,7 @@ object RewriteTablePath {
 
       // 3. the current metadata.json, re-prefixed everywhere it names a path
       val mapper = new ObjectMapper()
-      val root = mapper.readTree(
-        IcebergWriter.metadataBaseJson(table, url, conf)).asInstanceOf[ObjectNode]
+      val root = mapper.readTree(table.rawMetadataJson).asInstanceOf[ObjectNode]
       rePrefixMetadataJson(root, rel)
       // the staged metadata takes the SOURCE file's own name (a
       // metadata-file-resolved table reports version 0; the basename is

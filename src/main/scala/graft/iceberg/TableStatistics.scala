@@ -210,33 +210,23 @@ object TableStatistics {
       s"unsupported write.stats.compression-codec '$c' (zstd|none)"))
     val (_, fileLen, footerLen) = writeStatsPuffin(statsPath, conf,
       cols.map(_.id).zip(merged), snapshotId, seq, codec)
-    IcebergWriter.commitWithRetry(spark, url, conf) { current =>
-      val old = mapper.readTree(
-        IcebergWriter.metadataBaseJson(current, url, conf)).asInstanceOf[ObjectNode]
-      val stats = old.withArray[ArrayNode]("statistics")
-      val kept = (0 until stats.size).map(stats.get)
-        .filterNot(_.get("snapshot-id").asLong == snapshotId)
-      stats.removeAll()
-      kept.foreach(stats.add)
-      val entry = mapper.createObjectNode()
-      entry.put("snapshot-id", snapshotId)
-      entry.put("statistics-path", statsPath)
-      entry.put("file-size-in-bytes", fileLen)
-      entry.put("file-footer-size-in-bytes", footerLen)
-      val blobMeta = entry.withArray[ArrayNode]("blob-metadata")
-      cols.zip(ndvs).foreach { case (f, ndv) =>
-        val b = mapper.createObjectNode()
-        b.put("type", ThetaBlobType)
-        b.put("snapshot-id", snapshotId)
-        b.put("sequence-number", seq)
-        b.withArray[ArrayNode]("fields").add(f.id)
-        b.withObject("/properties").put("ndv", ndv.toString)
-        blobMeta.add(b)
-      }
-      stats.add(entry)
-      old.put("last-updated-ms", System.currentTimeMillis())
-      Some(old.toPrettyString)
+    val entry = mapper.createObjectNode()
+    entry.put("snapshot-id", snapshotId)
+    entry.put("statistics-path", statsPath)
+    entry.put("file-size-in-bytes", fileLen)
+    entry.put("file-footer-size-in-bytes", footerLen)
+    val blobMeta = entry.withArray[ArrayNode]("blob-metadata")
+    cols.zip(ndvs).foreach { case (f, ndv) =>
+      val b = mapper.createObjectNode()
+      b.put("type", ThetaBlobType)
+      b.put("snapshot-id", snapshotId)
+      b.put("sequence-number", seq)
+      b.withArray[ArrayNode]("fields").add(f.id)
+      b.withObject("/properties").put("ndv", ndv.toString)
+      blobMeta.add(b)
     }
+    IcebergWriter.commitWithRetry(spark, url, conf)(_ =>
+      Some(Seq(MetadataUpdate.SetStatistics(snapshotId, entry))))
     cols.map(_.id).zip(ndvs).toMap
   }
 

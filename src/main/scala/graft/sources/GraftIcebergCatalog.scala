@@ -151,47 +151,13 @@ class GraftIcebergCatalog extends TableCatalog with SupportsNamespaces
     new GraftIcebergV2Table(IcebergTable.load(spark, loc))
   }
 
-  /** `ALTER TABLE` under CATALOG ATOMICITY: each change set commits through
-    * the REST protocol (the writer's metadata edit diffs to
-    * `set-properties`/`remove-properties`/`add-schema` updates, guarded by
-    * the catalog's requirements — same route as DML). Property changes
-    * batch to one commit per statement, like the path catalog. */
+  /** `ALTER TABLE` under CATALOG ATOMICITY: the statement's changes fold
+    * into one update list ([[IcebergWriter.alterTable]]) — set-/remove-
+    * properties and one add-schema + set-current-schema — posted as ONE
+    * REST commit guarded by the catalog's requirements, like DML. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    def resolved = rest.loadTable(spark, ns(ident.namespace()), ident.name())
-    val sets = changes.collect { case p: TableChange.SetProperty =>
-      p.property -> p.value }
-    if (sets.nonEmpty) {
-      val t = resolved
-      t.runCommit(IcebergWriter.setProperties(spark, t.url, sets.toMap))
-    }
-    val removes = changes.collect { case p: TableChange.RemoveProperty =>
-      p.property }
-    if (removes.nonEmpty) {
-      val t = resolved
-      t.runCommit(IcebergWriter.removeProperties(spark, t.url, removes))
-    }
-    changes.filter {
-      case _: TableChange.SetProperty | _: TableChange.RemoveProperty => false
-      case _ => true
-    }.foreach {
-      case a: TableChange.AddColumn =>
-        val t = resolved
-        t.runCommit(IcebergWriter.addColumn(spark, t.url,
-          a.fieldNames.mkString("."),
-          IcebergWriter.sparkToIcebergType(a.dataType),
-          required = !a.isNullable))
-      case r: TableChange.RenameColumn =>
-        val t = resolved
-        t.runCommit(IcebergWriter.renameColumn(spark, t.url,
-          r.fieldNames.mkString("."), r.newName))
-      case d: TableChange.DeleteColumn =>
-        val t = resolved
-        t.runCommit(IcebergWriter.dropColumn(spark, t.url,
-          d.fieldNames.mkString(".")))
-      case other =>
-        throw new UnsupportedOperationException(
-          s"ALTER TABLE change not supported: $other")
-    }
+    val t = rest.loadTable(spark, ns(ident.namespace()), ident.name())
+    t.runCommit(IcebergWriter.alterTable(spark, t.url, changes))
     loadTable(ident)
   }
 

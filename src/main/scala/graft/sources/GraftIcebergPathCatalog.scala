@@ -199,40 +199,11 @@ class GraftIcebergPathCatalog extends TableCatalog with IcebergTransformFunction
     loadTable(ident)
   }
 
-  /** `ALTER TABLE` → the writer's metadata-only commit API, one commit per
-    * change (each is its own optimistic metadata swap, like Iceberg's
-    * Spark integration). Covers the property surface (SET/UNSET
-    * TBLPROPERTIES) and single-name column evolution (ADD/RENAME/DROP
-    * COLUMN); nested paths join with '.' — the writer's evolution API
-    * resolves them. Anything else refuses loudly. */
+  /** `ALTER TABLE` → ONE metadata-only commit per statement
+    * ([[IcebergWriter.alterTable]]): SET/UNSET TBLPROPERTIES and
+    * ADD/RENAME/DROP COLUMN publish one version together, or nothing. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val url = dir(ident)
-    // Spark splits `SET TBLPROPERTIES ('a'='1','b'='2')` into one
-    // SetProperty change per key — batch them back into ONE commit (one
-    // metadata version per statement, like Iceberg's Spark integration)
-    val sets = changes.collect { case p: TableChange.SetProperty =>
-      p.property -> p.value }
-    if (sets.nonEmpty) IcebergWriter.setProperties(spark, url, sets.toMap)
-    val removes = changes.collect { case p: TableChange.RemoveProperty =>
-      p.property }
-    if (removes.nonEmpty) IcebergWriter.removeProperties(spark, url, removes)
-    changes.filter {
-      case _: TableChange.SetProperty | _: TableChange.RemoveProperty => false
-      case _ => true
-    }.foreach {
-      case a: TableChange.AddColumn =>
-        IcebergWriter.addColumn(spark, url, a.fieldNames.mkString("."),
-          IcebergWriter.sparkToIcebergType(a.dataType),
-          required = !a.isNullable)
-      case r: TableChange.RenameColumn =>
-        IcebergWriter.renameColumn(spark, url, r.fieldNames.mkString("."),
-          r.newName)
-      case d: TableChange.DeleteColumn =>
-        IcebergWriter.dropColumn(spark, url, d.fieldNames.mkString("."))
-      case other =>
-        throw new UnsupportedOperationException(
-          s"ALTER TABLE change not supported: $other")
-    }
+    IcebergWriter.alterTable(spark, dir(ident), changes)
     loadTable(ident)
   }
 

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
-import graft.iceberg.{IcebergTable, IcebergWriter}
+import graft.iceberg.{IcebergTable, IcebergWriter, MetadataUpdate}
 
 /** Iceberg REST catalog client — namespace/table CRUD against the open REST
   * catalog protocol, mirroring the reference's `rest_client.py:4-95`
@@ -142,25 +142,27 @@ final class IceRestCatalog(endpoint: String, prefix: String = "") {
       s"""{"requirements": [${requirements.mkString(",")}],
            "updates": [${updates.mkString(",")}]}"""))
 
-  /** Run `body` — any single-snapshot write against this table's storage
-    * location — with its metadata publish routed through CATALOG ATOMICITY:
-    * the locally-built metadata diffs into `add-snapshot` +
-    * `set-snapshot-ref main` updates guarded by an `assert-ref-snapshot-id`
-    * requirement on main's snapshot at build time. A concurrent committer
-    * moves main, the server refuses with 409, and the optimistic loop
+  /** Run `body` — any writes against this table's storage location — with
+    * each metadata publish routed through CATALOG ATOMICITY: the commit's
+    * typed update list ([[MetadataUpdate]]) posts as the REST `updates`,
+    * guarded by the requirements derived from it: `assert-ref-snapshot-id`
+    * for every ref it moves, `assert-current-schema-id` for a schema change
+    * and `assert-default-spec-id` for a spec change. A concurrent committer
+    * breaks one, the server refuses with 409, and the optimistic loop
     * rebuilds against the catalog's FRESH metadata-location (re-fetched per
     * attempt — the filesystem version-hint is never consulted, so the
-    * catalog stays the single source of truth). Covers append / overwrite /
-    * row-level DML (snapshot-adding commits), schema and partition-spec
-    * evolution (add-schema/set-current-schema, add-spec/set-default-spec),
-    * and sort orders; snapshot REMOVAL (expiration) is refused — it needs
-    * the remove-snapshots action this client does not send. */
+    * catalog stays the single source of truth). Snapshot REMOVAL
+    * (expiration) is refused: this client does not send remove-snapshots. */
   def withCatalogAtomicity[T](spark: SparkSession, namespace: String,
       name: String)(body: => T): T =
     IcebergWriter.withCatalogCommit(s => loadTableNoScope(s, namespace, name)) {
-      (before, json) =>
-        val (requirements, updates) = snapshotDiff(before, json)
-        try commitTable(namespace, name, requirements, updates)
+      (requirements, updates) =>
+        if (updates.exists(_.isInstanceOf[MetadataUpdate.RemoveSnapshots]))
+          throw new UnsupportedOperationException(
+            "this commit REMOVES snapshots (expiration?); the REST catalog " +
+              "scope does not send remove-snapshots")
+        try commitTable(namespace, name, requirements.map(_.toString),
+          updates.map(MetadataUpdate.toJson(_).toString))
         catch {
           case e: RuntimeException if e.getMessage.contains("HTTP 409") =>
             throw new IcebergWriter.CommitConflictException(e.getMessage)
@@ -182,143 +184,6 @@ final class IceRestCatalog(endpoint: String, prefix: String = "") {
     withCatalogAtomicity(spark, namespace, name) {
       IcebergWriter.append(spark, url, df)
     }
-  }
-
-  /** Translate a locally-built metadata JSON into the REST commit's
-    * update/requirement lists by DIFFING it against the state it was built
-    * from: every snapshot not present before becomes `add-snapshot`, the
-    * new current snapshot becomes `set-snapshot-ref main`, and the
-    * requirement pins main to the snapshot the build saw (null = the build
-    * saw an empty table, so main must still not exist). */
-  private def snapshotDiff(before: IcebergTable, json: String): (Seq[String], Seq[String]) = {
-    val newMeta = mapper.readTree(json)
-    val oldIds = before.metadata.snapshots.map(_.snapshotId).toSet
-    // REFUSE what the REST update vocabulary used here cannot express,
-    // rather than silently committing a PARTIAL change: snapshot removal
-    // (expiration) needs remove-snapshots, which this client does not send.
-    val newIds = newMeta.get("snapshots").elements().asScala
-      .map(_.get("snapshot-id").asLong).toSet
-    if (!oldIds.subsetOf(newIds))
-      throw new UnsupportedOperationException(
-        "this commit REMOVES snapshots (expiration?); only snapshot-adding " +
-          "commits route through the REST catalog scope")
-    val beforeMeta = mapper.readTree(before.rawMetadataJson)
-    val updates = Seq.newBuilder[String]
-    val requirements = Seq.newBuilder[String]
-
-    // SCHEMA EVOLUTION → add-schema + set-current-schema, guarded by
-    // assert-current-schema-id (a concurrent evolution forces a rebuild)
-    def idSet(node: JsonNode, arr: String, id: String): Set[Int] =
-      Option(node.get(arr)).toSeq.flatMap(_.elements().asScala)
-        .map(_.get(id).asInt).toSet
-    def intOf(node: JsonNode, f: String, dflt: Int): Int =
-      Option(node.get(f)).map(_.asInt).getOrElse(dflt)
-    val oldSchemaIds = idSet(beforeMeta, "schemas", "schema-id")
-    Option(newMeta.get("schemas")).toSeq.flatMap(_.elements().asScala)
-      .filterNot(sc => oldSchemaIds.contains(sc.get("schema-id").asInt))
-      .foreach { sc =>
-        updates += s"""{"action": "add-schema", "schema": $sc,
-          "last-column-id": ${intOf(newMeta, "last-column-id", -1)}}"""
-      }
-    if (intOf(newMeta, "current-schema-id", -1) != intOf(beforeMeta, "current-schema-id", -1)) {
-      updates += s"""{"action": "set-current-schema",
-        "schema-id": ${intOf(newMeta, "current-schema-id", -1)}}"""
-      requirements += s"""{"type": "assert-current-schema-id",
-        "current-schema-id": ${intOf(beforeMeta, "current-schema-id", -1)}}"""
-    }
-
-    // PARTITION-SPEC EVOLUTION → add-spec + set-default-spec
-    val oldSpecIds = idSet(beforeMeta, "partition-specs", "spec-id")
-    Option(newMeta.get("partition-specs")).toSeq.flatMap(_.elements().asScala)
-      .filterNot(sp => oldSpecIds.contains(sp.get("spec-id").asInt))
-      .foreach(sp => updates += s"""{"action": "add-spec", "spec": $sp}""")
-    if (intOf(newMeta, "default-spec-id", 0) != intOf(beforeMeta, "default-spec-id", 0)) {
-      updates += s"""{"action": "set-default-spec",
-        "spec-id": ${intOf(newMeta, "default-spec-id", 0)}}"""
-      requirements += s"""{"type": "assert-default-spec-id",
-        "default-spec-id": ${intOf(beforeMeta, "default-spec-id", 0)}}"""
-    }
-
-    // SORT-ORDER changes → add-sort-order + set-default-sort-order
-    val oldOrderIds = idSet(beforeMeta, "sort-orders", "order-id")
-    Option(newMeta.get("sort-orders")).toSeq.flatMap(_.elements().asScala)
-      .filterNot(so => oldOrderIds.contains(so.get("order-id").asInt))
-      .foreach(so => updates += s"""{"action": "add-sort-order", "sort-order": $so}""")
-    if (intOf(newMeta, "default-sort-order-id", 0) != intOf(beforeMeta, "default-sort-order-id", 0))
-      updates += s"""{"action": "set-default-sort-order",
-        "sort-order-id": ${intOf(newMeta, "default-sort-order-id", 0)}}"""
-    // TABLE + PARTITION STATISTICS → set-/remove- updates (the spec's REST
-    // update types); a same-snapshot recompute diffs to one full-replace
-    // set-statistics. Without this, a stats commit on a catalog-scoped
-    // table would silently publish NOTHING.
-    def statsBySnap(node: JsonNode, field: String): Map[Long, JsonNode] =
-      Option(node.get(field)).toSeq.flatMap(_.elements().asScala)
-        .map(e => e.get("snapshot-id").asLong -> e).toMap
-    Seq(("statistics", "set-statistics", "remove-statistics"),
-      ("partition-statistics", "set-partition-statistics",
-        "remove-partition-statistics")).foreach { case (field, setA, removeA) =>
-      val oldS = statsBySnap(beforeMeta, field)
-      val newS = statsBySnap(newMeta, field)
-      newS.foreach { case (sid, e) =>
-        if (!oldS.get(sid).contains(e))
-          updates += s"""{"action": "$setA", "snapshot-id": $sid, "$field": $e}"""
-      }
-      oldS.keySet.diff(newS.keySet).foreach(sid =>
-        updates += s"""{"action": "$removeA", "snapshot-id": $sid}""")
-    }
-    // TABLE PROPERTIES → set-properties / remove-properties (REST spec
-    // update types). Without this, an ALTER TABLE SET/UNSET TBLPROPERTIES
-    // commit in a catalog scope would diff to ZERO updates and silently
-    // publish nothing.
-    def propsOf(node: JsonNode): Map[String, String] =
-      Option(node.get("properties")).toSeq.flatMap(_.properties().asScala)
-        .map(e => e.getKey -> e.getValue.asText).toMap
-    val oldProps = propsOf(beforeMeta)
-    val newProps = propsOf(newMeta)
-    val changedProps = newProps.filter { case (k, v) => !oldProps.get(k).contains(v) }
-    if (changedProps.nonEmpty) {
-      val obj = mapper.createObjectNode()
-      changedProps.foreach { case (k, v) => obj.put(k, v) }
-      updates += s"""{"action": "set-properties", "updates": $obj}"""
-    }
-    val removedProps = oldProps.keySet.diff(newProps.keySet)
-    if (removedProps.nonEmpty) {
-      val arr = mapper.createArrayNode()
-      removedProps.toSeq.sorted.foreach(arr.add)
-      updates += s"""{"action": "remove-properties", "removals": $arr}"""
-    }
-    newMeta.get("snapshots").elements().asScala
-      .filterNot(s => oldIds.contains(s.get("snapshot-id").asLong))
-      .foreach(s => updates += s"""{"action": "add-snapshot", "snapshot": $s}""")
-    // EVERY ref the commit creates or moves (main for normal commits, a
-    // staging branch for write-audit-publish, tags) becomes its own
-    // set-snapshot-ref update, guarded by an assert-ref-snapshot-id pinning
-    // the ref where the build saw it (null = ref must not exist yet) — so a
-    // concurrent committer moving ANY ref this commit touches forces a
-    // rebuild, branch and tag commits included.
-    val oldRefs: Map[String, Long] =
-      before.metadata.refs.map { case (n, r) => n -> r.snapshotId } ++
-        (if (before.metadata.currentSnapshotId >= 0)
-           Map("main" -> before.metadata.currentSnapshotId)
-         else Map.empty)
-    val newRefs: Map[String, (Long, String)] = {
-      val fromRefs = Option(newMeta.get("refs")).toSeq
-        .flatMap(_.properties().asScala)
-        .map(e => e.getKey -> (e.getValue.get("snapshot-id").asLong,
-          e.getValue.get("type").asText)).toMap
-      val newCur = newMeta.get("current-snapshot-id").asLong
-      if (newCur >= 0) fromRefs.updated("main",
-        (newCur, "branch")) else fromRefs
-    }
-    newRefs.foreach { case (name, (id, refType)) =>
-      if (!oldRefs.get(name).contains(id)) {
-        updates += s"""{"action": "set-snapshot-ref", "ref-name": "$name",
-          "type": "$refType", "snapshot-id": $id}"""
-        requirements += s"""{"type": "assert-ref-snapshot-id", "ref": "$name",
-          "snapshot-id": ${oldRefs.get(name).map(_.toString).getOrElse("null")}}"""
-      }
-    }
-    (requirements.result(), updates.result())
   }
 
   private def levels(name: String): String =

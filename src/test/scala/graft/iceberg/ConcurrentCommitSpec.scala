@@ -82,6 +82,33 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  test("an attempt that loses its create leaves no manifest behind") {
+    val url = freshTable
+    IcebergWriter.createTable(spark, url, schema)
+    IcebergWriter.append(spark, url, Seq((1L, "a")).toDF("k", "src"))
+    // a writer pins the table, then a concurrent commit lands first: the
+    // writer's first attempt builds against the pin and loses the create
+    val pinned = IcebergTable.load(spark, url)
+    val files = IcebergWriter.writeDataFiles(spark, url, pinned,
+      Seq((2L, "b")).toDF("k", "src"))
+    IcebergWriter.append(spark, url, Seq((3L, "c")).toDF("k", "src"))
+    var attempts = 0
+    IcebergWriter.commitSnapshot(spark, url, Some(pinned)) { _ =>
+      attempts += 1
+      Some(IcebergWriter.SnapshotUpdate("append", added = files))
+    }
+    assert(attempts == 2, "the pinned attempt must lose and retry")
+    val t = IcebergTable.load(spark, url)
+    assert(t.read().count() == 3)
+    def name(p: String): String = p.split('/').last
+    val referenced = t.metadata.snapshots.flatMap { s =>
+      name(s.manifestList) +: t.atSnapshot(s.snapshotId).manifestList.map(m => name(m.path))
+    }.toSet
+    val avro = new java.io.File(s"$url/metadata").listFiles().map(_.getName)
+      .filter(_.endsWith(".avro")).toSet
+    assert(avro == referenced, s"unreferenced: ${avro -- referenced}")
+  }
+
   test("delta DML refuses a concurrent append matching its condition (serializable)") {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)

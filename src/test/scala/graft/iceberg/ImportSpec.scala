@@ -88,6 +88,26 @@ class ImportSpec extends AnyFunSuite {
     assert(e.getMessage.contains("renamed since an earlier import"))
   }
 
+  test("the first import publishes ONE version carrying both the name " +
+      "mapping and the snapshot") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_imponce").toString
+    val ext = s"$dir/ext"
+    (1L to 10L).map(k => (k, s"v$k")).toDF("k", "v")
+      .coalesce(1).write.parquet(ext)
+    val parts = new java.io.File(ext).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+    val url = s"$dir/t"
+    IcebergWriter.createTable(spark, url, StructType(Seq(
+      StructField("k", LongType), StructField("v", StringType))))
+    val before = IcebergTable.load(spark, url).version
+    IcebergWriter.addFiles(spark, url, parts, "parquet")
+    val t = IcebergTable.load(spark, url)
+    assert(t.version == before + 1, "one import, one metadata version")
+    assert(t.metadata.properties.contains(NameMapping.Prop))
+    assert(t.metadata.currentSnapshotId >= 0)
+    assert(t.read().count() == 10)
+  }
+
   test("legacy import without a mapping: rename refuses loudly") {
     val dir = java.nio.file.Files.createTempDirectory("graft_implegacy").toString
     val ext = s"$dir/ext"
@@ -100,14 +120,7 @@ class ImportSpec extends AnyFunSuite {
       StructField("k", LongType), StructField("v", StringType))))
     IcebergWriter.addFiles(spark, url, parts, "parquet")
     // simulate a pre-mapping import: strip the recorded property
-    val conf = spark.sessionState.newHadoopConf()
-    IcebergWriter.commitWithRetry(spark, url, conf) { current =>
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val old = m.readTree(IcebergWriter.metadataBaseJson(current, url, conf))
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      old.withObject("/properties").remove(NameMapping.Prop)
-      Some(old.toPrettyString)
-    }
+    IcebergWriter.removeProperties(spark, url, Seq(NameMapping.Prop))
     assert(!IcebergTable.load(spark, url).metadata.properties
       .contains(NameMapping.Prop))
     val e = intercept[UnsupportedOperationException] {

@@ -49,6 +49,30 @@ class PathCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("ALTER TABLE publishes one metadata version per statement, or nothing") {
+    withCatalog { cat =>
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT)")
+      val url = s"${spark.conf.get(s"spark.sql.catalog.$cat.warehouse")}/db/t"
+      val v0 = graft.iceberg.IcebergTable.load(spark, url).version
+      spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMNS (a INT, b INT)")
+      val t = graft.iceberg.IcebergTable.load(spark, url)
+      assert(t.version == v0 + 1)
+      assert(t.schema.fieldNames.toSeq == Seq("k", "a", "b"))
+      // the second column exists already: the first must not land alone
+      val catalog = spark.sessionState.catalogManager.catalog(cat)
+        .asInstanceOf[GraftIcebergPathCatalog]
+      intercept[IllegalArgumentException] {
+        catalog.alterTable(Identifier.of(Array("db"), "t"),
+          org.apache.spark.sql.connector.catalog.TableChange.addColumn(
+            Array("c"), org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.connector.catalog.TableChange.addColumn(
+            Array("a"), org.apache.spark.sql.types.IntegerType))
+      }
+      val after = graft.iceberg.IcebergTable.load(spark, url)
+      assert(after.version == v0 + 1 && !after.schema.fieldNames.contains("c"))
+    }
+  }
+
   test("INSERT INTO / INSERT OVERWRITE / writeTo commit through the V2 table") {
     withCatalog { cat =>
       spark.sql(s"CREATE TABLE $cat.db.w (k BIGINT, cat STRING)")

@@ -139,6 +139,18 @@ class RestCatalogSpec extends AnyFunSuite {
                       if (!meta.hasNonNull("last-sequence-number") ||
                           meta.get("last-sequence-number").asLong < seq)
                         meta.put("last-sequence-number", seq)
+                      // v3 row lineage: the snapshot's rows take the next ids
+                      if (snap.hasNonNull("added-rows"))
+                        meta.put("next-row-id", meta.path("next-row-id").asLong(0L) +
+                          snap.get("added-rows").asLong)
+                    case "upgrade-format-version" =>
+                      val v = u.get("format-version").asInt
+                      meta.put("format-version", v)
+                      if (v >= 3 && !meta.has("next-row-id")) meta.put("next-row-id", 0L)
+                    case "remove-snapshot-ref" =>
+                      Option(meta.get("refs")).collect {
+                        case o: com.fasterxml.jackson.databind.node.ObjectNode => o
+                      }.foreach(_.remove(u.get("ref-name").asText))
                     case "set-snapshot-ref" =>
                       val refName = u.get("ref-name").asText
                       val id = u.get("snapshot-id").asLong
@@ -865,6 +877,136 @@ class RestCatalogSpec extends AnyFunSuite {
       assert(!p2.contains("x") &&
         p2.get("commit.retry.num-retries").contains("9"),
         "remove-properties must drop ONLY the unset key")
+    }
+  }
+
+  private def localSession(): org.apache.spark.sql.SparkSession =
+    org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  /** A real (id long, name string) table on disk, registered as `db.t`. */
+  private def registeredTable(cat: IceRestCatalog,
+      spark: org.apache.spark.sql.SparkSession, prefix: String): String = {
+    val url = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    graft.iceberg.IcebergWriter.createTable(spark, url,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType))))
+    cat.createNamespace("db")
+    cat.createTable("db", "t", Seq("id" -> "long", "name" -> "string"),
+      location = Some(url))
+    url
+  }
+
+  /** The version of the catalog's current metadata-location. */
+  private def catalogVersion(cat: IceRestCatalog, table: String): Int =
+    """v(\d+)\.metadata\.json$""".r.findFirstMatchIn(
+      cat.getTable("db", table).get("metadata-location").asText).get.group(1).toInt
+
+  test("dropRef in a catalog scope removes the ref from the catalog") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      import spark.implicits._
+      val url = registeredTable(cat, spark, "graft_rest_dropref")
+      cat.commitAppend(spark, "db", "t", Seq((1L, "a")).toDF("id", "name"))
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.tag(spark, url, "audited")
+      }
+      assert(cat.loadTable(spark, "db", "t").refs.contains("audited"))
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.dropRef(spark, url, "audited")
+      }
+      assert(!cat.loadTable(spark, "db", "t").refs.contains("audited"))
+    }
+  }
+
+  test("a row-level delete on a v1 table in a catalog scope raises the " +
+      "catalog's metadata to v2") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      import spark.implicits._
+      val url = registeredTable(cat, spark, "graft_rest_v1del")
+      cat.commitAppend(spark, "db", "t",
+        Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1))
+      assert(cat.loadTable(spark, "db", "t").metadata.formatVersion == 1)
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.deleteRows(spark, url, graft.iceberg.Pruning.Eq("id", 1L))
+      }
+      val t = cat.loadTable(spark, "db", "t")
+      assert(t.metadata.formatVersion == 2, "delete manifests are a v2 feature")
+      assert(t.read().as[(Long, String)].collect().toSeq == Seq((2L, "b")))
+    }
+  }
+
+  test("upgradeFormatVersion(3) in a catalog scope reaches v3; later appends " +
+      "get disjoint row-id ranges") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      import spark.implicits._
+      val url = registeredTable(cat, spark, "graft_rest_v3")
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.upgradeFormatVersion(spark, url, 3)
+      }
+      val v3 = cat.loadTable(spark, "db", "t").metadata
+      assert(v3.formatVersion == 3 && v3.nextRowId.contains(0L))
+      cat.commitAppend(spark, "db", "t",
+        Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1))
+      cat.commitAppend(spark, "db", "t", Seq((3L, "c")).toDF("id", "name").coalesce(1))
+      val t = cat.loadTable(spark, "db", "t")
+      val ranges = t.liveFiles().map(f =>
+        f.firstRowId.map(r => (r, r + f.recordCount))).sortBy(_.map(_._1))
+      assert(ranges == Seq(Some((0L, 2L)), Some((2L, 3L))), s"$ranges")
+      assert(t.metadata.nextRowId.contains(3L))
+    }
+  }
+
+  test("dropping a sort-key column in a catalog scope resets the catalog's " +
+      "default sort order") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      val url = registeredTable(cat, spark, "graft_rest_sortdrop")
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.setSortOrder(spark, url, Seq("name" -> "asc"))
+      }
+      assert(cat.loadTable(spark, "db", "t").metadata.defaultSortOrderId != 0)
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.dropColumn(spark, url, "name")
+      }
+      val t = cat.loadTable(spark, "db", "t")
+      assert(t.schema.fieldNames.toSeq == Seq("id"))
+      assert(t.metadata.defaultSortOrderId == 0, "the order on `name` must not dangle")
+    }
+  }
+
+  test("ALTER TABLE through REST: one statement publishes one version, or nothing") {
+    withServer { (cat, server) =>
+      val spark = localSession()
+      registeredTable(cat, spark, "graft_rest_alter")
+      val catName = s"altcols${server.getAddress.getPort}"
+      spark.conf.set(s"spark.sql.catalog.$catName", "graft.sources.GraftIcebergCatalog")
+      spark.conf.set(s"spark.sql.catalog.$catName.uri",
+        s"http://127.0.0.1:${server.getAddress.getPort}")
+      val v0 = catalogVersion(cat, "t")
+      spark.sql(s"ALTER TABLE $catName.db.t ADD COLUMNS (a INT, b INT)")
+      assert(catalogVersion(cat, "t") == v0 + 1)
+      assert(cat.loadTable(spark, "db", "t").schema.fieldNames.toSeq ==
+        Seq("id", "name", "a", "b"))
+      // the second column exists already: the first must not land alone
+      val catalog = spark.sessionState.catalogManager.catalog(catName)
+        .asInstanceOf[GraftIcebergCatalog]
+      intercept[IllegalArgumentException] {
+        catalog.alterTable(
+          org.apache.spark.sql.connector.catalog.Identifier.of(Array("db"), "t"),
+          org.apache.spark.sql.connector.catalog.TableChange.addColumn(
+            Array("c"), org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.connector.catalog.TableChange.addColumn(
+            Array("a"), org.apache.spark.sql.types.IntegerType))
+      }
+      assert(catalogVersion(cat, "t") == v0 + 1)
+      assert(!cat.loadTable(spark, "db", "t").schema.fieldNames.contains("c"))
     }
   }
 
