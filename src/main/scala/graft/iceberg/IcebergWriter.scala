@@ -1013,8 +1013,8 @@ object IcebergWriter {
     snap.put("manifest-list", listPath)
     snap.put("schema-id", table.metadata.currentSchemaId)
     val ref = u.target match {
-      case SnapshotTarget.Main => Seq(SetSnapshotRef("main", sid))
-      case SnapshotTarget.Branch(b) => Seq(SetSnapshotRef(b, sid))
+      case SnapshotTarget.Main => Seq(SetSnapshotRef.moving(table.metadata, "main", sid))
+      case SnapshotTarget.Branch(b) => Seq(SetSnapshotRef.moving(table.metadata, b, sid))
       case SnapshotTarget.Staged => Nil
     }
     (if (u.properties.isEmpty) Nil else Seq(SetProperties(u.properties))) ++
@@ -1264,7 +1264,7 @@ object IcebergWriter {
               "rollback only rewinds the current history"))
       // the rollback is itself a history event
       if (table.currentSnapshot.snapshotId == snapshotId) None // no-op
-      else Some(Seq(SetSnapshotRef("main", snapshotId)))
+      else Some(Seq(SetSnapshotRef.moving(table.metadata, "main", snapshotId)))
     }
   }
 
@@ -1278,7 +1278,7 @@ object IcebergWriter {
     commitWithRetry(spark, url, conf) { table =>
       require(table.snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
       if (table.metadata.currentSnapshotId == snapshotId) None // no-op
-      else Some(Seq(SetSnapshotRef("main", snapshotId)))
+      else Some(Seq(SetSnapshotRef.moving(table.metadata, "main", snapshotId)))
     }
   }
 
@@ -2323,7 +2323,7 @@ object IcebergWriter {
           s"main is not an ancestor of '$branchName' — it advanced past the " +
             "fork point; re-stage the branch from the current head")
         // published snapshots enter main's history log
-        Some(Seq(SetSnapshotRef("main", target)))
+        Some(Seq(SetSnapshotRef.moving(table.metadata, "main", target)))
       }
     }
   }

@@ -16,11 +16,22 @@ private[graft] sealed abstract class MetadataUpdate(val action: String)
 
 private[graft] object MetadataUpdate {
   final case class AddSnapshot(snapshot: ObjectNode) extends MetadataUpdate("add-snapshot")
-  /** Point a ref at a snapshot; moving `main` also moves
-    * `current-snapshot-id` and appends to the `snapshot-log`. */
+  /** Point a ref at a snapshot, with its type and retention; moving
+    * `main` also moves `current-snapshot-id` and appends to the
+    * `snapshot-log`. */
   final case class SetSnapshotRef(name: String, snapshotId: Long,
-      refType: String = "branch", maxRefAgeMs: Option[Long] = None)
+      refType: String = "branch", maxRefAgeMs: Option[Long] = None,
+      minSnapshotsToKeep: Option[Int] = None, maxSnapshotAgeMs: Option[Long] = None)
     extends MetadataUpdate("set-snapshot-ref")
+
+  object SetSnapshotRef {
+    /** Move ref `name` of `base` to `snapshotId`, keeping its type and
+      * retention (iceberg-java `SnapshotRef.builderFrom(ref, id)`); a ref
+      * `base` lacks starts as a plain branch. */
+    def moving(base: TableMetadata, name: String, snapshotId: Long): SetSnapshotRef =
+      base.refs.get(name).fold(SetSnapshotRef(name, snapshotId))(r => SetSnapshotRef(name,
+        snapshotId, r.refType, r.maxRefAgeMs, r.minSnapshotsToKeep, r.maxSnapshotAgeMs))
+  }
   final case class RemoveSnapshotRef(name: String) extends MetadataUpdate("remove-snapshot-ref")
   final case class RemoveSnapshots(ids: Set[Long]) extends MetadataUpdate("remove-snapshots")
   final case class SetProperties(updates: Map[String, String])
@@ -50,11 +61,9 @@ private[graft] object MetadataUpdate {
     o.put("action", u.action)
     u match {
       case AddSnapshot(s) => o.set[ObjectNode]("snapshot", s)
-      case SetSnapshotRef(name, id, refType, maxAge) =>
-        o.put("ref-name", name)
-        o.put("type", refType)
-        o.put("snapshot-id", id)
-        maxAge.foreach(o.put("max-ref-age-ms", _))
+      case r: SetSnapshotRef =>
+        o.put("ref-name", r.name)
+        putRef(o, r)
       case RemoveSnapshotRef(name) => o.put("ref-name", name)
       case RemoveSnapshots(ids) =>
         val a = o.putArray("snapshot-ids")
@@ -91,7 +100,7 @@ private[graft] object MetadataUpdate {
   def requirements(base: TableMetadata, updates: Seq[MetadataUpdate]): Seq[ObjectNode] = {
     def requirement(kind: String): ObjectNode = mapper.createObjectNode().put("type", kind)
     updates.flatMap {
-      case SetSnapshotRef(name, _, _, _) =>
+      case SetSnapshotRef(name, _, _, _, _, _) =>
         val r = requirement("assert-ref-snapshot-id").put("ref", name)
         val at = if (name == "main") Some(base.currentSnapshotId).filter(_ >= 0)
           else base.refs.get(name).map(_.snapshotId)
@@ -151,11 +160,8 @@ private[graft] object MetadataUpdate {
           root.put("last-sequence-number", s.get("sequence-number").asLong)
         if (s.has("first-row-id"))
           root.put("next-row-id", s.get("first-row-id").asLong + s.path("added-rows").asLong)
-      case SetSnapshotRef(name, id, refType, maxAge) =>
-        val r = root.withObject("/refs").putObject(name)
-        r.put("snapshot-id", id)
-        r.put("type", refType)
-        maxAge.foreach(r.put("max-ref-age-ms", _))
+      case r @ SetSnapshotRef(name, id, _, _, _, _) =>
+        putRef(root.withObject("/refs").putObject(name), r)
         if (name == "main") {
           root.put("current-snapshot-id", id)
           root.withArray[ArrayNode]("snapshot-log").addObject()
@@ -224,6 +230,15 @@ private[graft] object MetadataUpdate {
       while (log.size > math.max(1, keep)) log.remove(0)
     }
     root.toPrettyString
+  }
+
+  /** A ref's spec fields (snapshot, type, retention) into `o`. */
+  private def putRef(o: ObjectNode, r: SetSnapshotRef): Unit = {
+    o.put("snapshot-id", r.snapshotId)
+    o.put("type", r.refType)
+    r.maxRefAgeMs.foreach(o.put("max-ref-age-ms", _))
+    r.minSnapshotsToKeep.foreach(o.put("min-snapshots-to-keep", _))
+    r.maxSnapshotAgeMs.foreach(o.put("max-snapshot-age-ms", _))
   }
 
   /** Whether a sort order names only columns `schema` has (nested struct

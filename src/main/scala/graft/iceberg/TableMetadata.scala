@@ -81,14 +81,17 @@ final case class IceSortOrder(orderId: Int, fields: Seq[SortField])
 
 /** A named snapshot reference (Iceberg `refs`): a BRANCH moves with commits
   * (`main` is one), a TAG pins a snapshot forever — the reproducible-
-  * training-set primitive. Retention fields are parsed but not enforced
-  * (expireSnapshots keeps anything a ref points to). */
+  * training-set primitive. Retention: expireSnapshots retires a ref past
+  * its `maxRefAgeMs`; `minSnapshotsToKeep` and `maxSnapshotAgeMs` are
+  * kept through commits but not enforced (expireSnapshots keeps anything a
+  * ref points to). */
 final case class SnapshotRef(
     name: String,
     snapshotId: Long,
     refType: String, // "branch" | "tag"
     maxRefAgeMs: Option[Long] = None,
-    minSnapshotsToKeep: Option[Int] = None)
+    minSnapshotsToKeep: Option[Int] = None,
+    maxSnapshotAgeMs: Option[Long] = None)
 
 /** One blob's registration inside a table-statistics entry. */
 final case class StatsBlobMeta(blobType: String, snapshotId: Long,
@@ -226,7 +229,8 @@ object TableMetadata {
             snapshotId = n.get("snapshot-id").asLong,
             refType = Option(n.get("type")).map(_.asText).getOrElse("branch"),
             maxRefAgeMs = Option(n.get("max-ref-age-ms")).map(_.asLong),
-            minSnapshotsToKeep = Option(n.get("min-snapshots-to-keep")).map(_.asInt))
+            minSnapshotsToKeep = Option(n.get("min-snapshots-to-keep")).map(_.asInt),
+            maxSnapshotAgeMs = Option(n.get("max-snapshot-age-ms")).map(_.asLong))
         }.toMap
       }.getOrElse(Map.empty),
       lastSequenceNumber = optNode("last-sequence-number").map(_.asLong).getOrElse {

@@ -71,7 +71,7 @@ object GraftIcebergSource {
     * parent files considered vs "delete" partitions actually planned for
     * them. They diverge when delete-file `file_path` bounds
     * ([[graft.iceberg.Manifests.PosDeletePathFieldId]]) prove a delete
-    * file irrelevant to a data file — specs pin that above-cap planning
+    * file irrelevant to a data file — specs pin that CDC planning
     * prunes instead of fanning one task out per live file. */
   val cdcSelectionCandidates = new java.util.concurrent.atomic.AtomicLong(0)
   val cdcSelectionPartitions = new java.util.concurrent.atomic.AtomicLong(0)
@@ -898,24 +898,19 @@ final class GraftIcebergScan(
       .map(pf => s"${pf.name}=${f.partition.getOrElse(pf.name, null)}")
       .mkString("/")
 
-  /** Snapshot position-delete parquets (Iceberg v2 merge-on-read). When
-    * present the scan plans one task per data file, has the parquet reader
-    * materialize the per-file row index, and filters each file's deleted
-    * positions in a wrapping reader — deleted rows never leave the scan. */
-  private lazy val morDeletes: Seq[String] =
-    table.positionDeleteFiles.map(f => table.resolvePath(f.filePath))
-
   /** Live equality-delete files: key-tuple deletes scoped by commit
     * sequence, applied row-level in the wrapping reader. */
   private lazy val eqDeleteFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
     table.equalityDeleteFiles
 
-  /** Merge-on-read engages for position OR equality deletes. */
   /** Merge-on-read machinery engages for position/equality deletes AND for
     * metadata columns (their per-file values ride the same per-file
-    * partitions + projecting reader). */
+    * partitions + projecting reader). When present, deletes make the scan
+    * plan one task per data file, have the parquet reader materialize the
+    * per-file row index, and filter in a wrapping reader — deleted rows
+    * never leave the scan. */
   private def morMode: Boolean =
-    morDeletes.nonEmpty || eqDeleteFiles.nonEmpty || metaCols.nonEmpty
+    table.positionDeleteFiles.nonEmpty || eqDeleteFiles.nonEmpty || metaCols.nonEmpty
 
   /** Key columns the equality deletes need that column pruning removed:
     * appended to the read schema (before the row-index column) and
@@ -930,92 +925,15 @@ final class GraftIcebergScan(
       .flatMap(n => table.schema.fields.find(_.name == n))
   }
 
-  /** Delete-state placement decision: BELOW the cap, delete state loads on
-    * the driver once and ships inside each partition (minimal task
-    * payloads, one distributed read of every delete file). ABOVE the cap —
-    * position AND equality delete rows both count, and the manifests
-    * record the sizes, so the decision costs no I/O — that materialization
-    * would not fit a driver, so the scan switches to DISTRIBUTED per-task
-    * delete reads: each task loads the delete files overlapping its own
-    * data file through a per-JVM byte-bounded cache ([[DeleteLoader]], the
-    * Iceberg-java `DeleteFilter` shape). A 100 TB CDC table with hundreds
-    * of millions of deleted rows scans normally instead of refusing;
-    * compaction remains the way to make it cheap again. */
-  private lazy val perTaskDeletes: Boolean = {
-    val totalDeleteRows = table.positionDeleteFiles.map(_.recordCount).sum +
-      eqDeleteFiles.map(_.recordCount).sum
-    val cap = SQLConf.get.getConfString(
-      "spark.graft.iceberg.morDriverDeleteLimit", "50000000").toLong
-    totalDeleteRows > cap
-  }
-
-  /** Byte budget of the per-JVM decoded-delete-file cache (distributed
-    * delete mode only). */
-  private lazy val deleteCacheBytes: Long = SQLConf.get.getConfString(
-    "spark.graft.iceberg.deleteCacheBytes", (256L * 1024 * 1024).toString).toLong
-
-  /** Equality-delete key sets, loaded once on the driver. Files sharing a
-    * key-column set load in ONE distributed job (a union keyed by source
-    * file), so a CDC table with N upsert commits pays one planning job, not
-    * N — each file still forms its own group (its commit sequence scopes
-    * which data files it applies to). */
-  private lazy val eqGroups: Array[ScanBridge.EqDeleteGroup] = {
-    if (eqDeleteFiles.isEmpty || perTaskDeletes) Array.empty
-    else GraftIcebergScan.buildEqGroups(table, morReadSchema, eqDeleteFiles)
-  }
-
-  /** Distributed-mode equality deletes: metadata-only descriptors (path,
-    * write-time key names, read ordinals/types, commit sequence) — each
-    * task loads the key sets itself, JVM-cached. */
+  /** Equality deletes as metadata-only descriptors (path, write-time key
+    * names, read ordinals/types, commit sequence): each task loads the key
+    * sets itself, JVM-cached. */
   private lazy val eqDeleteSpecs: Array[DeleteLoader.EqDeleteFileSpec] =
-    if (eqDeleteFiles.isEmpty || !perTaskDeletes) Array.empty
-    else GraftIcebergScan.buildEqSpecs(table, morReadSchema, eqDeleteFiles)
+    GraftIcebergScan.buildEqSpecs(table, morReadSchema, eqDeleteFiles)
 
-  /** Deleted positions grouped per data file, loaded ONCE per scan by a
-    * distributed Spark read of the delete parquets (each delete file is
-    * read exactly once, not once per task), restricted to the data files
-    * this scan actually covers. Positions travel to tasks inside their own
-    * [[ScanBridge.MorFilePartition]] — a task serializes only its file's
-    * positions. Driver footprint is bounded by the manifest-recorded delete
-    * row count; beyond the cap ([[perTaskDeletes]]) this map stays empty
-    * and tasks load their own delete state instead. */
-  private lazy val morDeletesByKey: Map[String, Array[Long]] = {
-    if (morDeletes.isEmpty || perTaskDeletes) Map.empty
-    else {
-      val spark = SparkSession.active
-      val scannedKeys = files.map(f =>
-        ScanBridge.morKey(table.resolvePath(f.filePath))).toSet
-      import org.apache.spark.sql.functions.col
-      val (dvs, parquets) = table.positionDeleteFiles.partition(_.isDv)
-      val fromParquet: Map[String, Array[Long]] =
-        if (parquets.isEmpty) Map.empty
-        else IcebergTable.readPositionDeletes(spark,
-            parquets.map(f => table.resolvePath(f.filePath)))
-          .select(ScanBridge.morKeyColumn(col("file_path")).as("k"), col("pos"))
-          .filter(col("k").isInCollection(scannedKeys))
-          .collect()
-          .groupBy(_.getString(0))
-          .map { case (k, rows) => k -> rows.map(_.getLong(1)).sorted }
-      // DELETION VECTORS (v3): one blob per data file, located by the
-      // manifest's content_offset/size — a bounded ranged read per scanned
-      // blob, no footer parse, no distributed job
-      val fromDvs: Seq[(String, Array[Long])] = {
-        val hconf = spark.sessionState.newHadoopConf()
-        dvs.flatMap { d =>
-          val k = ScanBridge.morKey(d.referencedDataFile.getOrElse(""))
-          if (!scannedKeys(k)) None
-          else Some(k -> graft.iceberg.DeletionVectors.readBlobAt(
-            table.resolvePath(d.filePath), hconf,
-            d.contentOffset.getOrElse(sys.error(s"DV without offset: ${d.filePath}")),
-            d.contentSizeInBytes.getOrElse(sys.error(s"DV without size: ${d.filePath}"))))
-        }
-      }
-      if (fromDvs.isEmpty) fromParquet
-      else (fromParquet.toSeq ++ fromDvs).groupBy(_._1).map { case (k, vs) =>
-        k -> vs.flatMap(_._2).distinct.sorted.toArray
-      }
-    }
-  }
+  /** The hadoop conf the tasks' delete loads read through: ONE broadcast
+    * per scan, not a copy inside every task. */
+  private lazy val deleteConf = DeleteLoader.broadcastConf(SparkSession.active)
 
   /** Row-lineage metadata requested? Then the read also asks the parquet
     * delegate for the MATERIALIZED lineage columns (reserved field ids —
@@ -1198,43 +1116,43 @@ final class GraftIcebergScan(
       }.toArray
     case None if morMode =>
       requireNoOrcUnderMor()
-      val spark = SparkSession.active
-      // distributed delete mode: each partition carries the PATHS of the
-      // position-delete files that may overlap its data file (pruned by
-      // commit sequence and partition tuple — both provable from manifest
-      // metadata alone; anything unprovable is conservatively included,
-      // the task-side morKey match keeps correctness)
-      val perTaskFiles: Seq[Array[String]] =
-        if (!perTaskDeletes || morDeletes.isEmpty) null
-        else {
-          val posDel = table.positionDeleteFiles
-          // distinct guards the multi-blob-per-puffin case (DV entries
-          // share a path): a doubled path would double the merged positions
-          files.map(f => posDel.filter(d => deleteMayApply(d, f))
-            .map(d => table.resolvePath(d.filePath)).distinct.toArray)
-        }
-      ScanBridge.morPartitions(spark.sessionState.newHadoopConf(),
-        files.map(f => (table.resolvePath(f.filePath), f.fileSizeInBytes,
-          table.dataSequenceOf(f),
-          metaCols.map {
-            case "_partition" => ("_partition", partitionString(f))
-            case "_file" => ("_file", table.resolvePath(f.filePath))
-            case "_pos" => ("_pos", null: String)
-            // ROW LINEAGE: first_row_id constant per file (null when the
-            // file predates lineage) — the reader adds the row index
-            case "_row_id" =>
-              ("_row_id", f.firstRowId.map(_.toString).orNull)
-            case "_last_updated_sequence_number" =>
-              ("_last_updated_sequence_number", table.dataSequenceOf(f).toString)
-          })),
-        morDeletesByKey, perTaskFiles)
+      // each partition carries the PATHS of the position-delete files that
+      // may overlap its data file: a DV names its file outright; other
+      // carriers prune by commit sequence and partition tuple (both
+      // provable from manifest metadata alone; anything unprovable is
+      // conservatively included, the task-side morKey match keeps
+      // correctness). distinct guards the multi-blob-per-puffin case (DV
+      // entries share a path): a doubled path would double the merged
+      // positions.
+      val (dvs, carriers) = table.positionDeleteFiles.partition(_.referencedDataFile.isDefined)
+      val dvsByKey = dvs.groupBy(d => ScanBridge.morKey(d.referencedDataFile.get))
+      ScanBridge.morPartitions(SparkSession.active.sessionState.newHadoopConf(),
+        files.map { f =>
+          val path = table.resolvePath(f.filePath)
+          val deleteFiles = (dvsByKey.getOrElse(ScanBridge.morKey(path), Nil) ++
+            carriers.filter(d => deleteMayApply(d, f)))
+            .map(d => table.resolvePath(d.filePath)).distinct.toArray
+          (path, f.fileSizeInBytes, table.dataSequenceOf(f),
+            metaCols.map {
+              case "_partition" => ("_partition", partitionString(f))
+              case "_file" => ("_file", path)
+              case "_pos" => ("_pos", null: String)
+              // ROW LINEAGE: first_row_id constant per file (null when the
+              // file predates lineage) — the reader adds the row index
+              case "_row_id" =>
+                ("_row_id", f.firstRowId.map(_.toString).orNull)
+              case "_last_updated_sequence_number" =>
+                ("_last_updated_sequence_number", table.dataSequenceOf(f).toString)
+            },
+            deleteFiles)
+        })
     case None => delegate.planInputPartitions()
   }
 
-  /** Can position-delete file `d` hold deletes against data file `f`?
-    * Provable non-overlap (from manifest metadata alone) prunes; anything
-    * uncertain is included — the task-side morKey match keeps correctness.
-    * Sequence: a delete committed at sequence S can only reference paths
+  /** Can position-delete file `d` (not a DV) hold deletes against data
+    * file `f`? Provable non-overlap (from manifest metadata alone) prunes;
+    * anything uncertain is included — the task-side morKey match keeps
+    * correctness. Sequence: a delete committed at sequence S can only reference paths
     * that existed at S, and data-file names are unique, so `dataSeq(f) >
     * dataSeq(d)` proves non-overlap. Partition: a partition-scoped delete
     * (fully non-null tuple under the SAME spec) applies only to its tuple;
@@ -1243,10 +1161,6 @@ final class GraftIcebergScan(
     * never pruned. */
   private def deleteMayApply(d: graft.iceberg.Manifests.DataFileInfo,
       f: graft.iceberg.Manifests.DataFileInfo): Boolean = {
-    // a DELETION VECTOR names its single data file outright — exact answer
-    if (d.referencedDataFile.isDefined)
-      return ScanBridge.morKey(d.referencedDataFile.get) ==
-        ScanBridge.morKey(table.resolvePath(f.filePath))
     val seqOk = table.dataSequenceOf(d) >= table.dataSequenceOf(f)
     val partOk = d.partition.isEmpty || d.partition.values.exists(_ == null) ||
       d.specId != f.specId || partitionTupleEq(d.partition, f.partition)
@@ -1271,14 +1185,8 @@ final class GraftIcebergScan(
       // no vectors) — only metadata columns (per-row projection of
       // constants) need the row-based readers
       ScanBridge.morReaderFactory(inner, requiredSchema, morReadSchema.length,
-        columnarCapable = metaCols.isEmpty,
-        eqGroups = eqGroups,
-        eqSpecs = eqDeleteSpecs,
-        conf = if (!perTaskDeletes) null
-          else new org.apache.spark.util.SerializableConfiguration(
-            SparkSession.active.sessionState.newHadoopConf()),
-        deleteCacheBytes = deleteCacheBytes,
-        lineageCols = lineagePhysical.length)
+        columnarCapable = metaCols.isEmpty, conf = deleteConf,
+        eqSpecs = eqDeleteSpecs, lineageCols = lineagePhysical.length)
     else if (keyedLayout.isDefined) ScanBridge.unwrapKeyedFactory(inner)
     else inner
   }
@@ -1360,83 +1268,13 @@ final class GraftIcebergScan(
 
 object GraftIcebergScan {
 
-  /** Load the key sets of EQUALITY-delete files into executor-shippable
-    * [[ScanBridge.EqDeleteGroup]]s. Key ordinals/types resolve against
-    * `read` (the delegate's read schema); rows of data files with
-    * `dataSeq < group.seq` whose key tuple is in the set are deleted.
-    *
-    * Key columns live in the delete files under the names current at
-    * WRITE time. Those names come from METADATA, not file footers: the
-    * manifest records the snapshot that added each delete file, the
-    * snapshot records its schema-id, and the schema names each equality
-    * id — so planning a CDC table with thousands of delete files opens
-    * ZERO parquet footers on the driver. A footer probe remains only for
-    * files whose snapshot/schema is unresolvable (foreign manifests
-    * without added_snapshot_id). Files sharing a key-column set load in
-    * ONE distributed job (a union keyed by source file), so a table with
-    * N upsert commits pays one planning job, not N. */
-  private[sources] def buildEqGroups(table: IcebergTable, read: StructType,
-      eqDeleteFiles: Seq[graft.iceberg.Manifests.DataFileInfo])
-      : Array[ScanBridge.EqDeleteGroup] = {
-    val spark = SparkSession.active
-    val idToName = table.iceSchema.fields.map(f => f.id -> f.name).toMap
-    val nameToType = table.schema.fields.map(f => f.name -> f.dataType).toMap
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    eqDeleteFiles.groupBy(_.equalityIds).toSeq.flatMap { case (ids, files) =>
-      val names = ids.map(id => idToName.getOrElse(id,
-        throw new IllegalStateException(s"equality id $id not in schema")))
-      val ordinals = names.map(read.fieldIndex).toArray
-      val types = names.map(nameToType).toArray
-      val converters = types.map(ScanBridge.toCatalyst)
-      val seqByKey = files.map(f =>
-        ScanBridge.morKey(table.resolvePath(f.filePath)) ->
-          table.dataSequenceOf(f)).toMap
-      val hconf = spark.sessionState.newHadoopConf()
-      val byWriteNames = files.groupBy(f => eqWriteNames(table, ids, f, hconf))
-
-      def groupOf(seq: Long, fileRows: Iterable[org.apache.spark.sql.Row]) = {
-        // UnsafeRow keys (byte-based equals/hashCode): binary key columns
-        // compare by value, and the layout matches the executor probe
-        val keys = new java.util.HashSet[
-          org.apache.spark.sql.catalyst.expressions.UnsafeRow]()
-        val builder = new ScanBridge.EqKeyBuilder(types)
-        fileRows.foreach { r =>
-          keys.add(builder.build(i => converters(i)(r.get(i)), r.isNullAt))
-        }
-        ScanBridge.EqDeleteGroup(ordinals, types, seq, keys)
-      }
-
-      byWriteNames.toSeq.flatMap { case (wNames, group) =>
-        val srcOrdinal = wNames.length // _g_src appended after the keys
-        val rows = spark.read
-          .parquet(group.map(f => table.resolvePath(f.filePath)): _*)
-          .select(wNames.map(col) :+
-            ScanBridge.morKeyColumn(input_file_name()).as("_g_src"): _*)
-          .collect()
-        rows.groupBy(_.getString(srcOrdinal)).toSeq.map { case (srcKey, fileRows) =>
-          // input_file_name() is URI-encoded; seqByKey keys are raw
-          // paths — try both forms, and FAIL LOUDLY on a miss (an
-          // unknown-sequence delete must never default to applying
-          // everywhere, nor to nowhere)
-          val seq = seqByKey.get(srcKey)
-            .orElse(seqByKey.get(
-              java.net.URLDecoder.decode(srcKey, "UTF-8")))
-            .getOrElse(throw new IllegalStateException(
-              s"equality-delete file key '$srcKey' does not match any " +
-                "known delete file"))
-          groupOf(seq, fileRows)
-        }
-      }
-    }.toArray
-  }
-
   /** Resolve the key column names of one equality-delete file AS WRITTEN:
     * from metadata (the adding snapshot's schema names each equality id —
     * zero parquet footers opened), falling back to a footer probe for
     * files whose snapshot/schema is unresolvable. */
   private def eqWriteNames(table: IcebergTable, ids: Seq[Int],
       f: graft.iceberg.Manifests.DataFileInfo,
-      hconf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+      hconf: => org.apache.hadoop.conf.Configuration): Seq[String] = {
     def footerNames(p: String): Seq[String] = {
       GraftIcebergSource.footerProbes.incrementAndGet()
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -1460,19 +1298,19 @@ object GraftIcebergScan {
       footerNames(table.resolvePath(f.filePath)).take(ids.length))
   }
 
-  /** DISTRIBUTED-mode equality-delete planning: one metadata-only
-    * descriptor per delete FILE (no data I/O on the driver) — tasks load
-    * the key sets themselves through [[DeleteLoader]]. The driver-side
-    * [[buildEqGroups]] loads the same state eagerly below the delete cap;
-    * this path exists so a CDC table whose delete rows exceed driver
-    * memory still scans. */
+  /** Equality-delete planning: one metadata-only descriptor per delete
+    * FILE — tasks load the key sets themselves through [[DeleteLoader]].
+    * Key columns live in the delete files under the names current at
+    * WRITE time; [[eqWriteNames]] resolves them from metadata, so planning
+    * a CDC table with thousands of delete files opens no parquet footer on
+    * the driver. Key ordinals/types resolve against `read` (the delegate's
+    * read schema). */
   private[sources] def buildEqSpecs(table: IcebergTable, read: StructType,
       eqDeleteFiles: Seq[graft.iceberg.Manifests.DataFileInfo])
       : Array[DeleteLoader.EqDeleteFileSpec] = {
-    val spark = SparkSession.active
     val idToName = table.iceSchema.fields.map(f => f.id -> f.name).toMap
     val nameToType = table.schema.fields.map(f => f.name -> f.dataType).toMap
-    val hconf = spark.sessionState.newHadoopConf()
+    lazy val hconf = SparkSession.active.sessionState.newHadoopConf()
     eqDeleteFiles.map { f =>
       val ids = f.equalityIds
       val names = ids.map(id => idToName.getOrElse(id,
@@ -1828,77 +1666,32 @@ final class GraftIcebergMicroBatchStream(
         ("_commit_timestamp", (commitTsMs * 1000L).toString)
     }
 
-  /** Deleted positions per data-file morKey, loaded once per delete-file
-    * set by a distributed read (same shape as the batch scan's loader). */
-  private def posByKey(delFiles: Seq[graft.iceberg.Manifests.DataFileInfo],
-      t: IcebergTable): Map[String, Array[Long]] = {
-    if (delFiles.isEmpty) return Map.empty
-    val (dvs, parquets) = delFiles.partition(_.isDv)
-    if (dvs.nonEmpty) {
-      // v3 DELETION VECTORS: bounded ranged reads by manifest offset
-      val hconf = SparkSession.active.sessionState.newHadoopConf()
-      val fromDvs = dvs.map { d =>
-        ScanBridge.morKey(d.referencedDataFile.getOrElse(
-          sys.error(s"DV without referenced file: ${d.filePath}"))) ->
-          graft.iceberg.DeletionVectors.readBlobAt(
-            t.resolvePath(d.filePath), hconf,
-            d.contentOffset.getOrElse(sys.error(s"DV without offset: ${d.filePath}")),
-            d.contentSizeInBytes.getOrElse(sys.error(s"DV without size: ${d.filePath}")))
-      }
-      val fromParquet = posByKey(parquets, t)
-      return (fromParquet.toSeq ++ fromDvs).groupBy(_._1).map { case (k, vs) =>
-        k -> vs.flatMap(_._2).distinct.sorted.toArray
-      }
-    }
-    val spark = SparkSession.active
-    import org.apache.spark.sql.functions.col
-    IcebergTable.readPositionDeletes(spark, delFiles.map(f => t.resolvePath(f.filePath)))
-      .select(ScanBridge.morKeyColumn(col("file_path")).as("k"), col("pos"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) => k -> rows.map(_.getLong(1)).sorted }
-  }
-
-  /** Position-delete state for one delete-file set, gated by the SAME
-    * driver ceiling as the batch scan (`morDriverDeleteLimit`): below it,
-    * positions materialize driver-side once ([[posByKey]]) and ship inside
-    * each partition; above it — one heavy-churn commit on a 100 TB CDC
-    * table — only the delete-file PATHS ship and each task loads its own
-    * positions via the per-JVM [[DeleteLoader]] cache, so the stream's
-    * driver footprint stays O(files), never O(deleted rows). */
-  private final case class PosDeletes(byKey: Map[String, Array[Long]],
-      files: Array[String],
-      /** Task mode only: morKey of the SINGLE data file each delete file
-        * provably references (manifest `file_path` bounds with min == max,
-        * the Iceberg referenced-data-file property), null when unproven.
-        * When every delete file is proven, [[mightHave]] answers exactly
-        * from metadata — no fan-out, no delete-parquet open. */
-      referenced: Array[String] = null) {
-    def driver: Boolean = byKey != null
-    def arr(k: String): Array[Long] =
-      if (driver) byKey.getOrElse(k, Array.emptyLongArray) else Array.emptyLongArray
-    /** Task files to ship, or null when driver-materialized (or empty). */
-    def taskFiles: Array[String] = if (driver || files.isEmpty) null else files
+  /** Position-delete state for one delete-file set: only the carrier
+    * PATHS ship; each task loads its own positions via the per-JVM
+    * [[DeleteLoader]] cache, so the stream's driver footprint stays
+    * O(files), never O(deleted rows). */
+  private final case class PosDeletes(files: Array[String],
+      /** morKey of the SINGLE data file each delete file provably
+        * references (a DV's referenced file, or manifest `file_path`
+        * bounds with min == max, the Iceberg referenced-data-file
+        * property), null when unproven. When every delete file is proven,
+        * [[mightHave]] answers exactly from metadata — no fan-out, no
+        * delete-parquet open. */
+      referenced: Array[String]) {
+    /** Files to ship, or null when there are none. */
+    def taskFiles: Array[String] = if (files.isEmpty) null else files
     /** O(1) probe state, built ONCE: [[mightHave]] runs per LIVE data file
-      * during planning, so an Array.contains there would make above-cap CDC
-      * planning O(live × deletes) — a heavy-churn commit on a wide table
-      * would quadratically stall the driver. Set + flag keep it
+      * during planning, so an Array.contains there would make CDC planning
+      * O(live × deletes) — a heavy-churn commit on a wide table would
+      * quadratically stall the driver. Set + flag keep it
       * O(live + deletes). */
-    private val refSet: Set[String] =
-      if (referenced == null) null else referenced.toSet
-    private val allProven: Boolean = refSet != null && !refSet.contains(null)
-    /** May this data-file key have deleted positions? Driver mode answers
-      * exactly; task mode answers from referenced-file bounds when every
-      * delete file carries them, else conservatively yes (the task's load
-      * resolves it to an empty selection). */
-    def mightHave(k: String): Boolean =
-      if (driver) byKey.contains(k)
-      else if (allProven) refSet.contains(k)
-      else true
+    private val refSet: Set[String] = referenced.toSet
+    private val allProven: Boolean = !refSet.contains(null)
+    /** May this data-file key have deleted positions? Exact when every
+      * delete file carries its referenced file, else conservatively yes
+      * (the task's load resolves it to an empty selection). */
+    def mightHave(k: String): Boolean = !allProven || refSet.contains(k)
   }
-
-  private def driverDeleteCap: Long = SQLConf.get.getConfString(
-    "spark.graft.iceberg.morDriverDeleteLimit", "50000000").toLong
 
   private def loadPos(delFiles: Seq[graft.iceberg.Manifests.DataFileInfo],
       t: IcebergTable): PosDeletes = {
@@ -1906,44 +1699,28 @@ final class GraftIcebergMicroBatchStream(
     // blob entry — shipping it twice would make the task-side merge
     // duplicate every position (and CDC selections double-emit)
     val paths = delFiles.map(f => t.resolvePath(f.filePath)).distinct.toArray
-    if (delFiles.nonEmpty && delFiles.map(_.recordCount).sum > driverDeleteCap) {
-      val refs = delFiles.map { f =>
-        // v3 DELETION VECTORS carry their referenced file first-class;
-        // parquet carriers fall back to the recorded file_path bounds
-        f.referencedDataFile.map(ScanBridge.morKey).getOrElse {
-          (f.lowerBounds.get(graft.iceberg.Manifests.PosDeletePathFieldId),
-           f.upperBounds.get(graft.iceberg.Manifests.PosDeletePathFieldId)) match {
-            case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
-              ScanBridge.morKey(
-                new String(lo, java.nio.charset.StandardCharsets.UTF_8))
-            case _ => null
-          }
+    val refs = delFiles.map { f =>
+      // v3 DELETION VECTORS carry their referenced file first-class;
+      // parquet carriers fall back to the recorded file_path bounds
+      f.referencedDataFile.map(ScanBridge.morKey).getOrElse {
+        (f.lowerBounds.get(graft.iceberg.Manifests.PosDeletePathFieldId),
+         f.upperBounds.get(graft.iceberg.Manifests.PosDeletePathFieldId)) match {
+          case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
+            ScanBridge.morKey(
+              new String(lo, java.nio.charset.StandardCharsets.UTF_8))
+          case _ => null
         }
-      }.toArray
-      PosDeletes(null, paths, refs)
-    } else PosDeletes(posByKey(delFiles, t), paths)
+      }
+    }.toArray
+    PosDeletes(paths, refs)
   }
 
-  /** Equality-delete state under the same ceiling: key sets materialize on
-    * the driver below the cap ([[GraftIcebergScan.buildEqGroups]], one
-    * distributed job per key-column set); above it only metadata-only
-    * SPECS ship and each task loads its own key sets
-    * ([[DeleteLoader.eqGroupFor]], per-JVM cached) — an upsert-heavy CDC
-    * stream can no longer balloon the driver with key sets either. */
-  private final case class EqState(groups: Array[ScanBridge.EqDeleteGroup],
-      specs: Array[DeleteLoader.EqDeleteFileSpec])
-
+  /** Equality-delete state: metadata-only SPECS; each task loads its own
+    * key sets ([[DeleteLoader.eqGroupFor]], per-JVM cached). */
   private def loadEq(t: IcebergTable,
-      delFiles: Seq[graft.iceberg.Manifests.DataFileInfo]): EqState =
-    if (delFiles.isEmpty) EqState(Array.empty, null)
-    else if (delFiles.map(_.recordCount).sum > driverDeleteCap)
-      EqState(null, GraftIcebergScan.buildEqSpecs(t, cdcFullSchema, delFiles))
-    else EqState(GraftIcebergScan.buildEqGroups(t, cdcFullSchema, delFiles), null)
-
-  /** a \ b over sorted position arrays. */
-  private def subtractSorted(a: Array[Long], b: Array[Long]): Array[Long] =
-    if (b.isEmpty) a
-    else a.filter(x => java.util.Arrays.binarySearch(b, x) < 0)
+      delFiles: Seq[graft.iceberg.Manifests.DataFileInfo])
+      : Array[DeleteLoader.EqDeleteFileSpec] =
+    GraftIcebergScan.buildEqSpecs(t, cdcFullSchema, delFiles)
 
   /** CHANGELOG partition planning: per snapshot in (start, end], inserts
     * from added files, deletes from removed files (parent-visible), and
@@ -1958,10 +1735,7 @@ final class GraftIcebergMicroBatchStream(
     var selCandidates = 0L
     var selPartitions = 0L
     def add(f: graft.iceberg.Manifests.DataFileInfo, changeType: String,
-        sid: Long, deleted: Array[Long], selectPos: Array[Long],
-        ownEq: Array[ScanBridge.EqDeleteGroup],
-        selectEq: Array[ScanBridge.EqDeleteGroup],
-        posFiles: Array[String] = null,
+        sid: Long, posFiles: Array[String] = null,
         selFiles: Array[String] = null,
         selMinus: Array[String] = null,
         ownEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null,
@@ -1973,8 +1747,7 @@ final class GraftIcebergMicroBatchStream(
       parts += ScanBridge.cdcPartition(hconf, idx, t.resolvePath(f.filePath),
         f.fileSizeInBytes, t.dataSequenceOf(f),
         cdcMetaValues(changeType, sid, t.snapshots(sid).timestampMs),
-        deleted, selectPos, ownEq, selectEq, posFiles, selFiles, selMinus,
-        ownEqSpecs, selEqSpecs)
+        posFiles, selFiles, selMinus, ownEqSpecs, selEqSpecs)
       idx += 1
     }
     def key(f: graft.iceberg.Manifests.DataFileInfo): String =
@@ -1986,19 +1759,18 @@ final class GraftIcebergMicroBatchStream(
       val pos = loadPos(view.positionDeleteFiles, t)
       val eq = loadEq(view, view.equalityDeleteFiles)
       view.liveFiles().foreach { f =>
-        add(f, "insert", e, pos.arr(key(f)), null, eq.groups, null,
-          posFiles = pos.taskFiles, ownEqSpecs = eq.specs)
+        add(f, "insert", e, posFiles = pos.taskFiles, ownEqSpecs = eq)
       }
       return parts.toArray
     }
 
     // memoized per-parent visibility (a long range revisits parents)
     val posCache = scala.collection.mutable.Map.empty[Long, PosDeletes]
-    val eqCache = scala.collection.mutable.Map.empty[Long, EqState]
+    val eqCache = scala.collection.mutable.Map.empty[Long, Array[DeleteLoader.EqDeleteFileSpec]]
     def parentPos(p: IcebergTable): PosDeletes =
       posCache.getOrElseUpdate(p.currentSnapshot.snapshotId,
         loadPos(p.positionDeleteFiles, t))
-    def parentEq(p: IcebergTable): EqState =
+    def parentEq(p: IcebergTable): Array[DeleteLoader.EqDeleteFileSpec] =
       eqCache.getOrElseUpdate(p.currentSnapshot.snapshotId,
         loadEq(p, p.equalityDeleteFiles))
 
@@ -2010,21 +1782,20 @@ final class GraftIcebergMicroBatchStream(
         // inserts: rows of added files as at THIS snapshot (same-commit
         // position deletes excluded; same-sequence eq deletes are exempt)
         ch.added.foreach { f =>
-          add(f, "insert", sid, newPos.arr(key(f)), null, null, null,
-            posFiles = newPos.taskFiles)
+          add(f, "insert", sid, posFiles = newPos.taskFiles)
         }
         ch.parent.foreach { p =>
           // whole-file removals: every parent-visible row is a delete
           ch.removed.foreach { f =>
-            add(f, "delete", sid, parentPos(p).arr(key(f)),
-              null, parentEq(p).groups, null,
-              posFiles = parentPos(p).taskFiles,
-              ownEqSpecs = parentEq(p).specs)
+            add(f, "delete", sid, posFiles = parentPos(p).taskFiles,
+              ownEqSpecs = parentEq(p))
           }
-          // newly position-deleted rows in surviving files (above the cap,
-          // referenced-file bounds prune files no delete file can touch —
-          // mightHave answers from metadata, so one churn commit no longer
-          // fans a task out per live file)
+          // newly position-deleted rows in surviving files: the TASK
+          // computes new-minus-parent positions for its own file (an empty
+          // selection just emits nothing); referenced-file bounds prune
+          // files no delete file can touch — mightHave answers from
+          // metadata, so one churn commit does not fan a task out per live
+          // file
           if (ch.addedPosDeletes.nonEmpty) {
             val pp = parentPos(p)
             ch.parentFiles.foreach { f =>
@@ -2032,21 +1803,8 @@ final class GraftIcebergMicroBatchStream(
                 selCandidates += 1
                 if (newPos.mightHave(key(f))) {
                   selPartitions += 1
-                  if (newPos.driver && pp.driver) {
-                    val sel = subtractSorted(newPos.arr(key(f)), pp.arr(key(f)))
-                    if (sel.nonEmpty)
-                      add(f, "delete", sid, Array.emptyLongArray, sel,
-                        parentEq(p).groups, null,
-                        ownEqSpecs = parentEq(p).specs)
-                  } else {
-                    // above the driver cap: ship delete-file paths; the TASK
-                    // computes new-minus-parent positions for its own file
-                    // (an empty selection just emits nothing)
-                    add(f, "delete", sid, Array.emptyLongArray, null,
-                      parentEq(p).groups, null, selFiles = newPos.files,
-                      selMinus = if (pp.files.isEmpty) null else pp.files,
-                      ownEqSpecs = parentEq(p).specs)
-                  }
+                  add(f, "delete", sid, selFiles = newPos.files,
+                    selMinus = pp.taskFiles, ownEqSpecs = parentEq(p))
                 }
               }
             }
@@ -2058,10 +1816,8 @@ final class GraftIcebergMicroBatchStream(
             ch.parentFiles.foreach { f =>
               if (ch.currentPaths(t.resolvePath(f.filePath)) &&
                   t.dataSequenceOf(f) < edSeq)
-                add(f, "delete", sid, parentPos(p).arr(key(f)),
-                  null, parentEq(p).groups, sel.groups,
-                  posFiles = parentPos(p).taskFiles,
-                  ownEqSpecs = parentEq(p).specs, selEqSpecs = sel.specs)
+                add(f, "delete", sid, posFiles = parentPos(p).taskFiles,
+                  ownEqSpecs = parentEq(p), selEqSpecs = sel)
             }
           }
         }
@@ -2108,6 +1864,10 @@ final class GraftIcebergMicroBatchStream(
       t.schema, readSchema, pushedFilters, options).toBatch.planInputPartitions()
   }
 
+  /** The hadoop conf the CDC tasks' delete loads read through: ONE
+    * broadcast per stream, shared by every micro-batch's factory. */
+  private lazy val deleteConf = DeleteLoader.broadcastConf(SparkSession.active)
+
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
     val hconf = spark.sessionState.newHadoopConf()
@@ -2123,14 +1883,8 @@ final class GraftIcebergMicroBatchStream(
     val fullRead = StructType(cdcFullSchema.fields :+ ScanBridge.rowIndexField)
     val delegate = ScanBridge.parquetScan(spark, hconf, Nil, table.schema,
       fullRead, pushedFilters, options).toBatch.createReaderFactory()
-    // conf + cache budget ride along for the above-cap partitions that
-    // load their own delete positions task-side (PosDeletes.taskFiles)
     ScanBridge.morReaderFactory(delegate, cdcDataSchema, fullRead.length,
-      columnarCapable = false, eqGroups = Array.empty,
-      ordinalMap = cdcDataSchema.fieldNames.map(cdcFullSchema.fieldIndex),
-      conf = new org.apache.spark.util.SerializableConfiguration(hconf),
-      deleteCacheBytes = SQLConf.get.getConfString(
-        "spark.graft.iceberg.deleteCacheBytes",
-        (256L * 1024 * 1024).toString).toLong)
+      columnarCapable = false, conf = deleteConf,
+      ordinalMap = cdcDataSchema.fieldNames.map(cdcFullSchema.fieldIndex))
   }
 }

@@ -8,16 +8,15 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** TASK-SIDE loading of Iceberg v2 delete-file state — the scale path of
-  * merge-on-read. Below the driver delete cap the scan ships each file's
-  * deleted positions inside its input partition (one distributed read of
-  * every delete file, minimal task payloads); ABOVE the cap that driver
-  * materialization would not fit, so partitions instead carry the paths of
-  * the delete files overlapping their data file and each task loads its own
-  * delete state here — the same shape as Iceberg-java's per-task
-  * `DeleteFilter` (reference: daskberg only reads; its scans never carry
-  * deletes at all). A 100 TB CDC table with hundreds of millions of deleted
-  * rows then plans and scans normally instead of refusing.
+/** TASK-SIDE loading of Iceberg v2/v3 delete-file state — the one
+  * merge-on-read delete path. Scan partitions carry only the PATHS of the
+  * delete files that may overlap their data file, plus metadata-only
+  * equality-delete specs; each task loads its own positions and key sets
+  * here — the same shape as Iceberg-java's per-task `DeleteFilter` /
+  * `BaseDeleteLoader` (reference: daskberg only reads; its scans never
+  * carry deletes at all). The driver never materializes a position or a
+  * key, so a 100 TB CDC table with hundreds of millions of deleted rows
+  * plans in O(delete files) driver memory.
   *
   * A per-JVM, byte-bounded LRU cache keeps each delete file's decoded state
   * loaded ONCE per executor rather than once per task — on `local[32]` (and
@@ -27,6 +26,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-vectorized reader is not a hot path.
   */
 object DeleteLoader {
+
+  /** Byte budget of the cache (`spark.graft.iceberg.deleteCacheBytes`,
+    * default 256 MB), read from the session conf where a scan builds its
+    * reader factory. */
+  def cacheBytes: Long =
+    org.apache.spark.sql.internal.SQLConf.get.getConfString(
+      "spark.graft.iceberg.deleteCacheBytes", (256L * 1024 * 1024).toString).toLong
+
+  /** The session's hadoop conf as the broadcast a scan's reader factory
+    * carries to its tasks' loads. */
+  def broadcastConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
   /** LRU over decoded delete state, bounded in (estimated) bytes. Access
     * order so hot delete files stay resident across tasks. */
@@ -73,8 +86,7 @@ object DeleteLoader {
     * [[ScanBridge.morKey]] of the target data file — the whole file decodes
     * once and every task scanning any of its target files shares the entry.
     * Stored `file_path` strings are matched through morKey, so file:/ vs
-    * file:/// qualification and table relocation cannot break the match
-    * (same contract as the driver-side load). */
+    * file:/// qualification and table relocation cannot break the match. */
   private def positionsOf(path: String, conf: Configuration,
       capBytes: Long): Map[String, Array[Long]] =
     cached(s"pos:$path", capBytes) {
@@ -144,7 +156,7 @@ object DeleteLoader {
     * lives, the key column names AS WRITTEN in the file, where those keys
     * sit in the widened read schema, their Spark types, and the commit
     * sequence that scopes it. Built on the driver from metadata only (no
-    * data I/O) and shipped to every task. */
+    * delete-file I/O) and shipped to every task. */
   final case class EqDeleteFileSpec(
       path: String,
       names: Array[String],
@@ -185,13 +197,19 @@ object DeleteLoader {
 
   /** Parquet example-model value → Catalyst internal value, for the
     * primitive types equality-delete keys can carry. The physical layouts
-    * follow how [[graft.iceberg.IcebergWriter]] (Spark's parquet writer)
-    * encodes each logical type: date=int32 days, timestamp=int64 micros,
+    * follow how Spark's parquet writer encodes each logical type:
+    * date=int32 days, timestamp=int64 micros — or INT96 (Julian day +
+    * nanos of day), Spark's default before [[graft.iceberg.IcebergWriter]]
+    * pinned int64, so older tables' delete files hold it —
     * decimal(p≤9)=int32 / (p≤18)=int64 / else binary two's-complement. */
   private def catalystValue(g: Group, name: String, t: DataType): Any = t match {
     case StringType => UTF8String.fromBytes(g.getBinary(name, 0).getBytes)
     case BinaryType => g.getBinary(name, 0).getBytes
     case IntegerType | DateType => g.getInteger(name, 0)
+    case TimestampType | TimestampNTZType if physicalType(g, name) == "INT96" =>
+      val b = g.getInt96(name, 0).toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val nanosOfDay = b.getLong
+      (b.getInt - JulianDayOfEpoch) * MicrosPerDay + nanosOfDay / 1000L
     case LongType | TimestampType | TimestampNTZType => g.getLong(name, 0)
     case BooleanType => g.getBoolean(name, 0)
     case FloatType => g.getFloat(name, 0)
@@ -199,9 +217,7 @@ object DeleteLoader {
     case ShortType => g.getInteger(name, 0).toShort
     case ByteType => g.getInteger(name, 0).toByte
     case d: DecimalType =>
-      val prim = g.getType.getType(name).asPrimitiveType()
-        .getPrimitiveTypeName.name()
-      val unscaled = prim match {
+      val unscaled = physicalType(g, name) match {
         case "INT32" => java.math.BigInteger.valueOf(g.getInteger(name, 0).toLong)
         case "INT64" => java.math.BigInteger.valueOf(g.getLong(name, 0))
         case _ => new java.math.BigInteger(g.getBinary(name, 0).getBytes)
@@ -212,4 +228,10 @@ object DeleteLoader {
       s"equality-delete key type $other not supported in task-side delete " +
         "loading; compact the table to fold deletes into data files")
   }
+
+  private def physicalType(g: Group, name: String): String =
+    g.getType.getType(name).asPrimitiveType().getPrimitiveTypeName.name()
+
+  private val JulianDayOfEpoch = 2440588L
+  private val MicrosPerDay = 86400L * 1000 * 1000
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
@@ -14,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Bridges to Spark's `private[sql]` scan machinery (same technique as
   * ColumnBridge): lets the graft-iceberg DataSourceV2 connector plan scans
@@ -76,18 +78,8 @@ object ScanBridge {
       index: Int,
       key: InternalRow,
       files: Seq[(String, Long)]): InputPartition = {
-    val fsCache = mutable.Map.empty[String, org.apache.hadoop.fs.FileSystem]
-    val parts = files.map { case (p, len) =>
-      val raw = new Path(p)
-      val fs = fsCache.getOrElseUpdate(
-        Option(raw.toUri.getScheme).getOrElse(""), raw.getFileSystem(hadoopConf))
-      org.apache.spark.sql.execution.datasources.PartitionedFile(
-        InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(fs.makeQualified(raw)),
-        0, len, Array.empty, 0L, len)
-    }
-    new KeyedFilePartition(key,
-      org.apache.spark.sql.execution.datasources.FilePartition(index, parts.toArray))
+    new KeyedFilePartition(key, org.apache.spark.sql.execution.datasources.FilePartition(
+      index, wholeFiles(hadoopConf, files).toArray))
   }
 
   /** Reader factory that unwraps [[KeyedFilePartition]] before delegating to
@@ -124,13 +116,6 @@ object ScanBridge {
     // overwrite the vector with generated row indexes
     LongType, nullable = true)
 
-  /** Data-file identity key used to match position-delete entries: the path
-    * suffix after the table's `/data/` dir — unique within a table and
-    * stable across relocation (original-url rewrite) and file:/ vs s3a://
-    * qualification differences. Externally-located files (no `/data/`
-    * segment) fall back to their full authority+path — scheme-stripped so
-    * `file:///x`, `file:/x` and `/x` agree — instead of collapsing to one
-    * shared key, which would cross-match deletes between distinct files. */
   /** Task-side MOR telemetry (per-JVM, cumulative): data-parquet reader
     * opens vs partitions answered EMPTY from delete metadata alone. A
     * fanned-out CDC selection partition whose computed selection is empty
@@ -139,6 +124,13 @@ object ScanBridge {
   val morDataFileOpens = new java.util.concurrent.atomic.AtomicLong(0)
   val morEmptySelectionSkips = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Data-file identity key used to match position-delete entries: the path
+    * suffix after the table's `/data/` dir — unique within a table and
+    * stable across relocation (original-url rewrite) and file:/ vs s3a://
+    * qualification differences. Externally-located files (no `/data/`
+    * segment) fall back to their full authority+path — scheme-stripped so
+    * `file:///x`, `file:/x` and `/x` agree — instead of collapsing to one
+    * shared key, which would cross-match deletes between distinct files. */
   def morKey(path: String): String = {
     val i = path.lastIndexOf("/data/")
     if (i >= 0) path.substring(i + 6)
@@ -149,35 +141,34 @@ object ScanBridge {
     }
   }
 
-  /** Column form of [[morKey]] for delete-bookkeeping reads. A UDF, so both
-    * sides of every key comparison share ONE definition — acceptable here
-    * because these scans touch only delete files (bounded by the driver
-    * delete cap), never the data plane. */
+  /** Column form of [[morKey]] for the write path's delete bookkeeping. A
+    * UDF, so both sides of every key comparison share ONE definition —
+    * acceptable because those reads touch only delete files, never the
+    * data plane. */
   def morKeyColumn(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.udf((p: String) => morKey(p)).apply(c)
 
   /** One EQUALITY-delete file's keys, catalyst-normalized, plus where its
     * key columns sit in the (widened) read schema and the commit sequence
     * that scopes it: rows of data files with `dataSeq < seq` whose key
-    * tuple is in `keys` are deleted. Built once on the driver.
+    * tuple is in `keys` are deleted. Built in the task by
+    * [[DeleteLoader.eqGroupFor]].
     *
-    * Keys are stored as [[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]s
-    * (Externalizable, so the set ships to executors): UnsafeRow equality and
-    * hashCode are byte-based, so BinaryType key components compare by VALUE —
-    * a Seq[Array[Byte]] key would compare by reference and silently never
-    * match — and the executor-side probe projects each data row into one
-    * REUSED buffer, so the per-row hot loop allocates nothing. */
+    * Keys are stored as [[org.apache.spark.sql.catalyst.expressions.UnsafeRow]]s:
+    * UnsafeRow equality and hashCode are byte-based, so BinaryType key
+    * components compare by VALUE — a Seq[Array[Byte]] key would compare by
+    * reference and silently never match — and the probe projects each data
+    * row into one REUSED buffer, so the per-row hot loop allocates nothing. */
   final case class EqDeleteGroup(
       ordinals: Array[Int],
       types: Array[org.apache.spark.sql.types.DataType],
       seq: Long,
       keys: java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow])
-    extends Serializable
 
-  /** Driver-side builder for [[EqDeleteGroup.keys]] entries: projects one
+  /** Builder for [[EqDeleteGroup.keys]] entries: projects one
     * catalyst-converted key tuple into a copied UnsafeRow with the same
-    * field order/types the executor probe projection uses, so the byte
-    * layouts (and therefore hashCode/equals) line up exactly. */
+    * field order/types the probe projection uses, so the byte layouts (and
+    * therefore hashCode/equals) line up exactly. */
   final class EqKeyBuilder(types: Array[org.apache.spark.sql.types.DataType]) {
     private val proj =
       org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(types)
@@ -194,28 +185,24 @@ object ScanBridge {
     }
   }
 
-  /** Catalyst-normalize one EXTERNAL value (String → UTF8String, Timestamp
-    * → micros, …) so equality-delete keys compare equal to what the parquet
-    * readers produce in InternalRows. */
-  def toCatalyst(dataType: org.apache.spark.sql.types.DataType): Any => Any =
-    org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(dataType)
-
-  /** MERGE-ON-READ input partition: one data file, the sorted row positions
-    * deleted from it, and its commit sequence (for equality-delete
-    * scoping). Positions ride in the partition (computed ONCE on the driver
-    * by a distributed read of the delete files), so tasks never touch
-    * delete files and each task serializes only its own positions.
+  /** MERGE-ON-READ input partition: one data file, its commit sequence (for
+    * equality-delete scoping) and the delete state that applies to it —
+    * delete-file PATHS and metadata-only equality specs, never positions
+    * or key sets. The task loads that state itself through
+    * [[DeleteLoader]] (per-JVM cached), so the driver's footprint is
+    * O(delete files), whatever the number of deleted rows.
     *
-    * CDC extensions (all default-off, used by the changelog stream):
-    * `selectPositions` INVERTS the position filter — emit ONLY rows at
-    * these positions (the rows a position-delete commit removed);
-    * `selectEqGroups` emits only rows matching at least one group (the rows
-    * an equality-delete commit removed); `ownEqGroups` overrides the
-    * factory-level exclusion groups so each partition can carry its own
-    * parent-snapshot visibility. */
+    *  - `posDeleteFiles`: position/DV carriers whose positions are
+    *    excluded.
+    *  - `selectPosDeleteFiles` (CDC): INVERTS the position filter — emit
+    *    ONLY the rows at positions these files hold and
+    *    `selectMinusDeleteFiles` (the parent-visible ones) do not: the rows
+    *    a position-delete commit removed.
+    *  - `ownEqSpecs` (CDC): this partition's own equality visibility, in
+    *    place of the factory's specs.
+    *  - `selectEqSpecs` (CDC): emit only rows matching at least one of
+    *    these files' keys — the rows an equality-delete commit removed. */
   final class MorFilePartition(
-      private[graftbridge] val deleted: Array[Long],
       private[graftbridge] val dataSeq: Long,
       /** Requested metadata columns as per-file values, in projection
         * order: `_partition`/`_file` carry the string constant, `_pos` a
@@ -223,35 +210,34 @@ object ScanBridge {
         * `_commit_snapshot_id` a long rendered as a string. */
       private[graftbridge] val metaValues: Seq[(String, String)],
       private[graftbridge] val underlying: org.apache.spark.sql.execution.datasources.FilePartition,
-      private[graftbridge] val selectPositions: Array[Long] = null,
-      private[graftbridge] val ownEqGroups: Array[EqDeleteGroup] = null,
-      private[graftbridge] val selectEqGroups: Array[EqDeleteGroup] = null,
-      /** Non-null = DISTRIBUTED delete mode: the position-delete files that
-        * may overlap this data file; the TASK loads its own positions via
-        * [[DeleteLoader]] and `deleted` is ignored. Engaged above the
-        * driver delete cap, where shipping positions from the driver would
-        * not fit. */
       private[graftbridge] val posDeleteFiles: Array[String] = null,
-      /** Non-null = distributed SELECTION mode (CDC above the driver cap):
-        * the task computes `selectPositions` itself as the positions in
-        * these delete files minus those in [[selectMinusDeleteFiles]]
-        * (the parent-visible ones) — the same subtract the driver would
-        * have shipped, without materializing a heavy-churn commit's
-        * positions driver-side. */
       private[graftbridge] val selectPosDeleteFiles: Array[String] = null,
       private[graftbridge] val selectMinusDeleteFiles: Array[String] = null,
-      /** Non-null = distributed EQUALITY state (CDC above the driver cap):
-        * metadata-only specs whose key sets each TASK loads itself via
-        * [[DeleteLoader.eqGroupFor]] — exclusion (visibility) and selection
-        * counterparts of [[ownEqGroups]] / [[selectEqGroups]]. */
       private[graftbridge] val ownEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null,
       private[graftbridge] val selectEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null)
     extends InputPartition {
     override def preferredLocations(): Array[String] = underlying.preferredLocations()
   }
 
-  /** One CDC partition over one data file — see [[MorFilePartition]]'s CDC
-    * extensions for the semantics of the three optional filters. */
+  /** `path` qualified against its filesystem as one whole-file split. One FS
+    * handle per distinct scheme — no per-file I/O, makeQualified is pure
+    * URI work. */
+  private def wholeFiles(hadoopConf: Configuration, files: Seq[(String, Long)])
+      : Seq[org.apache.spark.sql.execution.datasources.PartitionedFile] = {
+    val fsCache = mutable.Map.empty[String, org.apache.hadoop.fs.FileSystem]
+    files.map { case (p, len) =>
+      val raw = new Path(p)
+      val fs = fsCache.getOrElseUpdate(
+        Option(raw.toUri.getScheme).getOrElse(""), raw.getFileSystem(hadoopConf))
+      org.apache.spark.sql.execution.datasources.PartitionedFile(
+        InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(fs.makeQualified(raw)),
+        0, len, Array.empty, 0L, len)
+    }
+  }
+
+  /** One CDC partition over one data file — see [[MorFilePartition]] for
+    * the semantics of the optional delete state. */
   def cdcPartition(
       hadoopConf: Configuration,
       index: Int,
@@ -259,89 +245,66 @@ object ScanBridge {
       len: Long,
       dataSeq: Long,
       metaValues: Seq[(String, String)],
-      deleted: Array[Long],
-      selectPositions: Array[Long],
-      ownEqGroups: Array[EqDeleteGroup],
-      selectEqGroups: Array[EqDeleteGroup],
       posDeleteFiles: Array[String] = null,
       selectPosDeleteFiles: Array[String] = null,
       selectMinusDeleteFiles: Array[String] = null,
       ownEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null,
-      selectEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null): InputPartition = {
-    val raw = new Path(path)
-    val fs = raw.getFileSystem(hadoopConf)
-    val fp = org.apache.spark.sql.execution.datasources.FilePartition(index, Array(
-      org.apache.spark.sql.execution.datasources.PartitionedFile(
-        InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(fs.makeQualified(raw)),
-        0, len, Array.empty, 0L, len)))
-    new MorFilePartition(deleted, dataSeq, metaValues, fp,
-      selectPositions, ownEqGroups, selectEqGroups,
+      selectEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null): InputPartition =
+    new MorFilePartition(dataSeq, metaValues,
+      org.apache.spark.sql.execution.datasources.FilePartition(index,
+        wholeFiles(hadoopConf, Seq(path -> len)).toArray),
       posDeleteFiles, selectPosDeleteFiles, selectMinusDeleteFiles,
       ownEqSpecs, selectEqSpecs)
-  }
 
-  /** One [[MorFilePartition]] per data file. No splits: position-delete
-    * grouping is per file (row index would stay valid under splits, but the
-    * per-file delete arrays would be duplicated across split tasks). */
+  /** One [[MorFilePartition]] per data file, carrying the position-delete
+    * files that may overlap it. No splits: position deletes group per file
+    * (row index would stay valid under splits, but every split task would
+    * load the same file's positions). */
   def morPartitions(
       hadoopConf: Configuration,
-      // (path, size, data sequence, metadata column values)
-      files: Seq[(String, Long, Long, Seq[(String, String)])],
-      deletesByKey: Map[String, Array[Long]],
-      /** Non-null = distributed delete mode: per data file, the overlapping
-        * position-delete files each TASK should read (see
-        * [[MorFilePartition.posDeleteFiles]]); `deletesByKey` is unused. */
-      perTaskDeleteFiles: Seq[Array[String]] = null): Array[InputPartition] = {
-    val fsCache = mutable.Map.empty[String, org.apache.hadoop.fs.FileSystem]
-    files.zipWithIndex.map { case ((p, len, seq, metaValues), i) =>
-      val raw = new Path(p)
-      val fs = fsCache.getOrElseUpdate(
-        Option(raw.toUri.getScheme).getOrElse(""), raw.getFileSystem(hadoopConf))
-      val fp = org.apache.spark.sql.execution.datasources.FilePartition(i, Array(
-        org.apache.spark.sql.execution.datasources.PartitionedFile(
-          InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPath(fs.makeQualified(raw)),
-          0, len, Array.empty, 0L, len)))
-      new MorFilePartition(
-        if (perTaskDeleteFiles != null) Array.emptyLongArray
-        else deletesByKey.getOrElse(morKey(p), Array.emptyLongArray),
-        seq, metaValues, fp,
-        posDeleteFiles = if (perTaskDeleteFiles == null) null else perTaskDeleteFiles(i))
-        : InputPartition
+      // (path, size, data sequence, metadata column values, delete files)
+      files: Seq[(String, Long, Long, Seq[(String, String)], Array[String])])
+      : Array[InputPartition] =
+    wholeFiles(hadoopConf, files.map(f => f._1 -> f._2)).zip(files).zipWithIndex.map {
+      case ((pf, (_, _, seq, metaValues, deleteFiles)), i) =>
+        new MorFilePartition(seq, metaValues,
+          org.apache.spark.sql.execution.datasources.FilePartition(i, Array(pf)),
+          posDeleteFiles = deleteFiles): InputPartition
     }.toArray
-  }
 
   /** MERGE-ON-READ reader factory. The scan appends [[rowIndexField]] to the
-    * delegate's read schema; this factory filters each partition's deleted
-    * positions against the materialized row index and projects the index
-    * column back out, so deleted rows never leave the scan and downstream
-    * operators see exactly `requiredSchema`.
+    * delegate's read schema; this factory loads each partition's delete
+    * state in the task ([[DeleteLoader]]), filters deleted positions
+    * against the materialized row index and equality keys against the
+    * row, and projects the extra columns back out, so deleted rows never
+    * leave the scan and downstream operators see exactly `requiredSchema`.
     *
-    * COLUMNAR under position deletes: delete-free partitions pass batches
-    * through (the trailing index vector dropped, zero copy); deleted-from
-    * partitions wrap each batch's vectors in a SELECTION view that skips
-    * deleted row indexes — the whole scan stays vectorized instead of one
-    * deleted file de-vectorizing everything. Only equality deletes (per-row
-    * key probing) or requested metadata columns drop the scan to row-based
-    * readers (`columnarCapable = false`). */
+    * The hadoop conf the loads need travels as ONE broadcast per scan or
+    * stream, as Spark's own `ParquetPartitionReaderFactory` carries its
+    * conf: inline, its ~1,100 entries would ship and deserialize with every
+    * task. The cache budget is `spark.graft.iceberg.deleteCacheBytes`.
+    *
+    * COLUMNAR under position and equality deletes: delete-free partitions
+    * pass batches through (the trailing index vector dropped, zero copy);
+    * deleted-from partitions wrap each batch's vectors in a SELECTION view
+    * that skips deleted rows — the whole scan stays vectorized instead of
+    * one deleted file de-vectorizing everything. Only requested metadata
+    * columns or CDC partitions drop the scan to row-based readers
+    * (`columnarCapable = false`). */
   def morReaderFactory(
       delegate: PartitionReaderFactory,
       requiredSchema: StructType,
       readWidth: Int, // total columns the delegate produces (incl. extras)
       columnarCapable: Boolean,
-      eqGroups: Array[EqDeleteGroup] = Array.empty,
+      conf: Broadcast[SerializableConfiguration],
+      /** Equality-delete files every partition without its own
+        * `ownEqSpecs` applies, sequence-scoped per data file. */
+      eqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = Array.empty,
       /** Maps each `requiredSchema` field to its ordinal in the delegate
         * row; null = identity prefix (the batch-scan layout). The CDC
         * stream reads the FULL table schema and projects the requested
         * subset out through this map. */
       ordinalMap: Array[Int] = null,
-      /** DISTRIBUTED delete mode (above the driver cap): equality-delete
-        * files each task loads itself via [[DeleteLoader]], plus the
-        * hadoop conf and cache budget the loads need. */
-      eqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = Array.empty,
-      conf: org.apache.spark.util.SerializableConfiguration = null,
-      deleteCacheBytes: Long = 256L * 1024 * 1024,
       /** Number of MATERIALIZED row-lineage columns the delegate reads
         * (0 or 2), sitting immediately before the trailing row-index
         * column: `_row_id` then `_last_updated_sequence_number`. Readers
@@ -349,71 +312,56 @@ object ScanBridge {
         * identity survives compaction. */
       lineageCols: Int = 0): PartitionReaderFactory =
     new MorReaderFactory(delegate, requiredSchema, readWidth, columnarCapable,
-      eqGroups, ordinalMap, eqSpecs, conf, deleteCacheBytes, lineageCols)
+      conf, DeleteLoader.cacheBytes, eqSpecs, ordinalMap, lineageCols)
 
   private final class MorReaderFactory(
       delegate: PartitionReaderFactory,
       requiredSchema: StructType,
       readWidth: Int,
       columnarCapable: Boolean,
-      eqGroups: Array[EqDeleteGroup],
-      ordinalMap: Array[Int],
-      eqSpecs: Array[DeleteLoader.EqDeleteFileSpec],
-      conf: org.apache.spark.util.SerializableConfiguration,
+      conf: Broadcast[SerializableConfiguration],
       deleteCacheBytes: Long,
-      lineageCols: Int = 0)
+      eqSpecs: Array[DeleteLoader.EqDeleteFileSpec],
+      ordinalMap: Array[Int],
+      lineageCols: Int)
     extends PartitionReaderFactory {
 
     private def width = requiredSchema.length
 
-    /** Task-side deleted positions for one partition: loaded from the
-      * partition's overlapping delete files (distributed mode, JVM-cached)
-      * or taken from the driver-shipped array. */
-    private def deletedOf(m: MorFilePartition): Array[Long] =
-      if (m.posDeleteFiles == null) m.deleted
-      else DeleteLoader.positionsFor(m.posDeleteFiles,
+    private def positionsIn(files: Array[String], m: MorFilePartition): Array[Long] =
+      DeleteLoader.positionsFor(files,
         morKey(m.underlying.files.head.filePath.toPath.toString),
-        conf.value, deleteCacheBytes)
+        conf.value.value, deleteCacheBytes)
 
-    /** Selection positions for one CDC partition: driver-shipped, or
-      * (distributed selection mode) task-computed as new-commit positions
-      * minus the parent-visible ones — see
-      * [[MorFilePartition.selectPosDeleteFiles]]. */
+    private def groupsOf(specs: Array[DeleteLoader.EqDeleteFileSpec],
+        m: MorFilePartition): Array[EqDeleteGroup] =
+      specs.filter(_.seq > m.dataSeq).map(s =>
+        DeleteLoader.eqGroupFor(s, conf.value.value, deleteCacheBytes))
+
+    /** Sorted deleted positions of one partition's data file. */
+    private def deletedOf(m: MorFilePartition): Array[Long] =
+      if (m.posDeleteFiles == null) Array.emptyLongArray
+      else positionsIn(m.posDeleteFiles, m)
+
+    /** Selection positions of one CDC partition (null = not selecting): the
+      * new commit's positions minus the parent-visible ones. */
     private def selectOf(m: MorFilePartition): Array[Long] =
-      if (m.selectPosDeleteFiles == null) m.selectPositions
+      if (m.selectPosDeleteFiles == null) null
       else {
-        val k = morKey(m.underlying.files.head.filePath.toPath.toString)
-        val sel = DeleteLoader.positionsFor(m.selectPosDeleteFiles, k,
-          conf.value, deleteCacheBytes)
+        val sel = positionsIn(m.selectPosDeleteFiles, m)
         val minus = if (m.selectMinusDeleteFiles == null) Array.emptyLongArray
-          else DeleteLoader.positionsFor(m.selectMinusDeleteFiles, k,
-            conf.value, deleteCacheBytes)
+          else positionsIn(m.selectMinusDeleteFiles, m)
         if (minus.isEmpty) sel
         else sel.filter(x => java.util.Arrays.binarySearch(minus, x) < 0)
       }
 
-    /** Exclusion groups for one partition: CDC partitions carry their own;
-      * otherwise driver-built groups plus any task-loaded spec files.
-      * Specs prune by COMMIT SEQUENCE before loading — an equality-delete
-      * file at or below this data file's sequence can never apply, so the
-      * task never pays its decode or cache space. */
+    /** Exclusion groups of one partition: a CDC partition's own visibility,
+      * else the factory's specs (empty on the CDC factory, so CDC inserts
+      * inherit nothing). Specs prune by COMMIT SEQUENCE before loading — an
+      * equality-delete file at or below this data file's sequence can never
+      * apply, so the task never pays its decode or cache space. */
     private def exclGroupsOf(m: MorFilePartition): Array[EqDeleteGroup] =
-      if (m.ownEqGroups != null || m.ownEqSpecs != null) {
-        // CDC DELETE partitions carry their OWN visibility: driver-built
-        // groups below the cap, task-loaded specs above it. CDC INSERT
-        // partitions (both null) DO fall through to the factory branch
-        // below — inert today only because the CDC reader factory ships
-        // empty eqGroups/eqSpecs; a future CDC factory must keep them
-        // empty or inserts would silently inherit batch-scan exclusions.
-        val g = if (m.ownEqGroups != null) m.ownEqGroups
-          else Array.empty[EqDeleteGroup]
-        if (m.ownEqSpecs == null) g
-        else g ++ m.ownEqSpecs.filter(_.seq > m.dataSeq).map(s =>
-          DeleteLoader.eqGroupFor(s, conf.value, deleteCacheBytes))
-      }
-      else if (eqSpecs.isEmpty) eqGroups
-      else eqGroups ++ eqSpecs.filter(_.seq > m.dataSeq).map(s =>
-        DeleteLoader.eqGroupFor(s, conf.value, deleteCacheBytes))
+      groupsOf(if (m.ownEqSpecs != null) m.ownEqSpecs else eqSpecs, m)
 
     // one probe projection per group: bound to the group's key ordinals
     // in the widened row, writing into a REUSED UnsafeRow buffer —
@@ -457,8 +405,7 @@ object ScanBridge {
       // per-row (a hash-set lookup), but it only computes a SELECTION —
       // the batch's vectors are never copied, and downstream operators
       // keep the vectorized path
-      val exclGroups = exclGroupsOf(m)
-      val applicable = exclGroups.filter(_.seq > m.dataSeq)
+      val applicable = exclGroupsOf(m)
       val probes = probesOf(applicable)
       ScanBridge.morDataFileOpens.incrementAndGet()
       val inner = delegate.createColumnarReader(m.underlying)
@@ -507,22 +454,15 @@ object ScanBridge {
       val m = p.asInstanceOf[MorFilePartition]
       val deleted = deletedOf(m) // sorted
       // equality deletes apply only to files committed strictly earlier;
-      // CDC partitions may carry their own (parent-visibility) groups
-      val exclGroups = exclGroupsOf(m)
-      val applicable = exclGroups.filter(_.seq > m.dataSeq)
+      // CDC partitions may carry their own (parent-visibility) specs
+      val applicable = exclGroupsOf(m)
       val selecting =
-        if (m.selectEqSpecs != null)
-          m.selectEqSpecs.filter(_.seq > m.dataSeq).map(s =>
-            DeleteLoader.eqGroupFor(s, conf.value, deleteCacheBytes))
-        else if (m.selectEqGroups != null)
-          m.selectEqGroups.filter(_.seq > m.dataSeq)
-        else null
+        if (m.selectEqSpecs == null) null else groupsOf(m.selectEqSpecs, m)
       val selectPos = selectOf(m) // sorted, or null
       // a selection partition whose selection resolved EMPTY emits nothing:
       // answer from the (cached) delete-file reads alone and never open the
-      // data parquet — the task half of the above-cap fan-out defense
-      // (plan-time referenced-file bounds prune what metadata can prove;
-      // any partition planned conservatively costs only this)
+      // data parquet (plan-time referenced-file bounds prune what metadata
+      // can prove; any partition planned conservatively costs only this)
       if ((selectPos != null && selectPos.isEmpty) ||
           (selecting != null && selecting.forall(_.keys.isEmpty))) {
         ScanBridge.morEmptySelectionSkips.incrementAndGet()

@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicReference
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, FilterFileSystem, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, FilterFileSystem, FutureDataInputStreamBuilder, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.hadoop.fs.Options.ChecksumOpt
 import org.apache.hadoop.fs.impl.OpenFileParameters
 import org.apache.hadoop.fs.permission.FsPermission
@@ -52,6 +52,13 @@ class CountingFileSystem extends FilterFileSystem(new CountingFileSystem.Local) 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     record("open", f)
     super.open(f, bufferSize)
+  }
+
+  // FilterFileSystem hands the openFile builder to the wrapped filesystem,
+  // which would bypass openFileWithOptions below; parquet opens this way
+  override def openFile(f: Path): FutureDataInputStreamBuilder = {
+    record("open", f)
+    super.openFile(f)
   }
 
   override protected def openFileWithOptions(f: Path,

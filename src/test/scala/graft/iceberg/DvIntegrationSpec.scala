@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end Iceberg v3 deletion-vector lifecycle: upgrade, DV writes,
   * the one-live-DV-per-file supersede invariant, mixed v2-parquet + DV
-  * state, whole-file drops, task-side loading above the driver cap,
+  * state, whole-file drops, task-side loading through DeleteLoader,
   * consolidation, compaction, and CDC emitting net-new deletes only. */
 class DvIntegrationSpec extends AnyFunSuite {
 
@@ -305,14 +305,11 @@ class DvIntegrationSpec extends AnyFunSuite {
     newV3Table(url)
     IcebergWriter.deleteRows(spark, url,
       Pruning.And(Pruning.GtEq("k", 10L), Pruning.Lt("k", 30L)))
-    val expected = liveKeys(url) // driver mode
+    val expected = (1L to 9L) ++ (30L to 100L)
     DeleteLoader.clearForTest()
-    spark.conf.set("spark.graft.iceberg.morDriverDeleteLimit", "0")
-    try {
-      assert(liveKeys(url) == expected, "task-mode DV read must equal driver mode")
-      assert(DeleteLoader.residentEntries > 0,
-        "puffin DV must decode through the per-JVM DeleteLoader cache")
-    } finally spark.conf.unset("spark.graft.iceberg.morDriverDeleteLimit")
+    assert(liveKeys(url) == expected, "task-mode DV read must drop exactly the deleted keys")
+    assert(DeleteLoader.residentEntries > 0,
+      "puffin DV must decode through the per-JVM DeleteLoader cache")
   }
 
   test("multi-blob puffin in task mode: no position duplication, CDC parity") {
@@ -329,14 +326,8 @@ class DvIntegrationSpec extends AnyFunSuite {
     IcebergWriter.deleteRows(spark, url, Pruning.In("k", Seq(10L, 60L)))
     assert(IcebergTable.load(spark, url)
       .positionDeleteFiles.map(_.filePath).distinct.size == 1)
-    val expected = liveKeys(url)
-    def withCap[T](body: => T): T = {
-      spark.conf.set("spark.graft.iceberg.morDriverDeleteLimit", "0")
-      try body
-      finally spark.conf.unset("spark.graft.iceberg.morDriverDeleteLimit")
-    }
-    withCap { assert(liveKeys(url) == expected) }
-    // CDC stream above the cap: each deleted row emitted exactly once
+    assert(liveKeys(url) == (1L to 100L).filterNot(Set(10L, 60L)))
+    // CDC stream: each deleted row emitted exactly once
     def cdc(ckpt: String, sink: String): Seq[(Long, String)] = {
       val q = spark.readStream.format("graft-iceberg")
         .option("stream-mode", "cdc")
@@ -350,10 +341,10 @@ class DvIntegrationSpec extends AnyFunSuite {
         .as[(Long, String)].collect().toSeq.sorted
     }
     val dir = url.stripSuffix("/t")
-    val driver = cdc(s"$dir/ck1", "dv_mb_drv")
-    val task = withCap { cdc(s"$dir/ck2", "dv_mb_task") }
-    assert(task == driver, "above-cap CDC must equal driver mode")
-    assert(driver.filter(_._2 == "delete").map(_._1) == Seq(10L, 60L),
+    val task = cdc(s"$dir/ck2", "dv_mb_task")
+    assert(task == Seq((10L, "delete"), (60L, "delete")),
+      "the CDC stream must carry exactly the commit's two deletes")
+    assert(task.filter(_._2 == "delete").map(_._1) == Seq(10L, 60L),
       "each DV position must be emitted as deleted exactly once")
   }
 

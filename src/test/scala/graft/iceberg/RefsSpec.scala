@@ -69,6 +69,38 @@ class RefsSpec extends AnyFunSuite {
     assert(IcebergTable.load(spark, url).metadata.snapshots.size == 1)
   }
 
+  test("a branch commit keeps the branch's max-ref-age-ms; expiry still retires it") {
+    val url = freshTable
+    IcebergWriter.createTable(spark, url, schema)
+    IcebergWriter.append(spark, url, Seq((1L, "a")).toDF("k", "cat"))
+    IcebergWriter.branch(spark, url, "audit", maxRefAgeMs = Some(300L))
+    IcebergWriter.appendToBranch(spark, url, Seq((2L, "b")).toDF("k", "cat"), "audit")
+    val t = IcebergTable.load(spark, url)
+    assert(t.refs("audit").snapshotId != t.currentSnapshot.snapshotId)
+    assert(t.refs("audit") == SnapshotRef("audit", t.refs("audit").snapshotId, "branch",
+      maxRefAgeMs = Some(300L)))
+    Thread.sleep(400)
+    Maintenance.expireSnapshots(spark, url, keepLast = 1)
+    assert(!IcebergTable.load(spark, url).refs.contains("audit"),
+      "the branch's head outlived max-ref-age-ms: expiry must retire it")
+  }
+
+  test("a commit to main keeps main's min-snapshots-to-keep and max-snapshot-age-ms") {
+    val url = freshTable
+    IcebergWriter.createTable(spark, url, schema)
+    IcebergWriter.append(spark, url, Seq((1L, "a")).toDF("k", "cat"))
+    // a table written elsewhere may carry retention on main
+    IcebergWriter.commitWithRetry(spark, url, spark.sessionState.newHadoopConf()) { t =>
+      Some(Seq(MetadataUpdate.SetSnapshotRef("main", t.metadata.currentSnapshotId,
+        minSnapshotsToKeep = Some(3), maxSnapshotAgeMs = Some(7L * 86400000))))
+    }
+    IcebergWriter.append(spark, url, Seq((2L, "b")).toDF("k", "cat"))
+    IcebergWriter.deleteRows(spark, url, Pruning.Eq("k", 1L))
+    val t = IcebergTable.load(spark, url)
+    assert(t.refs("main") == SnapshotRef("main", t.currentSnapshot.snapshotId, "branch",
+      minSnapshotsToKeep = Some(3), maxSnapshotAgeMs = Some(7L * 86400000)))
+  }
+
   test("tags pin a snapshot; main moves with commits") {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)

@@ -7,12 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.iceberg.{IcebergTable, IcebergWriter, Pruning}
 
-/** DISTRIBUTED merge-on-read: above `morDriverDeleteLimit` the scan must
-  * NOT refuse (the old behavior) and must NOT load delete state on the
-  * driver — each task reads the delete files overlapping its own data file
-  * (per-JVM cached). These tests pin the cap far below the written delete
-  * rows and prove the scan still answers exactly; a 100 TB CDC table whose
-  * churn exceeds any driver-side cap takes the same path. */
+/** DISTRIBUTED merge-on-read, the one delete path: the scan never loads
+  * delete state on the driver — each task reads the delete files
+  * overlapping its own data file (per-JVM cached). These tests prove the
+  * scan answers exactly for every delete shape; a 100 TB CDC table whose
+  * churn would not fit any driver takes the same path. */
 class DistributedMorSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -29,13 +28,6 @@ class DistributedMorSpec extends AnyFunSuite {
   val schema = StructType(Seq(
     StructField("k", LongType), StructField("cat", StringType)))
 
-  /** Run `body` with the driver delete cap pinned to `cap` rows. */
-  private def withCap[T](cap: Long)(body: => T): T = {
-    spark.conf.set("spark.graft.iceberg.morDriverDeleteLimit", cap.toString)
-    try body
-    finally spark.conf.unset("spark.graft.iceberg.morDriverDeleteLimit")
-  }
-
   test("position deletes far above the driver cap: scan answers instead of refusing") {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)
@@ -46,17 +38,11 @@ class DistributedMorSpec extends AnyFunSuite {
       Pruning.And(Pruning.GtEq("k", 201L), Pruning.Lt("k", 601L)))
     val expected = ((1L to 200L) ++ (601L to 1000L)).toSeq
 
-    val driverRows = IcebergTable.load(spark, url).read()
-      .select("k").as[Long].collect().sorted.toSeq
-    assert(driverRows == expected, "driver-mode baseline")
-
-    withCap(100) {
-      val t = IcebergTable.load(spark, url)
-      val rows = t.read().select("k").as[Long].collect().sorted.toSeq
-      assert(rows == expected, "distributed-mode scan must match driver mode")
-      // filtered reads route through the same MOR machinery
-      assert(t.read(filters = Seq(Seq(("k", "<=", 300L)))).count() == 200)
-    }
+    val t = IcebergTable.load(spark, url)
+    val rows = t.read().select("k").as[Long].collect().sorted.toSeq
+    assert(rows == expected)
+    // filtered reads route through the same MOR machinery
+    assert(t.read(filters = Seq(Seq(("k", "<=", 300L)))).count() == 200)
   }
 
   test("equality deletes above the cap: task-side key-set loading") {
@@ -71,11 +57,30 @@ class DistributedMorSpec extends AnyFunSuite {
     val expected = ((1L to 100L) ++ (351L to 500L)).map(i => (i, s"old$i")) ++
       (101L to 350L).map(i => (i, s"new$i"))
 
-    withCap(50) {
-      val got = IcebergTable.load(spark, url).read()
-        .as[(Long, String)].collect().sortBy(_._1).toSeq
-      assert(got == expected.sortBy(_._1))
+    val got = IcebergTable.load(spark, url).read()
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(got == expected.sortBy(_._1))
+  }
+
+  test("timestamp equality keys written as INT96 load the same keys as INT64") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_int96").toString
+    val keys = spark.sql("SELECT * FROM VALUES (TIMESTAMP'2024-01-02 03:04:05.123456'), " +
+      "(TIMESTAMP'1969-12-31 23:59:59.999999'), (TIMESTAMP'1970-01-01 00:00:00') AS t(ts)")
+    // one parquet file per physical layout: Spark's pre-INT64 default, and micros
+    def write(outputType: String): String = {
+      val out = s"$dir/$outputType"
+      spark.conf.set("spark.sql.parquet.outputTimestampType", outputType)
+      try keys.coalesce(1).write.parquet(out)
+      finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      new java.io.File(out).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
     }
+    def keySet(path: String) = DeleteLoader.eqGroupFor(
+      DeleteLoader.EqDeleteFileSpec(path, Array("ts"), Array(0), Array(TimestampType), 1L),
+      spark.sessionState.newHadoopConf(), 1L << 20).keys
+    val int96 = keySet(write("INT96"))
+    val int64 = keySet(write("TIMESTAMP_MICROS"))
+    assert(int64.size == 3)
+    assert(int96 == int64, "an INT96 key must decode to the same micros as INT64")
   }
 
   test("mixed position + equality deletes above the cap, sequence scoping intact") {
@@ -94,11 +99,9 @@ class DistributedMorSpec extends AnyFunSuite {
       (301L to 400L).map(i => (i, s"u$i")) ++
       Seq((1L, "back1"), (301L, "back301"))).sortBy(r => (r._1, r._2))
 
-    withCap(10) {
-      val got = IcebergTable.load(spark, url).read()
-        .as[(Long, String)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(got == expected)
-    }
+    val got = IcebergTable.load(spark, url).read()
+      .as[(Long, String)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(got == expected)
   }
 
   test("partitioned table: partition-scoped delete files prune per task and stay correct") {
@@ -112,14 +115,12 @@ class DistributedMorSpec extends AnyFunSuite {
       Pruning.And(Pruning.GtEq("k", 1L), Pruning.Lt("k", 200L)))
     val expected = (200L to 300L).toSeq
 
-    withCap(20) {
-      val t = IcebergTable.load(spark, url)
-      val rows = t.read().select("k").as[Long].collect().sorted.toSeq
-      assert(rows == expected)
-      // partition-pruned read under distributed deletes
-      assert(t.read(filters = Seq(Seq(("cat", "==", "p0")))).count() ==
-        expected.count(_ % 3 == 0))
-    }
+    val t = IcebergTable.load(spark, url)
+    val rows = t.read().select("k").as[Long].collect().sorted.toSeq
+    assert(rows == expected)
+    // partition-pruned read under distributed deletes
+    assert(t.read(filters = Seq(Seq(("cat", "==", "p0")))).count() ==
+      expected.count(_ % 3 == 0))
   }
 
   test("delete cache evicts LRU under a byte budget but never the entry in use") {
@@ -135,7 +136,7 @@ class DistributedMorSpec extends AnyFunSuite {
       Pruning.And(Pruning.GtEq("k", 101L), Pruning.Lt("k", 151L)))
     DeleteLoader.clearForTest()
     spark.conf.set("spark.graft.iceberg.deleteCacheBytes", "1") // evict ~everything
-    try withCap(10) {
+    try {
       // scan stays CORRECT while the cache thrashes down to ~one entry
       // (the tautological filter blocks aggregate pushdown — count(*)
       // would otherwise answer from metadata and never run a task)
@@ -152,13 +153,11 @@ class DistributedMorSpec extends AnyFunSuite {
     IcebergWriter.append(spark, url,
       (1L to 200L).map(i => (i, "x")).toDF("k", "cat").coalesce(1))
     IcebergWriter.deleteRows(spark, url, Pruning.Lt("k", 101L))
-    withCap(10) {
-      val before = DeleteLoader.residentEntries
-      // filter blocks the metadata-answered count(*): the cache only
-      // populates when tasks actually scan and load their own deletes
-      assert(IcebergTable.load(spark, url).read().where("k > 0").count() == 100)
-      assert(DeleteLoader.residentEntries > before ||
-        before > 0, "task-side loads should populate the JVM cache")
-    }
+    val before = DeleteLoader.residentEntries
+    // filter blocks the metadata-answered count(*): the cache only
+    // populates when tasks actually scan and load their own deletes
+    assert(IcebergTable.load(spark, url).read().where("k > 0").count() == 100)
+    assert(DeleteLoader.residentEntries > before ||
+      before > 0, "task-side loads should populate the JVM cache")
   }
 }

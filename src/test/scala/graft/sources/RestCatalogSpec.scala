@@ -156,8 +156,13 @@ class RestCatalogSpec extends AnyFunSuite {
                       val id = u.get("snapshot-id").asLong
                       val refType = Option(u.get("type"))
                         .map(_.asText).getOrElse("branch")
-                      meta.withObject("/refs").set(refName, mapper.readTree(
-                        s"""{"snapshot-id": $id, "type": "$refType"}"""))
+                      val ref = mapper.readTree(
+                        s"""{"snapshot-id": $id, "type": "$refType"}""")
+                        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+                      Seq("max-ref-age-ms", "min-snapshots-to-keep", "max-snapshot-age-ms")
+                        .foreach(f => Option(u.get(f)).foreach(ref.set[
+                          com.fasterxml.jackson.databind.JsonNode](f, _)))
+                      meta.withObject("/refs").set(refName, ref)
                       if (refName == "main") {
                         meta.put("current-snapshot-id", id)
                         meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
@@ -905,6 +910,37 @@ class RestCatalogSpec extends AnyFunSuite {
   private def catalogVersion(cat: IceRestCatalog, table: String): Int =
     """v(\d+)\.metadata\.json$""".r.findFirstMatchIn(
       cat.getTable("db", table).get("metadata-location").asText).get.group(1).toInt
+
+  test("REST commits keep a branch's and main's retention") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      import spark.implicits._
+      val url = registeredTable(cat, spark, "graft_rest_retention")
+      cat.commitAppend(spark, "db", "t", Seq((1L, "a")).toDF("id", "name"))
+      val head = cat.loadTable(spark, "db", "t").currentSnapshot.snapshotId
+      // main as a table written elsewhere may carry it
+      cat.commitTable("db", "t",
+        Seq(s"""{"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": $head}"""),
+        Seq(s"""{"action": "set-snapshot-ref", "ref-name": "main", "type": "branch",
+               "snapshot-id": $head, "min-snapshots-to-keep": 3}"""))
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.branch(spark, url, "audit",
+          maxRefAgeMs = Some(86400000L))
+      }
+      cat.withCatalogAtomicity(spark, "db", "t") {
+        graft.iceberg.IcebergWriter.appendToBranch(spark, url,
+          Seq((2L, "b")).toDF("id", "name"), "audit")
+      }
+      cat.commitAppend(spark, "db", "t", Seq((3L, "c")).toDF("id", "name"))
+      val t = cat.loadTable(spark, "db", "t")
+      assert(t.atBranch("audit").read().count() == 2)
+      assert(t.refs("audit").maxRefAgeMs == Some(86400000L),
+        "the branch commit must post the branch's max-ref-age-ms")
+      assert(t.refs("main").snapshotId == t.currentSnapshot.snapshotId)
+      assert(t.refs("main").minSnapshotsToKeep == Some(3),
+        "the main commit must post main's min-snapshots-to-keep")
+    }
+  }
 
   test("dropRef in a catalog scope removes the ref from the catalog") {
     withServer { (cat, _) =>
