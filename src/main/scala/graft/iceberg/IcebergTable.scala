@@ -46,7 +46,14 @@ final class IcebergTable private (
       * commit (e.g. a REST `CommitTableRequest`) instead of applying it to
       * a filesystem `v{N+1}.metadata.json`. See
       * [[IcebergWriter.withCatalogCommit]]. */
-    private[graft] val commitScope: Option[(() => Unit) => Unit] = None) {
+    private[graft] val commitScope: Option[(() => Unit) => Unit] = None,
+    /** The Hadoop configuration every metadata read and commit of this
+      * handle goes through: copied from the session ONCE, when the table
+      * is loaded, and shared by every view derived from it (time travel,
+      * commit scopes, incremental ranges). A later session-conf change
+      * reaches the next [[IcebergTable.load]], not this handle, as with an
+      * Iceberg-java catalog's `FileIO`. Never mutated. */
+    private[graft] val conf: Configuration) {
 
   /** Run a write-commit body under this table's catalog-commit scope (a
     * no-op pass-through for filesystem-cataloged tables). */
@@ -59,9 +66,7 @@ final class IcebergTable private (
   private[graft] def withCommitScope(f: (() => Unit) => Unit): IcebergTable =
     new IcebergTable(spark, url, originalUrl, metadata, version,
       selectedSnapshotId, incrementalFromSnapshotId, rawMetadataJson,
-      loadedFrom, Some(f))
-
-  private def conf: Configuration = spark.sessionState.newHadoopConf()
+      loadedFrom, Some(f), conf)
 
   /** Rewrite an absolute URI embedded in metadata to the current location
     * (`original_url` semantics, ice.py:40/169/192/247). */
@@ -100,7 +105,7 @@ final class IcebergTable private (
   /** Travel to an absolute snapshot id (`open_snapshot(snapshot_id=)`). */
   def atSnapshot(snapshotId: Long): IcebergTable = {
     require(snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
-    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope)
+    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope, conf = conf)
   }
 
   /** Travel relative to latest: 0 = latest, −k walks k parents
@@ -112,7 +117,7 @@ final class IcebergTable private (
     for (_ <- 0 until -rel)
       snap = snapshots(snap.parentSnapshotId.getOrElse(
         throw new IllegalStateException("snapshot chain broken")))
-    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snap.snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope)
+    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snap.snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope, conf = conf)
   }
 
   /** Snapshot ids on the PUBLISHED main line: the parent chain of the
@@ -229,7 +234,7 @@ final class IcebergTable private (
           s"'$op' operation as appends; read the full table at that point instead")
     }
     new IcebergTable(spark, url, originalUrl, metadata, version,
-      Some(toSnapshotId), Some(fromSnapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope)
+      Some(toSnapshotId), Some(fromSnapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope, conf = conf)
   }
 
   /** CDC-complete changelog of every snapshot in (from, to]: each row is a
@@ -441,9 +446,8 @@ final class IcebergTable private (
         .select(substring_index(col("file_path"), "/data/", -1).as("_g_key"),
           col("pos").as("_g_pos")))
       val dv = if (dvs.isEmpty) None else {
-        val hconf = spark.sessionState.newHadoopConf()
         val pairs = dvs.flatMap { d =>
-          DeletionVectors.readBlobAt(rewrite(d.filePath), hconf,
+          DeletionVectors.readBlobAt(rewrite(d.filePath), conf,
             d.contentOffset.getOrElse(sys.error(s"DV without offset: ${d.filePath}")),
             d.contentSizeInBytes.getOrElse(sys.error(s"DV without size: ${d.filePath}")))
             .map(pos => (org.apache.spark.sql.graftbridge.ScanBridge.morKey(
@@ -1417,7 +1421,8 @@ object IcebergTable {
         (url, readString(path, conf), v, path)
       }
     val md = TableMetadata.parse(metaJson)
-    new IcebergTable(spark, url, originalUrl.getOrElse(md.location), md, ver, None, rawMetadataJson = metaJson, loadedFrom = fromPath)
+    new IcebergTable(spark, url, originalUrl.getOrElse(md.location), md, ver, None,
+      rawMetadataJson = metaJson, loadedFrom = fromPath, conf = conf)
   }
 
   /** No Iceberg table at `url`: no metadata directory, or one holding

@@ -299,8 +299,8 @@ object IcebergWriter {
   def addFiles(spark: SparkSession, url: String, paths: Seq[String],
       format: String = "parquet"): Unit = {
     if (paths.isEmpty) return
-    val conf = spark.sessionState.newHadoopConf()
     val table = resolveCurrent(spark, url)
+    val conf = table.conf
     require(table.partitionSpec.fields.isEmpty,
       "addFiles imports into unpartitioned tables only " +
         "(no partition values can be derived for foreign files)")
@@ -828,11 +828,12 @@ object IcebergWriter {
   private[graft] def commitSnapshot(spark: SparkSession, url: String,
       pinned: Option[IcebergTable] = None)(
       build: IcebergTable => Option[SnapshotUpdate]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    // names every file the attempt in flight writes; "" when none
+    // names every file the attempt in flight writes ("" when none), and
+    // the conf of the handle it built against
     var attemptId = ""
+    var attemptConf: Configuration = null
     def cleanUncommitted(): Unit = if (attemptId.nonEmpty) {
-      val fs = new Path(url).getFileSystem(conf)
+      val fs = new Path(url).getFileSystem(attemptConf)
       try for (dir <- Seq("metadata", "data"); p = new Path(s"$url/$dir")
           if fs.exists(p); st <- fs.listStatus(p)
           if st.getPath.getName.contains(attemptId)) fs.delete(st.getPath, true)
@@ -842,11 +843,12 @@ object IcebergWriter {
       }
       attemptId = ""
     }
-    try commitWithRetry(spark, url, conf, pinned) { table =>
+    try commitWithRetry(spark, url, pinned) { table =>
       cleanUncommitted() // the previous attempt lost its publish
       build(table).map { u =>
         attemptId = UUID.randomUUID().toString
-        produceSnapshot(spark, url, table, u, attemptId, conf)
+        attemptConf = table.conf
+        produceSnapshot(spark, url, table, u, attemptId)
       }
     } catch {
       case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
@@ -859,8 +861,8 @@ object IcebergWriter {
   /** One attempt of [[commitSnapshot]]: the metadata updates that publish
     * the snapshot. Every file it writes carries `commitId` in its name. */
   private def produceSnapshot(spark: SparkSession, url: String,
-      table: IcebergTable, u: SnapshotUpdate, commitId: String,
-      conf: Configuration): Seq[MetadataUpdate] = {
+      table: IcebergTable, u: SnapshotUpdate, commitId: String): Seq[MetadataUpdate] = {
+    val conf = table.conf
     require(u.target == SnapshotTarget.Main || (u.operation == "append" &&
         u.removed.isEmpty && u.newManifests.isEmpty && u.picked.isEmpty &&
         u.drop == ManifestDrop.Keep),
@@ -1253,8 +1255,7 @@ object IcebergWriter {
     * snapshot — rolling "back" to an unrelated branch would silently
     * splice histories. */
   def rollbackTo(spark: SparkSession, url: String, snapshotId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       require(table.snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
       var cur = table.currentSnapshot
       while (cur.snapshotId != snapshotId)
@@ -1274,8 +1275,7 @@ object IcebergWriter {
     * operator's explicit splice, e.g. adopting a staged WAP snapshot
     * in place). Metadata-only; the move is itself a history event. */
   def setCurrentSnapshot(spark: SparkSession, url: String, snapshotId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       require(table.snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
       if (table.metadata.currentSnapshotId == snapshotId) None // no-op
       else Some(Seq(SetSnapshotRef.moving(table.metadata, "main", snapshotId)))
@@ -1372,8 +1372,7 @@ object IcebergWriter {
     * refuses sorted tables. */
   def setSortOrder(spark: SparkSession, url: String,
       order: Seq[(String, String)]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       val schema = table.iceSchema
       val fields = order.map { case (src, direction) =>
         val f = schema.fields.find(_.name == src).getOrElse(
@@ -1427,8 +1426,7 @@ object IcebergWriter {
     * transform, and name) reuses its field-id, per the Iceberg spec. */
   def updatePartitionSpec(spark: SparkSession, url: String,
       partitions: Seq[(String, String)]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       val schema = table.iceSchema
       val existing = table.metadata.partitionSpecs
       val newSpecId = existing.map(_.specId).max + 1
@@ -1503,7 +1501,7 @@ object IcebergWriter {
 
   private def evolveSchema(spark: SparkSession, url: String)(
       change: IcebergTable => ColumnChange): Unit =
-    commitWithRetry(spark, url, spark.sessionState.newHadoopConf())(t =>
+    commitWithRetry(spark, url)(t =>
       Some(schemaUpdates(t, Seq(change(t)))))
 
   /** A new schema version: `changes` applied in order to the current
@@ -1553,7 +1551,7 @@ object IcebergWriter {
       s"property '$k' is reserved table STATE — use the dedicated API " +
         "(upgradeFormatVersion / rollback), not a property write"))
     val removes = changes.collect { case p: RemoveProperty => p.property }
-    commitWithRetry(spark, url, spark.sessionState.newHadoopConf()) { t =>
+    commitWithRetry(spark, url) { t =>
       val columns = changes.flatMap {
         case _: SetProperty | _: RemoveProperty => None
         case a: AddColumn => Some(addColumnChange(t, a.fieldNames.mkString("."),
@@ -1610,8 +1608,8 @@ object IcebergWriter {
       scannedKeys: Set[String],
       deleteFilesAtScan: Set[String],
       addValidation: (Set[String], Pruning.IcePredicate)): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     val table0 = resolveCurrent(spark, url)
+    val conf = table0.conf
     val specInfo = specInfoOf(table0)
     val dataFiles = writtenData.map(_.dataFile)
     val snapshotId = newSnapshotId()
@@ -1685,8 +1683,8 @@ object IcebergWriter {
     */
   def deleteRows(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit = {
     import org.apache.spark.sql.functions.col
-    val conf = spark.sessionState.newHadoopConf()
     val table = resolveCurrent(spark, url)
+    val conf = table.conf
     val (fully, candidates) = splitByPredicate(table, pred)
     if (fully.isEmpty && candidates.isEmpty) return
     // whole-file drops work for any format; only files a predicate SPLITS
@@ -1737,8 +1735,8 @@ object IcebergWriter {
       targetFiles: Int = 1): Unit = {
     import org.apache.spark.sql.functions.col
     require(targetFiles >= 1, "targetFiles must be positive")
-    val conf = spark.sessionState.newHadoopConf()
     val t0 = resolveCurrent(spark, url)
+    val conf = t0.conf
     if (t0.metadata.currentSnapshotId < 0) return
     val frozen = t0.atSnapshot(t0.currentSnapshot.snapshotId)
     val delFiles = frozen.positionDeleteFiles
@@ -2160,8 +2158,7 @@ object IcebergWriter {
     * are refused (older readers could not see v3 delete state). */
   def upgradeFormatVersion(spark: SparkSession, url: String, version: Int): Unit = {
     require(version >= 1 && version <= 3, s"unsupported format version $version")
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { current =>
+    commitWithRetry(spark, url) { current =>
       val cur = current.metadata.formatVersion
       require(version >= cur,
         s"cannot downgrade format version $cur -> $version")
@@ -2304,8 +2301,7 @@ object IcebergWriter {
     * head — if main moved past the fork point, publishing would silently
     * drop main's new commits; rebase by re-staging instead. */
   def fastForward(spark: SparkSession, url: String, branchName: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       val ref = table.refs.getOrElse(branchName,
         throw new IllegalArgumentException(s"unknown branch '$branchName'"))
       require(ref.refType == "branch",
@@ -2331,8 +2327,7 @@ object IcebergWriter {
   /** Remove a ref. `main` is managed by commits and cannot be dropped. */
   def dropRef(spark: SparkSession, url: String, name: String): Unit = {
     require(name != "main", "the main branch ref is managed by commits")
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       if (!table.refs.contains(name)) None // nothing to do, no new version
       else Some(Seq(RemoveSnapshotRef(name)))
     }
@@ -2342,8 +2337,7 @@ object IcebergWriter {
       refType: String, snapshotId: Option[Long],
       maxRefAgeMs: Option[Long] = None): Unit = {
     require(name != "main", "the main branch ref is managed by commits")
-    val conf = spark.sessionState.newHadoopConf()
-    commitWithRetry(spark, url, conf) { table =>
+    commitWithRetry(spark, url) { table =>
       val target = snapshotId.getOrElse(table.metadata.currentSnapshotId)
       require(table.snapshots.contains(target), s"unknown snapshot $target")
       // spec ref retention: refs whose snapshot outlives maxRefAgeMs are
@@ -2385,8 +2379,8 @@ object IcebergWriter {
   def equalityDelete(spark: SparkSession, url: String, keys: DataFrame,
       keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
-    val conf = spark.sessionState.newHadoopConf()
     val table = resolveCurrent(spark, url)
+    val conf = table.conf
     if (table.metadata.currentSnapshotId < 0) return // nothing to delete from
     // readers apply equality deletes through the merge-on-read machinery,
     // which ORC data files cannot enter — refuse at write, not read
@@ -2409,8 +2403,8 @@ object IcebergWriter {
   def upsert(spark: SparkSession, url: String, source: DataFrame,
       keyCols: Seq[String], extraSummary: Map[String, String] = Map.empty): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val conf = spark.sessionState.newHadoopConf()
     val table = resolveCurrent(spark, url)
+    val conf = table.conf
     if (table.metadata.currentSnapshotId < 0 || table.liveFiles().isEmpty) {
       append(spark, url, source, extraSummary); return
     }
@@ -2603,8 +2597,8 @@ object IcebergWriter {
       keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     import org.apache.spark.sql.functions.col
-    val conf = spark.sessionState.newHadoopConf()
     val table = resolveCurrent(spark, url)
+    val conf = table.conf
     val live = if (table.metadata.currentSnapshotId >= 0) table.liveFiles() else Nil
     if (live.isEmpty) { append(spark, url, source); return }
     requireParquetForRowLevel(table, live, "MERGE")
@@ -3092,8 +3086,8 @@ object IcebergWriter {
   def rewriteManifests(spark: SparkSession, url: String,
       targetManifests: Int = 1): Unit = {
     require(targetManifests >= 1, "need at least one target manifest")
-    val conf = spark.sessionState.newHadoopConf()
     commitSnapshot(spark, url) { current =>
+      val conf = current.conf
       val dataManifests =
         if (current.metadata.currentSnapshotId < 0) Nil
         else current.manifestList.filter(_.content == Manifests.ManifestContent.Data)
@@ -3302,7 +3296,7 @@ object IcebergWriter {
     * The first attempt builds against `pinned` when given (a writer's own
     * load), later ones against a fresh load. */
   private[iceberg] def commitWithRetry(spark: SparkSession, url: String,
-      conf: Configuration, pinned: Option[IcebergTable] = None)(
+      pinned: Option[IcebergTable] = None)(
       attempt: IcebergTable => Option[Seq[MetadataUpdate]]): Unit = {
     var table = pinned.getOrElse(resolveCurrent(spark, url))
     var retries = 0
@@ -3317,13 +3311,13 @@ object IcebergWriter {
           val created =
             try {
               writeStringExclusive(s"$url/metadata/v$newVersion.metadata.json",
-                MetadataUpdate.applyTo(table, updates), conf)
+                MetadataUpdate.applyTo(table, updates), table.conf)
               true
             } catch {
               case _: org.apache.hadoop.fs.FileAlreadyExistsException
                   if retries < MaxCommitRetries => false
             }
-          if (created) writeHint(url, newVersion, conf)
+          if (created) writeHint(url, newVersion, table.conf)
           created
         case (_, publish) =>
           try { publish(MetadataUpdate.requirements(table.metadata, updates), updates); true }

@@ -304,8 +304,8 @@ object Maintenance {
       /** Report the would-be-deleted count WITHOUT deleting — the audit
         * pass operators run before trusting a destructive sweep. */
       dryRun: Boolean = false): Int = {
-    val conf = spark.sessionState.newHadoopConf()
     val table = IcebergWriter.resolveCurrent(spark, url)
+    val conf = table.conf
     val cutoff = System.currentTimeMillis() - olderThanMs
     val referenced = scala.collection.mutable.Set.empty[String]
     table.metadata.snapshots.foreach { snap =>
@@ -360,12 +360,12 @@ object Maintenance {
         * days"). None = keepLast alone decides. */
       olderThan: Option[Long] = None): Unit = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val conf = spark.sessionState.newHadoopConf()
     val before = IcebergWriter.resolveCurrent(spark, url)
+    val conf = before.conf
     if (before.metadata.currentSnapshotId < 0) return
 
     // 1. trim metadata through the optimistic commit loop
-    IcebergWriter.commitWithRetry(spark, url, conf) { table =>
+    IcebergWriter.commitWithRetry(spark, url) { table =>
       // spec ref retention: a ref whose snapshot is older than its
       // max-ref-age-ms RETIRES here — it stops pinning history and is
       // dropped from metadata in the same commit (main never retires)

@@ -32,8 +32,8 @@ object PartitionStatistics {
     * stats.parquet` (sorted by partition tuple, spec field ids stamped),
     * register it (replacing this snapshot's entry). Returns the path. */
   def compute(spark: SparkSession, url: String): String = {
-    val conf = spark.sessionState.newHadoopConf()
     val table = IcebergWriter.resolveCurrent(spark, url)
+    val conf = table.conf
     require(table.metadata.currentSnapshotId >= 0,
       "cannot compute partition statistics: table has no snapshot")
     val snapshotId = table.metadata.currentSnapshotId
@@ -137,7 +137,7 @@ object PartitionStatistics {
     entry.put("snapshot-id", snapshotId)
     entry.put("statistics-path", statsPath)
     entry.put("file-size-in-bytes", fileLen)
-    IcebergWriter.commitWithRetry(spark, url, conf)(_ =>
+    IcebergWriter.commitWithRetry(spark, url)(_ =>
       Some(Seq(MetadataUpdate.SetPartitionStatistics(snapshotId, entry))))
     statsPath
   }

@@ -61,8 +61,8 @@ object TableStatistics {
     * metadata (replacing any prior entry for the same snapshot). Returns
     * the (fieldId → ndv) map that was recorded. */
   def compute(spark: SparkSession, url: String): Map[Int, Long] = {
-    val conf = spark.sessionState.newHadoopConf()
     val table = IcebergWriter.resolveCurrent(spark, url)
+    val conf = table.conf
     require(table.metadata.currentSnapshotId >= 0,
       "cannot compute statistics: table has no snapshot")
     val cols = table.iceSchema.fields.filter(f => statable(f.icebergTypeString))
@@ -99,8 +99,8 @@ object TableStatistics {
     * an unreadable or corrupt prior puffin, an IO error — THROWS: silently
     * recomputing would hide a real fault behind a quietly-full-cost run. */
   def computeIncremental(spark: SparkSession, url: String): Map[Int, Long] = {
-    val conf = spark.sessionState.newHadoopConf()
     val table = IcebergWriter.resolveCurrent(spark, url)
+    val conf = table.conf
     require(table.metadata.currentSnapshotId >= 0,
       "cannot compute statistics: table has no snapshot")
     val snapshotId = table.metadata.currentSnapshotId
@@ -225,7 +225,7 @@ object TableStatistics {
       b.withObject("/properties").put("ndv", ndv.toString)
       blobMeta.add(b)
     }
-    IcebergWriter.commitWithRetry(spark, url, conf)(_ =>
+    IcebergWriter.commitWithRetry(spark, url)(_ =>
       Some(Seq(MetadataUpdate.SetStatistics(snapshotId, entry))))
     cols.map(_.id).zip(ndvs).toMap
   }

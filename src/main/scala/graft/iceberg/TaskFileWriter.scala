@@ -9,7 +9,8 @@ import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.{DelegatingPositionOutputStream, OutputFile, PositionOutputStream}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.WriteBridge
 import org.apache.spark.sql.types.{DataType, Decimal, LongType, MetadataBuilder, StringType, StructField, StructType}
@@ -55,7 +56,7 @@ private[graft] final class TaskFileWriter(spec: TaskFileWriter.Spec,
       closeCurrent()
       val path = new Path(s"${spec.dir}/part-$partitionId-$attemptId-${created.size}.parquet")
       created += path
-      current = new OpenFile(path, spec.schema, spec.conf.value)
+      current = new OpenFile(path, spec.conf.value.value)
       currentKey = key
     }
     current.writer.write(row)
@@ -71,7 +72,7 @@ private[graft] final class TaskFileWriter(spec: TaskFileWriter.Spec,
   def abort(): Unit = {
     if (current != null) current.abandon()
     current = null
-    created.foreach(deletePath(_, spec.conf.value))
+    created.foreach(deletePath(_, spec.conf.value.value))
   }
 
   private def closeCurrent(): Unit = if (current != null) {
@@ -107,10 +108,22 @@ private[graft] object TaskFileWriter {
   final case class PartField(transform: String, ordinal: Int,
       srcIcebergType: String, srcDataType: DataType)
 
-  /** What a write task writes: files of `kind` with rows of `schema` under
-    * `dir`, one file per run of equal `partFields` tuples. */
-  final case class Spec(dir: String, schema: StructType, kind: Kind,
-      conf: SerializableConfiguration, partFields: Seq[PartField] = Nil)
+  /** What a write task writes: files of `kind` under `dir`, one file per
+    * run of equal `partFields` tuples, opened against `conf` — the job's
+    * writer conf (see [[spec]]), which fixes the rows' schema. */
+  final case class Spec(dir: String, kind: Kind,
+      conf: Broadcast[SerializableConfiguration], partFields: Seq[PartField] = Nil)
+
+  /** The [[Spec]] of one write job of rows of `schema`: the session's
+    * Hadoop conf is copied once, prepared for `schema`
+    * ([[WriteBridge.prepareWriterConf]]) and broadcast, so a task's closure
+    * carries a broadcast handle instead of ~1,100 conf entries, and every
+    * file the job opens reads the same copy. */
+  def spec(spark: SparkSession, dir: String, schema: StructType, kind: Kind,
+      partFields: Seq[PartField] = Nil): Spec =
+    Spec(dir, kind, spark.sparkContext.broadcast(new SerializableConfiguration(
+      WriteBridge.prepareWriterConf(spark.sessionState.newHadoopConf(), schema))),
+      partFields)
 
   /** `table`'s default-spec fields, their sources resolved by name in the
     * written rows' `schema`. */
@@ -137,8 +150,7 @@ private[graft] object TaskFileWriter {
     * nothing behind. */
   def writeAll(df: DataFrame, dir: String, kind: Kind,
       partFields: Seq[PartField] = Nil): Seq[WrittenFile] = {
-    val spec = Spec(dir, df.schema, kind,
-      new SerializableConfiguration(df.sparkSession.sessionState.newHadoopConf()), partFields)
+    val spec = this.spec(df.sparkSession, dir, df.schema, kind, partFields)
     val done = mutable.TreeMap.empty[Int, Seq[WrittenFile]]
     try WriteBridge.runTasks(df, s"write ${spec.dir}") { (ctx, rows) =>
         val w = new TaskFileWriter(spec, ctx.partitionId, ctx.taskAttemptId)
@@ -149,7 +161,7 @@ private[graft] object TaskFileWriter {
       } { (i, files) => done.synchronized(done(i) = files) }
     catch {
       case t: Throwable =>
-        deleteQuietly(done.synchronized(done.values.flatten.toSeq), spec.conf.value)
+        deleteQuietly(done.synchronized(done.values.flatten.toSeq), spec.conf.value.value)
         throw t
     }
     done.values.flatten.toSeq
@@ -161,7 +173,7 @@ private[graft] object TaskFileWriter {
       rows: Iterator[InternalRow]): (Long, ParquetMetadata) = {
     var f: OpenFile = null
     try {
-      f = new OpenFile(path, schema, conf)
+      f = new OpenFile(path, WriteBridge.prepareWriterConf(new Configuration(conf), schema))
       rows.foreach(f.writer.write)
       f.close()
     } catch {
@@ -172,9 +184,10 @@ private[graft] object TaskFileWriter {
     }
   }
 
-  /** A parquet file open at `path`. Its stream records its position when
-    * the writer closes it: the file's length, with no status call. */
-  private final class OpenFile(path: Path, schema: StructType, conf: Configuration) {
+  /** A parquet file open at `path` under a prepared writer conf. Its stream
+    * records its position when the writer closes it: the file's length,
+    * with no status call. */
+  private final class OpenFile(path: Path, conf: Configuration) {
     private var length = -1L
     private val file = HadoopOutputFile.fromPath(path, conf)
     val writer: ParquetWriter[InternalRow] = WriteBridge.parquetRowWriter(new OutputFile {
@@ -184,7 +197,7 @@ private[graft] object TaskFileWriter {
       override def supportsBlockSize(): Boolean = file.supportsBlockSize()
       override def defaultBlockSize(): Long = file.defaultBlockSize()
       override def getPath: String = file.getPath
-    }, schema, conf)
+    }, conf)
 
     private def sized(s: PositionOutputStream): PositionOutputStream =
       new DelegatingPositionOutputStream(s) {

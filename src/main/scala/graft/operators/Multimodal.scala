@@ -1011,6 +1011,9 @@ object Multimodal {
           i += 1
         }
         writeCode(ent)
+        // the decoder adds an entry on this last code too, and may widen
+        // before it reads EOI: widen the same way (libtiff's LZWPostEncode)
+        if (free >= (1 << width) - 1 && width < 12) width += 1
       }
       writeCode(Eoi)
       if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.iceberg.{IcebergTable, IcebergWriter, Pruning, TaskFileWriter, WrittenFile}
 
@@ -118,17 +117,15 @@ final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
     TaskFileWriter.deleteQuietly(messages.toSeq.flatMap {
       case m: GraftCommitMessage => m.files
       case _ => Nil
-    }, SparkSession.active.sessionState.newHadoopConf())
+    }, table.conf)
   }
 }
 
 object GraftBatchWrite {
   /** Data files of `table`'s rows under `data/<commitId>/`. */
   private[sources] def dataSpec(table: IcebergTable, commitId: String): TaskFileWriter.Spec =
-    TaskFileWriter.Spec(s"${table.url}/data/$commitId", table.schema,
-      TaskFileWriter.Kind.Data(table.iceSchema),
-      new SerializableConfiguration(table.spark.sessionState.newHadoopConf()),
-      TaskFileWriter.partFields(table, table.schema))
+    TaskFileWriter.spec(table.spark, s"${table.url}/data/$commitId", table.schema,
+      TaskFileWriter.Kind.Data(table.iceSchema), TaskFileWriter.partFields(table, table.schema))
 }
 
 /** Files written by one task. */

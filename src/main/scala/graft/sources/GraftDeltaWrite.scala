@@ -110,9 +110,8 @@ final class GraftDeltaBatchWrite(table: IcebergTable, operation: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val data = GraftBatchWrite.dataSpec(table, commitId)
-    val deletes = data.copy(dir = s"${table.url}/data/$commitId-deletes",
-      schema = TaskFileWriter.PositionDeleteSchema, kind = TaskFileWriter.Kind.PositionDeletes,
-      partFields = Nil)
+    val deletes = TaskFileWriter.spec(table.spark, s"${table.url}/data/$commitId-deletes",
+      TaskFileWriter.PositionDeleteSchema, TaskFileWriter.Kind.PositionDeletes)
     (partitionId: Int, taskId: Long) => new GraftDeltaRowWriter(data, deletes, partitionId, taskId)
   }
 
@@ -136,7 +135,7 @@ final class GraftDeltaBatchWrite(table: IcebergTable, operation: String,
     TaskFileWriter.deleteQuietly(messages.toSeq.flatMap {
       case m: GraftDeltaCommitMessage => m.dataFiles ++ m.deleteFiles
       case _ => Nil
-    }, SparkSession.active.sessionState.newHadoopConf())
+    }, table.conf)
   }
 }
 

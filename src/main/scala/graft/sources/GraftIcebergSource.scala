@@ -931,10 +931,6 @@ final class GraftIcebergScan(
   private lazy val eqDeleteSpecs: Array[DeleteLoader.EqDeleteFileSpec] =
     GraftIcebergScan.buildEqSpecs(table, morReadSchema, eqDeleteFiles)
 
-  /** The hadoop conf the tasks' delete loads read through: ONE broadcast
-    * per scan, not a copy inside every task. */
-  private lazy val deleteConf = DeleteLoader.broadcastConf(SparkSession.active)
-
   /** Row-lineage metadata requested? Then the read also asks the parquet
     * delegate for the MATERIALIZED lineage columns (reserved field ids —
     * present only in rewritten/compacted files, null-filled elsewhere):
@@ -1003,13 +999,21 @@ final class GraftIcebergScan(
           "compact the table first")
   }
 
+  /** This scan's Hadoop conf: copied from the session ONCE, when the scan
+    * first plans, and shared by its delegate batches, its partitions and
+    * (through the parquet factory's broadcast) its merge-on-read delete
+    * loads. A session-conf change reaches the next scan, not this one.
+    * Carries id-based column resolution, scoped to THIS scan (the session
+    * conf stays untouched): ParquetReadSupport reads the flag from the
+    * task-side configuration. */
+  private lazy val hconf: org.apache.hadoop.conf.Configuration = {
+    val c = SparkSession.active.sessionState.newHadoopConf()
+    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
   private lazy val delegate: Batch = {
     val spark = SparkSession.active
-    val hconf = spark.sessionState.newHadoopConf()
-    // id-based column resolution, scoped to THIS scan's hadoop conf (the
-    // session conf stays untouched): ParquetReadSupport reads the flag from
-    // the task-side configuration
-    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => hconf.set(k, v) }
     requireNoOrcUnderMor()
     val readSchema = if (!morMode) requiredSchema else morReadSchema
     def paths(fs: Seq[graft.iceberg.Manifests.DataFileInfo]) =
@@ -1017,13 +1021,6 @@ final class GraftIcebergScan(
     val nativeParquet = files.filterNot(f =>
       f.fileFormat.equalsIgnoreCase("ORC") || f.fileFormat.equalsIgnoreCase("AVRO") ||
         isForeignParquet(f))
-    // foreign parquet has NO field ids: its batch reads under a schema
-    // STRIPPED of field-id metadata (plus a conf with the flag off), so
-    // Spark's parquet reader resolves its columns by name — matching how
-    // the files' footer stats were harvested at import — instead of
-    // refusing id-less files
-    val plainConf = spark.sessionState.newHadoopConf()
-    plainConf.set("spark.sql.parquet.fieldId.read.enabled", "false")
     // imported id-less files resolve by the names CURRENT AT IMPORT TIME
     // (schema.name-mapping.default) so a later rename cannot misresolve
     // them; pushed filters pass through unrenamed — they are residuals
@@ -1035,11 +1032,20 @@ final class GraftIcebergScan(
     val batches = Seq(
       nativeParquet -> ((fs: Seq[(String, Long)]) => ScanBridge.parquetScan(
         spark, hconf, fs, table.schema, readSchema, pushedFilters, options).toBatch),
-      foreignParquetFiles -> ((fs: Seq[(String, Long)]) => ScanBridge.parquetScan(
-        spark, plainConf, fs,
-        GraftIcebergScan.stripFieldIds(mapped(table.schema)),
-        GraftIcebergScan.stripFieldIds(mapped(readSchema)),
-        pushedFilters, options).toBatch),
+      // foreign parquet has NO field ids: its batch reads under a schema
+      // STRIPPED of field-id metadata (plus its own conf with the flag off,
+      // copied only when the scan holds such files), so Spark's parquet
+      // reader resolves its columns by name — matching how the files'
+      // footer stats were harvested at import — instead of refusing
+      // id-less files
+      foreignParquetFiles -> { (fs: Seq[(String, Long)]) =>
+        val plainConf = spark.sessionState.newHadoopConf()
+        plainConf.set("spark.sql.parquet.fieldId.read.enabled", "false")
+        ScanBridge.parquetScan(spark, plainConf, fs,
+          GraftIcebergScan.stripFieldIds(mapped(table.schema)),
+          GraftIcebergScan.stripFieldIds(mapped(readSchema)),
+          pushedFilters, options).toBatch
+      },
       orcFiles -> ((fs: Seq[(String, Long)]) => ScanBridge.orcScan(
         spark, hconf, fs, mapped(table.schema), mapped(readSchema),
         pushedFilters, options).toBatch),
@@ -1109,7 +1115,6 @@ final class GraftIcebergScan(
   override def planInputPartitions(): Array[InputPartition] = keyedLayout match {
     case Some(l) =>
       val spark = SparkSession.active
-      val hconf = spark.sessionState.newHadoopConf()
       l.groups.zipWithIndex.map { case ((key, group), i) =>
         ScanBridge.keyedPartition(spark, hconf, i, key,
           group.map(f => (table.resolvePath(f.filePath), f.fileSizeInBytes)))
@@ -1126,7 +1131,7 @@ final class GraftIcebergScan(
       // positions.
       val (dvs, carriers) = table.positionDeleteFiles.partition(_.referencedDataFile.isDefined)
       val dvsByKey = dvs.groupBy(d => ScanBridge.morKey(d.referencedDataFile.get))
-      ScanBridge.morPartitions(SparkSession.active.sessionState.newHadoopConf(),
+      ScanBridge.morPartitions(hconf,
         files.map { f =>
           val path = table.resolvePath(f.filePath)
           val deleteFiles = (dvsByKey.getOrElse(ScanBridge.morKey(path), Nil) ++
@@ -1183,9 +1188,11 @@ final class GraftIcebergScan(
       // position AND equality deletes stay COLUMNAR (per-batch selection
       // view; the eq-key probe computes the selection per row but copies
       // no vectors) — only metadata columns (per-row projection of
-      // constants) need the row-based readers
+      // constants) need the row-based readers. The delete loads read
+      // through the conf the parquet factory already broadcasts (MOR scans
+      // refuse foreign formats, so the delegate is always parquet)
       ScanBridge.morReaderFactory(inner, requiredSchema, morReadSchema.length,
-        columnarCapable = metaCols.isEmpty, conf = deleteConf,
+        columnarCapable = metaCols.isEmpty, conf = ScanBridge.broadcastConfOf(inner),
         eqSpecs = eqDeleteSpecs, lineageCols = lineagePhysical.length)
     else if (keyedLayout.isDefined) ScanBridge.unwrapKeyedFactory(inner)
     else inner
@@ -1274,7 +1281,7 @@ object GraftIcebergScan {
     * files whose snapshot/schema is unresolvable. */
   private def eqWriteNames(table: IcebergTable, ids: Seq[Int],
       f: graft.iceberg.Manifests.DataFileInfo,
-      hconf: => org.apache.hadoop.conf.Configuration): Seq[String] = {
+      hconf: org.apache.hadoop.conf.Configuration): Seq[String] = {
     def footerNames(p: String): Seq[String] = {
       GraftIcebergSource.footerProbes.incrementAndGet()
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -1310,14 +1317,13 @@ object GraftIcebergScan {
       : Array[DeleteLoader.EqDeleteFileSpec] = {
     val idToName = table.iceSchema.fields.map(f => f.id -> f.name).toMap
     val nameToType = table.schema.fields.map(f => f.name -> f.dataType).toMap
-    lazy val hconf = SparkSession.active.sessionState.newHadoopConf()
     eqDeleteFiles.map { f =>
       val ids = f.equalityIds
       val names = ids.map(id => idToName.getOrElse(id,
         throw new IllegalStateException(s"equality id $id not in schema")))
       DeleteLoader.EqDeleteFileSpec(
         table.resolvePath(f.filePath),
-        eqWriteNames(table, ids, f, hconf).toArray,
+        eqWriteNames(table, ids, f, table.conf).toArray,
         names.map(read.fieldIndex).toArray,
         names.map(nameToType).toArray,
         table.dataSequenceOf(f))
@@ -1523,9 +1529,40 @@ final class GraftIcebergMicroBatchStream(
 
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private def freshTable(): IcebergTable =
-    IcebergTable.load(SparkSession.active, table.url,
+  /** The newest table state this stream loaded. */
+  @volatile private var head: IcebergTable = _
+
+  private def freshTable(): IcebergTable = {
+    val t = IcebergTable.load(SparkSession.active, table.url,
       if (table.originalUrl.nonEmpty) Some(table.originalUrl) else None)
+    head = t
+    t
+  }
+
+  /** A loaded state that holds snapshot `e`: the one [[latestOffset]] just
+    * loaded when it admitted `e` (snapshots are immutable, so a newer state
+    * plans a range exactly as the state at `e` would), else a fresh load —
+    * after a restart Spark plans the logged batch before any trigger. */
+  private def tableWith(e: Long): IcebergTable = {
+    val h = head
+    if (h != null && h.snapshots.contains(e)) h else freshTable()
+  }
+
+  /** This stream's Hadoop conf, with field-id reads on: copied from the
+    * session once, when the stream first plans, and shared by every
+    * micro-batch's partitions and reader factory (whose parquet broadcast
+    * the CDC delete loads read through). */
+  private lazy val hconf: org.apache.hadoop.conf.Configuration = {
+    val c = SparkSession.active.sessionState.newHadoopConf()
+    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
+  /** The last planned range and its partitions: Spark plans one
+    * micro-batch several times (each `planInputPartitions` call of a batch
+    * asks for the same range), and planning reloads nothing after the
+    * first. */
+  private var planned: ((Long, Long), Array[InputPartition]) = _
 
   /** ADMISSION CONTROL: `max-snapshots-per-trigger` caps how many snapshots
     * one micro-batch may cover. Without a cap, a long backlog (stream
@@ -1728,8 +1765,7 @@ final class GraftIcebergMicroBatchStream(
     * — each partition carries its own visibility (exclusions) and
     * selection, so one batch mixes snapshots safely. Cost is proportional
     * to the CHANGED files of the range, never the table. */
-  private def planCdcPartitions(s: Long, e: Long, t: IcebergTable,
-      hconf: org.apache.hadoop.conf.Configuration): Array[InputPartition] = {
+  private def planCdcPartitions(s: Long, e: Long, t: IcebergTable): Array[InputPartition] = {
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
     var idx = 0
     var selCandidates = 0L
@@ -1834,13 +1870,17 @@ final class GraftIcebergMicroBatchStream(
     val s = start.asInstanceOf[SnapshotOffset].snapshotId
     val e = end.asInstanceOf[SnapshotOffset].snapshotId
     if (e < 0 || s == e) return Array.empty
-    val t = freshTable()
-    if (cdcMode) {
-      val spark = SparkSession.active
-      val hconf = spark.sessionState.newHadoopConf()
-      IcebergTable.FieldIdReadOptions.foreach { case (k, v) => hconf.set(k, v) }
-      return planCdcPartitions(s, e, t, hconf)
-    }
+    val last = planned
+    if (last != null && last._1 == (s, e)) return last._2
+    val t = tableWith(e)
+    val parts = if (cdcMode) planCdcPartitions(s, e, t) else planAppends(s, e, t)
+    planned = ((s, e), parts)
+    parts
+  }
+
+  /** Append-tail partitions of (s, e]: a plain parquet scan over the files
+    * the range appended. */
+  private def planAppends(s: Long, e: Long, t: IcebergTable): Array[InputPartition] = {
     val files =
       if (s < 0) {
         // the catch-up batch reads whole files; live row-level deletes
@@ -1856,22 +1896,13 @@ final class GraftIcebergMicroBatchStream(
         t.resolvePath(f.filePath).contains("/data/")),
       "streaming reads support natively written parquet data files only; " +
         "compact the table to fold foreign ORC/AVRO/imported-parquet files first")
-    val spark = SparkSession.active
-    val hconf = spark.sessionState.newHadoopConf()
-    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => hconf.set(k, v) }
-    ScanBridge.parquetScan(spark, hconf,
+    ScanBridge.parquetScan(SparkSession.active, hconf,
       files.map(f => (t.resolvePath(f.filePath), f.fileSizeInBytes)),
       t.schema, readSchema, pushedFilters, options).toBatch.planInputPartitions()
   }
 
-  /** The hadoop conf the CDC tasks' delete loads read through: ONE
-    * broadcast per stream, shared by every micro-batch's factory. */
-  private lazy val deleteConf = DeleteLoader.broadcastConf(SparkSession.active)
-
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    val hconf = spark.sessionState.newHadoopConf()
-    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => hconf.set(k, v) }
     // the parquet reader factory is independent of the planned file list:
     // an empty template scan yields the factory every batch reuses
     if (!cdcMode)
@@ -1884,7 +1915,7 @@ final class GraftIcebergMicroBatchStream(
     val delegate = ScanBridge.parquetScan(spark, hconf, Nil, table.schema,
       fullRead, pushedFilters, options).toBatch.createReaderFactory()
     ScanBridge.morReaderFactory(delegate, cdcDataSchema, fullRead.length,
-      columnarCapable = false, conf = deleteConf,
+      columnarCapable = false, conf = ScanBridge.broadcastConfOf(delegate),
       ordinalMap = cdcDataSchema.fieldNames.map(cdcFullSchema.fieldIndex))
   }
 }

@@ -23,7 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * on any multi-slot executor) the cost collapses to one read per delete
   * file per JVM. Reads use parquet-hadoop's example model: delete files are
   * tiny schemas (file_path+pos, or the equality key columns), so the
-  * non-vectorized reader is not a hot path.
+  * non-vectorized reader is not a hot path. They read through the Hadoop
+  * conf the scan's parquet reader factory already broadcasts
+  * ([[ScanBridge.broadcastConfOf]]): no second copy or broadcast per scan.
   */
 object DeleteLoader {
 
@@ -33,13 +35,6 @@ object DeleteLoader {
   def cacheBytes: Long =
     org.apache.spark.sql.internal.SQLConf.get.getConfString(
       "spark.graft.iceberg.deleteCacheBytes", (256L * 1024 * 1024).toString).toLong
-
-  /** The session's hadoop conf as the broadcast a scan's reader factory
-    * carries to its tasks' loads. */
-  def broadcastConf(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
-    spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
   /** LRU over decoded delete state, bounded in (estimated) bytes. Access
     * order so hot delete files stay resident across tasks. */

@@ -279,10 +279,11 @@ object ScanBridge {
     * row, and projects the extra columns back out, so deleted rows never
     * leave the scan and downstream operators see exactly `requiredSchema`.
     *
-    * The hadoop conf the loads need travels as ONE broadcast per scan or
-    * stream, as Spark's own `ParquetPartitionReaderFactory` carries its
-    * conf: inline, its ~1,100 entries would ship and deserialize with every
-    * task. The cache budget is `spark.graft.iceberg.deleteCacheBytes`.
+    * The hadoop conf the loads need travels as a broadcast, never inline
+    * (its ~1,100 entries would ship and deserialize with every task):
+    * scans and streams pass the one their parquet `delegate` already
+    * carries ([[broadcastConfOf]]), so a scan copies and broadcasts its
+    * conf once. The cache budget is `spark.graft.iceberg.deleteCacheBytes`.
     *
     * COLUMNAR under position and equality deletes: delete-free partitions
     * pass batches through (the trailing index vector dropped, zero copy);
@@ -313,6 +314,16 @@ object ScanBridge {
       lineageCols: Int = 0): PartitionReaderFactory =
     new MorReaderFactory(delegate, requiredSchema, readWidth, columnarCapable,
       conf, DeleteLoader.cacheBytes, eqSpecs, ordinalMap, lineageCols)
+
+  /** The Hadoop conf broadcast Spark's parquet reader `factory` carries to
+    * its tasks (the scan's conf, prepared for the read). */
+  def broadcastConfOf(factory: PartitionReaderFactory): Broadcast[SerializableConfiguration] =
+    factory match {
+      case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory =>
+        p.broadcastedConf
+      case other => throw new IllegalArgumentException(
+        s"merge-on-read reads parquet only, got a ${other.getClass.getName}")
+    }
 
   private final class MorReaderFactory(
       delegate: PartitionReaderFactory,

@@ -20,27 +20,33 @@ import org.apache.spark.sql.types.StructType
   * re-dispatch). */
 object WriteBridge {
 
-  /** A parquet writer for InternalRows of `schema`. Field ids in the
-    * schema's (nested) metadata are stamped into the file; timestamps are
-    * written as Iceberg-compatible INT64 micros. */
-  def parquetRowWriter(file: OutputFile, schema: StructType,
-      conf: Configuration): ParquetWriter[InternalRow] = {
-    val c = new Configuration(conf)
-    ParquetWriteSupport.setSchema(schema, c)
-    // the keys ParquetFileFormat.prepareWrite normally stages for tasks
-    c.set("spark.sql.parquet.writeLegacyFormat", "false")
-    c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    c.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    c.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    c.set("spark.sql.caseSensitive", "false")
+  /** `conf` prepared for writing parquet rows of `schema`: the schema and
+    * the keys `ParquetFileFormat.prepareWrite` normally stages for tasks.
+    * Field ids in the schema's (nested) metadata are stamped into the file;
+    * timestamps are written as Iceberg-compatible INT64 micros. Sets the
+    * keys on `conf` itself and returns it: a write job prepares one copy on
+    * the driver and every file it opens reads that copy. */
+  def prepareWriterConf(conf: Configuration, schema: StructType): Configuration = {
+    ParquetWriteSupport.setSchema(schema, conf)
+    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
+    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
+    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
+    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
+    conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    conf.set("spark.sql.caseSensitive", "false")
+    conf
+  }
+
+  /** A parquet writer for InternalRows, opened against a conf from
+    * [[prepareWriterConf]]; it only reads the conf, so the files of one
+    * job share it. */
+  def parquetRowWriter(file: OutputFile, conf: Configuration): ParquetWriter[InternalRow] =
     new RowWriterBuilder(file)
-      .withConf(c)
+      .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
-  }
 
   /** Run `task` over each partition of `df`'s rows (reused InternalRows in
     * `df.schema`) as one SQL execution, handing each finished task's result

@@ -482,6 +482,18 @@ class MediaCodecSpec extends AnyFunSuite {
     assert(out.toSeq == noisy.toSeq, "12-bit-width LZW raster")
   }
 
+  test("TIFF LZW: random strips of about 255 bytes round-trip, where the " +
+      "last code before EOI is the one that widens the decoder to 10 bits") {
+    val rnd = new scala.util.Random(255)
+    for (n <- Seq(253, 254, 255, 256, 257); _ <- 1 to 40) {
+      val px = new Array[Byte](n)
+      rnd.nextBytes(px)
+      val (_, _, out) = MediaCodec.decodeTiff(
+        MediaCodec.encodeTiff(n, 1, 1, px, compression = 5))
+      assert(out.toSeq == px.flatMap(v => Seq(v, v, v)).toSeq, s"$n-byte strip")
+    }
+  }
+
   test("TIFF cross-validation with ImageIO: the JDK reads our LZW and " +
       "PackBits bytes; we read its (multi-strip, big-endian-capable) " +
       "output in none/LZW/PackBits and 1-bit bilevel") {
