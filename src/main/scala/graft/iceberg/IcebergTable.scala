@@ -967,8 +967,9 @@ final class IcebergTable private (
     * position deletes applied inside the scan via the parquet row index.
     * The residual predicate re-applies row-level through Catalyst (pushes
     * to parquet row groups), preserving the sound-not-exact pruning
-    * contract. Time travel state (metadata version / snapshot id /
-    * original-url rewrite) is forwarded as source options. */
+    * contract. The relation is built over THIS handle — its time-travel,
+    * branch, incremental and original-url state included — so the read
+    * does not load the table again. */
   private[graft] def readPred(pred: IcePredicate, columns: Seq[String],
       failOnEmpty: Boolean): DataFrame = {
     // the empty-prune raise needs its own manifest walk; plain reads skip
@@ -980,22 +981,8 @@ final class IcebergTable private (
       // table whose main has never committed still has data to read
       if (metadata.currentSnapshotId < 0 && selectedSnapshotId.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-      else {
-        var reader = spark.read.format("graft-iceberg")
-        // version 0 = "loaded from an explicit metadata.json path"; the
-        // version option would not resolve there, so let the source re-hint
-        if (version > 0) reader = reader.option("version", version.toString)
-        if (originalUrl.nonEmpty) reader = reader.option("original-url", originalUrl)
-        selectedSnapshotId.foreach(id => reader = reader.option("snapshot-id", id.toString))
-        // incremental views forward their start bound; the end bound is the
-        // selected snapshot forwarded just above
-        incrementalFromSnapshotId.foreach(f =>
-          reader = reader.option("start-snapshot-id", f.toString))
-        // version 0 = catalog-loaded (explicit metadata path): the source
-        // must resolve THAT path, not the filesystem version hint, or a
-        // catalog-committed version would silently read stale
-        reader.load(if (version > 0 || loadedFrom.isEmpty) url else loadedFrom)
-      }
+      else org.apache.spark.sql.graftbridge.ScanBridge.tableDataFrame(spark,
+        new graft.sources.GraftIcebergV2Table(this), url)
     val filtered = Pruning.toColumn(pred).map(base.filter).getOrElse(base)
     if (columns.nonEmpty) filtered.select(columns.map(col): _*) else filtered
   }

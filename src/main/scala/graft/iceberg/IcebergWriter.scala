@@ -1637,38 +1637,53 @@ object IcebergWriter {
     }
   }
 
-  /** Run `body` against a CLONED session (same SparkContext, own
+  /** Run `body` against a SCOPED session (same SparkContext, own
     * SessionState) with field-ID parquet column resolution ON. The position
     * scans below need `_metadata` columns, which only Spark's built-in
     * parquet source exposes — and that source reads this flag from the
     * session conf at plan time, so a per-relation option cannot scope it.
     * A set/restore on the shared session would leak the flag to concurrent
     * queries on OTHER threads for the duration of the scan (changing their
-    * column resolution on id-less files); the clone's conf is invisible to
-    * them. DataFrames built in `body` must come from the session handed to
-    * it, so their plans resolve under the flag. */
-  private def withFieldIdRead[T](spark: SparkSession)(body: SparkSession => T): T = {
-    val scoped = spark.newSession()
+    * column resolution on id-less files); the scoped session's conf is
+    * invisible to them. DataFrames built in `body` must come from the
+    * session handed to it, so their plans resolve under the flag.
+    *
+    * Each caller session keeps ONE scoped session ([[fieldIdSessions]]):
+    * Spark caches generated classes per session class loader, so a fresh
+    * `newSession()` per call would recompile the same plans every time. */
+  private[iceberg] def withFieldIdRead[T](spark: SparkSession)(body: SparkSession => T): T = {
+    val scoped = fieldIdSessions.computeIfAbsent(spark, _.newSession())
     // newSession() builds SessionState from the context conf plus builder
     // options only — runtime confs the caller set later (session timezone,
     // ANSI mode, case sensitivity, shuffle partitions) would be silently
     // dropped, changing predicate/merge semantics (e.g. timestamp-string
-    // casts). Mirror every modifiable conf the caller holds.
+    // casts). Mirror every modifiable conf the caller holds, and unset
+    // those it no longer holds, on every call.
     // graft's own spark.graft.* knobs are not registered SQL confs, so
     // isModifiable says false for them — yet they steer the write path
     // (e.g. dvDriverBytesLimit picks the executor-side puffin mode) and
     // MUST survive into the scoped session; so must non-Spark keys (the
     // session's Hadoop filesystem settings, e.g. `fs.<scheme>.impl` or
     // object-store credentials), or the scoped reads cannot open the table
-    spark.conf.getAll.foreach { case (k, v) =>
-      if ((k.startsWith("spark.graft.") || !k.startsWith("spark.") ||
-          scoped.conf.isModifiable(k)) &&
-          scoped.conf.getOption(k) != Some(v))
-        scoped.conf.set(k, v)
+    def mirrored(k: String): Boolean =
+      k.startsWith("spark.graft.") || !k.startsWith("spark.") || scoped.conf.isModifiable(k)
+    val caller = spark.conf.getAll
+    scoped.conf.getAll.keys.foreach { k =>
+      if (!caller.contains(k) && !IcebergTable.FieldIdReadOptions.contains(k) && mirrored(k))
+        scoped.conf.unset(k)
     }
-    scoped.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    caller.foreach { case (k, v) =>
+      if (mirrored(k) && scoped.conf.getOption(k) != Some(v)) scoped.conf.set(k, v)
+    }
+    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => scoped.conf.set(k, v) }
     body(scoped)
   }
+
+  /** The scoped session of each caller session, keyed weakly: a caller's
+    * entry goes when the caller does (the scoped session, built by
+    * `newSession()`, holds no reference back to it). */
+  private val fieldIdSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
 
   /** Row-level delete via Iceberg v2 POSITION DELETES (merge-on-read).
     *

@@ -1078,7 +1078,7 @@ final class GraftIcebergScan(
     * shape Iceberg's Spark runtime uses for its SPJ support. */
   private lazy val keyedLayout: Option[GraftIcebergScan.KeyedLayout] = {
     val conf = SQLConf.get
-    if (morMode || // MOR needs per-file partitions, not key groups
+    if (morMode || // MOR partitions follow the parquet delegate's layout
         // keyed partitions assume ONE format's (and one conf's) factory
         orcFiles.nonEmpty || avroFiles.nonEmpty || foreignParquetFiles.nonEmpty ||
         !conf.getConf(SQLConf.V2_BUCKETING_ENABLED) ||
@@ -1121,36 +1121,38 @@ final class GraftIcebergScan(
       }.toArray
     case None if morMode =>
       requireNoOrcUnderMor()
-      // each partition carries the PATHS of the position-delete files that
-      // may overlap its data file: a DV names its file outright; other
-      // carriers prune by commit sequence and partition tuple (both
-      // provable from manifest metadata alone; anything unprovable is
-      // conservatively included, the task-side morKey match keeps
-      // correctness). distinct guards the multi-blob-per-puffin case (DV
-      // entries share a path): a doubled path would double the merged
-      // positions.
+      // Spark's own layout for these files (small files packed into one
+      // task, large ones split), each member paired with its file's state.
+      // A file carries the PATHS of the position-delete files that may
+      // overlap it: a DV names its file outright; other carriers prune by
+      // commit sequence and partition tuple (both provable from manifest
+      // metadata alone; anything unprovable is conservatively included,
+      // the task-side morKey match keeps correctness). distinct guards the
+      // multi-blob-per-puffin case (DV entries share a path): a doubled
+      // path would double the merged positions.
       val (dvs, carriers) = table.positionDeleteFiles.partition(_.referencedDataFile.isDefined)
       val dvsByKey = dvs.groupBy(d => ScanBridge.morKey(d.referencedDataFile.get))
-      ScanBridge.morPartitions(hconf,
-        files.map { f =>
-          val path = table.resolvePath(f.filePath)
-          val deleteFiles = (dvsByKey.getOrElse(ScanBridge.morKey(path), Nil) ++
-            carriers.filter(d => deleteMayApply(d, f)))
-            .map(d => table.resolvePath(d.filePath)).distinct.toArray
-          (path, f.fileSizeInBytes, table.dataSequenceOf(f),
-            metaCols.map {
-              case "_partition" => ("_partition", partitionString(f))
-              case "_file" => ("_file", path)
-              case "_pos" => ("_pos", null: String)
-              // ROW LINEAGE: first_row_id constant per file (null when the
-              // file predates lineage) — the reader adds the row index
-              case "_row_id" =>
-                ("_row_id", f.firstRowId.map(_.toString).orNull)
-              case "_last_updated_sequence_number" =>
-                ("_last_updated_sequence_number", table.dataSequenceOf(f).toString)
-            },
-            deleteFiles)
-        })
+      val stateByKey = files.map { f =>
+        val path = table.resolvePath(f.filePath)
+        val key = ScanBridge.morKey(path)
+        val deleteFiles = (dvsByKey.getOrElse(key, Nil) ++
+          carriers.filter(d => deleteMayApply(d, f)))
+          .map(d => table.resolvePath(d.filePath)).distinct.toArray
+        key -> new ScanBridge.MorFile(table.dataSequenceOf(f),
+          metaCols.map {
+            case "_partition" => ("_partition", partitionString(f))
+            case "_file" => ("_file", path)
+            case "_pos" => ("_pos", null: String)
+            // ROW LINEAGE: first_row_id constant per file (null when the
+            // file predates lineage) — the reader adds the row index
+            case "_row_id" =>
+              ("_row_id", f.firstRowId.map(_.toString).orNull)
+            case "_last_updated_sequence_number" =>
+              ("_last_updated_sequence_number", table.dataSequenceOf(f).toString)
+          },
+          posDeleteFiles = deleteFiles)
+      }.toMap
+      ScanBridge.morPartitions(delegate.planInputPartitions(), stateByKey)
     case None => delegate.planInputPartitions()
   }
 

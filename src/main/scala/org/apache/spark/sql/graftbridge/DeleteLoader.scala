@@ -4,14 +4,17 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** TASK-SIDE loading of Iceberg v2/v3 delete-file state — the one
-  * merge-on-read delete path. Scan partitions carry only the PATHS of the
-  * delete files that may overlap their data file, plus metadata-only
-  * equality-delete specs; each task loads its own positions and key sets
+  * merge-on-read delete path. Each member file of a scan partition
+  * carries only the PATHS of the delete files that may overlap it, plus
+  * metadata-only equality-delete specs; each task loads its own positions
+  * and key sets
   * here — the same shape as Iceberg-java's per-task `DeleteFilter` /
   * `BaseDeleteLoader` (reference: daskberg only reads; its scans never
   * carry deletes at all). The driver never materializes a position or a
@@ -25,7 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * tiny schemas (file_path+pos, or the equality key columns), so the
   * non-vectorized reader is not a hot path. They read through the Hadoop
   * conf the scan's parquet reader factory already broadcasts
-  * ([[ScanBridge.broadcastConfOf]]): no second copy or broadcast per scan.
+  * ([[ScanBridge.broadcastConfOf]]): no second copy or broadcast per scan,
+  * and no default `Configuration` per delete file ([[openGroups]]).
   */
 object DeleteLoader {
 
@@ -73,9 +77,15 @@ object DeleteLoader {
     cache.clear(); totalBytes = 0L
   }
 
+  /** A reader over one delete file that reads through `conf` alone.
+    * `ParquetReader.builder(readSupport, path)` would first build a default
+    * `Configuration` (parsing core-default.xml and core-site.xml) that
+    * `withConf` then discards; the input-file constructor takes the conf
+    * from the file and creates none. */
   private def openGroups(path: String, conf: Configuration): ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(path))
-      .withConf(conf).build()
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new Path(path), conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+    }.build()
 
   /** Decode ONE position-delete parquet into positions grouped by
     * [[ScanBridge.morKey]] of the target data file — the whole file decodes

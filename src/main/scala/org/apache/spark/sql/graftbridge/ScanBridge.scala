@@ -8,7 +8,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
-import org.apache.spark.sql.execution.datasources.{PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.connector.read.Batch
 import org.apache.spark.sql.execution.datasources.v2.orc.OrcScan
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
@@ -65,7 +65,7 @@ object ScanBridge {
     * need the whole value co-located. */
   final class KeyedFilePartition(
       key: InternalRow,
-      private[graftbridge] val underlying: org.apache.spark.sql.execution.datasources.FilePartition)
+      private[graftbridge] val underlying: FilePartition)
     extends InputPartition with HasPartitionKey {
     override def partitionKey(): InternalRow = key
     override def preferredLocations(): Array[String] = underlying.preferredLocations()
@@ -78,8 +78,7 @@ object ScanBridge {
       index: Int,
       key: InternalRow,
       files: Seq[(String, Long)]): InputPartition = {
-    new KeyedFilePartition(key, org.apache.spark.sql.execution.datasources.FilePartition(
-      index, wholeFiles(hadoopConf, files).toArray))
+    new KeyedFilePartition(key, FilePartition(index, wholeFiles(hadoopConf, files).toArray))
   }
 
   /** Reader factory that unwraps [[KeyedFilePartition]] before delegating to
@@ -185,12 +184,13 @@ object ScanBridge {
     }
   }
 
-  /** MERGE-ON-READ input partition: one data file, its commit sequence (for
-    * equality-delete scoping) and the delete state that applies to it —
-    * delete-file PATHS and metadata-only equality specs, never positions
-    * or key sets. The task loads that state itself through
-    * [[DeleteLoader]] (per-JVM cached), so the driver's footprint is
-    * O(delete files), whatever the number of deleted rows.
+  /** The merge-on-read state of ONE data file: its commit sequence (for
+    * equality-delete scoping), its requested metadata-column values and
+    * the delete state that applies to it — delete-file PATHS and
+    * metadata-only equality specs, never positions or key sets. The task
+    * loads that state itself through [[DeleteLoader]] (per-JVM cached), so
+    * the driver's footprint is O(delete files), whatever the number of
+    * deleted rows.
     *
     *  - `posDeleteFiles`: position/DV carriers whose positions are
     *    excluded.
@@ -198,23 +198,33 @@ object ScanBridge {
     *    ONLY the rows at positions these files hold and
     *    `selectMinusDeleteFiles` (the parent-visible ones) do not: the rows
     *    a position-delete commit removed.
-    *  - `ownEqSpecs` (CDC): this partition's own equality visibility, in
-    *    place of the factory's specs.
+    *  - `ownEqSpecs` (CDC): this file's own equality visibility, in place
+    *    of the factory's specs.
     *  - `selectEqSpecs` (CDC): emit only rows matching at least one of
     *    these files' keys — the rows an equality-delete commit removed. */
-  final class MorFilePartition(
+  final class MorFile(
       private[graftbridge] val dataSeq: Long,
       /** Requested metadata columns as per-file values, in projection
         * order: `_partition`/`_file` carry the string constant, `_pos` a
         * null (the reader wires it to the materialized row index), and
         * `_commit_snapshot_id` a long rendered as a string. */
       private[graftbridge] val metaValues: Seq[(String, String)],
-      private[graftbridge] val underlying: org.apache.spark.sql.execution.datasources.FilePartition,
       private[graftbridge] val posDeleteFiles: Array[String] = null,
       private[graftbridge] val selectPosDeleteFiles: Array[String] = null,
       private[graftbridge] val selectMinusDeleteFiles: Array[String] = null,
       private[graftbridge] val ownEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null,
       private[graftbridge] val selectEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null)
+    extends Serializable
+
+  /** MERGE-ON-READ input partition: one Spark [[FilePartition]] — several
+    * small files packed into one task, or one split of a large file — and
+    * `members(i)`, the [[MorFile]] state of `underlying.files(i)`. Each
+    * member keeps its own deletes; the two splits of one file carry the
+    * same state (the row index is file-relative, so a split needs no
+    * special case). */
+  final class MorFilePartition(
+      private[graftbridge] val underlying: FilePartition,
+      private[graftbridge] val members: Array[MorFile])
     extends InputPartition {
     override def preferredLocations(): Array[String] = underlying.preferredLocations()
   }
@@ -223,21 +233,20 @@ object ScanBridge {
     * handle per distinct scheme — no per-file I/O, makeQualified is pure
     * URI work. */
   private def wholeFiles(hadoopConf: Configuration, files: Seq[(String, Long)])
-      : Seq[org.apache.spark.sql.execution.datasources.PartitionedFile] = {
+      : Seq[PartitionedFile] = {
     val fsCache = mutable.Map.empty[String, org.apache.hadoop.fs.FileSystem]
     files.map { case (p, len) =>
       val raw = new Path(p)
       val fs = fsCache.getOrElseUpdate(
         Option(raw.toUri.getScheme).getOrElse(""), raw.getFileSystem(hadoopConf))
-      org.apache.spark.sql.execution.datasources.PartitionedFile(
-        InternalRow.empty,
+      PartitionedFile(InternalRow.empty,
         org.apache.spark.paths.SparkPath.fromPath(fs.makeQualified(raw)),
         0, len, Array.empty, 0L, len)
     }
   }
 
-  /** One CDC partition over one data file — see [[MorFilePartition]] for
-    * the semantics of the optional delete state. */
+  /** One CDC partition over one whole data file: a single-member
+    * [[MorFilePartition]]. */
   def cdcPartition(
       hadoopConf: Configuration,
       index: Int,
@@ -250,30 +259,28 @@ object ScanBridge {
       selectMinusDeleteFiles: Array[String] = null,
       ownEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null,
       selectEqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = null): InputPartition =
-    new MorFilePartition(dataSeq, metaValues,
-      org.apache.spark.sql.execution.datasources.FilePartition(index,
-        wholeFiles(hadoopConf, Seq(path -> len)).toArray),
-      posDeleteFiles, selectPosDeleteFiles, selectMinusDeleteFiles,
-      ownEqSpecs, selectEqSpecs)
+    new MorFilePartition(
+      FilePartition(index, wholeFiles(hadoopConf, Seq(path -> len)).toArray),
+      Array(new MorFile(dataSeq, metaValues, posDeleteFiles, selectPosDeleteFiles,
+        selectMinusDeleteFiles, ownEqSpecs, selectEqSpecs)))
 
-  /** One [[MorFilePartition]] per data file, carrying the position-delete
-    * files that may overlap it. No splits: position deletes group per file
-    * (row index would stay valid under splits, but every split task would
-    * load the same file's positions). */
-  def morPartitions(
-      hadoopConf: Configuration,
-      // (path, size, data sequence, metadata column values, delete files)
-      files: Seq[(String, Long, Long, Seq[(String, String)], Array[String])])
+  /** The batch scan's MOR partitions: the layout Spark's parquet scan
+    * planned for the same files (`packed`, its [[FilePartition]]s: small
+    * files packed into one task and large ones split, under
+    * `spark.sql.files.maxPartitionBytes` / `openCostInBytes` /
+    * `minPartitionNum`), each member paired with its data file's state,
+    * looked up by [[morKey]]. */
+  def morPartitions(packed: Array[InputPartition], stateOf: String => MorFile)
       : Array[InputPartition] =
-    wholeFiles(hadoopConf, files.map(f => f._1 -> f._2)).zip(files).zipWithIndex.map {
-      case ((pf, (_, _, seq, metaValues, deleteFiles)), i) =>
-        new MorFilePartition(seq, metaValues,
-          org.apache.spark.sql.execution.datasources.FilePartition(i, Array(pf)),
-          posDeleteFiles = deleteFiles): InputPartition
-    }.toArray
+    packed.map { p =>
+      val fp = p.asInstanceOf[FilePartition]
+      new MorFilePartition(fp,
+        fp.files.map(f => stateOf(morKey(f.filePath.toPath.toString)))): InputPartition
+    }
 
   /** MERGE-ON-READ reader factory. The scan appends [[rowIndexField]] to the
-    * delegate's read schema; this factory loads each partition's delete
+    * delegate's read schema; this factory reads a [[MorFilePartition]]'s
+    * members one file (or split) at a time, loads each member's delete
     * state in the task ([[DeleteLoader]]), filters deleted positions
     * against the materialized row index and equality keys against the
     * row, and projects the extra columns back out, so deleted rows never
@@ -285,9 +292,9 @@ object ScanBridge {
     * carries ([[broadcastConfOf]]), so a scan copies and broadcasts its
     * conf once. The cache budget is `spark.graft.iceberg.deleteCacheBytes`.
     *
-    * COLUMNAR under position and equality deletes: delete-free partitions
+    * COLUMNAR under position and equality deletes: delete-free members
     * pass batches through (the trailing index vector dropped, zero copy);
-    * deleted-from partitions wrap each batch's vectors in a SELECTION view
+    * deleted-from members wrap each batch's vectors in a SELECTION view
     * that skips deleted rows — the whole scan stays vectorized instead of
     * one deleted file de-vectorizing everything. Only requested metadata
     * columns or CDC partitions drop the scan to row-based readers
@@ -298,8 +305,8 @@ object ScanBridge {
       readWidth: Int, // total columns the delegate produces (incl. extras)
       columnarCapable: Boolean,
       conf: Broadcast[SerializableConfiguration],
-      /** Equality-delete files every partition without its own
-        * `ownEqSpecs` applies, sequence-scoped per data file. */
+      /** Equality-delete files every member without its own `ownEqSpecs`
+        * applies, sequence-scoped per data file. */
       eqSpecs: Array[DeleteLoader.EqDeleteFileSpec] = Array.empty,
       /** Maps each `requiredSchema` field to its ordinal in the delegate
         * row; null = identity prefix (the batch-scan layout). The CDC
@@ -339,40 +346,39 @@ object ScanBridge {
 
     private def width = requiredSchema.length
 
-    private def positionsIn(files: Array[String], m: MorFilePartition): Array[Long] =
-      DeleteLoader.positionsFor(files,
-        morKey(m.underlying.files.head.filePath.toPath.toString),
+    private def positionsIn(files: Array[String], file: FilePartition): Array[Long] =
+      DeleteLoader.positionsFor(files, morKey(file.files.head.filePath.toPath.toString),
         conf.value.value, deleteCacheBytes)
 
     private def groupsOf(specs: Array[DeleteLoader.EqDeleteFileSpec],
-        m: MorFilePartition): Array[EqDeleteGroup] =
-      specs.filter(_.seq > m.dataSeq).map(s =>
-        DeleteLoader.eqGroupFor(s, conf.value.value, deleteCacheBytes))
+        s: MorFile): Array[EqDeleteGroup] =
+      specs.filter(_.seq > s.dataSeq).map(spec =>
+        DeleteLoader.eqGroupFor(spec, conf.value.value, deleteCacheBytes))
 
-    /** Sorted deleted positions of one partition's data file. */
-    private def deletedOf(m: MorFilePartition): Array[Long] =
-      if (m.posDeleteFiles == null) Array.emptyLongArray
-      else positionsIn(m.posDeleteFiles, m)
+    /** Sorted deleted positions of one member's data file. */
+    private def deletedOf(file: FilePartition, s: MorFile): Array[Long] =
+      if (s.posDeleteFiles == null) Array.emptyLongArray
+      else positionsIn(s.posDeleteFiles, file)
 
-    /** Selection positions of one CDC partition (null = not selecting): the
+    /** Selection positions of one CDC member (null = not selecting): the
       * new commit's positions minus the parent-visible ones. */
-    private def selectOf(m: MorFilePartition): Array[Long] =
-      if (m.selectPosDeleteFiles == null) null
+    private def selectOf(file: FilePartition, s: MorFile): Array[Long] =
+      if (s.selectPosDeleteFiles == null) null
       else {
-        val sel = positionsIn(m.selectPosDeleteFiles, m)
-        val minus = if (m.selectMinusDeleteFiles == null) Array.emptyLongArray
-          else positionsIn(m.selectMinusDeleteFiles, m)
+        val sel = positionsIn(s.selectPosDeleteFiles, file)
+        val minus = if (s.selectMinusDeleteFiles == null) Array.emptyLongArray
+          else positionsIn(s.selectMinusDeleteFiles, file)
         if (minus.isEmpty) sel
         else sel.filter(x => java.util.Arrays.binarySearch(minus, x) < 0)
       }
 
-    /** Exclusion groups of one partition: a CDC partition's own visibility,
-      * else the factory's specs (empty on the CDC factory, so CDC inserts
+    /** Exclusion groups of one member: a CDC member's own visibility, else
+      * the factory's specs (empty on the CDC factory, so CDC inserts
       * inherit nothing). Specs prune by COMMIT SEQUENCE before loading — an
       * equality-delete file at or below this data file's sequence can never
       * apply, so the task never pays its decode or cache space. */
-    private def exclGroupsOf(m: MorFilePartition): Array[EqDeleteGroup] =
-      groupsOf(if (m.ownEqSpecs != null) m.ownEqSpecs else eqSpecs, m)
+    private def exclGroupsOf(s: MorFile): Array[EqDeleteGroup] =
+      groupsOf(if (s.ownEqSpecs != null) s.ownEqSpecs else eqSpecs, s)
 
     // one probe projection per group: bound to the group's key ordinals
     // in the widened row, writing into a REUSED UnsafeRow buffer —
@@ -399,9 +405,37 @@ object ScanBridge {
       false
     }
 
+    /** Reads `m`'s members one after another, opening each member's reader
+      * — over a partition of its file (or split) alone — only when the
+      * previous one is exhausted. */
+    private def concat[T](m: MorFilePartition,
+        open: (FilePartition, MorFile) => PartitionReader[T]): PartitionReader[T] =
+      new PartitionReader[T] {
+        private var at = 0
+        private var current: PartitionReader[T] = null
+        override def next(): Boolean = {
+          while (current != null || at < m.members.length) {
+            if (current == null) {
+              current = open(FilePartition(m.underlying.index, Array(m.underlying.files(at))),
+                m.members(at))
+              at += 1
+            }
+            if (current.next()) return true
+            current.close()
+            current = null
+          }
+          false
+        }
+        override def get(): T = current.get()
+        override def close(): Unit = if (current != null) {
+          current.close()
+          current = null
+        }
+      }
+
     // Spark rejects scans mixing row-based and columnar PARTITIONS, so this
     // must not depend on the partition's deletes — the selection wrapper
-    // keeps deleted-from partitions on the batch path too.
+    // keeps deleted-from members on the batch path too.
     override def supportColumnarReads(p: InputPartition): Boolean = p match {
       case m: MorFilePartition =>
         columnarCapable && delegate.supportColumnarReads(m.underlying)
@@ -410,19 +444,24 @@ object ScanBridge {
 
     override def createColumnarReader(
         p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-      val m = p.asInstanceOf[MorFilePartition]
-      val deleted = deletedOf(m) // sorted
+      concat(p.asInstanceOf[MorFilePartition], columnarMember)
+    }
+
+    private def columnarMember(file: FilePartition, s: MorFile)
+        : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      val deleted = deletedOf(file, s) // sorted
       // EQUALITY deletes stay columnar too: the key probe is inherently
       // per-row (a hash-set lookup), but it only computes a SELECTION —
       // the batch's vectors are never copied, and downstream operators
       // keep the vectorized path
-      val applicable = exclGroupsOf(m)
+      val applicable = exclGroupsOf(s)
       val probes = probesOf(applicable)
       ScanBridge.morDataFileOpens.incrementAndGet()
-      val inner = delegate.createColumnarReader(m.underlying)
+      val inner = delegate.createColumnarReader(file)
       new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-        // deleted positions and batch row indexes are both ascending: one
-        // monotone cursor per partition, never a per-row binary search
+        // deleted positions and batch row indexes are both ascending within
+        // a file or split: one monotone cursor per member, never a per-row
+        // binary search
         private var delCursor = 0
         override def next(): Boolean = inner.next()
         override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
@@ -463,14 +502,77 @@ object ScanBridge {
 
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
       val m = p.asInstanceOf[MorFilePartition]
-      val deleted = deletedOf(m) // sorted
+      // every member requests the same metadata columns: one projection
+      // serves the whole task, reading the member's values from its own
+      // row joined after the delegate row (never from per-file literals,
+      // which would generate a new class per file)
+      val project = projectionOf(m.members.head.metaValues.map(_._1))
+      concat(m, (file, s) => rowMember(file, s, project))
+    }
+
+    /** Projects a delegate row joined with its member's [[metaRow]] to the
+      * scan's output. The delegate row is requiredSchema + eq-key columns
+      * + row-index (appended in that order); the extras are projected out
+      * — ordinals 0..n-1 are the required fields unless an ordinalMap
+      * repositions them. Requested metadata columns append after: string
+      * constants per file, `_pos` wired to the row index,
+      * `_commit_snapshot_id` as a long. */
+    private def projectionOf(metaNames: Seq[String])
+        : org.apache.spark.sql.catalyst.expressions.UnsafeProjection = {
+      import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Expression}
+      val idxOrdinal = readWidth - 1
+      val rowIndex = BoundReference(idxOrdinal, LongType, nullable = true)
+      def meta(j: Int, t: org.apache.spark.sql.types.DataType) =
+        BoundReference(readWidth + j, t, nullable = true)
+      // ROW LINEAGE: prefer the file's MATERIALIZED per-row value
+      // (compacted files carry one under the reserved field id); fall back
+      // to the inherited value
+      def lineage(materialized: Int, inherited: Expression): Expression =
+        if (lineageCols == 0) inherited
+        else Coalesce(Seq(BoundReference(materialized, LongType, nullable = true), inherited))
+      val exprs: Seq[Expression] =
+        requiredSchema.fields.zipWithIndex.map { case (f, i) =>
+          BoundReference(if (ordinalMap == null) i else ordinalMap(i), f.dataType, f.nullable)
+        }.toSeq ++
+          metaNames.zipWithIndex.map {
+            case ("_pos", _) => rowIndex
+            // first_row_id + row index — which ASSIGNS ids to rewritten rows
+            // that never had one, the spec's lazy rule; null for pre-lineage
+            // files with nothing to inherit
+            case ("_row_id", j) =>
+              lineage(readWidth - 1 - lineageCols, Add(meta(j, LongType), rowIndex))
+            case ("_last_updated_sequence_number", j) =>
+              lineage(readWidth - lineageCols, meta(j, LongType))
+            case ("_commit_snapshot_id", j) => meta(j, LongType)
+            case ("_commit_timestamp", j) => // micros since epoch
+              meta(j, org.apache.spark.sql.types.TimestampType)
+            case (_, j) => meta(j, org.apache.spark.sql.types.StringType)
+          }
+      org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
+    }
+
+    /** One member's metadata-column values in catalyst form, in the order
+      * [[projectionOf]] reads them. */
+    private def metaRow(s: MorFile): InternalRow =
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        s.metaValues.map[Any] {
+          case (_, null) | ("_pos", _) => null
+          case ("_row_id" | "_last_updated_sequence_number" | "_commit_snapshot_id" |
+              "_commit_timestamp", v) => v.toLong
+          case (_, v) => org.apache.spark.unsafe.types.UTF8String.fromString(v)
+        }.toArray)
+
+    private def rowMember(file: FilePartition, s: MorFile,
+        project: org.apache.spark.sql.catalyst.expressions.UnsafeProjection)
+        : PartitionReader[InternalRow] = {
+      val deleted = deletedOf(file, s) // sorted
       // equality deletes apply only to files committed strictly earlier;
-      // CDC partitions may carry their own (parent-visibility) specs
-      val applicable = exclGroupsOf(m)
+      // CDC members may carry their own (parent-visibility) specs
+      val applicable = exclGroupsOf(s)
       val selecting =
-        if (m.selectEqSpecs == null) null else groupsOf(m.selectEqSpecs, m)
-      val selectPos = selectOf(m) // sorted, or null
-      // a selection partition whose selection resolved EMPTY emits nothing:
+        if (s.selectEqSpecs == null) null else groupsOf(s.selectEqSpecs, s)
+      val selectPos = selectOf(file, s) // sorted, or null
+      // a selection member whose selection resolved EMPTY emits nothing:
       // answer from the (cached) delete-file reads alone and never open the
       // data parquet (plan-time referenced-file bounds prune what metadata
       // can prove; any partition planned conservatively costs only this)
@@ -484,64 +586,9 @@ object ScanBridge {
         }
       }
       ScanBridge.morDataFileOpens.incrementAndGet()
-      val inner = delegate.createReader(m.underlying)
-      // the delegate row is requiredSchema + eq-key columns + row-index
-      // (appended in that order); project the extras out — ordinals
-      // 0..n-1 are the required fields unless an ordinalMap repositions
-      // them. Requested metadata columns append after: string constants
-      // per file, `_pos` wired to the row index, `_commit_snapshot_id`
-      // as a long.
+      val inner = delegate.createReader(file)
       val idxOrdinal = readWidth - 1
-      val exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-        requiredSchema.fields.zipWithIndex.map { case (f, i) =>
-          org.apache.spark.sql.catalyst.expressions.BoundReference(
-            if (ordinalMap == null) i else ordinalMap(i), f.dataType, f.nullable)
-        }.toSeq ++
-          m.metaValues.map {
-            case ("_pos", _) =>
-              org.apache.spark.sql.catalyst.expressions.BoundReference(
-                idxOrdinal, LongType, nullable = true)
-            // ROW LINEAGE: prefer the file's MATERIALIZED per-row value
-            // (compacted files carry one under the reserved field id);
-            // fall back to first_row_id + row index — which ASSIGNS ids to
-            // rewritten rows that never had one, the spec's lazy rule.
-            // Null constant for pre-lineage files with nothing to inherit.
-            case ("_row_id", v) =>
-              val inherited: org.apache.spark.sql.catalyst.expressions.Expression =
-                if (v == null)
-                  org.apache.spark.sql.catalyst.expressions.Literal(null, LongType)
-                else org.apache.spark.sql.catalyst.expressions.Add(
-                  org.apache.spark.sql.catalyst.expressions.Literal(v.toLong, LongType),
-                  org.apache.spark.sql.catalyst.expressions.BoundReference(
-                    idxOrdinal, LongType, nullable = true))
-              if (lineageCols == 0) inherited
-              else org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
-                org.apache.spark.sql.catalyst.expressions.BoundReference(
-                  readWidth - 1 - lineageCols, LongType, nullable = true),
-                inherited))
-            case ("_last_updated_sequence_number", v) =>
-              val inherited: org.apache.spark.sql.catalyst.expressions.Expression =
-                org.apache.spark.sql.catalyst.expressions.Literal(
-                  if (v == null) null else v.toLong, LongType)
-              if (lineageCols == 0) inherited
-              else org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
-                org.apache.spark.sql.catalyst.expressions.BoundReference(
-                  readWidth - lineageCols, LongType, nullable = true),
-                inherited))
-            case ("_commit_snapshot_id", v) =>
-              org.apache.spark.sql.catalyst.expressions.Literal(v.toLong, LongType)
-            case ("_commit_timestamp", v) => // micros since epoch
-              org.apache.spark.sql.catalyst.expressions.Literal(v.toLong,
-                org.apache.spark.sql.types.TimestampType)
-            case (_, v) =>
-              org.apache.spark.sql.catalyst.expressions.Literal(
-                if (v == null) null
-                else org.apache.spark.unsafe.types.UTF8String.fromString(v),
-                org.apache.spark.sql.types.StringType)
-          }
-      val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(exprs)
-
+      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow(null, metaRow(s))
       val exclProbes = probesOf(applicable)
       val selProbes = if (selecting == null) null else probesOf(selecting)
 
@@ -550,6 +597,7 @@ object ScanBridge {
         override def next(): Boolean = {
           while (inner.next()) {
             val r = inner.get()
+            // binary search, not a cursor: correct for any row order
             val pos = if (deleted.isEmpty && selectPos == null) -1L
               else r.getLong(idxOrdinal)
             val posLive = deleted.isEmpty ||
@@ -559,7 +607,7 @@ object ScanBridge {
             val eqLive = applicable.isEmpty || !matchesAny(applicable, exclProbes, r)
             val eqSelected = selecting == null || matchesAny(selecting, selProbes, r)
             if (posLive && posSelected && eqLive && eqSelected) {
-              current = project(r)
+              current = project(joined.withLeft(r))
               return true
             }
           }
@@ -608,6 +656,18 @@ object ScanBridge {
       children.computeIfAbsent(ordinal,
         o => new SelectedColumnVector(inner.getChild(o), sel))
   }
+
+  /** A DataFrame reading the DSv2 `table` as `spark.read...load(path)`
+    * would, but over this table object itself: the provider does not load
+    * the table a second time. */
+  def tableDataFrame(spark: SparkSession,
+      table: org.apache.spark.sql.connector.catalog.Table,
+      path: String): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None,
+        new CaseInsensitiveStringMap(java.util.Collections.singletonMap("path", path))))
 
   /** Build Spark's native parquet DSv2 scan (columnar batch reader, filter
     * pushdown to row groups/pages, vectorized decode) over a known file list.

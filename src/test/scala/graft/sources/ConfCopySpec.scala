@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions.{count, lit, sum}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.iceberg.{IcebergTable, IcebergWriter, Pruning, TaskFileWriter}
+import graft.iceberg.{CountingFileSystem, IcebergTable, IcebergWriter, Pruning, TaskFileWriter}
 
 /** Each Hadoop configuration is copied once for its owner: one per table
   * handle, one per scan, one broadcast per write job, none per metadata
-  * read, per planned partition or per written file. A copy is counted by
+  * read, per planned partition, per written file or per decoded delete
+  * file, and a read of a loaded handle does not load the table again. A
+  * copy is counted by
   * the growth of `Configuration`'s registry of live instances, with the
   * garbage collector drained first; a collection during the measured block
   * can only under-count, so the bounds are upper bounds. */
@@ -33,8 +35,8 @@ class ConfCopySpec extends AnyFunSuite {
     ids.map(i => (i.toLong, s"g${i % 4}", (i * 7 % 100).toLong)).toDF("id", "grp", "amt")
 
   /** A table in 4 identity partitions with live position deletes. */
-  private def morTable(): String = {
-    val url = java.nio.file.Files.createTempDirectory("graft_conf_copy").toString + "/t"
+  private def morTable(scheme: String = ""): String = {
+    val url = scheme + java.nio.file.Files.createTempDirectory("graft_conf_copy").toString + "/t"
     IcebergWriter.createTable(spark, url, schema, partitions = Seq("grp" -> "identity"))
     IcebergWriter.append(spark, url, rows(0 until 400))
     IcebergWriter.deleteRows(spark, url,
@@ -69,17 +71,46 @@ class ConfCopySpec extends AnyFunSuite {
   private def scans(df: DataFrame): Seq[BatchScanExec] =
     df.queryExecution.sparkPlan.collect { case s: BatchScanExec => s }
 
-  test("planning a MOR read-back of a partitioned table copies the conf at most 3 times") {
+  test("planning a MOR read-back of a loaded handle copies the conf at most 2 times " +
+      "and reads no table metadata") {
+    val confs = CountingFileSystem.Confs :+ ("fs.defaultFS" -> "counting:///")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val url = morTable("counting://")
+      val t = IcebergTable.load(spark, url)
+      assert(t.positionDeleteFiles.nonEmpty)
+      CountingFileSystem.reset()
+      val n = copies {
+        val df = t.readWhere(Pruning.AlwaysTrue).agg(count(lit(1)), sum("amt"))
+        val Seq(scan) = scans(df)
+        assert(scan.inputPartitions.nonEmpty)
+        scan.readerFactory
+      }
+      assert(n <= 2, s"planning made $n conf copies")
+      val metadataOpens = CountingFileSystem.calls
+        .filter(c => c.op == "open" && c.path.endsWith(".metadata.json"))
+      assert(metadataOpens.isEmpty, s"planning re-read table metadata: $metadataOpens")
+    } finally {
+      CountingFileSystem.reset()
+      confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
+  test("executing a MOR read-back of a partitioned table copies the conf at most 12 times") {
     val url = morTable()
     val t = IcebergTable.load(spark, url)
-    assert(t.positionDeleteFiles.nonEmpty)
-    val n = copies {
-      val df = t.readWhere(Pruning.AlwaysTrue).agg(count(lit(1)), sum("amt"))
-      val Seq(scan) = scans(df)
-      assert(scan.inputPartitions.nonEmpty)
-      scan.readerFactory
+    val live = (0 until 400).map(i => (i % 4, i * 7 % 100)).filterNot { case (g, amt) =>
+      g == 1 && amt < 30
     }
-    assert(n <= 3, s"planning made $n conf copies")
+    // the tasks decode the delete file afresh, not from an earlier read
+    org.apache.spark.sql.graftbridge.DeleteLoader.clearForTest()
+    var got: Seq[(Long, Long)] = Nil
+    val n = copies {
+      got = t.readWhere(Pruning.AlwaysTrue).agg(count(lit(1)), sum("amt"))
+        .as[(Long, Long)].collect().toSeq
+    }
+    assert(n <= 12, s"the read-back made $n conf copies")
+    assert(got == Seq((live.size.toLong, live.map(_._2.toLong).sum)))
   }
 
   test("a 4-partition append copies the conf at most 4 times") {

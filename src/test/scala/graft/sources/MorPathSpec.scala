@@ -157,11 +157,15 @@ class MorPathSpec extends AnyFunSuite {
   test("planning a MOR scan runs no Spark job; its reader factory is small") {
     val url = java.nio.file.Files.createTempDirectory("graft_mor_plan").toString + "/t"
     v2Table(url)
-    val df = IcebergTable.load(spark, url).read()
+    val t = IcebergTable.load(spark, url)
+    val deleteFree = spark.read.parquet(t.liveFiles().map(f => t.resolvePath(f.filePath)): _*)
+      .rdd.getNumPartitions
+    val df = t.read()
     var factory: AnyRef = null
     val jobs = jobsDuring {
       val Seq(scan) = scans(df)
-      assert(scan.inputPartitions.size == 3, "one partition per data file")
+      assert(scan.inputPartitions.size == deleteFree,
+        "equals the delete-free layout of the same files")
       factory = scan.readerFactory
     }
     assert(jobs == 0, s"planning ran $jobs Spark job(s)")
