@@ -1652,7 +1652,11 @@ object IcebergWriter {
     * Spark caches generated classes per session class loader, so a fresh
     * `newSession()` per call would recompile the same plans every time. */
   private[iceberg] def withFieldIdRead[T](spark: SparkSession)(body: SparkSession => T): T = {
-    val scoped = fieldIdSessions.computeIfAbsent(spark, _.newSession())
+    val scoped = fieldIdSessions.computeIfAbsent(spark, { caller =>
+      val s = caller.newSession()
+      IcebergTable.FieldIdReadOptions.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    })
     // newSession() builds SessionState from the context conf plus builder
     // options only — runtime confs the caller set later (session timezone,
     // ANSI mode, case sensitivity, shuffle partitions) would be silently
@@ -1664,18 +1668,19 @@ object IcebergWriter {
     // (e.g. dvDriverBytesLimit picks the executor-side puffin mode) and
     // MUST survive into the scoped session; so must non-Spark keys (the
     // session's Hadoop filesystem settings, e.g. `fs.<scheme>.impl` or
-    // object-store credentials), or the scoped reads cannot open the table
-    def mirrored(k: String): Boolean =
-      k.startsWith("spark.graft.") || !k.startsWith("spark.") || scoped.conf.isModifiable(k)
+    // object-store credentials), or the scoped reads cannot open the table.
+    // The forced field-id keys are never mirrored: concurrent calls share
+    // the scoped session, and another call's scan may be planning in it, so
+    // it must never hold the caller's value of them, even for a moment
+    def mirrored(k: String): Boolean = !IcebergTable.FieldIdReadOptions.contains(k) &&
+      (k.startsWith("spark.graft.") || !k.startsWith("spark.") || scoped.conf.isModifiable(k))
     val caller = spark.conf.getAll
     scoped.conf.getAll.keys.foreach { k =>
-      if (!caller.contains(k) && !IcebergTable.FieldIdReadOptions.contains(k) && mirrored(k))
-        scoped.conf.unset(k)
+      if (!caller.contains(k) && mirrored(k)) scoped.conf.unset(k)
     }
     caller.foreach { case (k, v) =>
       if (mirrored(k) && scoped.conf.getOption(k) != Some(v)) scoped.conf.set(k, v)
     }
-    IcebergTable.FieldIdReadOptions.foreach { case (k, v) => scoped.conf.set(k, v) }
     body(scoped)
   }
 

@@ -868,8 +868,10 @@ final class GraftIcebergScan(
   override def filter(runtimeFilters: Array[Filter]): Unit = {
     val pred = runtimeFilters.flatMap(Pruning.fromSparkFilter)
       .reduceOption(Pruning.And.apply).getOrElse(Pruning.AlwaysTrue)
-    if (pred != Pruning.AlwaysTrue)
-      files = files.filter(f => table.fileMightMatchOwnSpec(pred, f))
+    if (pred != Pruning.AlwaysTrue) {
+      val kept = files.filter(f => table.fileMightMatchOwnSpec(pred, f))
+      if (kept.size != files.size) files = kept
+    }
   }
 
   /** STREAMING read: `spark.readStream.format("graft-iceberg")` tails the
@@ -905,10 +907,10 @@ final class GraftIcebergScan(
 
   /** Merge-on-read machinery engages for position/equality deletes AND for
     * metadata columns (their per-file values ride the same per-file
-    * partitions + projecting reader). When present, deletes make the scan
-    * plan one task per data file, have the parquet reader materialize the
-    * per-file row index, and filter in a wrapping reader — deleted rows
-    * never leave the scan. */
+    * partitions + projecting reader). When present, the scan pairs each
+    * file of Spark's task layout with its delete state, has the parquet
+    * reader materialize the per-file row index, and filters in a wrapping
+    * reader — deleted rows never leave the scan. */
   private def morMode: Boolean =
     table.positionDeleteFiles.nonEmpty || eqDeleteFiles.nonEmpty || metaCols.nonEmpty
 
@@ -958,7 +960,7 @@ final class GraftIcebergScan(
 
   /** Foreign-written AVRO data files in this scan (same interop contract
     * as ORC: no row-level deletes / metadata columns over them). */
-  private lazy val avroFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
+  private def avroFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
     files.filter(_.fileFormat.equalsIgnoreCase("AVRO"))
 
   /** Snapshots that imported foreign files (addFiles/importParquetDir stamp
@@ -981,18 +983,18 @@ final class GraftIcebergScan(
       (f.snapshotId.exists(importSnapshotIds) ||
         !table.resolvePath(f.filePath).contains("/data/"))
 
-  private lazy val foreignParquetFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
+  private def foreignParquetFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
     files.filter(isForeignParquet)
 
   /** Foreign-written ORC data files in this scan. Row-level deletes and
     * metadata columns need the per-file row index, which only Spark's
     * parquet readers materialize — those scans refuse ORC loudly. */
-  private lazy val orcFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
+  private def orcFiles: Seq[graft.iceberg.Manifests.DataFileInfo] =
     files.filter(_.fileFormat.equalsIgnoreCase("ORC"))
 
-  private def requireNoOrcUnderMor(): Unit = {
+  private def requireNoOrcUnderMor(): Unit = if (morMode) {
     val foreign = orcFiles ++ avroFiles ++ foreignParquetFiles
-    if (foreign.nonEmpty && morMode)
+    if (foreign.nonEmpty)
       throw new UnsupportedOperationException(
         s"${foreign.size} foreign data file(s) (ORC/AVRO/imported parquet) " +
           "cannot be scanned under row-level deletes or metadata columns; " +
@@ -1012,7 +1014,21 @@ final class GraftIcebergScan(
     c
   }
 
-  private lazy val delegate: Batch = {
+  /** The delegate batch and the file list it was built over. */
+  private var delegateOver: (Seq[graft.iceberg.Manifests.DataFileInfo], Batch) = _
+
+  /** Spark's own batch over the files this scan covers NOW: built on first
+    * use, and rebuilt when [[filter]] has narrowed `files` since. Spark
+    * forces the batch while planning (before runtime filters apply) and
+    * then re-plans the partitions over the narrowed scan, so a batch kept
+    * from before the filter would list, and read, every pruned file. */
+  private def delegate: Batch = synchronized {
+    if (delegateOver == null || !(delegateOver._1 eq files))
+      delegateOver = (files, buildDelegate())
+    delegateOver._2
+  }
+
+  private def buildDelegate(): Batch = {
     val spark = SparkSession.active
     requireNoOrcUnderMor()
     val readSchema = if (!morMode) requiredSchema else morReadSchema
@@ -1115,9 +1131,15 @@ final class GraftIcebergScan(
   override def planInputPartitions(): Array[InputPartition] = keyedLayout match {
     case Some(l) =>
       val spark = SparkSession.active
-      l.groups.zipWithIndex.map { case ((key, group), i) =>
-        ScanBridge.keyedPartition(spark, hconf, i, key,
-          group.map(f => (table.resolvePath(f.filePath), f.fileSizeInBytes)))
+      // the grouping is fixed when Spark first plans; a runtime filter may
+      // narrow `files` after that, so plan only the files it kept (Spark
+      // gives the keys left without files empty partitions)
+      val kept = files.iterator.map(_.filePath).toSet
+      l.groups.zipWithIndex.flatMap { case ((key, group), i) =>
+        val live = group.filter(f => kept(f.filePath))
+        if (live.isEmpty) None
+        else Some(ScanBridge.keyedPartition(spark, hconf, i, key,
+          live.map(f => (table.resolvePath(f.filePath), f.fileSizeInBytes))))
       }.toArray
     case None if morMode =>
       requireNoOrcUnderMor()

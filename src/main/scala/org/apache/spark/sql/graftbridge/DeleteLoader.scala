@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * A per-JVM, byte-bounded LRU cache keeps each delete file's decoded state
   * loaded ONCE per executor rather than once per task — on `local[32]` (and
   * on any multi-slot executor) the cost collapses to one read per delete
-  * file per JVM. Reads use parquet-hadoop's example model: delete files are
+  * file per JVM, also when several tasks ask for it at once. Reads use parquet-hadoop's example model: delete files are
   * tiny schemas (file_path+pos, or the equality key columns), so the
   * non-vectorized reader is not a hot path. They read through the Hadoop
   * conf the scan's parquet reader factory already broadcasts
@@ -46,16 +46,47 @@ object DeleteLoader {
     new java.util.LinkedHashMap[String, (AnyRef, Long)](64, 0.75f, true)
   private var totalBytes = 0L
 
+  /** Loads in progress, by key (guarded by `cache`): a task that misses
+    * while another task decodes the same delete file waits for that decode
+    * instead of repeating it. The tasks of one scan often need the same
+    * carrier at the same moment: every split of a large file, and every
+    * packed task of a partitioned table holding cross-partition carriers. */
+  private val loading =
+    new java.util.HashMap[String, java.util.concurrent.CompletableFuture[AnyRef]]()
+
   private def cached[T <: AnyRef](key: String, capBytes: Long)(
       load: => (T, Long)): T = {
-    cache.synchronized {
+    val (pending, owner) = cache.synchronized {
       val hit = cache.get(key)
       if (hit != null) return hit._1.asInstanceOf[T]
+      val inFlight = loading.get(key)
+      if (inFlight != null) (inFlight, false)
+      else {
+        val f = new java.util.concurrent.CompletableFuture[AnyRef]()
+        loading.put(key, f)
+        (f, true)
+      }
+    }
+    if (!owner) {
+      val loaded = try Some(pending.get()) catch {
+        // the other task's decode failed (or its task was killed): load here
+        case _: java.util.concurrent.ExecutionException => None
+      }
+      return loaded match {
+        case Some(v) => v.asInstanceOf[T]
+        case None => cached(key, capBytes)(load)
+      }
     }
     // load OUTSIDE the lock: a slow filesystem read must not serialize every
-    // scan task in the JVM (a rare duplicate load is benign)
-    val (value, bytes) = load
+    // scan task in the JVM, only the tasks that need this same file
+    val (value, bytes) = try load catch {
+      case t: Throwable =>
+        cache.synchronized(loading.remove(key))
+        pending.completeExceptionally(t)
+        throw t
+    }
     cache.synchronized {
+      loading.remove(key)
       cache.put(key, (value, bytes))
       totalBytes += bytes
       val it = cache.entrySet().iterator()
@@ -67,6 +98,7 @@ object DeleteLoader {
         }
       }
     }
+    pending.complete(value)
     value
   }
 

@@ -44,6 +44,23 @@ class FieldIdSessionSpec extends AnyFunSuite {
       "another caller gets its own scoped session")
   }
 
+  test("a caller's own field-id value never reaches the shared scoped session") {
+    val caller = spark.newSession()
+    caller.conf.set(FieldIdRead, "false")
+    val scoped = IcebergWriter.withFieldIdRead(caller)(identity)
+    assert(scoped.conf.get(FieldIdRead) == "true")
+    // another call's scan plans in the same scoped session while this one
+    // re-mirrors the caller's confs: the flag must read true throughout
+    @volatile var done = false
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val watcher = new Thread(() =>
+      while (!done) if (scoped.conf.get(FieldIdRead) != "true") seen.incrementAndGet())
+    watcher.start()
+    try (1 to 300).foreach(_ => IcebergWriter.withFieldIdRead(caller)(_ => ()))
+    finally { done = true; watcher.join() }
+    assert(seen.get == 0, s"the scoped session held the caller's value ${seen.get} times")
+  }
+
   test("a repeated deleteRows compiles no new class") {
     import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType(Seq(

@@ -147,6 +147,52 @@ class DistributedMorSpec extends AnyFunSuite {
     DeleteLoader.clearForTest()
   }
 
+  test("tasks asking for one delete file at once decode it once") {
+    val confs = graft.iceberg.CountingFileSystem.Confs :+ ("fs.defaultFS" -> "counting:///")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val url = "counting://" + freshTable
+      IcebergWriter.createTable(spark, url, schema)
+      IcebergWriter.append(spark, url,
+        (1L to 4000L).map(i => (i, s"c${i % 7}")).toDF("k", "cat").coalesce(1))
+      IcebergWriter.deleteRows(spark, url,
+        Pruning.Or(Pruning.Lt("k", 1500L), Pruning.GtEq("k", 2500L)))
+      val t = IcebergTable.load(spark, url)
+      val Seq(carrier) = t.positionDeleteFiles.map(d => t.resolvePath(d.filePath))
+      val Seq(dataKey) = t.liveFiles().map(f =>
+        org.apache.spark.sql.graftbridge.ScanBridge.morKey(t.resolvePath(f.filePath)))
+      val conf = spark.sessionState.newHadoopConf()
+      def opens(body: => Unit): Int = {
+        DeleteLoader.clearForTest()
+        graft.iceberg.CountingFileSystem.reset()
+        body
+        graft.iceberg.CountingFileSystem.calls
+          .count(c => c.op == "open" && carrier.endsWith(c.path))
+      }
+      // keys 1..1499 and 2500..4000
+      def deleted(): Int =
+        DeleteLoader.positionsFor(Array(carrier), dataKey, conf, 1L << 30).length
+      val alone = opens(assert(deleted() == 3000))
+      assert(alone >= 1)
+      val threads = 8
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try {
+        val together = opens {
+          val got = (1 to threads).map(_ => pool.submit(() => { start.await(); deleted() }))
+          start.countDown()
+          assert(got.map(_.get()).forall(_ == 3000))
+        }
+        assert(together == alone,
+          s"$threads concurrent loads opened the carrier $together times, one load $alone")
+      } finally pool.shutdown()
+    } finally {
+      DeleteLoader.clearForTest()
+      graft.iceberg.CountingFileSystem.reset()
+      confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
   test("per-JVM delete cache is populated by distributed scans") {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)
