@@ -1962,14 +1962,13 @@ object IceQueries {
     out
   }
 
-  /** Metadata-aggregate rewrite regression (the round-6 judge's HIGH
-    * finding): `min/max/count` over a BASE column must answer from manifest
-    * statistics (plan collapses to a LocalRelation — zero data I/O), while
-    * the same aggregate over an aliased computed column that SHADOWS the
-    * base name (`withColumn("k", k % 7).agg(min("k"))`) must fall through
-    * to a real scan — the rule resolves attributes against the relation
-    * output by exprId, never by name. Before the fix the shadowed query
-    * silently answered 10/50 from the base column's file bounds. */
+  /** Metadata-aggregate regression: `min/max` over a BASE column must
+    * answer from manifest statistics (the DSv2 aggregate pushdown plans a
+    * LocalTableScan — zero data I/O), while the same aggregate over an
+    * aliased computed column that SHADOWS the base name
+    * (`withColumn("k", k % 7).agg(min("k"))`) must fall through to a real
+    * scan: answering it from the base column's file bounds would return
+    * 10/50. */
   def iceStatsAgg(s: SparkSession, dir: String): DataFrame = {
     import graft.iceberg.{IcebergTable, IcebergWriter}
     import s.implicits._
@@ -1987,32 +1986,22 @@ object IceQueries {
          |  CAST(1 AS BIGINT) AS base_from_metadata,
          |  CAST(1 AS BIGINT) AS shadow_scans
          |FROM (${duckLiveRows(t, Seq("k"))})""".stripMargin
-    // the optimizer rule under test is builder-time configuration: swap in
-    // a session CARRYING the extension (same SparkContext), restore after
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-    try {
-      val base = ext.read.format("graft-iceberg").load(url)
-        .agg(min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-      val baseFromMeta =
-        if (base.queryExecution.optimizedPlan.toString.contains("LocalRelation")) 1L else 0L
-      val baseRow = base.collect().head
-      val shadow = ext.read.format("graft-iceberg").load(url)
-        .withColumn("k", pmod(col("k"), lit(7L)))
-        .agg(min(col("k")).as("min_shadow"), max(col("k")).as("max_shadow"))
-      val shadowScans =
-        if (shadow.queryExecution.optimizedPlan.toString.contains("LocalRelation")) 0L else 1L
-      val shadowRow = shadow.collect().head
-      Seq((baseRow.getLong(0), baseRow.getLong(1),
-          shadowRow.getLong(0), shadowRow.getLong(1), baseFromMeta, shadowScans))
-        .toDF("min_k", "max_k", "min_shadow", "max_shadow",
-          "base_from_metadata", "shadow_scans")
-    } finally {
-      SparkSession.setActiveSession(s)
-      SparkSession.setDefaultSession(s)
+    def fromMetadata(df: DataFrame): Boolean = {
+      val plan = df.queryExecution.executedPlan.toString
+      plan.contains("LocalTableScan") && !plan.contains("BatchScan")
     }
+    val base = s.read.format("graft-iceberg").load(url)
+      .agg(min(col("k")).as("min_k"), max(col("k")).as("max_k"))
+    val baseRow = base.collect().head
+    val shadow = s.read.format("graft-iceberg").load(url)
+      .withColumn("k", pmod(col("k"), lit(7L)))
+      .agg(min(col("k")).as("min_shadow"), max(col("k")).as("max_shadow"))
+    val shadowRow = shadow.collect().head
+    Seq((baseRow.getLong(0), baseRow.getLong(1), shadowRow.getLong(0),
+        shadowRow.getLong(1), if (fromMetadata(base)) 1L else 0L,
+        if (fromMetadata(shadow)) 0L else 1L))
+      .toDF("min_k", "max_k", "min_shadow", "max_shadow",
+        "base_from_metadata", "shadow_scans")
   }
 
   /** CDC-COMPLETE changelog: a snapshot range holding an append, a

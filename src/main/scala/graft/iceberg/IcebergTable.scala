@@ -40,33 +40,23 @@ final class IcebergTable private (
       * through the V2 source by THIS path: the filesystem version hint
       * knows nothing about catalog-committed versions. */
     private[graft] val loadedFrom: String = "",
-    /** When set (tables opened through a CATALOG), every write commit
-      * against this table instance must run inside this wrapper — it
-      * hands each commit's [[MetadataUpdate]] list to the catalog's atomic
-      * commit (e.g. a REST `CommitTableRequest`) instead of applying it to
-      * a filesystem `v{N+1}.metadata.json`. See
-      * [[IcebergWriter.withCatalogCommit]]. */
-    private[graft] val commitScope: Option[(() => Unit) => Unit] = None,
     /** The Hadoop configuration every metadata read and commit of this
       * handle goes through: copied from the session ONCE, when the table
       * is loaded, and shared by every view derived from it (time travel,
-      * commit scopes, incremental ranges). A later session-conf change
-      * reaches the next [[IcebergTable.load]], not this handle, as with an
-      * Iceberg-java catalog's `FileIO`. Never mutated. */
-    private[graft] val conf: Configuration) {
+      * incremental ranges). A later session-conf change reaches the next
+      * [[IcebergTable.load]], not this handle, as with an Iceberg-java
+      * catalog's `FileIO`. Never mutated. */
+    private[graft] val conf: Configuration,
+    /** How commits against this table reload it and publish: the
+      * filesystem's version-hint swap unless a catalog attached its own
+      * (see [[withOps]]). Derived views keep it. */
+    private[graft] val ops: TableOps) {
 
-  /** Run a write-commit body under this table's catalog-commit scope (a
-    * no-op pass-through for filesystem-cataloged tables). */
-  private[graft] def runCommit(body: => Unit): Unit = commitScope match {
-    case Some(f) => f(() => body)
-    case None => body
-  }
-
-  /** This table with commits routed through a catalog (see [[commitScope]]). */
-  private[graft] def withCommitScope(f: (() => Unit) => Unit): IcebergTable =
+  /** This table committing through a catalog's `ops`. */
+  private[graft] def withOps(o: TableOps): IcebergTable =
     new IcebergTable(spark, url, originalUrl, metadata, version,
       selectedSnapshotId, incrementalFromSnapshotId, rawMetadataJson,
-      loadedFrom, Some(f), conf)
+      loadedFrom, conf, o)
 
   /** Rewrite an absolute URI embedded in metadata to the current location
     * (`original_url` semantics, ice.py:40/169/192/247). */
@@ -105,7 +95,7 @@ final class IcebergTable private (
   /** Travel to an absolute snapshot id (`open_snapshot(snapshot_id=)`). */
   def atSnapshot(snapshotId: Long): IcebergTable = {
     require(snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
-    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope, conf = conf)
+    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, conf = conf, ops = ops)
   }
 
   /** Travel relative to latest: 0 = latest, −k walks k parents
@@ -117,7 +107,7 @@ final class IcebergTable private (
     for (_ <- 0 until -rel)
       snap = snapshots(snap.parentSnapshotId.getOrElse(
         throw new IllegalStateException("snapshot chain broken")))
-    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snap.snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope, conf = conf)
+    new IcebergTable(spark, url, originalUrl, metadata, version, Some(snap.snapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, conf = conf, ops = ops)
   }
 
   /** Snapshot ids on the PUBLISHED main line: the parent chain of the
@@ -234,7 +224,7 @@ final class IcebergTable private (
           s"'$op' operation as appends; read the full table at that point instead")
     }
     new IcebergTable(spark, url, originalUrl, metadata, version,
-      Some(toSnapshotId), Some(fromSnapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, commitScope = commitScope, conf = conf)
+      Some(toSnapshotId), Some(fromSnapshotId), rawMetadataJson = rawMetadataJson, loadedFrom = loadedFrom, conf = conf, ops = ops)
   }
 
   /** CDC-complete changelog of every snapshot in (from, to]: each row is a
@@ -815,10 +805,13 @@ final class IcebergTable private (
   }
 
   /** Rows of SPECIFIC live data files as visible at THIS view's snapshot:
-    * the DSv2 scan restricted by the `file-subset` option — field-id column
-    * resolution, position/equality deletes, and columnar reads apply exactly
-    * as in a full read. With `withMeta`, appends the `_file`/`_pos` metadata
-    * columns (per-row provenance for changelog delete matching). */
+    * the DSv2 scan over this handle (as [[readPred]], no reload) restricted
+    * by the `file-subset` option — field-id column resolution,
+    * position/equality deletes, and columnar reads apply exactly as in a
+    * full read, and the option keeps the aggregate pushdown from answering
+    * from the whole table's metadata. With `withMeta`, appends the
+    * `_file`/`_pos` metadata columns (per-row provenance for changelog
+    * delete matching). */
   private[graft] def readSubset(files: Seq[DataFileInfo],
       withMeta: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -829,12 +822,9 @@ final class IcebergTable private (
     }
     val keys = files.map(f =>
       org.apache.spark.sql.graftbridge.ScanBridge.morKey(rewrite(f.filePath)))
-    var reader = spark.read.format("graft-iceberg")
-    if (version > 0) reader = reader.option("version", version.toString)
-    if (originalUrl.nonEmpty) reader = reader.option("original-url", originalUrl)
-    reader = reader.option("snapshot-id", currentSnapshot.snapshotId.toString)
-    reader = reader.option("file-subset", keys.mkString("\n"))
-    val df = reader.load(url)
+    val df = org.apache.spark.sql.graftbridge.ScanBridge.tableDataFrame(spark,
+      new graft.sources.GraftIcebergV2Table(atSnapshot(currentSnapshot.snapshotId)), url,
+      Map("file-subset" -> keys.mkString("\n")))
     if (withMeta) df.select(col("*"), col("_file"), col("_pos")) else df
   }
 
@@ -1409,7 +1399,8 @@ object IcebergTable {
       }
     val md = TableMetadata.parse(metaJson)
     new IcebergTable(spark, url, originalUrl.getOrElse(md.location), md, ver, None,
-      rawMetadataJson = metaJson, loadedFrom = fromPath, conf = conf)
+      rawMetadataJson = metaJson, loadedFrom = fromPath, conf = conf,
+      ops = FileSystemOps(spark, url))
   }
 
   /** No Iceberg table at `url`: no metadata directory, or one holding

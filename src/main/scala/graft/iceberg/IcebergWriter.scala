@@ -25,13 +25,10 @@ import graft.iceberg.MetadataUpdate._
   * write tasks put each data file at its final path ([[TaskFileWriter]])
   * and report its record count and column lower/upper bounds from the
   * footer they just wrote, encoded as Iceberg single-value bytes; a new
-  * manifest (Avro, spec v1 layout) plus manifest list are written, and a
-  * new `vN.metadata.json` + `version-hint.text` commit the snapshot. Tables written here are readable
-  * by [[IcebergTable]] with working stats pruning, and the metadata layout
-  * follows the public Iceberg v1 spec.
-  *
-  * Single-writer semantics (no optimistic-concurrency loop) — commit safety
-  * at the catalog level is out of scope, matching the reference's scope.
+  * manifest (Avro, spec v1 layout) plus manifest list are written, and the
+  * caller's [[TableOps]] publishes the new metadata ([[commitWithRetry]]).
+  * Tables written here are readable by [[IcebergTable]] with working stats
+  * pruning, and the metadata layout follows the public Iceberg v1 spec.
   */
 object IcebergWriter {
 
@@ -276,15 +273,14 @@ object IcebergWriter {
 
   /** Append `df` as a new snapshot. The table must exist (see createTable). */
   def append(spark: SparkSession, url: String, df: DataFrame): Unit =
-    append(spark, url, df, Map.empty[String, String])
+    append(FileSystemOps(spark, url), df)
 
   /** Append with extra snapshot-summary properties (streaming sinks record
     * their batch id here for exactly-once replay protection). */
-  def append(spark: SparkSession, url: String, df: DataFrame,
-      extraSummary: Map[String, String]): Unit = {
-    val table = resolveCurrent(spark, url)
-    val files = writeDataFiles(spark, url, table, df)
-    commitSnapshot(spark, url, Some(table))(_ =>
+  def append(ops: TableOps, df: DataFrame, extraSummary: Map[String, String] = Map.empty): Unit = {
+    val table = ops.current()
+    val files = writeDataFiles(ops.spark, ops.url, table, df)
+    commitSnapshot(ops, Some(table))(_ =>
       Some(SnapshotUpdate("append", added = files, summary = extraSummary)))
   }
 
@@ -297,9 +293,11 @@ object IcebergWriter {
     * read-compatible with the table schema (columns resolve BY NAME for
     * imported files — they carry no Iceberg field ids). */
   def addFiles(spark: SparkSession, url: String, paths: Seq[String],
-      format: String = "parquet"): Unit = {
+      format: String = "parquet"): Unit =
+    addFiles(FileSystemOps(spark, url), paths, format)
+  def addFiles(ops: TableOps, paths: Seq[String], format: String): Unit = {
     if (paths.isEmpty) return
-    val table = resolveCurrent(spark, url)
+    val table = ops.current()
     val conf = table.conf
     require(table.partitionSpec.fields.isEmpty,
       "addFiles imports into unpartitioned tables only " +
@@ -340,7 +338,7 @@ object IcebergWriter {
         // and prune exactly like natively written ones; fans out over the
         // cluster past the small-commit threshold. ORC footers carry
         // per-column min/max/non-null counts just like parquet's.
-        val stats = collectStats(spark, withLen, table.iceSchema, conf,
+        val stats = collectStats(ops.spark, withLen, table.iceSchema, conf,
           foreign = true, format = fmt)
         withLen.map { case (p, len) => NewDataFile(p, len, stats(p), Nil, fmt) }
       } else withLen.map { case (p, len) =>
@@ -351,7 +349,7 @@ object IcebergWriter {
         NewDataFile(p, len, FileStats(rows, Map.empty, Map.empty, Map.empty, Map.empty),
           Nil, fmt)
       }
-    commitSnapshot(spark, url)(_ => Some(SnapshotUpdate("append", added = files,
+    commitSnapshot(ops)(_ => Some(SnapshotUpdate("append", added = files,
       summary = Map("graft-added-files" -> files.size.toString),
       properties = mappingProps)))
   }
@@ -540,10 +538,12 @@ object IcebergWriter {
     * whole table.
     */
   def overwrite(spark: SparkSession, url: String, df: DataFrame,
-      pred: Pruning.IcePredicate = Pruning.AlwaysTrue): Unit = {
-    val table = resolveCurrent(spark, url)
-    val files = writeDataFiles(spark, url, table, df)
-    commitSnapshot(spark, url, Some(table))(t => Some(SnapshotUpdate("overwrite",
+      pred: Pruning.IcePredicate = Pruning.AlwaysTrue): Unit =
+    overwrite(FileSystemOps(spark, url), df, pred)
+  def overwrite(ops: TableOps, df: DataFrame, pred: Pruning.IcePredicate): Unit = {
+    val table = ops.current()
+    val files = writeDataFiles(ops.spark, ops.url, table, df)
+    commitSnapshot(ops, Some(table))(t => Some(SnapshotUpdate("overwrite",
       added = files, removed = wholeFilesMatching(t, pred))))
   }
 
@@ -825,9 +825,10 @@ object IcebergWriter {
     * attempt (or the final failure) first deletes the manifest list,
     * manifests and delete-state rewrite it wrote, as iceberg-java's
     * `cleanUncommitted` does. Files the caller wrote before the loop stay. */
-  private[graft] def commitSnapshot(spark: SparkSession, url: String,
+  private[graft] def commitSnapshot(ops: TableOps,
       pinned: Option[IcebergTable] = None)(
       build: IcebergTable => Option[SnapshotUpdate]): Unit = {
+    import ops.{spark, url}
     // names every file the attempt in flight writes ("" when none), and
     // the conf of the handle it built against
     var attemptId = ""
@@ -843,7 +844,7 @@ object IcebergWriter {
       }
       attemptId = ""
     }
-    try commitWithRetry(spark, url, pinned) { table =>
+    try commitWithRetry(ops, pinned) { table =>
       cleanUncommitted() // the previous attempt lost its publish
       build(table).map { u =>
         attemptId = UUID.randomUUID().toString
@@ -851,8 +852,7 @@ object IcebergWriter {
         produceSnapshot(spark, url, table, u, attemptId)
       }
     } catch {
-      case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
-          _: CommitConflictException) =>
+      case e: java.util.ConcurrentModificationException =>
         cleanUncommitted()
         throw e
     }
@@ -1102,28 +1102,34 @@ object IcebergWriter {
   /** Add a column (metadata-only; existing files read back null for it).
     * The new field gets a fresh id (last-column-id + 1) — id-based parquet
     * resolution keeps every existing file readable unchanged. */
-  def addColumn(spark: SparkSession, url: String, name: String,
-      icebergType: String, required: Boolean = false,
+  def addColumn(spark: SparkSession, url: String, name: String, icebergType: String,
+      required: Boolean = false, default: Option[Any] = None): Unit =
+    addColumn(FileSystemOps(spark, url), name, icebergType, required, default)
+  def addColumn(ops: TableOps, name: String, icebergType: String, required: Boolean,
       /** Iceberg v3 DEFAULT VALUE: recorded as the field's immutable
         * `initial-default` (reads of pre-add files yield it instead of
         * null — wired into Spark's existence-default machinery) and as its
         * starting `write-default`. v3 only; REQUIRED adds demand one (the
         * pre-add files otherwise hold an impossible null). */
-      default: Option[Any] = None): Unit =
-    evolveSchema(spark, url)(addColumnChange(_, name, icebergType, required, default))
+      default: Option[Any]): Unit =
+    evolveSchema(ops)(addColumnChange(_, name, icebergType, required, default))
 
   /** Rename a column (metadata-only). The field id is unchanged, so data
     * written under the old name resolves by id — no rewrite, no nulls.
     * `from` may be a dotted path into nested structs; `to` is the new LEAF
     * name. */
   def renameColumn(spark: SparkSession, url: String, from: String, to: String): Unit =
-    evolveSchema(spark, url)(renameColumnChange(_, from, to))
+    renameColumn(FileSystemOps(spark, url), from, to)
+  def renameColumn(ops: TableOps, from: String, to: String): Unit =
+    evolveSchema(ops)(renameColumnChange(_, from, to))
 
   /** Drop a column (metadata-only; files keep the bytes, readers stop
     * projecting them; time travel to older snapshots still sees it). Dotted
     * paths drop inside nested structs. */
   def dropColumn(spark: SparkSession, url: String, name: String): Unit =
-    evolveSchema(spark, url)(dropColumnChange(_, name))
+    dropColumn(FileSystemOps(spark, url), name)
+  def dropColumn(ops: TableOps, name: String): Unit =
+    evolveSchema(ops)(dropColumnChange(_, name))
 
   /** One column change of a schema evolution, validated against the table
     * it commits to: maps the (fields, last-column-id) it starts from to the
@@ -1254,8 +1260,10 @@ object IcebergWriter {
     * the restored snapshot. The target must be an ANCESTOR of the current
     * snapshot — rolling "back" to an unrelated branch would silently
     * splice histories. */
-  def rollbackTo(spark: SparkSession, url: String, snapshotId: Long): Unit = {
-    commitWithRetry(spark, url) { table =>
+  def rollbackTo(spark: SparkSession, url: String, snapshotId: Long): Unit =
+    rollbackTo(FileSystemOps(spark, url), snapshotId)
+  def rollbackTo(ops: TableOps, snapshotId: Long): Unit = {
+    commitWithRetry(ops) { table =>
       require(table.snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
       var cur = table.currentSnapshot
       while (cur.snapshotId != snapshotId)
@@ -1274,8 +1282,10 @@ object IcebergWriter {
     * requirement, so this can jump onto a side branch's history (the
     * operator's explicit splice, e.g. adopting a staged WAP snapshot
     * in place). Metadata-only; the move is itself a history event. */
-  def setCurrentSnapshot(spark: SparkSession, url: String, snapshotId: Long): Unit = {
-    commitWithRetry(spark, url) { table =>
+  def setCurrentSnapshot(spark: SparkSession, url: String, snapshotId: Long): Unit =
+    setCurrentSnapshot(FileSystemOps(spark, url), snapshotId)
+  def setCurrentSnapshot(ops: TableOps, snapshotId: Long): Unit = {
+    commitWithRetry(ops) { table =>
       require(table.snapshots.contains(snapshotId), s"unknown snapshot $snapshotId")
       if (table.metadata.currentSnapshotId == snapshotId) None // no-op
       else Some(Seq(SetSnapshotRef.moving(table.metadata, "main", snapshotId)))
@@ -1302,9 +1312,11 @@ object IcebergWriter {
     * to the just-published rows.
     *
     * @return the new snapshot id on main */
-  def cherryPick(spark: SparkSession, url: String, sourceSnapshotId: Long): Long = {
+  def cherryPick(spark: SparkSession, url: String, sourceSnapshotId: Long): Long =
+    cherryPick(FileSystemOps(spark, url), sourceSnapshotId)
+  def cherryPick(ops: TableOps, sourceSnapshotId: Long): Long = {
     val snapshotId = newSnapshotId()
-    commitSnapshot(spark, url) { table =>
+    commitSnapshot(ops) { table =>
       val src = table.snapshots.getOrElse(sourceSnapshotId,
         throw new IllegalArgumentException(s"unknown snapshot $sourceSnapshotId"))
       require(src.summary.get("operation").contains("append"),
@@ -1348,15 +1360,15 @@ object IcebergWriter {
     * the staging fork. Refuses unknown or ambiguous ids.
     *
     * @return the new snapshot id on main */
-  def publishChanges(spark: SparkSession, url: String, wapId: String): Long = {
-    val table = resolveCurrent(spark, url)
+  def publishChanges(ops: TableOps, wapId: String): Long = {
+    val table = ops.current()
     val matches = table.metadata.snapshots
       .filter(_.summary.get("wap.id").contains(wapId))
     require(matches.nonEmpty, s"no snapshot carries wap.id '$wapId'")
     require(matches.size == 1,
       s"wap.id '$wapId' is ambiguous (${matches.size} snapshots) — " +
         "publish by snapshot id with cherryPick instead")
-    cherryPick(spark, url, matches.head.snapshotId)
+    cherryPick(ops, matches.head.snapshotId)
   }
 
   // ---------------------------------------------------- partition evolution
@@ -1370,9 +1382,10 @@ object IcebergWriter {
     * id-referenced, per the spec). Empty `order` resets to unsorted
     * (order 0) — the prerequisite for [[Maintenance.zorder]], which
     * refuses sorted tables. */
-  def setSortOrder(spark: SparkSession, url: String,
-      order: Seq[(String, String)]): Unit = {
-    commitWithRetry(spark, url) { table =>
+  def setSortOrder(spark: SparkSession, url: String, order: Seq[(String, String)]): Unit =
+    setSortOrder(FileSystemOps(spark, url), order)
+  def setSortOrder(ops: TableOps, order: Seq[(String, String)]): Unit = {
+    commitWithRetry(ops) { table =>
       val schema = table.iceSchema
       val fields = order.map { case (src, direction) =>
         val f = schema.fields.find(_.name == src).getOrElse(
@@ -1425,8 +1438,10 @@ object IcebergWriter {
     * A field identical to one in an existing spec (same source-id,
     * transform, and name) reuses its field-id, per the Iceberg spec. */
   def updatePartitionSpec(spark: SparkSession, url: String,
-      partitions: Seq[(String, String)]): Unit = {
-    commitWithRetry(spark, url) { table =>
+      partitions: Seq[(String, String)]): Unit =
+    updatePartitionSpec(FileSystemOps(spark, url), partitions)
+  def updatePartitionSpec(ops: TableOps, partitions: Seq[(String, String)]): Unit = {
+    commitWithRetry(ops) { table =>
       val schema = table.iceSchema
       val existing = table.metadata.partitionSpecs
       val newSpecId = existing.map(_.specId).max + 1
@@ -1499,9 +1514,9 @@ object IcebergWriter {
     }
   }
 
-  private def evolveSchema(spark: SparkSession, url: String)(
+  private def evolveSchema(ops: TableOps)(
       change: IcebergTable => ColumnChange): Unit =
-    commitWithRetry(spark, url)(t =>
+    commitWithRetry(ops)(t =>
       Some(schemaUpdates(t, Seq(change(t)))))
 
   /** A new schema version: `changes` applied in order to the current
@@ -1541,7 +1556,7 @@ object IcebergWriter {
     * join with '.'; anything else refuses loudly. Engine-reserved keys
     * that name table STATE rather than configuration are refused —
     * iceberg-java's reserved-property rule. */
-  private[graft] def alterTable(spark: SparkSession, url: String,
+  private[graft] def alterTable(ops: TableOps,
       changes: Seq[org.apache.spark.sql.connector.catalog.TableChange]): Unit = {
     import org.apache.spark.sql.connector.catalog.TableChange._
     // Spark splits SET TBLPROPERTIES ('a'='1','b'='2') into one change per key
@@ -1551,7 +1566,7 @@ object IcebergWriter {
       s"property '$k' is reserved table STATE — use the dedicated API " +
         "(upgradeFormatVersion / rollback), not a property write"))
     val removes = changes.collect { case p: RemoveProperty => p.property }
-    commitWithRetry(spark, url) { t =>
+    commitWithRetry(ops) { t =>
       val columns = changes.flatMap {
         case _: SetProperty | _: RemoveProperty => None
         case a: AddColumn => Some(addColumnChange(t, a.fieldNames.mkString("."),
@@ -1581,7 +1596,9 @@ object IcebergWriter {
     * concurrent append/delete is re-validated after reload.
     */
   def deleteWhere(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit =
-    commitSnapshot(spark, url) { table =>
+    deleteWhere(FileSystemOps(spark, url), pred)
+  def deleteWhere(ops: TableOps, pred: Pruning.IcePredicate): Unit =
+    commitSnapshot(ops) { table =>
       val removed = wholeFilesMatching(table, pred)
       if (removed.isEmpty) None else Some(SnapshotUpdate("delete", removed = removed))
     }
@@ -1600,7 +1617,7 @@ object IcebergWriter {
     * concurrently-deleted row would be resurrected by this op's inserts),
     * or added a file that may match the operation's condition
     * (`addValidation`: the live files at scan and the condition). */
-  private[graft] def commitDelta(spark: SparkSession, url: String,
+  private[graft] def commitDelta(ops: TableOps,
       commitId: String,
       writtenData: Seq[WrittenFile],
       deleteFiles: Seq[WrittenFile],
@@ -1608,7 +1625,8 @@ object IcebergWriter {
       scannedKeys: Set[String],
       deleteFilesAtScan: Set[String],
       addValidation: (Set[String], Pruning.IcePredicate)): Unit = {
-    val table0 = resolveCurrent(spark, url)
+    import ops.{spark, url}
+    val table0 = ops.current()
     val conf = table0.conf
     val specInfo = specInfoOf(table0)
     val dataFiles = writtenData.map(_.dataFile)
@@ -1628,7 +1646,7 @@ object IcebergWriter {
       }
       else deleteManifest(s"$url/metadata/$commitId-m1.avro", snapshotId,
         deleteFiles, specInfo, conf)
-    commitSnapshot(spark, url, Some(table0)) { table =>
+    commitSnapshot(ops, Some(table0)) { table =>
       requireDeletesUnchanged(table, deleteFilesAtScan)
       if (deleteFiles.nonEmpty) requireScannedFilesLive(table, scannedKeys)
       requireNoConflictingAdds(table, addValidation._1, addValidation._2)
@@ -1701,9 +1719,11 @@ object IcebergWriter {
     * `IcebergTable.applyPositionDeletes`. Position deletes bump the table to
     * format-version 2.
     */
-  def deleteRows(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit = {
+  def deleteRows(spark: SparkSession, url: String, pred: Pruning.IcePredicate): Unit =
+    deleteRows(FileSystemOps(spark, url), pred)
+  def deleteRows(ops: TableOps, pred: Pruning.IcePredicate): Unit = {
     import org.apache.spark.sql.functions.col
-    val table = resolveCurrent(spark, url)
+    val table = ops.current()
     val conf = table.conf
     val (fully, candidates) = splitByPredicate(table, pred)
     if (fully.isEmpty && candidates.isEmpty) return
@@ -1719,7 +1739,7 @@ object IcebergWriter {
     // valid across a lost race.
     val deleteManifest =
       if (candidates.isEmpty) None
-      else withFieldIdRead(spark) { fidSpark =>
+      else withFieldIdRead(ops.spark) { fidSpark =>
         val predCol = Pruning.toColumn(pred).getOrElse(
           throw new IllegalStateException("row-level delete needs a concrete predicate"))
         val positions = fidSpark.read.schema(table.schema)
@@ -1727,7 +1747,7 @@ object IcebergWriter {
           .filter(predCol)
           .select(col("_metadata.file_path").as("file_path"),
             col("_metadata.row_index").as("pos"))
-        writePositionDeletes(fidSpark, url, table, UUID.randomUUID().toString,
+        writePositionDeletes(fidSpark, ops.url, table, UUID.randomUUID().toString,
           snapshotId, positions, specInfoOf(table), conf)
       }
     if (deleteManifest.isEmpty && fully.isEmpty) return // nothing matched
@@ -1735,7 +1755,7 @@ object IcebergWriter {
     // the position scan deduplicated against PIN-time delete state; a delete
     // committed since would be clobbered by the delete-state rewrite
     val deletesAtPin = liveDeleteSet(table)
-    commitSnapshot(spark, url, Some(table)) { current =>
+    commitSnapshot(ops, Some(table)) { current =>
       requireDeletesUnchanged(current, deletesAtPin)
       Some(SnapshotUpdate("delete", removed = fully,
         newManifests = deleteManifest.toSeq, snapshotId = snapshotId))
@@ -1751,11 +1771,13 @@ object IcebergWriter {
     * manifests (data and equality-delete manifests untouched, so nothing
     * re-sequences). Refuses (optimistic-loop style) if the delete state
     * changed concurrently; rerun against the new snapshot. */
-  def rewritePositionDeletes(spark: SparkSession, url: String,
-      targetFiles: Int = 1): Unit = {
+  def rewritePositionDeletes(spark: SparkSession, url: String, targetFiles: Int = 1): Unit =
+    rewritePositionDeletes(FileSystemOps(spark, url), targetFiles)
+  def rewritePositionDeletes(ops: TableOps, targetFiles: Int): Unit = {
+    import ops.{spark, url}
     import org.apache.spark.sql.functions.col
     require(targetFiles >= 1, "targetFiles must be positive")
-    val t0 = resolveCurrent(spark, url)
+    val t0 = ops.current()
     val conf = t0.conf
     if (t0.metadata.currentSnapshotId < 0) return
     val frozen = t0.atSnapshot(t0.currentSnapshot.snapshotId)
@@ -1826,7 +1848,7 @@ object IcebergWriter {
           written, specInfo, conf).toSeq
       }
     val deletesAtPin = liveDeleteSet(frozen)
-    commitSnapshot(spark, url, Some(t0)) { table =>
+    commitSnapshot(ops, Some(t0)) { table =>
       requireDeletesUnchanged(table, deletesAtPin)
       Some(SnapshotUpdate("replace", newManifests = consolidated,
         drop = ManifestDrop.PositionDeletes,
@@ -2176,9 +2198,11 @@ object IcebergWriter {
   /** Upgrade the table's format version (metadata-only commit). v3 turns
     * every subsequent row-level delete into DELETION VECTORS; downgrades
     * are refused (older readers could not see v3 delete state). */
-  def upgradeFormatVersion(spark: SparkSession, url: String, version: Int): Unit = {
+  def upgradeFormatVersion(spark: SparkSession, url: String, version: Int): Unit =
+    upgradeFormatVersion(FileSystemOps(spark, url), version)
+  def upgradeFormatVersion(ops: TableOps, version: Int): Unit = {
     require(version >= 1 && version <= 3, s"unsupported format version $version")
-    commitWithRetry(spark, url) { current =>
+    commitWithRetry(ops) { current =>
       val cur = current.metadata.formatVersion
       require(version >= cur,
         s"cannot downgrade format version $cur -> $version")
@@ -2195,14 +2219,16 @@ object IcebergWriter {
     * incoming data's TRANSFORMED partition values (physical repr, matching
     * manifest partition values), so victim selection is metadata-only and
     * whole-file by construction: partition boundaries align with files. */
-  def overwriteDynamic(spark: SparkSession, url: String, df: DataFrame): Unit = {
+  def overwriteDynamic(spark: SparkSession, url: String, df: DataFrame): Unit =
+    overwriteDynamic(FileSystemOps(spark, url), df)
+  def overwriteDynamic(ops: TableOps, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
-    val table = resolveCurrent(spark, url)
+    val table = ops.current()
     val spec = table.partitionSpec
     // unpartitioned table: dynamic degenerates to full replace (Hive/Spark
     // dynamic-mode semantics)
-    if (spec.fields.isEmpty) { overwrite(spark, url, df); return }
-    if (table.metadata.currentSnapshotId < 0) { append(spark, url, df); return }
+    if (spec.fields.isEmpty) { overwrite(ops, df, Pruning.AlwaysTrue); return }
+    if (table.metadata.currentSnapshotId < 0) { append(ops, df); return }
     val schema = table.iceSchema
     val partCols = spec.fields.map { pf =>
       val src = schema.fields.find(_.id == pf.sourceId)
@@ -2212,10 +2238,10 @@ object IcebergWriter {
     }
     val touched: Set[Seq[Any]] = df.select(partCols: _*).distinct().collect()
       .map(r => spec.fields.indices.map(i => normPartValue(r.get(i))): Seq[Any]).toSet
-    val files = writeDataFiles(spark, url, table, df)
+    val files = writeDataFiles(ops.spark, ops.url, table, df)
     // victims resolve per commit attempt against the fresh table: a
     // concurrent append into a touched partition is replaced too
-    commitSnapshot(spark, url, Some(table))(t => Some(SnapshotUpdate("overwrite",
+    commitSnapshot(ops, Some(table))(t => Some(SnapshotUpdate("overwrite",
       added = files, removed = dynamicVictims(t, touched),
       summary = Map("graft-overwrite-mode" -> "dynamic"))))
   }
@@ -2287,18 +2313,23 @@ object IcebergWriter {
   /** TAG a snapshot (default: the current one): a named, immutable pointer
     * — the reproducible-training-set primitive. Metadata-only commit;
     * `expireSnapshots` keeps tagged snapshots alive. */
-  def tag(spark: SparkSession, url: String, name: String,
-      snapshotId: Option[Long] = None,
+  def tag(spark: SparkSession, url: String, name: String, snapshotId: Option[Long] = None,
+      maxRefAgeMs: Option[Long] = None): Unit =
+    tag(FileSystemOps(spark, url), name, snapshotId, maxRefAgeMs)
+  def tag(ops: TableOps, name: String,
+      snapshotId: Option[Long],
       /** Spec retention: drop the tag (and its pin on history) once its
         * snapshot is older than this at expire time. None = forever. */
-      maxRefAgeMs: Option[Long] = None): Unit =
-    setRef(spark, url, name, "tag", snapshotId, maxRefAgeMs)
+      maxRefAgeMs: Option[Long]): Unit =
+    setRef(ops, name, "tag", snapshotId, maxRefAgeMs)
 
   /** Create/move a named BRANCH pointer (default target: current snapshot). */
-  def branch(spark: SparkSession, url: String, name: String,
-      snapshotId: Option[Long] = None,
+  def branch(spark: SparkSession, url: String, name: String, snapshotId: Option[Long] = None,
       maxRefAgeMs: Option[Long] = None): Unit =
-    setRef(spark, url, name, "branch", snapshotId, maxRefAgeMs)
+    branch(FileSystemOps(spark, url), name, snapshotId, maxRefAgeMs)
+  def branch(ops: TableOps, name: String, snapshotId: Option[Long],
+      maxRefAgeMs: Option[Long]): Unit =
+    setRef(ops, name, "branch", snapshotId, maxRefAgeMs)
 
   /** WRITE-AUDIT-PUBLISH, step 1: append rows as a snapshot STAGED on
     * `branchName` — main readers see nothing. The branch forks from main's
@@ -2306,12 +2337,15 @@ object IcebergWriter {
     * state with `IcebergTable.load(...).atBranch(branchName).read()`, then
     * publish with [[fastForward]] (or abandon with [[dropRef]] +
     * snapshot expiration). */
-  def appendToBranch(spark: SparkSession, url: String, df: DataFrame,
-      branchName: String, extraSummary: Map[String, String] = Map.empty): Unit = {
+  def appendToBranch(spark: SparkSession, url: String, df: DataFrame, branchName: String,
+      extraSummary: Map[String, String] = Map.empty): Unit =
+    appendToBranch(FileSystemOps(spark, url), df, branchName, extraSummary)
+  def appendToBranch(ops: TableOps, df: DataFrame, branchName: String,
+      extraSummary: Map[String, String]): Unit = {
     val target = SnapshotTarget.Branch(branchName)
-    val table = resolveCurrent(spark, url)
-    val files = writeDataFiles(spark, url, table, df)
-    commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("append",
+    val table = ops.current()
+    val files = writeDataFiles(ops.spark, ops.url, table, df)
+    commitSnapshot(ops, Some(table))(_ => Some(SnapshotUpdate("append",
       added = files, summary = extraSummary, target = target)))
   }
 
@@ -2320,8 +2354,10 @@ object IcebergWriter {
     * refuses unless main's current snapshot is an ANCESTOR of the branch
     * head — if main moved past the fork point, publishing would silently
     * drop main's new commits; rebase by re-staging instead. */
-  def fastForward(spark: SparkSession, url: String, branchName: String): Unit = {
-    commitWithRetry(spark, url) { table =>
+  def fastForward(spark: SparkSession, url: String, branchName: String): Unit =
+    fastForward(FileSystemOps(spark, url), branchName)
+  def fastForward(ops: TableOps, branchName: String): Unit = {
+    commitWithRetry(ops) { table =>
       val ref = table.refs.getOrElse(branchName,
         throw new IllegalArgumentException(s"unknown branch '$branchName'"))
       require(ref.refType == "branch",
@@ -2345,19 +2381,20 @@ object IcebergWriter {
   }
 
   /** Remove a ref. `main` is managed by commits and cannot be dropped. */
-  def dropRef(spark: SparkSession, url: String, name: String): Unit = {
+  def dropRef(spark: SparkSession, url: String, name: String): Unit =
+    dropRef(FileSystemOps(spark, url), name)
+  def dropRef(ops: TableOps, name: String): Unit = {
     require(name != "main", "the main branch ref is managed by commits")
-    commitWithRetry(spark, url) { table =>
+    commitWithRetry(ops) { table =>
       if (!table.refs.contains(name)) None // nothing to do, no new version
       else Some(Seq(RemoveSnapshotRef(name)))
     }
   }
 
-  private def setRef(spark: SparkSession, url: String, name: String,
-      refType: String, snapshotId: Option[Long],
-      maxRefAgeMs: Option[Long] = None): Unit = {
+  private def setRef(ops: TableOps, name: String, refType: String,
+      snapshotId: Option[Long], maxRefAgeMs: Option[Long]): Unit = {
     require(name != "main", "the main branch ref is managed by commits")
-    commitWithRetry(spark, url) { table =>
+    commitWithRetry(ops) { table =>
       val target = snapshotId.getOrElse(table.metadata.currentSnapshotId)
       require(table.snapshots.contains(target), s"unknown snapshot $target")
       // spec ref retention: refs whose snapshot outlives maxRefAgeMs are
@@ -2372,17 +2409,19 @@ object IcebergWriter {
     * requested value) publishes no new version. Engine-reserved keys that
     * name STATE rather than configuration are refused — Iceberg-java's
     * reserved-property rule. */
-  def setProperties(spark: SparkSession, url: String,
-      props: Map[String, String]): Unit =
-    alterTable(spark, url, props.toSeq.map { case (k, v) =>
+  def setProperties(spark: SparkSession, url: String, props: Map[String, String]): Unit =
+    setProperties(FileSystemOps(spark, url), props)
+  def setProperties(ops: TableOps, props: Map[String, String]): Unit =
+    alterTable(ops, props.toSeq.map { case (k, v) =>
       org.apache.spark.sql.connector.catalog.TableChange.setProperty(k, v) })
 
   /** Remove table properties (`ALTER TABLE … UNSET TBLPROPERTIES`).
     * Absent keys are ignored (SQL UNSET semantics); removing every
     * requested key that exists is one metadata-only commit. */
-  def removeProperties(spark: SparkSession, url: String,
-      keys: Seq[String]): Unit =
-    alterTable(spark, url,
+  def removeProperties(spark: SparkSession, url: String, keys: Seq[String]): Unit =
+    removeProperties(FileSystemOps(spark, url), keys)
+  def removeProperties(ops: TableOps, keys: Seq[String]): Unit =
+    alterTable(ops,
       keys.map(org.apache.spark.sql.connector.catalog.TableChange.removeProperty))
 
   /** Iceberg v2 EQUALITY DELETE: delete every row whose `keyCols` tuple
@@ -2397,19 +2436,21 @@ object IcebergWriter {
     * while equality deletes are live; compaction folds them away and
     * restores exact stats. */
   def equalityDelete(spark: SparkSession, url: String, keys: DataFrame,
-      keyCols: Seq[String]): Unit = {
+      keyCols: Seq[String]): Unit =
+    equalityDelete(FileSystemOps(spark, url), keys, keyCols)
+  def equalityDelete(ops: TableOps, keys: DataFrame, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
-    val table = resolveCurrent(spark, url)
+    val table = ops.current()
     val conf = table.conf
     if (table.metadata.currentSnapshotId < 0) return // nothing to delete from
     // readers apply equality deletes through the merge-on-read machinery,
     // which ORC data files cannot enter — refuse at write, not read
     requireParquetForRowLevel(table, table.liveFiles(), "equality DELETE")
     val snapshotId = newSnapshotId()
-    val manifest = writeEqualityDeletes(spark, url, table, UUID.randomUUID().toString,
+    val manifest = writeEqualityDeletes(ops.spark, ops.url, table, UUID.randomUUID().toString,
       snapshotId, keys, keyCols, specInfoOf(table), conf)
     if (manifest.isDefined)
-      commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("delete",
+      commitSnapshot(ops, Some(table))(_ => Some(SnapshotUpdate("delete",
         newManifests = manifest.toSeq, snapshotId = snapshotId)))
   }
 
@@ -2420,13 +2461,17 @@ object IcebergWriter {
     * read cost moves to merge-on-read until compaction. Appended files
     * commit in the SAME snapshot as the delete, so sequence scoping keeps
     * the new rows alive. */
-  def upsert(spark: SparkSession, url: String, source: DataFrame,
-      keyCols: Seq[String], extraSummary: Map[String, String] = Map.empty): Unit = {
+  def upsert(spark: SparkSession, url: String, source: DataFrame, keyCols: Seq[String],
+      extraSummary: Map[String, String] = Map.empty): Unit =
+    upsert(FileSystemOps(spark, url), source, keyCols, extraSummary)
+  def upsert(ops: TableOps, source: DataFrame,
+      keyCols: Seq[String], extraSummary: Map[String, String]): Unit = {
+    import ops.{spark, url}
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val table = resolveCurrent(spark, url)
+    val table = ops.current()
     val conf = table.conf
     if (table.metadata.currentSnapshotId < 0 || table.liveFiles().isEmpty) {
-      append(spark, url, source, extraSummary); return
+      append(ops, source, extraSummary); return
     }
     requireParquetForRowLevel(table, table.liveFiles(), "UPSERT")
     val schema = table.iceSchema
@@ -2435,7 +2480,7 @@ object IcebergWriter {
     val manifest = writeEqualityDeletes(spark, url, table, UUID.randomUUID().toString,
       snapshotId, source, keyCols, specInfoOf(table), conf)
     val files = writeDataFiles(spark, url, table, source)
-    commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("overwrite",
+    commitSnapshot(ops, Some(table))(_ => Some(SnapshotUpdate("overwrite",
       added = files, newManifests = manifest.toSeq, snapshotId = snapshotId,
       summary = extraSummary + ("graft-upsert-keys" -> keyCols.mkString(",")))))
   }
@@ -2613,14 +2658,16 @@ object IcebergWriter {
     * isolation, matching what the scan saw).
     *
     * On a table with no snapshot this degrades to a plain append. */
-  def merge(spark: SparkSession, url: String, source: DataFrame,
-      keyCols: Seq[String]): Unit = {
+  def merge(spark: SparkSession, url: String, source: DataFrame, keyCols: Seq[String]): Unit =
+    merge(FileSystemOps(spark, url), source, keyCols)
+  def merge(ops: TableOps, source: DataFrame, keyCols: Seq[String]): Unit = {
+    import ops.{spark, url}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     import org.apache.spark.sql.functions.col
-    val table = resolveCurrent(spark, url)
+    val table = ops.current()
     val conf = table.conf
     val live = if (table.metadata.currentSnapshotId >= 0) table.liveFiles() else Nil
-    if (live.isEmpty) { append(spark, url, source); return }
+    if (live.isEmpty) { append(ops, source); return }
     requireParquetForRowLevel(table, live, "MERGE")
 
     val schema = table.iceSchema
@@ -2664,7 +2711,7 @@ object IcebergWriter {
       }
 
     val files = writeDataFiles(spark, url, table, sourceWithLineage, carryLineage = carry)
-    commitSnapshot(spark, url, Some(table))(_ => Some(SnapshotUpdate("overwrite",
+    commitSnapshot(ops, Some(table))(_ => Some(SnapshotUpdate("overwrite",
       added = files, newManifests = deleteManifest.toSeq, snapshotId = snapshotId,
       summary = Map("graft-merge-keys" -> keyCols.mkString(",")))))
   }
@@ -3103,10 +3150,11 @@ object IcebergWriter {
     * carry over untouched, and every entry keeps its original snapshot id
     * and data sequence. Concurrent commits are safe: the whole rewrite
     * runs inside the optimistic loop against the CURRENT snapshot. */
-  def rewriteManifests(spark: SparkSession, url: String,
-      targetManifests: Int = 1): Unit = {
+  def rewriteManifests(spark: SparkSession, url: String, targetManifests: Int = 1): Unit =
+    rewriteManifests(FileSystemOps(spark, url), targetManifests)
+  def rewriteManifests(ops: TableOps, targetManifests: Int): Unit = {
     require(targetManifests >= 1, "need at least one target manifest")
-    commitSnapshot(spark, url) { current =>
+    commitSnapshot(ops) { current =>
       val conf = current.conf
       val dataManifests =
         if (current.metadata.currentSnapshotId < 0) Nil
@@ -3127,7 +3175,7 @@ object IcebergWriter {
           val clustered = specFiles.sortBy(f =>
             tuple(f).map(String.valueOf).mkString("\u0000"))
           clustered.grouped(perManifest).zipWithIndex.map { case (chunk, i) =>
-            val path = s"$url/metadata/$commitId-rw$specId-$i.avro"
+            val path = s"${ops.url}/metadata/$commitId-rw$specId-$i.avro"
             writeExistingManifest(path, chunk, current.resolvePath,
               current.dataSequenceOf, specInfo, conf)
             NewManifestInfo(path, Manifests.FileContent.Data,
@@ -3264,158 +3312,34 @@ object IcebergWriter {
 
   // ------------------------------------------------------- commit protocol
 
-  /** Thrown by a catalog publisher when the catalog refused the commit
-    * because its requirements no longer hold (HTTP 409 in the REST
-    * protocol) — the commit loop reloads the fresh state and rebuilds,
-    * exactly like losing the filesystem exclusive-create race. */
-  final class CommitConflictException(message: String)
-    extends RuntimeException(message)
-
-  /** CATALOG-owned commit, scoped by [[withCatalogCommit]]: `resolve`
-    * supplies the CURRENT table state (a REST catalog's metadata-location,
-    * re-fetched per attempt) and `publish` receives the commit's
-    * requirements and updates ([[MetadataUpdate.requirements]]) and must
-    * apply them atomically — data files and manifests still write to the
-    * table's storage location; only the metadata swap routes through the
-    * catalog. */
-  private val catalogCommit = new ThreadLocal[(SparkSession => IcebergTable,
-    (Seq[ObjectNode], Seq[MetadataUpdate]) => Unit)]
-
-  /** Route every commit inside `body` through a catalog instead of the
-    * filesystem version-hint swap (see [[catalogCommit]]). */
-  def withCatalogCommit[T](resolve: SparkSession => IcebergTable)(
-      publish: (Seq[ObjectNode], Seq[MetadataUpdate]) => Unit)(body: => T): T = {
-    require(catalogCommit.get == null, "catalog commit scopes do not nest")
-    catalogCommit.set((resolve, publish))
-    try body finally catalogCommit.remove()
-  }
-
-  /** The table state commits must build against: the catalog's view inside
-    * a [[withCatalogCommit]] scope, the filesystem's otherwise. */
-  private[iceberg] def resolveCurrent(spark: SparkSession, url: String): IcebergTable =
-    catalogCommit.get match {
-      case null => IcebergTable.load(spark, url)
-      case (resolve, _) => resolve(spark)
-    }
-
   /** Optimistic-concurrency commit loop (the shape of Iceberg's own
     * protocol): each attempt returns the [[MetadataUpdate]]s the commit
     * makes to the CURRENT table state, or None to abort without committing
-    * (no-op deletes). On the filesystem the list is folded into that state
-    * ([[MetadataUpdate.applyTo]]) and published as `v{N+1}.metadata.json`
-    * with an EXCLUSIVE create; inside a [[withCatalogCommit]] scope the
-    * same list goes to the catalog with its requirements. Only losing the
-    * create to a concurrent committer (FileAlreadyExistsException) or the
-    * catalog refusing the requirements ([[CommitConflictException]])
-    * reloads the state and retries, so no committed snapshot is ever lost.
-    * Once the create succeeds the commit is published: the version-hint
-    * update after it can neither fail the commit nor make it retry (see
-    * [[writeHint]]). Atomicity relies on the store's exclusive-create
-    * (atomic on HDFS/local; object stores need a catalog).
+    * (no-op deletes), and `ops` publishes them atomically ([[TableOps]]).
+    * A concurrent committer winning the publish makes the loop reload and
+    * rebuild, at most [[MaxCommitRetries]] times; no snapshot is ever lost.
     *
     * The first attempt builds against `pinned` when given (a writer's own
     * load), later ones against a fresh load. */
-  private[iceberg] def commitWithRetry(spark: SparkSession, url: String,
-      pinned: Option[IcebergTable] = None)(
+  private[iceberg] def commitWithRetry(ops: TableOps, pinned: Option[IcebergTable] = None)(
       attempt: IcebergTable => Option[Seq[MetadataUpdate]]): Unit = {
-    var table = pinned.getOrElse(resolveCurrent(spark, url))
+    var table = pinned.getOrElse(ops.current())
     var retries = 0
     while (true) {
       val updates = attempt(table) match {
         case None => return
         case Some(u) => u
       }
-      val published = catalogCommit.get match {
-        case null =>
-          val newVersion = table.version + 1
-          val created =
-            try {
-              writeStringExclusive(s"$url/metadata/v$newVersion.metadata.json",
-                MetadataUpdate.applyTo(table, updates), table.conf)
-              true
-            } catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException
-                  if retries < MaxCommitRetries => false
-            }
-          if (created) writeHint(url, newVersion, table.conf)
-          created
-        case (_, publish) =>
-          try { publish(MetadataUpdate.requirements(table.metadata, updates), updates); true }
-          catch { case _: CommitConflictException if retries < MaxCommitRetries => false }
-      }
-      if (published) return
-      retries += 1 // lost the race: rebuild against the fresh state
-      val lost = table.version
-      table = resolveCurrent(spark, url)
-      // the winner moves the version hint just after its create; until then
-      // a reload still reads the version this attempt lost at, and retrying
-      // against it only loses again, so back off until the hint moves
-      var waitMs = 1L
-      while (catalogCommit.get == null && table.version <= lost && waitMs <= 1024) {
-        Thread.sleep(waitMs)
-        waitMs *= 2
-        table = resolveCurrent(spark, url)
-      }
+      if (ops.commit(table, updates)) return
+      if (retries == MaxCommitRetries)
+        throw new java.util.ConcurrentModificationException(
+          s"commit to ${ops.url} lost to concurrent committers ${retries + 1} times")
+      retries += 1
+      table = ops.current()
     }
   }
 
   private val MaxCommitRetries = 10
-
-  /** Serializes same-JVM committers (local FS create(overwrite=false) has a
-    * check-then-create window); cross-process atomicity is the filesystem's
-    * exclusive-create contract (HDFS yes, raw object stores no — catalog). */
-  private val commitLock = new Object
-
-  /** Near-atomic hint update: write aside, then delete+rename. Readers that
-    * hit the tiny window fall back to IcebergTable.versionHint's dir scan.
-    * The new version is already published when this runs, so an I/O
-    * failure is logged, not raised — as Iceberg's HadoopTableOperations
-    * does. The hint is then removed, so readers and the next committer
-    * scan the metadata directory instead of trusting a stale version. */
-  private def writeHint(url: String, version: Int, conf: Configuration): Unit = {
-    val target = new Path(s"$url/metadata/version-hint.text")
-    val tmp = new Path(s"$url/metadata/.version-hint.${UUID.randomUUID()}.tmp")
-    val fs = target.getFileSystem(conf)
-    try {
-      val out = fs.create(tmp, true)
-      try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      commitLock.synchronized {
-        fs.delete(target, false)
-        if (!fs.rename(tmp, target))
-          throw new java.io.IOException(s"rename of $tmp to $target failed")
-      }
-    } catch {
-      case e: java.io.IOException =>
-        log.warn(s"$url v$version is committed but its version hint was not " +
-          "updated; readers fall back to the metadata directory scan", e)
-        try { fs.delete(target, false); fs.delete(tmp, false) }
-        catch {
-          case d: java.io.IOException =>
-            log.warn(s"stale version hint of $url could not be removed", d)
-        }
-    }
-  }
-
-  /** View-metadata publish: the same exclusive-create + hint swap the
-    * table commit loop's filesystem branch uses, reused by
-    * [[IcebergViews]] so views get identical concurrency semantics. */
-  private[iceberg] def writeViewJson(url: String, version: Int,
-      json: String, conf: Configuration): Unit = {
-    writeStringExclusive(s"$url/metadata/v$version.metadata.json", json, conf)
-    writeHint(url, version, conf)
-  }
-
-  private def writeStringExclusive(path: String, content: String, conf: Configuration): Unit =
-    commitLock.synchronized {
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) // pre-check; the create below is the atomic gate
-        throw new org.apache.hadoop.fs.FileAlreadyExistsException(path)
-      val out = fs.create(p, false)
-      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
 
   // ------------------------------------------------------------- fs io
 

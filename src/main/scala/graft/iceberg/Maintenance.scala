@@ -25,8 +25,10 @@ object Maintenance {
     *  - time travel to pre-compaction snapshots still works (old files stay
     *    on disk until expireSnapshots).
     */
-  def compact(spark: SparkSession, url: String, targetFiles: Option[Int] = None): Int = {
-    val t0 = IcebergWriter.resolveCurrent(spark, url)
+  def compact(spark: SparkSession, url: String, targetFiles: Option[Int] = None): Int =
+    compact(FileSystemOps(spark, url), targetFiles)
+  def compact(ops: TableOps, targetFiles: Option[Int]): Int = {
+    val t0 = ops.current()
     if (t0.metadata.currentSnapshotId < 0) return 0
     val frozen = t0.atSnapshot(t0.currentSnapshot.snapshotId)
     val pinned = frozen.liveFiles()
@@ -62,13 +64,13 @@ object Maintenance {
           col("_row_id"), col("_last_updated_sequence_number"))
       }
     val compacted = if (sortedTable) base else base.repartition(n)
-    val files = IcebergWriter.writeDataFiles(spark, url, t0, compacted,
+    val files = IcebergWriter.writeDataFiles(ops.spark, ops.url, t0, compacted,
       targetPartitions = if (sortedTable) Some(n) else None,
       carryLineage = carryLineage)
     // deletes applied by this rewrite are exactly those live at PIN time;
     // a delete committed after the pin would be silently lost when the
     // delete manifests drop — the commit detects the mismatch and refuses
-    commitRewrite(spark, url, t0, frozen, files, pinned, ManifestDrop.AllDeletes)
+    commitRewrite(ops, t0, frozen, files, pinned, ManifestDrop.AllDeletes)
     pinned.size
   }
 
@@ -85,9 +87,9 @@ object Maintenance {
     * silently lose it). Returns the number of files rewritten; fewer than
     * two matched files with no row-level deletes is a no-op.
     */
-  def compactWhere(spark: SparkSession, url: String,
-      pred: Pruning.IcePredicate, targetFiles: Option[Int] = None): Int = {
-    val t0 = IcebergWriter.resolveCurrent(spark, url)
+  def compactWhere(ops: TableOps, pred: Pruning.IcePredicate,
+      targetFiles: Option[Int] = None): Int = {
+    val t0 = ops.current()
     if (t0.metadata.currentSnapshotId < 0) return 0
     val frozen = t0.atSnapshot(t0.currentSnapshot.snapshotId)
     val matched = frozen.prunedFiles(pred)
@@ -111,11 +113,11 @@ object Maintenance {
     }
     // sorted tables: the write path range-partitions on the sort order with
     // targetPartitions output slices (a blind round-robin would fight it)
-    val files = IcebergWriter.writeDataFiles(spark, url, t0,
+    val files = IcebergWriter.writeDataFiles(ops.spark, ops.url, t0,
       if (sortedTable) base else base.repartition(n),
       targetPartitions = if (sortedTable) Some(n) else None,
       carryLineage = carryLineage)
-    commitRewrite(spark, url, t0, frozen, files, matched, ManifestDrop.Keep,
+    commitRewrite(ops, t0, frozen, files, matched, ManifestDrop.Keep,
       Map("graft-compact-scope" -> matchedPaths.size.toString))
     matched.size
   }
@@ -126,12 +128,12 @@ object Maintenance {
     * delete committed after it makes the commit refuse instead of silently
     * resurrecting the concurrently-deleted rows; a concurrent append's
     * files survive, since only `removed` is deleted. */
-  private def commitRewrite(spark: SparkSession, url: String, t0: IcebergTable,
+  private def commitRewrite(ops: TableOps, t0: IcebergTable,
       frozen: IcebergTable, files: Seq[IcebergWriter.NewDataFile],
       removed: Seq[Manifests.DataFileInfo], drop: ManifestDrop,
       summary: Map[String, String] = Map.empty): Unit = {
     val deletesAtPin = IcebergWriter.liveDeleteSet(frozen)
-    IcebergWriter.commitSnapshot(spark, url, Some(t0)) { table =>
+    IcebergWriter.commitSnapshot(ops, Some(t0)) { table =>
       IcebergWriter.requireDeletesUnchanged(table, deletesAtPin)
       Some(IcebergWriter.SnapshotUpdate("replace", added = files,
         removed = removed, drop = drop, summary = summary))
@@ -162,13 +164,16 @@ object Maintenance {
     * meaningful linear scale), and the table must not declare a sort order
     * (the write path would re-sort by it, undoing the clustering). */
   def zorder(spark: SparkSession, url: String, cols: Seq[String],
-      targetFiles: Option[Int] = None): Unit = {
+      targetFiles: Option[Int] = None): Unit =
+    zorder(FileSystemOps(spark, url), cols, targetFiles)
+  def zorder(ops: TableOps, cols: Seq[String], targetFiles: Option[Int]): Unit = {
+    import ops.{spark, url}
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     require(cols.size >= 2 && cols.size <= 4,
       s"zorder takes 2-4 columns, got ${cols.size}")
-    val t0 = IcebergWriter.resolveCurrent(spark, url)
+    val t0 = ops.current()
     if (t0.metadata.currentSnapshotId < 0) return
     require(t0.sortOrderColumns.isEmpty,
       "zorder conflicts with the table's sort order (sorted writes would " +
@@ -224,7 +229,7 @@ object Maintenance {
         .repartitionByRange(n, col("__z"))
         .sortWithinPartitions(col("__z"))
         .drop("__z")
-      commitRewrite(spark, url, t0, frozen,
+      commitRewrite(ops, t0, frozen,
         IcebergWriter.writeDataFiles(spark, url, t0, clustered),
         pinned, ManifestDrop.AllDeletes, Map("graft-zorder-by" -> cols.mkString(",")))
     } else {
@@ -251,7 +256,7 @@ object Maintenance {
         .agg(aggExprs.head, aggExprs.tail: _*)
       val z = morton(cols.zipWithIndex.map { case (c, i) =>
         code(c, col(s"__zlo_$i"), col(s"__zspan_$i")) })
-      commitRewrite(spark, url, t0, frozen,
+      commitRewrite(ops, t0, frozen,
         IcebergWriter.writeDataFiles(spark, url, t0, df, targetPartitions = Some(n),
           zorderBy = Some(z), zorderStats = Some(stats)),
         pinned, ManifestDrop.AllDeletes, Map("graft-zorder-by" -> cols.mkString(",")))
@@ -287,7 +292,7 @@ object Maintenance {
     * current snapshot (per-partition counts from manifests, zero data I/O
     * — see [[PartitionStatistics]]). Returns the written file path. */
   def computePartitionStatistics(spark: SparkSession, url: String): String =
-    PartitionStatistics.compute(spark, url)
+    PartitionStatistics.compute(FileSystemOps(spark, url))
 
   /** Delete ORPHAN files: bytes under the table's `data/` and `metadata/`
     * directories that NO snapshot references — the leftovers of failed or
@@ -300,11 +305,15 @@ object Maintenance {
     * deleting those would corrupt it. Version-metadata JSONs and the hint
     * file are never touched. Returns the number of files deleted. */
   def removeOrphans(spark: SparkSession, url: String,
-      olderThanMs: Long = 3L * 24 * 3600 * 1000,
+      olderThanMs: Long = 3L * 24 * 3600 * 1000, dryRun: Boolean = false): Int =
+    removeOrphans(FileSystemOps(spark, url), olderThanMs, dryRun)
+  def removeOrphans(ops: TableOps,
+      olderThanMs: Long,
       /** Report the would-be-deleted count WITHOUT deleting — the audit
         * pass operators run before trusting a destructive sweep. */
-      dryRun: Boolean = false): Int = {
-    val table = IcebergWriter.resolveCurrent(spark, url)
+      dryRun: Boolean): Int = {
+    import ops.url
+    val table = ops.current()
     val conf = table.conf
     val cutoff = System.currentTimeMillis() - olderThanMs
     val referenced = scala.collection.mutable.Set.empty[String]
@@ -354,18 +363,22 @@ object Maintenance {
     * files, manifests, and manifest lists are physically deleted. Time
     * travel to an expired snapshot then fails (by design). */
   def expireSnapshots(spark: SparkSession, url: String, keepLast: Int = 1,
+      olderThan: Option[Long] = None): Unit =
+    expireSnapshots(FileSystemOps(spark, url), keepLast, olderThan)
+  def expireSnapshots(ops: TableOps, keepLast: Int,
       /** Spec `older_than` cutoff (epoch ms): main-chain snapshots at or
         * after this timestamp are RETAINED beyond `keepLast` — the
         * time-based retention policy production tables run on ("keep 7
         * days"). None = keepLast alone decides. */
-      olderThan: Option[Long] = None): Unit = {
+      olderThan: Option[Long]): Unit = {
+    import ops.url
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val before = IcebergWriter.resolveCurrent(spark, url)
+    val before = ops.current()
     val conf = before.conf
     if (before.metadata.currentSnapshotId < 0) return
 
     // 1. trim metadata through the optimistic commit loop
-    IcebergWriter.commitWithRetry(spark, url) { table =>
+    IcebergWriter.commitWithRetry(ops) { table =>
       // spec ref retention: a ref whose snapshot is older than its
       // max-ref-age-ms RETIRES here — it stops pinning history and is
       // dropped from metadata in the same commit (main never retires)
@@ -422,7 +435,7 @@ object Maintenance {
     // solely by DELETED entries are unreachable bytes. Manifests and
     // manifest lists of remaining snapshots are all kept (reconciliation
     // reads them, including pure-DELETED ones).
-    val after = IcebergWriter.resolveCurrent(spark, url)
+    val after = ops.current()
     val liveData = scala.collection.mutable.Set.empty[String]
     val liveAvro = scala.collection.mutable.Set.empty[String]
     after.metadata.snapshots.foreach { snap =>

@@ -31,8 +31,8 @@ object PartitionStatistics {
   /** Compute for the CURRENT snapshot, write `metadata/<uuid>-partition-
     * stats.parquet` (sorted by partition tuple, spec field ids stamped),
     * register it (replacing this snapshot's entry). Returns the path. */
-  def compute(spark: SparkSession, url: String): String = {
-    val table = IcebergWriter.resolveCurrent(spark, url)
+  def compute(ops: TableOps): String = {
+    val table = ops.current()
     val conf = table.conf
     require(table.metadata.currentSnapshotId >= 0,
       "cannot compute partition statistics: table has no snapshot")
@@ -126,7 +126,7 @@ object PartitionStatistics {
           snapshotId)
       }
     // the registered path is one FILE (spec), written straight to its place
-    val statsPath = s"$url/metadata/${java.util.UUID.randomUUID()}-partition-stats.parquet"
+    val statsPath = s"${ops.url}/metadata/${java.util.UUID.randomUUID()}-partition-stats.parquet"
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(schema)
     val (fileLen, _) = TaskFileWriter.writeOne(new org.apache.hadoop.fs.Path(statsPath),
@@ -137,7 +137,7 @@ object PartitionStatistics {
     entry.put("snapshot-id", snapshotId)
     entry.put("statistics-path", statsPath)
     entry.put("file-size-in-bytes", fileLen)
-    IcebergWriter.commitWithRetry(spark, url)(_ =>
+    IcebergWriter.commitWithRetry(ops)(_ =>
       Some(Seq(MetadataUpdate.SetPartitionStatistics(snapshotId, entry))))
     statsPath
   }

@@ -324,10 +324,17 @@ object Pruning {
     case NotNull(c) => IsNull(c)
     case And(l, r) => Or(negate(l), negate(r))
     case Or(l, r) => And(negate(l), negate(r))
-    case In(c, vs) => vs.map(v => NotEq(c, v): IcePredicate)
-      .reduceOption(And.apply).getOrElse(AlwaysTrue)
+    case In(c, vs) => allOf(vs.map(v => NotEq(c, v): IcePredicate).toIndexedSeq)
     case AlwaysTrue => throw new IllegalArgumentException("cannot negate TRUE")
   }
+
+  /** `ps` joined by And as a BALANCED tree: the recursive evaluators then
+    * walk it log2(n) deep, where a left-deep chain one link per value of a
+    * large IN overflows the stack. */
+  private def allOf(ps: IndexedSeq[IcePredicate]): IcePredicate =
+    if (ps.isEmpty) AlwaysTrue
+    else if (ps.size == 1) ps.head
+    else And(allOf(ps.take(ps.size / 2)), allOf(ps.drop(ps.size / 2)))
 
   /** IcePredicate → Spark Column for exact row-level filtering. */
   def toColumn(p: IcePredicate): Option[org.apache.spark.sql.Column] = {

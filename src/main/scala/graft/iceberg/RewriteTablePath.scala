@@ -204,7 +204,7 @@ object RewriteTablePath {
 
   def rewrite(spark: SparkSession, url: String, sourcePrefix: String,
       targetPrefix: String, stagingLocation: Option[String] = None): Result =
-    rewriteTable(spark, IcebergWriter.resolveCurrent(spark, url),
+    rewriteTable(spark, IcebergTable.load(spark, url),
       sourcePrefix, targetPrefix, stagingLocation)
 
   /** The table-taking form: catalogs resolve THEIR view of the table (a

@@ -60,8 +60,10 @@ object TableStatistics {
     * statistics puffin under `metadata/`, and register it in the table
     * metadata (replacing any prior entry for the same snapshot). Returns
     * the (fieldId → ndv) map that was recorded. */
-  def compute(spark: SparkSession, url: String): Map[Int, Long] = {
-    val table = IcebergWriter.resolveCurrent(spark, url)
+  def compute(spark: SparkSession, url: String): Map[Int, Long] =
+    compute(FileSystemOps(spark, url))
+  def compute(ops: TableOps): Map[Int, Long] = {
+    val table = ops.current()
     val conf = table.conf
     require(table.metadata.currentSnapshotId >= 0,
       "cannot compute statistics: table has no snapshot")
@@ -71,7 +73,7 @@ object TableStatistics {
     // deleted by DVs/eq-deletes must not count), all columns at once
     val merged = sketchColumns(table.read(columns = cols.map(_.name)),
       cols.map(_.icebergTypeString).toArray)
-    writeAndRegister(spark, url, conf, table, cols, merged)
+    writeAndRegister(ops, conf, table, cols, merged)
   }
 
   /** Telemetry/spec hook: incremental computations that avoided the
@@ -98,8 +100,10 @@ object TableStatistics {
     * entry also runs the full pass (nothing to union). Any other failure —
     * an unreadable or corrupt prior puffin, an IO error — THROWS: silently
     * recomputing would hide a real fault behind a quietly-full-cost run. */
-  def computeIncremental(spark: SparkSession, url: String): Map[Int, Long] = {
-    val table = IcebergWriter.resolveCurrent(spark, url)
+  def computeIncremental(spark: SparkSession, url: String): Map[Int, Long] =
+    computeIncremental(FileSystemOps(spark, url))
+  def computeIncremental(ops: TableOps): Map[Int, Long] = {
+    val table = ops.current()
     val conf = table.conf
     require(table.metadata.currentSnapshotId >= 0,
       "cannot compute statistics: table has no snapshot")
@@ -118,10 +122,10 @@ object TableStatistics {
     }
     def fullPass(): Map[Int, Long] = {
       fullFallbacks.incrementAndGet()
-      compute(spark, url)
+      compute(ops)
     }
     prior match {
-      case None => compute(spark, url) // nothing registered: not a fallback
+      case None => compute(ops) // nothing registered: not a fallback
       case Some(e) =>
         // expected fallback 1: a snapshot in (ancestor, current] whose
         // operation cannot be expressed as appends (delete/overwrite/
@@ -151,7 +155,7 @@ object TableStatistics {
           u.getResult.toByteArray
         }.toArray
         incrementalUnions.incrementAndGet()
-        writeAndRegister(spark, url, conf, table, cols, merged)
+        writeAndRegister(ops, conf, table, cols, merged)
     }
   }
 
@@ -193,14 +197,13 @@ object TableStatistics {
 
   /** Write the puffin + REPLACE this snapshot's metadata entry (keep other
     * snapshots' entries — the spec's list form; engines match snapshot-id). */
-  private def writeAndRegister(spark: SparkSession, url: String,
-      conf: Configuration, table: IcebergTable,
+  private def writeAndRegister(ops: TableOps, conf: Configuration, table: IcebergTable,
       cols: Seq[SchemaField], merged: Array[Array[Byte]]): Map[Int, Long] = {
     val snapshotId = table.metadata.currentSnapshotId
     val seq = table.currentSnapshot.sequenceNumber.getOrElse(0L)
     val ndvs = merged.map(b =>
       math.round(CompactSketch.wrap(Memory.wrap(b)).getEstimate))
-    val statsPath = s"$url/metadata/${java.util.UUID.randomUUID()}-stats.puffin"
+    val statsPath = s"${ops.url}/metadata/${java.util.UUID.randomUUID()}-stats.puffin"
     // opt-in blob compression (engine property, settable via ALTER TABLE
     // SET TBLPROPERTIES): iceberg-java zstd-compresses statistics blobs by
     // default, so writing the same form proves cross-engine symmetry
@@ -225,7 +228,7 @@ object TableStatistics {
       b.withObject("/properties").put("ndv", ndv.toString)
       blobMeta.add(b)
     }
-    IcebergWriter.commitWithRetry(spark, url)(_ =>
+    IcebergWriter.commitWithRetry(ops)(_ =>
       Some(Seq(MetadataUpdate.SetStatistics(snapshotId, entry))))
     cols.map(_.id).zip(ndvs).toMap
   }

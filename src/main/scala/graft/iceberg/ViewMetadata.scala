@@ -183,7 +183,7 @@ object IcebergViews {
     root.set[ArrayNode]("version-log", log.add(le))
     val props = root.withObject("/properties")
     properties.foreach { case (k, v) => props.put(k, v) }
-    IcebergWriter.writeViewJson(url, 1, root.toPrettyString, conf)
+    FileSystemOps.publish(url, 1, root.toPrettyString, conf)
   }
 
   /** CREATE OR REPLACE: append a NEW version (+ schema if it changed) and
@@ -226,7 +226,7 @@ object IcebergViews {
     val props = root.withObject("/properties")
     props.removeAll()
     properties.foreach { case (k, v) => props.put(k, v) }
-    IcebergWriter.writeViewJson(url, hint + 1, root.toPrettyString, conf)
+    FileSystemOps.publish(url, hint + 1, root.toPrettyString, conf)
   }
 
   /** ALTER VIEW SET/UNSET TBLPROPERTIES: properties-only metadata bump —
@@ -241,7 +241,7 @@ object IcebergViews {
     val props = root.withObject("/properties")
     set.foreach { case (k, v) => props.put(k, v) }
     unset.foreach(props.remove)
-    IcebergWriter.writeViewJson(url, hint + 1, root.toPrettyString, conf)
+    FileSystemOps.publish(url, hint + 1, root.toPrettyString, conf)
   }
 
   private def versionNode(id: Int, now: Long, schemaId: Int, sql: String,

@@ -1,36 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types._
 
-import graft.iceberg.IcebergTypes
-import graft.sources.GraftIcebergV2Table
-
-/** Catalyst optimizer rule: answer global `count(*)` / `min(col)` /
-  * `max(col)` over an Iceberg table from manifest statistics — zero data
-  * I/O.
-  *
-  * The reference exposes the raw material (`total-records` in snapshot
-  * summaries, per-file record counts and column bounds) but never optimizes
-  * with it (README.md:95-96); Iceberg-java does this inside its scan. Here
-  * it is a proper `Rule[LogicalPlan]`: a global ungrouped aggregate whose
-  * every expression is answerable from metadata, over an un-filtered
-  * `graft-iceberg` relation, collapses to a pre-computed `LocalRelation`
-  * row.
-  *
-  * min/max soundness rules (bail → normal scan):
-  *  - exact-bounds types only: int/long/date/time/timestamps. Strings can
-  *    carry TRUNCATED bounds, float/double bounds ignore NaN (which SQL
-  *    `max` must surface) unless the nan counts prove none exist;
-  *  - no live row-level deletes (a delete may have removed the extreme row);
-  *  - every live file must either record bounds for the column or hold only
-  *    nulls for it.
+/** Session extensions for the Iceberg VIEW SQL surface: DDL rewrites at
+  * PARSE time (the session-catalog rule rejects V2-view DDL before any
+  * resolution rule could run), read expansion as a resolution rule; see
+  * [[GraftViewRules]]. Aggregates answered from manifest statistics need
+  * no extension: the DSv2 scan builder's aggregate pushdown serves them
+  * (`GraftIcebergScanBuilder.supportCompletePushDown`).
   *
   * Register with:
   * {{{
@@ -40,161 +17,7 @@ import graft.sources.GraftIcebergV2Table
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => CountFromIcebergStats)
-    // Iceberg VIEW SQL surface: DDL rewrites at PARSE time (the session-
-    // catalog rule rejects V2-view DDL before any resolution rule could
-    // run), read expansion as a resolution rule; see [[GraftViewRules]]
     e.injectParser((spark, delegate) => new GraftViewSqlParser(spark, delegate))
     e.injectResolutionRule(spark => GraftViewRules(spark))
-  }
-}
-
-object CountFromIcebergStats extends Rule[LogicalPlan] {
-
-  private def isCountStar(e: AggregateExpression): Boolean = e.aggregateFunction match {
-    case Count(Seq(Literal(1, _))) => !e.isDistinct && e.filter.isEmpty
-    case Count(Nil) => !e.isDistinct && e.filter.isEmpty
-    case _ => false
-  }
-
-  /** Strip row-count-preserving Projects between the Aggregate and the scan
-    * (the column-pruning rule inserts one). */
-  @scala.annotation.tailrec
-  private def unwrap(plan: LogicalPlan): LogicalPlan = plan match {
-    case p: org.apache.spark.sql.catalyst.plans.logical.Project => unwrap(p.child)
-    case other => other
-  }
-
-  /** min/max from file bounds. Some(x) = answer (x may be null: zero files
-    * or all-null column); None = not answerable from metadata. */
-  private def minMaxFromStats(t: GraftIcebergV2Table, colName: String,
-      wantMin: Boolean, dt: DataType): Option[Any] = {
-    val table = t.table
-    val field = table.iceSchema.fields.find(_.name == colName)
-      .getOrElse(return None)
-    val ity = field.icebergTypeString
-    val floating = ity == "float" || ity == "double"
-    ity match {
-      case "int" | "long" | "date" | "time" | "timestamp" | "timestamptz" |
-           "timestampz" | "float" | "double" => ()
-      case _ => return None // string/binary bounds may be truncated
-    }
-    if (table.metadata.currentSnapshotId < 0) return Some(null)
-    if (table.liveDeleteFiles.nonEmpty) return None
-    var acc: Any = null
-    var seen = false
-    for (f <- table.liveFiles()) {
-      if (floating && !f.nanValueCounts.get(field.id).contains(0L))
-        return None // a NaN (or unknown NaN count) breaks bound ordering
-      val allNull = (f.valueCounts.get(field.id), f.nullValueCounts.get(field.id)) match {
-        case (Some(v), Some(n)) => v == n
-        case _ => false
-      }
-      if (!allNull) {
-        val bytes = (if (wantMin) f.lowerBounds else f.upperBounds)
-          .getOrElse(field.id, return None) // values exist but no bounds
-        val v = IcebergTypes.decodeBound(bytes, ity)
-        if (!seen) { acc = v; seen = true }
-        else {
-          val c = IcebergTypes.compare(acc, v).getOrElse(return None)
-          if (wantMin != (c <= 0)) acc = v
-        }
-      }
-    }
-    if (!seen) Some(null)
-    else toCatalyst(acc, dt)
-  }
-
-  /** decodeBound widens (int/date → Long, float → Double); narrow back to
-    * the column's catalyst representation. */
-  private def toCatalyst(v: Any, dt: DataType): Option[Any] = (v, dt) match {
-    case (l: java.lang.Long, IntegerType | DateType) => Some(l.toInt)
-    case (l: java.lang.Long, LongType | TimestampType | TimestampNTZType) => Some(l)
-    case (l: Long, IntegerType | DateType) => Some(l.toInt)
-    case (l: Long, LongType | TimestampType | TimestampNTZType) => Some(l)
-    case (d: Double, FloatType) => Some(d.toFloat)
-    case (d: Double, DoubleType) => Some(d)
-    case _ => None
-  }
-
-  /** `count(col)` = Σ(value_count − null_count) over live files — exact
-    * when every file records both counts for the column and no row-level
-    * delete could have removed a counted row. */
-  private def countColFromStats(t: GraftIcebergV2Table, colName: String): Option[Any] = {
-    val table = t.table
-    val field = table.iceSchema.fields.find(_.name == colName).getOrElse(return None)
-    if (table.metadata.currentSnapshotId < 0) return Some(0L)
-    if (table.liveDeleteFiles.nonEmpty) return None
-    var total = 0L
-    for (f <- table.liveFiles()) {
-      (f.valueCounts.get(field.id), f.nullValueCounts.get(field.id)) match {
-        case (Some(v), Some(n)) => total += v - n
-        case _ => return None // a file without counts needs a scan
-      }
-    }
-    Some(total)
-  }
-
-  /** One aggregate expression's metadata answer, or None if it needs data.
-    *
-    * Attribute-based aggregates answer ONLY when the attribute resolves to
-    * the relation's own output by exprId — a name-only match would let
-    * `df.withColumn("a", b+c).agg(min("a"))` over a table with a base
-    * column `a` answer from the base column's file bounds (an intermediate
-    * Project's alias mints a NEW exprId, so the check is exact). */
-  private def answer(ae: AggregateExpression, t: GraftIcebergV2Table,
-      rel: DataSourceV2Relation): Option[Any] = {
-    if (ae.isDistinct || ae.filter.nonEmpty) return None
-    def isBase(a: AttributeReference): Boolean =
-      rel.output.exists(_.exprId == a.exprId)
-    ae.aggregateFunction match {
-      case Count(Seq(Literal(1, _))) | Count(Nil) =>
-        t.table.countFromStats().map(n => n: Any)
-      case Count(Seq(a: AttributeReference)) if isBase(a) =>
-        countColFromStats(t, a.name)
-      case Min(a: AttributeReference) if isBase(a) =>
-        minMaxFromStats(t, a.name, wantMin = true, a.dataType)
-      case Max(a: AttributeReference) if isBase(a) =>
-        minMaxFromStats(t, a.name, wantMin = false, a.dataType)
-      case _ => None
-    }
-  }
-
-  /** Scan-scoping options that narrow a read below the table's full live
-    * state WITHOUT being baked into the table instance (file-subset reads
-    * inside the changelog, incremental ranges, streaming offsets). A
-    * relation carrying any of them must NOT answer aggregates from the
-    * table's full metadata — `count(*)` over a changelog frame scanning
-    * one commit's files would silently return the whole table's count.
-    * Snapshot pinning (snapshot-id/branch/tag/as-of) is SAFE: those
-    * resolve into the table instance itself, so its metadata IS the
-    * pinned view's. Mirrors the DSv2 pushdown's refusal in
-    * `answerFromMetadata0`. */
-  private val scanScopingKeys = Seq("file-subset", "start-snapshot-id",
-    "end-snapshot-id", "starting-snapshot-id", "stream-mode",
-    "stream-from-earliest")
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg @ Aggregate(Nil, aggExprs, child, _) =>
-      unwrap(child) match {
-        // runs before V2ScanRelationPushDown, so the DSv2 relation is intact
-        case rel: DataSourceV2Relation =>
-          rel.table match {
-            case t: GraftIcebergV2Table
-                if !t.cdcMode &&
-                  !scanScopingKeys.exists(rel.options.containsKey) =>
-              val answers = aggExprs.map {
-                case Alias(ae: AggregateExpression, _) => answer(ae, t, rel)
-                case ae: AggregateExpression => answer(ae, t, rel)
-                case _ => None
-              }
-              if (answers.forall(_.isDefined))
-                LocalRelation(agg.output.map(_.toAttribute),
-                  Seq(InternalRow.fromSeq(answers.map(_.get))))
-              else agg
-            case _ => agg
-          }
-        case _ => agg
-      }
   }
 }

@@ -83,7 +83,7 @@ final class GraftBatchWrite(table: IcebergTable, mode: WriteMode,
           "and publishing them straight to main would bypass the audit gate. " +
           "Unset the WAP conf to write to main directly.")
     def publish(build: IcebergTable => IcebergWriter.SnapshotUpdate): Unit =
-      table.runCommit(IcebergWriter.commitSnapshot(spark, table.url)(t => Some(build(t))))
+      IcebergWriter.commitSnapshot(table.ops)(t => Some(build(t)))
     mode match {
       case WriteMode.Append =>
         val target = wapBranch.map(IcebergWriter.SnapshotTarget.Branch)

@@ -126,9 +126,9 @@ final class GraftDeltaBatchWrite(table: IcebergTable, operation: String,
       case _ => ()
     }
     // catalog-opened tables publish through the catalog's atomic commit
-    table.runCommit(IcebergWriter.commitDelta(spark, table.url, commitId,
+    IcebergWriter.commitDelta(table.ops, commitId,
       dataFiles.toSeq, deleteFiles.toSeq, operation,
-      scannedKeys(), deleteFilesAtScan(), addValidation()))
+      scannedKeys(), deleteFilesAtScan(), addValidation())
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -37,7 +37,7 @@ class GraftIcebergCatalog extends TableCatalog with SupportsNamespaces
 
   /** SQL `CALL cat.system.<proc>(table => 'db.t', ...)` — the shared
     * maintenance registry ([[GraftProcedures]]). Tables resolve through
-    * the REST catalog WITH its commit scope, so a maintenance commit gets
+    * the REST catalog and carry its `RestOps`, so a maintenance commit gets
     * the same catalog atomicity as DML. */
   override def loadProcedure(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
@@ -157,7 +157,7 @@ class GraftIcebergCatalog extends TableCatalog with SupportsNamespaces
     * REST commit guarded by the catalog's requirements, like DML. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = rest.loadTable(spark, ns(ident.namespace()), ident.name())
-    t.runCommit(IcebergWriter.alterTable(spark, t.url, changes))
+    IcebergWriter.alterTable(t.ops, changes)
     loadTable(ident)
   }
 

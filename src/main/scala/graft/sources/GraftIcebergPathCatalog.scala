@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.expressions.{Literal, Transform}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.iceberg.{IcebergTable, IcebergWriter}
+import graft.iceberg.{FileSystemOps, IcebergTable, IcebergWriter}
 
 /** Filesystem-warehouse catalog (the HadoopCatalog pattern from the Iceberg
   * spec): a table named `cat.db.t` lives at `<warehouse>/db/t`, resolved by
@@ -203,7 +203,7 @@ class GraftIcebergPathCatalog extends TableCatalog with IcebergTransformFunction
     * ([[IcebergWriter.alterTable]]): SET/UNSET TBLPROPERTIES and
     * ADD/RENAME/DROP COLUMN publish one version together, or nothing. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    IcebergWriter.alterTable(spark, dir(ident), changes)
+    IcebergWriter.alterTable(FileSystemOps(spark, dir(ident)), changes)
     loadTable(ident)
   }
 

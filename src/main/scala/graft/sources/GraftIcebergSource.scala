@@ -299,7 +299,7 @@ final class GraftIcebergV2Table(val table: IcebergTable,
     val pred = filters.flatMap(Pruning.fromSparkFilterExact)
       .reduceOption(Pruning.And.apply).getOrElse(Pruning.AlwaysTrue)
     // catalog-opened tables publish through the catalog's atomic commit
-    table.runCommit(IcebergWriter.deleteRows(SparkSession.active, table.url, pred))
+    IcebergWriter.deleteRows(table.ops, pred)
   }
 
   override def name(): String = s"graft-iceberg ${table.url}"
@@ -524,9 +524,9 @@ final class GraftIcebergScanBuilder(tbl: GraftIcebergV2Table,
 
   /** METADATA-ANSWERED aggregates through the standard DSv2 contract —
     * `SELECT count(*)|count(c)|min(c)|max(c) FROM cat.db.t` never touches
-    * a data file, with NO session extension required (the Catalyst-rule
-    * path in GraftExtensions serves the non-catalog API; this serves every
-    * plain catalog reader). COMPLETE pushdown only — the answer must be
+    * a data file, with NO session extension required: catalog and path
+    * (`format("graft-iceberg")`) reads alike, the one place aggregates are
+    * answered from metadata. COMPLETE pushdown only — the answer must be
     * EXACT or the aggregation is refused and Spark scans:
     *  - count(*): [[IcebergTable.countFromStats]]'s soundness rules
     *    (position deletes subtract exactly; equality deletes refuse);
@@ -1383,9 +1383,7 @@ object GraftIcebergScan {
     // if it held the extremum, excluding it would answer a narrower
     // min/max than the data's, with a LocalTableScan plan that never
     // touches the file to notice. A row-bearing file with no value count
-    // for the column therefore refuses the whole claim (matching the
-    // Catalyst metadata-agg rule in GraftExtensions, which has required
-    // counts-or-proven-all-null per file from the start).
+    // for the column therefore refuses the whole claim.
     if (files.exists(df => df.recordCount > 0L &&
         !df.valueCounts.contains(f.id))) return None
     val withValues = files.filter(df =>

@@ -28,8 +28,8 @@ import graft.iceberg.{IcebergTable, IcebergWriter, Maintenance}
   *
   * Each procedure resolves the `table` argument THROUGH ITS OWN CATALOG
   * (the path catalog's warehouse layout, the REST catalog's metadata
-  * location) and runs commits under that catalog's commit scope, so a REST
-  * table's maintenance commit gets the same catalog atomicity as its DML.
+  * location) and commits through that table's own ops, so a REST table's
+  * maintenance commit gets the same catalog atomicity as its DML.
   * Results come back as rows (a driver-side [[LocalScan]] — maintenance
   * results are metadata-scale).
   *
@@ -191,16 +191,14 @@ object GraftProcedures {
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
         val before = t.currentSnapshot.snapshotId
-        var rewritten = 0
-        t.runCommit(Option(a(2)).map(_.asInstanceOf[String]) match {
+        val rewritten = Option(a(2)).map(_.asInstanceOf[String]) match {
           case Some(where) =>
-            rewritten = Maintenance.compactWhere(s, t.url,
-              parseWhere(where), intArg(a(1)))
+            Maintenance.compactWhere(t.ops, parseWhere(where), intArg(a(1)))
           case None =>
             // compact reports what it ACTUALLY rewrote — 0 when the
             // no-op guard fires, not a pre-claimed liveFiles().size
-            rewritten = Maintenance.compact(s, t.url, intArg(a(1)))
-        })
+            Maintenance.compact(t.ops, intArg(a(1)))
+        }
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("previous_snapshot_id"),
           longField("current_snapshot_id"), intField("live_files"),
@@ -216,7 +214,7 @@ object GraftProcedures {
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
         val cols = a(1).asInstanceOf[String].split(',').map(_.trim).toSeq
-        t.runCommit(Maintenance.zorder(s, t.url, cols, intArg(a(2))))
+        Maintenance.zorder(t.ops, cols, intArg(a(2)))
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("current_snapshot_id"),
           intField("live_files"))),
@@ -232,9 +230,8 @@ object GraftProcedures {
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
         val before = t.metadata.snapshots.size
-        t.runCommit(Maintenance.expireSnapshots(s, t.url,
-          intArg(a(1)).getOrElse(1),
-          olderThan = Option(a(2)).map(_.asInstanceOf[java.lang.Long].longValue)))
+        Maintenance.expireSnapshots(t.ops, intArg(a(1)).getOrElse(1),
+          olderThan = Option(a(2)).map(_.asInstanceOf[java.lang.Long].longValue))
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(intField("expired_snapshots"),
           intField("remaining_snapshots"))),
@@ -250,7 +247,7 @@ object GraftProcedures {
           comment = "audit pass: report would-be-deleted count, delete nothing")),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        val n = Maintenance.removeOrphans(s, t.url,
+        val n = Maintenance.removeOrphans(t.ops,
           Option(a(1)).map(_.asInstanceOf[java.lang.Long].longValue)
             .getOrElse(3L * 24 * 3600 * 1000),
           dryRun = Option(a(2)).exists(_.asInstanceOf[Boolean]))
@@ -261,8 +258,7 @@ object GraftProcedures {
       Seq(tableParam, ParamDef("target_manifests", IntegerType, Some("1"))),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(Maintenance.rewriteManifests(s, t.url,
-          intArg(a(1)).getOrElse(1)))
+        IcebergWriter.rewriteManifests(t.ops, intArg(a(1)).getOrElse(1))
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(intField("manifests"))),
           after.manifestList.size)
@@ -272,8 +268,7 @@ object GraftProcedures {
       Seq(tableParam, ParamDef("target_files", IntegerType, Some("1"))),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(Maintenance.rewritePositionDeletes(s, t.url,
-          intArg(a(1)).getOrElse(1)))
+        IcebergWriter.rewritePositionDeletes(t.ops, intArg(a(1)).getOrElse(1))
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(intField("position_delete_files"))),
           after.positionDeleteFiles.size)
@@ -284,8 +279,7 @@ object GraftProcedures {
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
         val before = t.currentSnapshot.snapshotId
-        t.runCommit(IcebergWriter.rollbackTo(s, t.url,
-          a(1).asInstanceOf[java.lang.Long].longValue))
+        IcebergWriter.rollbackTo(t.ops, a(1).asInstanceOf[java.lang.Long].longValue)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("previous_snapshot_id"),
           longField("current_snapshot_id"))),
@@ -314,7 +308,7 @@ object GraftProcedures {
           s"timestamp_ms=$ms predates every main-ancestor snapshot of ${a(0)}")
         val target = fits.maxBy { case (s2, i) => (s2.timestampMs, i) }._1
         val before = t.currentSnapshot.snapshotId
-        t.runCommit(IcebergWriter.rollbackTo(s, t.url, target.snapshotId))
+        IcebergWriter.rollbackTo(t.ops, target.snapshotId)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("previous_snapshot_id"),
           longField("current_snapshot_id"))),
@@ -325,8 +319,7 @@ object GraftProcedures {
       Seq(tableParam, ParamDef("branch", StringType)),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(IcebergWriter.fastForward(s, t.url,
-          a(1).asInstanceOf[String]))
+        IcebergWriter.fastForward(t.ops, a(1).asInstanceOf[String])
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("current_snapshot_id"))),
           after.currentSnapshot.snapshotId)
@@ -409,7 +402,7 @@ object GraftProcedures {
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
         val srcId = a(1).asInstanceOf[java.lang.Long].longValue
-        t.runCommit(IcebergWriter.cherryPick(s, t.url, srcId))
+        IcebergWriter.cherryPick(t.ops, srcId)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("source_snapshot_id"),
           longField("current_snapshot_id"))),
@@ -421,8 +414,7 @@ object GraftProcedures {
       Seq(tableParam, ParamDef("wap_id", StringType)),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(IcebergWriter.publishChanges(s, t.url,
-          a(1).asInstanceOf[String]))
+        IcebergWriter.publishChanges(t.ops, a(1).asInstanceOf[String])
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("current_snapshot_id"))),
           after.currentSnapshot.snapshotId)
@@ -434,8 +426,7 @@ object GraftProcedures {
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
         val before = t.currentSnapshot.snapshotId
-        t.runCommit(IcebergWriter.setCurrentSnapshot(s, t.url,
-          a(1).asInstanceOf[java.lang.Long].longValue))
+        IcebergWriter.setCurrentSnapshot(t.ops, a(1).asInstanceOf[java.lang.Long].longValue)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("previous_snapshot_id"),
           longField("current_snapshot_id"))),
@@ -464,8 +455,8 @@ object GraftProcedures {
         ParamDef("snapshot_id", LongType, Some("NULL"))),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(IcebergWriter.tag(s, t.url, a(1).asInstanceOf[String],
-          Option(a(2)).map(_.asInstanceOf[java.lang.Long].longValue)))
+        IcebergWriter.tag(t.ops, a(1).asInstanceOf[String],
+          Option(a(2)).map(_.asInstanceOf[java.lang.Long].longValue), maxRefAgeMs = None)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("snapshot_id"))),
           after.refs(a(1).asInstanceOf[String]).snapshotId)
@@ -476,8 +467,8 @@ object GraftProcedures {
         ParamDef("snapshot_id", LongType, Some("NULL"))),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(IcebergWriter.branch(s, t.url, a(1).asInstanceOf[String],
-          Option(a(2)).map(_.asInstanceOf[java.lang.Long].longValue)))
+        IcebergWriter.branch(t.ops, a(1).asInstanceOf[String],
+          Option(a(2)).map(_.asInstanceOf[java.lang.Long].longValue), maxRefAgeMs = None)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(longField("snapshot_id"))),
           after.refs(a(1).asInstanceOf[String]).snapshotId)
@@ -487,7 +478,7 @@ object GraftProcedures {
       Seq(tableParam, ParamDef("ref", StringType)),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        t.runCommit(IcebergWriter.dropRef(s, t.url, a(1).asInstanceOf[String]))
+        IcebergWriter.dropRef(t.ops, a(1).asInstanceOf[String])
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(intField("remaining_refs"))),
           after.refs.size)
@@ -498,15 +489,11 @@ object GraftProcedures {
         comment = "theta-union only the rows appended since the prior entry")),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        var ndvs: Map[Int, Long] = Map.empty
         val incremental = Option(a(1))
           .exists(_.asInstanceOf[java.lang.Boolean].booleanValue)
-        t.runCommit {
-          ndvs =
-            if (incremental)
-              graft.iceberg.TableStatistics.computeIncremental(s, t.url)
-            else Maintenance.computeStatistics(s, t.url)
-        }
+        val ndvs =
+          if (incremental) graft.iceberg.TableStatistics.computeIncremental(t.ops)
+          else graft.iceberg.TableStatistics.compute(t.ops)
         val nameById = resolve(a(0).asInstanceOf[String])
           .iceSchema.fields.map(f => f.id -> f.name).toMap
         val schema = StructType(Seq(intField("field_id"),
@@ -536,7 +523,7 @@ object GraftProcedures {
                   s"cannot parse sort field '$part' (col [asc|desc])")
               }
             }).getOrElse(Nil)
-        t.runCommit(IcebergWriter.setSortOrder(s, t.url, parsed))
+        IcebergWriter.setSortOrder(t.ops, parsed)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(
           StructField("sort_order", StringType, nullable = false))),
@@ -570,7 +557,7 @@ object GraftProcedures {
         }
         require(found.nonEmpty,
           s"no *$suffix files under ${a(1)} — nothing to import")
-        t.runCommit(IcebergWriter.addFiles(s, t.url, found.toSeq.sorted, fmt))
+        IcebergWriter.addFiles(t.ops, found.toSeq.sorted, fmt)
         val after = resolve(a(0).asInstanceOf[String])
         oneRow(s, StructType(Seq(intField("added_files_count"),
           longField("total_records"))),
@@ -684,8 +671,7 @@ object GraftProcedures {
       Seq(tableParam),
       (s, resolve, a) => {
         val t = resolve(a(0).asInstanceOf[String])
-        var path: String = null
-        t.runCommit { path = Maintenance.computePartitionStatistics(s, t.url) }
+        val path = graft.iceberg.PartitionStatistics.compute(t.ops)
         oneRow(s, StructType(Seq(
           StructField("statistics_path", StringType, nullable = false))), path)
       }))

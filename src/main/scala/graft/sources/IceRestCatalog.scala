@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
-import graft.iceberg.{IcebergTable, IcebergWriter, MetadataUpdate}
+import graft.iceberg.{IcebergTable, IcebergWriter, MetadataUpdate, TableOps}
 
 /** Iceberg REST catalog client — namespace/table CRUD against the open REST
   * catalog protocol, mirroring the reference's `rest_client.py:4-95`
@@ -114,15 +114,14 @@ final class IceRestCatalog(endpoint: String, prefix: String = "") {
   }
 
   /** Open a catalog table as an [[IcebergTable]] via its metadata-location.
-    * The returned instance carries a CATALOG COMMIT SCOPE: every write
-    * committed against it (DataFrame API, SQL DML through the
-    * CatalogPlugin, deleteWhere…) publishes through the REST commit
-    * protocol — never the filesystem version-hint swap. */
+    * The returned handle carries [[RestOps]]: every write committed
+    * against it (DataFrame API, SQL DML through the CatalogPlugin,
+    * procedures) publishes through the REST commit protocol, never the
+    * filesystem version-hint swap. */
   def loadTable(spark: SparkSession, namespace: String, name: String): IcebergTable = {
-    val meta = getTable(namespace, name)
-    val loc = meta.get("metadata-location").asText
-    IcebergTable.load(spark, loc)
-      .withCommitScope(body => withCatalogAtomicity(spark, namespace, name)(body()))
+    val t = IcebergTable.load(spark,
+      getTable(namespace, name).get("metadata-location").asText)
+    t.withOps(new RestOps(this, namespace, name, spark, t.url))
   }
 
   // ----------------------------------------------------- commit protocol
@@ -142,52 +141,41 @@ final class IceRestCatalog(endpoint: String, prefix: String = "") {
       s"""{"requirements": [${requirements.mkString(",")}],
            "updates": [${updates.mkString(",")}]}"""))
 
-  /** Run `body` — any writes against this table's storage location — with
-    * each metadata publish routed through CATALOG ATOMICITY: the commit's
-    * typed update list ([[MetadataUpdate]]) posts as the REST `updates`,
-    * guarded by the requirements derived from it: `assert-ref-snapshot-id`
-    * for every ref it moves, `assert-current-schema-id` for a schema change
-    * and `assert-default-spec-id` for a spec change. A concurrent committer
-    * breaks one, the server refuses with 409, and the optimistic loop
-    * rebuilds against the catalog's FRESH metadata-location (re-fetched per
-    * attempt — the filesystem version-hint is never consulted, so the
-    * catalog stays the single source of truth). Snapshot REMOVAL
-    * (expiration) is refused: this client does not send remove-snapshots. */
-  def withCatalogAtomicity[T](spark: SparkSession, namespace: String,
-      name: String)(body: => T): T =
-    IcebergWriter.withCatalogCommit(s => loadTableNoScope(s, namespace, name)) {
-      (requirements, updates) =>
-        if (updates.exists(_.isInstanceOf[MetadataUpdate.RemoveSnapshots]))
-          throw new UnsupportedOperationException(
-            "this commit REMOVES snapshots (expiration?); the REST catalog " +
-              "scope does not send remove-snapshots")
-        try commitTable(namespace, name, requirements.map(_.toString),
-          updates.map(MetadataUpdate.toJson(_).toString))
-        catch {
-          case e: RuntimeException if e.getMessage.contains("HTTP 409") =>
-            throw new IcebergWriter.CommitConflictException(e.getMessage)
-        }
-    }(body)
-
-  /** [[loadTable]] without the commit scope — the resolve side of
-    * [[withCatalogAtomicity]] (a scoped instance there would try to nest
-    * scopes on retry). */
-  private def loadTableNoScope(spark: SparkSession, namespace: String,
-      name: String): IcebergTable =
-    IcebergTable.load(spark,
-      getTable(namespace, name).get("metadata-location").asText)
-
-  /** APPEND through catalog atomicity (see [[withCatalogAtomicity]]). */
+  /** APPEND through catalog atomicity (see [[RestOps]]). */
   def commitAppend(spark: SparkSession, namespace: String, name: String,
-      df: org.apache.spark.sql.DataFrame): Unit = {
-    val url = loadTableNoScope(spark, namespace, name).url
-    withCatalogAtomicity(spark, namespace, name) {
-      IcebergWriter.append(spark, url, df)
-    }
-  }
+      df: org.apache.spark.sql.DataFrame): Unit =
+    IcebergWriter.append(loadTable(spark, namespace, name).ops, df)
 
   private def levels(name: String): String =
     name.split('.').map(p => s""""$p"""").mkString("[", ",", "]")
+}
+
+/** A REST catalog table's operations (iceberg-java's
+  * `RESTTableOperations`). [[current]] re-fetches the catalog's
+  * `metadata-location`, never the filesystem version hint. A commit posts
+  * its updates guarded by the requirements derived from them
+  * ([[MetadataUpdate.requirements]]); a concurrent committer breaks one and
+  * the server's 409 is a lost commit. Snapshot REMOVAL (expiration) is
+  * refused: this client does not send remove-snapshots. */
+final class RestOps(catalog: IceRestCatalog, namespace: String, name: String,
+    val spark: SparkSession, val url: String) extends TableOps {
+
+  def current(): IcebergTable = catalog.loadTable(spark, namespace, name)
+
+  def commit(base: IcebergTable, updates: Seq[MetadataUpdate]): Boolean = {
+    if (updates.exists(_.isInstanceOf[MetadataUpdate.RemoveSnapshots]))
+      throw new UnsupportedOperationException(
+        "this commit REMOVES snapshots (expiration?); the REST catalog " +
+          "client does not send remove-snapshots")
+    try {
+      catalog.commitTable(namespace, name,
+        MetadataUpdate.requirements(base.metadata, updates).map(_.toString),
+        updates.map(MetadataUpdate.toJson(_).toString))
+      true
+    } catch {
+      case e: RuntimeException if e.getMessage.contains("HTTP 409") => false
+    }
+  }
 }
 
 /** Dev helpers to examine the published Iceberg REST OpenAPI document —

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.iceberg.{IcebergTable, IcebergWriter}
+import graft.iceberg.{FileSystemOps, IcebergTable, IcebergWriter}
 
 /** Structured-Streaming sink into an Iceberg table: each micro-batch
   * commits one append snapshot via `foreachBatch`.
@@ -32,7 +32,7 @@ object IcebergSink {
     if (last.forall(batchId > _)) branch match {
       case Some(b) => IcebergWriter.appendToBranch(spark, url, batch, b,
         Map(BatchIdProp -> batchId.toString))
-      case None => IcebergWriter.append(spark, url, batch,
+      case None => IcebergWriter.append(FileSystemOps(spark, url), batch,
         Map(BatchIdProp -> batchId.toString))
     }
   }

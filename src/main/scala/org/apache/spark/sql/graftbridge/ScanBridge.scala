@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -662,12 +663,11 @@ object ScanBridge {
     * the table a second time. */
   def tableDataFrame(spark: SparkSession,
       table: org.apache.spark.sql.connector.catalog.Table,
-      path: String): org.apache.spark.sql.DataFrame =
+      path: String, options: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-        table, None, None,
-        new CaseInsensitiveStringMap(java.util.Collections.singletonMap("path", path))))
+        table, None, None, new CaseInsensitiveStringMap((options + ("path" -> path)).asJava)))
 
   /** Build Spark's native parquet DSv2 scan (columnar batch reader, filter
     * pushdown to row groups/pages, vectorized decode) over a known file list.

@@ -94,6 +94,12 @@ class CommitWriteSpec extends AnyFunSuite {
       val (overwriteJobs, overwriteCalls) = traced(IcebergWriter.overwrite(spark, url,
         rows(800L, 300).filter("grp = 2"), Pruning.Eq("grp", 2)))
       assertWrittenInPlace(overwriteCalls, "overwrite")
+      // each url-form write loads the table once: one metadata JSON read
+      def metadataOpens(calls: Seq[CountingFileSystem.Call]): Int =
+        calls.count(c => c.op == "open" && c.path.endsWith(".metadata.json"))
+      assert(metadataOpens(appendCalls) == 1, "append")
+      assert(metadataOpens(deleteCalls) == 1, "deleteRows")
+      assert(metadataOpens(overwriteCalls) == 1, "overwrite")
       // append: the clustering shuffle's map stage and the write (as with a
       // committer, whose footer reads ran on the driver up to 8 files);
       // deleteRows: the position scan's shuffle and the write, with no

@@ -93,7 +93,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
       Seq((2L, "b")).toDF("k", "src"))
     IcebergWriter.append(spark, url, Seq((3L, "c")).toDF("k", "src"))
     var attempts = 0
-    IcebergWriter.commitSnapshot(spark, url, Some(pinned)) { _ =>
+    IcebergWriter.commitSnapshot(FileSystemOps(spark, url), Some(pinned)) { _ =>
       attempts += 1
       Some(IcebergWriter.SnapshotUpdate("append", added = files))
     }
@@ -123,7 +123,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     // validateAddedDataFiles refuses under serializable isolation)
     IcebergWriter.append(spark, url, Seq((2L, "late")).toDF("k", "src"))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      IcebergWriter.commitSnapshot(spark, url) { t =>
+      IcebergWriter.commitSnapshot(FileSystemOps(spark, url)) { t =>
         IcebergWriter.requireNoConflictingAdds(t, keysAtScan, Pruning.Lt("k", 5))
         Some(IcebergWriter.SnapshotUpdate("overwrite"))
       }
@@ -136,7 +136,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val keys2 = frozen2.liveFiles()
       .map(f => IcebergWriter.morKeyOf(frozen2.resolvePath(f.filePath))).toSet
     IcebergWriter.append(spark, url, Seq((100L, "far")).toDF("k", "src"))
-    IcebergWriter.commitSnapshot(spark, url) { t =>
+    IcebergWriter.commitSnapshot(FileSystemOps(spark, url)) { t =>
       IcebergWriter.requireNoConflictingAdds(t, keys2, Pruning.Lt("k", 5))
       Some(IcebergWriter.SnapshotUpdate("overwrite"))
     }

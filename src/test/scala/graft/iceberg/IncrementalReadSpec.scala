@@ -168,6 +168,34 @@ class IncrementalReadSpec extends AnyFunSuite {
     assert(full.count(_._2 == "delete") == 10)
   }
 
+  test("changelog reads its file subsets through the loaded handle, " +
+      "reading no table metadata again") {
+    CountingFileSystem.Confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val url = "counting://" + freshTable
+      IcebergWriter.createTable(spark, url, schema)
+      IcebergWriter.append(spark, url, (1L to 5L).map(i => (i, "a")).toDF("k", "v").coalesce(1))
+      val s1 = IcebergTable.load(spark, url).currentSnapshot.snapshotId
+      IcebergWriter.append(spark, url, (6L to 8L).map(i => (i, "b")).toDF("k", "v").coalesce(1))
+      IcebergWriter.deleteRows(spark, url, Pruning.Eq("k", 2L))
+      IcebergWriter.deleteWhere(spark, url, Pruning.GtEq("k", 6L))
+      val t = IcebergTable.load(spark, url)
+      CountingFileSystem.reset()
+      val rows = t.changelog(s1, t.currentSnapshot.snapshotId)
+        .select("k", "_change_type").as[(Long, String)].collect().sortBy(r => (r._2, r._1))
+      val opens = CountingFileSystem.calls.count(c =>
+        c.op == "open" && c.path.endsWith(".metadata.json"))
+      // a subset read that loaded the table again would open the metadata
+      // JSON once per subset (three here)
+      assert(opens == 0, s"changelog re-read table metadata $opens times")
+      assert(rows.toSeq == Seq((2L, "delete"), (6L, "delete"), (7L, "delete"),
+        (8L, "delete"), (6L, "insert"), (7L, "insert"), (8L, "insert")))
+    } finally {
+      CountingFileSystem.reset()
+      CountingFileSystem.Confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
   test("changelog over a mixed range: compaction neutral, deletes emitted") {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)

@@ -56,7 +56,7 @@ class PlanningScaleSpec extends AnyFunSuite {
       IcebergWriter.NewManifestInfo(path, Manifests.FileContent.Data,
         per, per.toLong, 0, 0L, Nil)
     }
-    IcebergWriter.commitSnapshot(spark, url)(_ => Some(IcebergWriter.SnapshotUpdate(
+    IcebergWriter.commitSnapshot(FileSystemOps(spark, url))(_ => Some(IcebergWriter.SnapshotUpdate(
       "append", newManifests = infos, snapshotId = sid)))
     url
   }

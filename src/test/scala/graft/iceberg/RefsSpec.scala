@@ -90,7 +90,7 @@ class RefsSpec extends AnyFunSuite {
     IcebergWriter.createTable(spark, url, schema)
     IcebergWriter.append(spark, url, Seq((1L, "a")).toDF("k", "cat"))
     // a table written elsewhere may carry retention on main
-    IcebergWriter.commitWithRetry(spark, url) { t =>
+    IcebergWriter.commitWithRetry(FileSystemOps(spark, url)) { t =>
       Some(Seq(MetadataUpdate.SetSnapshotRef("main", t.metadata.currentSnapshotId,
         minSnapshotsToKeep = Some(3), maxSnapshotAgeMs = Some(7L * 86400000))))
     }

@@ -44,6 +44,21 @@ class RowDeleteSpec extends AnyFunSuite {
     assert(t.snapshotRelative(-1).read().count() == 100)
   }
 
+  test("deleteRows with a 12,001-key IN on one file leaves exactly the other rows") {
+    val url = freshTable
+    IcebergWriter.createTable(spark, url, schema)
+    IcebergWriter.append(spark, url,
+      (1L to 20000L).map(i => (i, s"c${i % 3}")).toDF("k", "cat").coalesce(1))
+    // the odd keys, some past the table's range: the file splits, and the
+    // whole-file test evaluates the negated IN (12,001 NotEq links)
+    val keys = (1L to 24001L by 2L).toSeq
+    assert(keys.size == 12001)
+    IcebergWriter.deleteRows(spark, url, Pruning.In("k", keys))
+    val left = IcebergTable.load(spark, url).read().as[(Long, String)].collect()
+      .map(_._1).sorted
+    assert(left.toSeq == (2L to 20000L by 2L))
+  }
+
   test("mixed delete: whole files drop via v1 entries, split files via positions") {
     val url = freshTable
     IcebergWriter.createTable(spark, url, schema)
@@ -185,7 +200,7 @@ class RowDeleteSpec extends AnyFunSuite {
     IcebergWriter.deleteRows(spark, url, Pruning.GtEq("k", 91))
     val ex = intercept[java.util.ConcurrentModificationException] {
       val files = IcebergWriter.writeDataFiles(spark, url, frozen, merged.repartition(1))
-      IcebergWriter.commitSnapshot(spark, url) { t =>
+      IcebergWriter.commitSnapshot(FileSystemOps(spark, url)) { t =>
         IcebergWriter.requireDeletesUnchanged(t, frozen.positionDeleteFiles
           .map(f => frozen.resolvePath(f.filePath)).toSet)
         Some(IcebergWriter.SnapshotUpdate("replace", added = files,

@@ -1,11 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The count-from-stats optimizer rule: count(*) over a graft-iceberg
-  * relation must collapse to a LocalRelation (zero data I/O) and return the
-  * manifest-statistics count. */
+/** Aggregates answered from manifest statistics on a session carrying the
+  * graft extensions: the DSv2 aggregate pushdown plans count(*), count(c),
+  * min and max over a path-read `graft-iceberg` relation as a
+  * LocalTableScan (zero data I/O) with the exact answer, and scans when the
+  * metadata cannot answer exactly. */
 class ExtensionsSpec extends AnyFunSuite {
 
   import graft.IceQueries.{FixtureDir, FixtureOrig}
@@ -27,20 +32,48 @@ class ExtensionsSpec extends AnyFunSuite {
   private def icebergDf = spark.read.format("graft-iceberg")
     .option("original-url", FixtureOrig).load(FixtureDir)
 
-  test("count(*) is answered from manifest stats via LocalRelation") {
+  private def executedPlan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** Answered from metadata: a LocalTableScan and no data scan. */
+  private def assertFromMetadata(df: DataFrame): Unit = {
+    val plan = executedPlan(df)
+    assert(plan.contains("LocalTableScan") && !plan.contains("BatchScan"),
+      s"expected a LocalTableScan without a BatchScan:\n$plan")
+  }
+
+  private def assertScans(df: DataFrame): Unit = {
+    val plan = executedPlan(df)
+    assert(plan.contains("BatchScan") && !plan.contains("LocalTableScan"),
+      s"expected a data scan:\n$plan")
+  }
+
+  test("count(*) is answered from manifest stats via LocalTableScan") {
     val df = icebergDf.groupBy().count()
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("LocalRelation"), s"expected LocalRelation:\n$optimized")
-    assert(!optimized.contains("RelationV2"), s"scan survived:\n$optimized")
+    assertFromMetadata(df)
     assert(df.collect().head.getLong(0) == 5L)
   }
 
-  test("df.count() action uses the rule and matches a real scan") {
-    assert(icebergDf.count() == 5L)
+  test("df.count() action uses the pushdown and matches a real scan") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(name -> qe.executedPlan.toString)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(icebergDf.count() == 5L)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val counted = plans.toArray.toSeq.collect { case ("count", p: String) => p }
+    assert(counted.size == 1, s"one count action expected: $counted")
+    assert(counted.head.contains("LocalTableScan") && !counted.head.contains("BatchScan"),
+      s"df.count() must answer from metadata:\n${counted.head}")
   }
 
-  test("filtered count still scans (rule only fires on bare count)") {
+  test("filtered count still scans (pushdown only fires on bare count)") {
     val df = icebergDf.filter("age > 30").groupBy().count()
+    assertScans(df)
     assert(df.collect().head.getLong(0) == 2L) // correct, via real scan
   }
 
@@ -57,13 +90,12 @@ class ExtensionsSpec extends AnyFunSuite {
     IcebergWriter.append(spark, tmp, (51L to 99L).map(i => (i, s"v$i")).toDF("k", "s"))
     val df = spark.read.format("graft-iceberg").load(tmp)
       .agg(min("k"), max("k"), count(org.apache.spark.sql.functions.lit(1)))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("LocalRelation"), s"expected LocalRelation:\n$optimized")
+    assertFromMetadata(df)
     assert(df.collect().head.toSeq == Seq(10L, 99L, 90L))
 
     // a STRING min/max must scan (bounds may be truncated)
     val s = spark.read.format("graft-iceberg").load(tmp).agg(max("s"))
-    assert(!s.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    assertScans(s)
     assert(s.collect().head.getString(0) == "v99")
   }
 
@@ -81,8 +113,7 @@ class ExtensionsSpec extends AnyFunSuite {
     IcebergWriter.append(spark, tmp,
       (21L to 30L).map(i => (i, null: String)).toDF("k", "s"))
     val df = spark.read.format("graft-iceberg").load(tmp).agg(count("s"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("LocalRelation"), s"expected LocalRelation:\n$optimized")
+    assertFromMetadata(df)
     assert(df.collect().head.getLong(0) == 15L) // 20 - 5 nulls, second file all null
   }
 
@@ -100,14 +131,13 @@ class ExtensionsSpec extends AnyFunSuite {
     val df = spark.read.format("graft-iceberg").load(tmp)
       .withColumn("k", pmod(col("k"), lit(7L)))
       .agg(min("k"), max("k"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("LocalRelation"), s"rule fired on a shadowed alias:\n$optimized")
+    assertScans(df)
     assert(df.collect().head.toSeq == Seq(0L, 6L))
 
     // sanity: the same aggregate over the genuine base column still
     // answers from metadata
     val base = spark.read.format("graft-iceberg").load(tmp).agg(min("k"), max("k"))
-    assert(base.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    assertFromMetadata(base)
     assert(base.collect().head.toSeq == Seq(10L, 50L))
   }
 
@@ -124,7 +154,7 @@ class ExtensionsSpec extends AnyFunSuite {
       (1L to 100L).map(i => (i, s"v$i")).toDF("k", "s").coalesce(1))
     IcebergWriter.deleteRows(spark, tmp, Pruning.Eq("k", 100L))
     val df = spark.read.format("graft-iceberg").load(tmp).agg(max("k"))
-    assert(!df.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    assertScans(df)
     assert(df.collect().head.getLong(0) == 99L) // correct, via the MOR scan
   }
 
@@ -144,13 +174,17 @@ class ExtensionsSpec extends AnyFunSuite {
       (51L to 100L).map(i => (i, "b")).toDF("k", "v").coalesce(1))
     val t = IcebergTable.load(spark, tmp)
     // the changelog frame scans ONLY commit 2's file (a file-subset read);
-    // before the round-15 guard the rule answered the full table's 100
-    val n = t.changelog(from, t.currentSnapshot.snapshotId)
-      .filter("_change_type = 'insert'").count()
+    // answering from metadata would return the full table's 100
+    val changes = t.changelog(from, t.currentSnapshot.snapshotId)
+      .filter("_change_type = 'insert'")
+    assertScans(changes.groupBy().count())
+    val n = changes.count()
     assert(n == 50L,
       s"file-subset count must come from the subset's rows, got $n")
-    // incremental-range reads are scan-scoped the same way
+    // an incremental-range handle answers from the RANGE's own metadata
+    // (its appended files' record counts), never the full table's
     val inc = t.incrementalBetween(from, t.currentSnapshot.snapshotId)
+    assertFromMetadata(inc.read().groupBy().count())
     assert(inc.read().count() == 50L)
   }
 }

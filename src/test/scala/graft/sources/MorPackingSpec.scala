@@ -8,7 +8,7 @@ import org.apache.spark.sql.graftbridge.{MorMembers, ScanBridge}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.iceberg.{IcebergTable, IcebergWriter, Pruning, WrittenFile}
+import graft.iceberg.{FileSystemOps, IcebergTable, IcebergWriter, Pruning, WrittenFile}
 
 /** A merge-on-read scan takes the task layout Spark's parquet scan gives
   * the same files without deletes: small files pack into one task and a
@@ -137,7 +137,7 @@ class MorPackingSpec extends AnyFunSuite {
     val rowGroups = try reader.getFooter.getBlocks.size finally reader.close()
     assert(rowGroups >= 4, s"$rowGroups row groups")
     val stats = IcebergWriter.collectStats(spark, Seq(path -> size), t0.iceSchema, t0.conf)
-    IcebergWriter.commitDelta(spark, url, java.util.UUID.randomUUID().toString,
+    IcebergWriter.commitDelta(FileSystemOps(spark, url), java.util.UUID.randomUUID().toString,
       Seq(WrittenFile(path, size, Nil, stats(path))), Nil, "append",
       Set.empty, Set.empty,
       (t0.liveFiles().map(f => ScanBridge.morKey(t0.resolvePath(f.filePath))).toSet,

@@ -361,9 +361,7 @@ class RestCatalogSpec extends AnyFunSuite {
       assert(spark.sql(s"SELECT * FROM $catName.db.events.snapshots").count() >= 3)
       assert(spark.sql(s"SELECT * FROM $catName.db.events.files").count() >= 1)
       assert(spark.sql(s"SELECT * FROM $catName.db.events.statistics").count() == 0)
-      cat.withCatalogAtomicity(spark, "db", "events") {
-        graft.iceberg.Maintenance.computeStatistics(spark, url)
-      }
+      graft.iceberg.TableStatistics.compute(cat.loadTable(spark, "db", "events").ops)
       val ndvRows = spark.sql(
         s"SELECT field_name, ndv FROM $catName.db.events.statistics ORDER BY field_name")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -516,18 +514,15 @@ class RestCatalogSpec extends AnyFunSuite {
 
       // STAGE on a branch through catalog atomicity: the diff carries
       // set-snapshot-ref audit (assert: ref must not exist yet), main stays
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.appendToBranch(spark, url,
-          Seq((2L, "staged")).toDF("id", "name"), "audit")
-      }
+      val ops = cat.loadTable(spark, "db", "t").ops
+      graft.iceberg.IcebergWriter.appendToBranch(ops,
+        Seq((2L, "staged")).toDF("id", "name"), "audit", Map.empty[String, String])
       val staged = cat.loadTable(spark, "db", "t")
       assert(staged.read().count() == 1, "main must not see the staged append")
       assert(staged.atBranch("audit").read().count() == 2, "audit sees base + staged")
 
       // PUBLISH through catalog atomicity: fast-forward moves main only
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.fastForward(spark, url, "audit")
-      }
+      graft.iceberg.IcebergWriter.fastForward(ops, "audit")
       val published = cat.loadTable(spark, "db", "t")
       assert(published.read().as[(Long, String)].collect().sortBy(_._1).toSeq ==
         Seq((1L, "base"), (2L, "staged")))
@@ -560,12 +555,9 @@ class RestCatalogSpec extends AnyFunSuite {
       // NDV + partition statistics publish through the catalog commit
       // protocol (set-statistics / set-partition-statistics updates) — the
       // catalog copy of the metadata, not the filesystem hint, carries them
-      val ndvs = cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.Maintenance.computeStatistics(spark, url)
-      }
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.Maintenance.computePartitionStatistics(spark, url)
-      }
+      val ops = cat.loadTable(spark, "db", "t").ops
+      val ndvs = graft.iceberg.TableStatistics.compute(ops)
+      graft.iceberg.PartitionStatistics.compute(ops)
       val t = cat.loadTable(spark, "db", "t")
       assert(t.metadata.statistics.size == 1,
         s"stats entry must round-trip through REST: ${t.metadata.statistics}")
@@ -782,9 +774,9 @@ class RestCatalogSpec extends AnyFunSuite {
       cat.commitAppend(spark, "db", "t", Seq((1L, "a")).toDF("id", "name"))
 
       // SCHEMA EVOLUTION through the catalog: add-schema + set-current-schema
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.addColumn(spark, url, "score", "double")
-      }
+      val ops = cat.loadTable(spark, "db", "t").ops
+      graft.iceberg.IcebergWriter.addColumn(ops, "score", "double", required = false,
+        default = None)
       val evolved = cat.loadTable(spark, "db", "t")
       assert(evolved.schema.fieldNames.toSeq == Seq("id", "name", "score"))
       // pre-evolution rows read null for the new column, through the catalog
@@ -795,10 +787,7 @@ class RestCatalogSpec extends AnyFunSuite {
       assert(cat.loadTable(spark, "db", "t").read().count() == 2)
 
       // PARTITION-SPEC EVOLUTION: add-spec + set-default-spec
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.updatePartitionSpec(spark, url,
-          Seq("name" -> "identity"))
-      }
+      graft.iceberg.IcebergWriter.updatePartitionSpec(ops, Seq("name" -> "identity"))
       assert(cat.loadTable(spark, "db", "t").partitionSpec.fields
         .map(_.name).toSeq == Seq("name"))
 
@@ -808,9 +797,7 @@ class RestCatalogSpec extends AnyFunSuite {
 
       // snapshot REMOVAL cannot express as add-snapshot diffs: refuse
       val e = intercept[UnsupportedOperationException] {
-        cat.withCatalogAtomicity(spark, "db", "t") {
-          graft.iceberg.Maintenance.expireSnapshots(spark, url, keepLast = 1)
-        }
+        graft.iceberg.Maintenance.expireSnapshots(ops, keepLast = 1, olderThan = None)
       }
       assert(e.getMessage.contains("REMOVES snapshots"))
     }
@@ -923,14 +910,11 @@ class RestCatalogSpec extends AnyFunSuite {
         Seq(s"""{"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": $head}"""),
         Seq(s"""{"action": "set-snapshot-ref", "ref-name": "main", "type": "branch",
                "snapshot-id": $head, "min-snapshots-to-keep": 3}"""))
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.branch(spark, url, "audit",
-          maxRefAgeMs = Some(86400000L))
-      }
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.appendToBranch(spark, url,
-          Seq((2L, "b")).toDF("id", "name"), "audit")
-      }
+      val ops = cat.loadTable(spark, "db", "t").ops
+      graft.iceberg.IcebergWriter.branch(ops, "audit", snapshotId = None,
+        maxRefAgeMs = Some(86400000L))
+      graft.iceberg.IcebergWriter.appendToBranch(ops,
+        Seq((2L, "b")).toDF("id", "name"), "audit", Map.empty[String, String])
       cat.commitAppend(spark, "db", "t", Seq((3L, "c")).toDF("id", "name"))
       val t = cat.loadTable(spark, "db", "t")
       assert(t.atBranch("audit").read().count() == 2)
@@ -948,14 +932,59 @@ class RestCatalogSpec extends AnyFunSuite {
       import spark.implicits._
       val url = registeredTable(cat, spark, "graft_rest_dropref")
       cat.commitAppend(spark, "db", "t", Seq((1L, "a")).toDF("id", "name"))
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.tag(spark, url, "audited")
-      }
+      val ops = cat.loadTable(spark, "db", "t").ops
+      graft.iceberg.IcebergWriter.tag(ops, "audited", snapshotId = None, maxRefAgeMs = None)
       assert(cat.loadTable(spark, "db", "t").refs.contains("audited"))
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.dropRef(spark, url, "audited")
-      }
+      graft.iceberg.IcebergWriter.dropRef(ops, "audited")
       assert(!cat.loadTable(spark, "db", "t").refs.contains("audited"))
+    }
+  }
+
+  test("a REST handle's ops commit through the catalog from another thread") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      import spark.implicits._
+      val url = registeredTable(cat, spark, "graft_rest_thread")
+      val ops = cat.loadTable(spark, "db", "t").ops
+      val before = catalogVersion(cat, "t")
+      val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+      import scala.concurrent.ExecutionContext.Implicits.global
+      scala.concurrent.Await.result(
+        scala.concurrent.Future(graft.iceberg.IcebergWriter.append(ops, rows)),
+        scala.concurrent.duration.Duration(2, "min"))
+      assert(catalogVersion(cat, "t") == before + 1, "the commit must post to the catalog")
+      assert(cat.loadTable(spark, "db", "t").read().count() == 2)
+      assert(scala.io.Source.fromFile(s"$url/metadata/version-hint.text")
+        .mkString.trim == "1", "a commit on another thread must not swap the hint")
+    }
+  }
+
+  test("two REST tables commit in one flow on one thread") {
+    withServer { (cat, _) =>
+      val spark = localSession()
+      import spark.implicits._
+      val tUrl = registeredTable(cat, spark, "graft_rest_two")
+      val uUrl = tUrl.stripSuffix("/t") + "/u"
+      graft.iceberg.IcebergWriter.createTable(spark, uUrl,
+        cat.loadTable(spark, "db", "t").schema)
+      cat.createTable("db", "u", Seq("id" -> "long", "name" -> "string"),
+        location = Some(uUrl))
+      val t = cat.loadTable(spark, "db", "t").ops
+      val u = cat.loadTable(spark, "db", "u").ops
+      // append to t, copy t into u, then delete from t: each commit goes
+      // through its own table's ops, with no scope to open or nest
+      graft.iceberg.IcebergWriter.append(t,
+        Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1))
+      graft.iceberg.IcebergWriter.append(u, cat.loadTable(spark, "db", "t").read())
+      graft.iceberg.IcebergWriter.deleteRows(t, graft.iceberg.Pruning.Eq("id", 1L))
+      assert(catalogVersion(cat, "t") == 3 && catalogVersion(cat, "u") == 2)
+      assert(cat.loadTable(spark, "db", "t").read().as[(Long, String)].collect().toSeq ==
+        Seq((2L, "b")))
+      assert(cat.loadTable(spark, "db", "u").read().as[(Long, String)].collect()
+        .sortBy(_._1).toSeq == Seq((1L, "a"), (2L, "b")))
+      for (url <- Seq(tUrl, uUrl))
+        assert(scala.io.Source.fromFile(s"$url/metadata/version-hint.text")
+          .mkString.trim == "1", s"$url: the hint must not move")
     }
   }
 
@@ -968,9 +997,8 @@ class RestCatalogSpec extends AnyFunSuite {
       cat.commitAppend(spark, "db", "t",
         Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1))
       assert(cat.loadTable(spark, "db", "t").metadata.formatVersion == 1)
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.deleteRows(spark, url, graft.iceberg.Pruning.Eq("id", 1L))
-      }
+      graft.iceberg.IcebergWriter.deleteRows(cat.loadTable(spark, "db", "t").ops,
+        graft.iceberg.Pruning.Eq("id", 1L))
       val t = cat.loadTable(spark, "db", "t")
       assert(t.metadata.formatVersion == 2, "delete manifests are a v2 feature")
       assert(t.read().as[(Long, String)].collect().toSeq == Seq((2L, "b")))
@@ -983,9 +1011,7 @@ class RestCatalogSpec extends AnyFunSuite {
       val spark = localSession()
       import spark.implicits._
       val url = registeredTable(cat, spark, "graft_rest_v3")
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.upgradeFormatVersion(spark, url, 3)
-      }
+      graft.iceberg.IcebergWriter.upgradeFormatVersion(cat.loadTable(spark, "db", "t").ops, 3)
       val v3 = cat.loadTable(spark, "db", "t").metadata
       assert(v3.formatVersion == 3 && v3.nextRowId.contains(0L))
       cat.commitAppend(spark, "db", "t",
@@ -1004,13 +1030,10 @@ class RestCatalogSpec extends AnyFunSuite {
     withServer { (cat, _) =>
       val spark = localSession()
       val url = registeredTable(cat, spark, "graft_rest_sortdrop")
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.setSortOrder(spark, url, Seq("name" -> "asc"))
-      }
+      val ops = cat.loadTable(spark, "db", "t").ops
+      graft.iceberg.IcebergWriter.setSortOrder(ops, Seq("name" -> "asc"))
       assert(cat.loadTable(spark, "db", "t").metadata.defaultSortOrderId != 0)
-      cat.withCatalogAtomicity(spark, "db", "t") {
-        graft.iceberg.IcebergWriter.dropColumn(spark, url, "name")
-      }
+      graft.iceberg.IcebergWriter.dropColumn(ops, "name")
       val t = cat.loadTable(spark, "db", "t")
       assert(t.schema.fieldNames.toSeq == Seq("id"))
       assert(t.metadata.defaultSortOrderId == 0, "the order on `name` must not dangle")
